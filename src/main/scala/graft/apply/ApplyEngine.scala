@@ -19,18 +19,12 @@ import org.apache.spark.sql.types._
   *     `patch` columns resolve via `coalesce(cast(new), old)` — the
   *     TOAST-partial-update semantics of `replayer/connemara_replay.pl:185-190`.
   *
-  * All of it is built from codegen'd built-ins (`aggregate`,
-  * `map_*`, `when`) — no UDFs, no driver-side loops; both the
-  * collapse (shuffle by key) and the merge (shuffle or broadcast by
-  * PK) scale horizontally.
+  * No UDFs, no driver-side loops: the collapse is a compiled plan
+  * node over a shuffle by key, the merge is built from codegen'd
+  * built-ins (`map_*`, `when`) over a broadcast or shuffle by PK, and
+  * both scale horizontally.
   */
 object ApplyEngine {
-
-  private val valsT = MapType(StringType, StringType)
-
-  /** m1 overridden by m2 (map_concat alone throws on duplicate keys). */
-  private def overwrite(m1: Column, m2: Column): Column =
-    map_concat(map_filter(m1, (k, _) => !map_contains_key(m2, k)), m2)
 
   /** Fold one key's ordered events into its final state.
     *
@@ -40,74 +34,17 @@ object ApplyEngine {
     * reference's affected-rows==1 assertion,
     * `replayer/connemara_replay.pl:417-421`).
     *
-    * The sort + fold run as ONE compiled call per key
-    * ([[graft.plans.CollapseEventsExpression]]) — the lambda form
-    * below evaluated an interpreted comparator per sort comparison
-    * and an interpreted step (with map_filter/map_concat rebuilds)
-    * per EVENT, on the engine's production replay loop.
-    * ApplyPropertySpec proves native ≡ fold on randomized batches. */
+    * The events are hash-partitioned by `key` into the session's core
+    * count, as the reference's dispatcher hash-partitions changes by PK
+    * across its worker threads (`replayer/connemara_replay.pl:764-777`);
+    * each partition then folds its keys with one compiled sort + fold
+    * call per key ([[graft.plans.CollapseEventsExpression]]), straight
+    * from a hash table ([[graft.plans.CollapseByKey]]) — no map-side
+    * partial aggregate and no sort fallback. Within a key the events
+    * sort by `ord`, nulls first, ties in arrival order.
+    * ApplyPropertySpec proves it equal to the lambda fold. */
   def collapse(events: DataFrame): DataFrame =
-    events
-      .groupBy(col("key"))
-      .agg(graft.plans.NativeCols.collapseEvents(
-        collect_list(struct(col("ord"), col("op"), col("vals")))).as("fin"))
-      .select(
-        col("key"),
-        col("fin.st").as("st"),
-        col("fin.vals").as("vals"),
-        col("fin.viol").as("viol"))
-
-  /** Lambda-fold twin of [[collapse]] — the spec's equivalence
-    * reference. */
-  private[graft] def collapseFold(events: DataFrame): DataFrame = {
-    val init = struct(
-      lit("base").as("st"),
-      map().cast(valsT).as("vals"),
-      lit(0).as("viol"))
-
-    def step(acc: Column, e: Column): Column = {
-      val st = acc.getField("st")
-      val vals = acc.getField("vals")
-      val viol = acc.getField("viol")
-      val ev = e.getField("vals")
-      when(e.getField("op") === "row",
-        struct(lit("row").as("st"), ev.as("vals"), viol.as("viol")))
-        .when(e.getField("op") === "del",
-          struct(lit("del").as("st"), map().cast(valsT).as("vals"), viol.as("viol")))
-        // patch:
-        .when(st === "del", // update of a row deleted earlier in batch
-          struct(lit("del").as("st"), vals.as("vals"), (viol + 1).as("viol")))
-        .when(st === "base",
-          struct(lit("patch").as("st"), ev.as("vals"), viol.as("viol")))
-        .otherwise( // row|patch: column-wise override
-          struct(st.as("st"), overwrite(vals, ev).as("vals"), viol.as("viol")))
-    }
-
-    events
-      .groupBy(col("key"))
-      .agg(aggregate(
-        // custom comparator: the default one refuses structs that
-        // contain a (non-orderable) map column; ord alone is orderable.
-        // NULLS FIRST — `l.ord < r.ord` is null (-> otherwise(0)) when
-        // either side is null, which is a non-transitive ordering; the
-        // explicit null branches keep it total and match the native
-        // expression's sort.
-        array_sort(
-          collect_list(struct(col("ord"), col("op"), col("vals"))),
-          (l, r) => when(l.getField("ord").isNull && r.getField("ord").isNull, 0)
-            .when(l.getField("ord").isNull, -1)
-            .when(r.getField("ord").isNull, 1)
-            .when(l.getField("ord") < r.getField("ord"), -1)
-            .when(l.getField("ord") > r.getField("ord"), 1)
-            .otherwise(0)),
-        init,
-        (acc, e) => step(acc, e)).as("fin"))
-      .select(
-        col("key"),
-        col("fin.st").as("st"),
-        col("fin.vals").as("vals"),
-        col("fin.viol").as("viol"))
-  }
+    graft.plans.CollapseByKey(events, events.sparkSession.sparkContext.defaultParallelism)
 
   /** Apply collapsed per-key states onto the target table; returns the
     * post-batch table with the target's exact schema.
@@ -143,98 +80,6 @@ object ApplyEngine {
       .groupBy(col("key"))
       .agg(graft.plans.NativeCols.composePartials(
         collect_list(struct(col("bucket"), col("partial")))).as("fin"))
-      .select(
-        col("key"),
-        col("fin.st").as("st"),
-        col("fin.vals").as("vals"),
-        col("fin.viol").as("viol"))
-  }
-
-  /** Interpreted-lambda twin of [[collapseSkewResistant]] — the
-    * property spec's equivalence reference. */
-  private[graft] def collapseSkewResistantFold(events: DataFrame,
-      bucketSeconds: Long = 30): DataFrame = {
-    // `lead` = number of LEADING patch events in the folded range
-    // (patches before its first row/del). Those are the events whose
-    // violation status depends on the PRECEDING range's state: if it
-    // ends in `del`, each of them is a patch-after-delete. Without
-    // this the two-phase fold counted +1 per bucket instead of +1 per
-    // patch event and missed leading patches of row/del-ending buckets.
-    val init = struct(
-      lit("base").as("st"),
-      map().cast(valsT).as("vals"),
-      lit(0).as("viol"),
-      lit(0).as("lead"))
-
-    // compose(acc, partial): apply a later contiguous range's folded
-    // state after an earlier one — same transition table as `step`
-    def compose(a: Column, b: Column): Column = {
-      val aSt = a.getField("st")
-      val bSt = b.getField("st")
-      val viol = (a.getField("viol") + b.getField("viol") +
-        when(aSt === "del", b.getField("lead")).otherwise(lit(0))).as("viol")
-      // a is all-patches exactly when st ∈ {base, patch} — only then
-      // do b's leading patches stay leading for the combined range
-      val lead = when(aSt === "base" || aSt === "patch",
-        a.getField("lead") + b.getField("lead"))
-        .otherwise(a.getField("lead")).as("lead")
-      when(bSt === "row" || bSt === "del",
-        struct(bSt.as("st"), b.getField("vals").as("vals"), viol, lead))
-        .when(bSt === "base",
-          struct(aSt.as("st"), a.getField("vals").as("vals"), viol, lead))
-        // b is a pure patch:
-        .when(aSt === "del",
-          struct(lit("del").as("st"), a.getField("vals").as("vals"), viol, lead))
-        .when(aSt === "base",
-          struct(lit("patch").as("st"), b.getField("vals").as("vals"), viol, lead))
-        .otherwise(struct(
-          aSt.as("st"),
-          overwrite(a.getField("vals"), b.getField("vals")).as("vals"),
-          viol, lead))
-    }
-
-    def step(acc: Column, e: Column): Column = {
-      // one event is the partial state of a singleton range
-      val asPartial = when(e.getField("op") === "row",
-        struct(lit("row").as("st"), e.getField("vals").as("vals"),
-          lit(0).as("viol"), lit(0).as("lead")))
-        .when(e.getField("op") === "del",
-          struct(lit("del").as("st"), map().cast(valsT).as("vals"),
-            lit(0).as("viol"), lit(0).as("lead")))
-        .otherwise(
-          struct(lit("patch").as("st"), e.getField("vals").as("vals"),
-            lit(0).as("viol"), lit(1).as("lead")))
-      compose(acc, asPartial)
-    }
-
-    val ordCmp = (l: Column, r: Column) => // nulls-first, total — see collapseFold
-      when(l.getField("ord").isNull && r.getField("ord").isNull, 0)
-        .when(l.getField("ord").isNull, -1)
-        .when(r.getField("ord").isNull, 1)
-        .when(l.getField("ord") < r.getField("ord"), -1)
-        .when(l.getField("ord") > r.getField("ord"), 1)
-        .otherwise(0)
-
-    // phase 1: fold within (key, time-bucket) — hot keys spread
-    val partials = events
-      .withColumn("bucket",
-        floor(unix_timestamp(col("ord.ts")) / bucketSeconds))
-      .groupBy(col("key"), col("bucket"))
-      .agg(aggregate(
-        array_sort(collect_list(struct(col("ord"), col("op"), col("vals"))), ordCmp),
-        init, step).as("partial"))
-
-    // phase 2: compose bucket partials per key, in bucket order
-    partials
-      .groupBy(col("key"))
-      .agg(aggregate(
-        array_sort(
-          collect_list(struct(col("bucket"), col("partial"))),
-          (l, r) => when(l.getField("bucket") < r.getField("bucket"), -1)
-            .when(l.getField("bucket") > r.getField("bucket"), 1)
-            .otherwise(0)),
-        init,
-        (acc, p) => compose(acc, p.getField("partial"))).as("fin"))
       .select(
         col("key"),
         col("fin.st").as("st"),

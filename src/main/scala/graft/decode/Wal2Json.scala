@@ -38,9 +38,20 @@ object Wal2Json {
     StructField("timestamp", StringType),
     StructField("change", ArrayType(payloadSchema))))
 
+  /** Field of the parsed struct `p` that holds the raw payload when
+    * the JSON parser failed on it. `from_json` keeps the fields it
+    * parsed before the failure: a payload torn right after
+    * `"keyvalues"` comes back as a complete-looking update with
+    * `oldkeys` = null, and only this field tells it apart. */
+  val corruptField = "_corrupt_record"
+
+  private def fromJson(payload: Column, schema: StructType): Column =
+    from_json(payload, schema.add(corruptField, StringType),
+      Map("columnNameOfCorruptRecord" -> corruptField))
+
   /** Parse the spool `payload` column into a typed struct `p`. */
   def parse(spool: DataFrame): DataFrame =
-    spool.withColumn("p", from_json(col("payload"), payloadSchema))
+    spool.withColumn("p", fromJson(col("payload"), payloadSchema))
 
   /** wal2json v2 change shape: one object per message, `action`
     * discriminated, columns as `[{name,type,value},…]` and the
@@ -65,7 +76,7 @@ object Wal2Json {
     * action I/U/D → kind, columns → columnnames/columnvalues,
     * identity → oldkeys. */
   def parseV2(spool: DataFrame): DataFrame = {
-    val p2 = from_json(col("payload"), payloadSchemaV2)
+    val p2 = fromJson(col("payload"), payloadSchemaV2)
     val kind = when(p2("action") === "I", "insert")
       .when(p2("action") === "U", "update")
       .when(p2("action") === "D", "delete")
@@ -81,7 +92,8 @@ object Wal2Json {
           p2("identity").getField("name").as("keynames"),
           p2("identity").getField("value").as("keyvalues")))
           .otherwise(lit(null).cast(payloadSchema("oldkeys").dataType))
-          .as("oldkeys"))))
+          .as("oldkeys"),
+        p2(corruptField).as(corruptField))))
   }
 
   /** Format-dispatching parse (the spool records which framing its
@@ -106,8 +118,9 @@ object Wal2Json {
   }
 
   /** The quarantine predicate over a [[parse]]d frame: payload failed
-    * to parse entirely, or parsed to a change with no usable
-    * kind/table. An unrecognized kind quarantines too: wal2json change
+    * to parse entirely or in part (a torn payload: [[corruptField]]
+    * is set), or parsed to a change with no usable kind/table. An
+    * unrecognized kind quarantines too: wal2json change
     * records carry only insert/update/delete (truncate rides the DDL
     * spool), and [[decodeEvents]] would silently DROP any other value
     * — the reference fail-fasts on statements it can't generate
@@ -116,7 +129,7 @@ object Wal2Json {
     * a column so the stream engine can fold validity counting into its
     * single per-batch preamble aggregate. */
   def invalid: Column =
-    col("p").isNull ||
+    col("p").isNull || col(s"p.$corruptField").isNotNull ||
       col("p.kind").isNull || col("p.table").isNull || col("p.schema").isNull ||
       !col("p.kind").isin("insert", "update", "delete")
 
@@ -135,19 +148,19 @@ object Wal2Json {
     * interleaved their ordering with the next xid); PG xids are
     * 32-bit, so xid << 30 stays inside a positive Long. */
   def explodeEnvelope(envelopes: DataFrame, payloadCol: String = "value"): DataFrame = {
-    val parsed = envelopes.withColumn("env", from_json(col(payloadCol), envelopeSchema))
+    val parsed = envelopes.withColumn("env", fromJson(col(payloadCol), envelopeSchema))
     parsed
       .select(
         col("*"),
         posexplode(col("env.change")).as(Seq("chg_idx", "p")))
+      // every change of a torn envelope is torn
+      .withColumn("p", col("p").withField(corruptField, col(s"env.$corruptField")))
       .withColumn("xid", col("env.xid"))
       .withColumn("xid_timestamp", to_timestamp(col("env.timestamp")))
       .withColumn("lsn_start",
         shiftleft(col("env.xid"), 30).bitwiseOR(col("chg_idx")))
       .drop("env", payloadCol)
   }
-
-  private val emptyVals = lit(null).cast(MapType(StringType, StringType))
 
   /** Decode parsed DML changes of ONE table into merge events:
     * `(ord struct(ts,lsn,sub), op ∈ {row,patch,del},
@@ -161,48 +174,16 @@ object Wal2Json {
     *  - delete → `del` keyed by oldkeys
     *
     * PK values are looked up name-by-name in registry order, never
-    * positionally (`:938-940`).
+    * positionally (`:938-940`). Each change row decodes in one
+    * compiled call ([[graft.plans.DecodeEventsExpression]]) that
+    * builds the values map once; the property spec pins it to the
+    * column-lambda form it replaced.
     */
-  def decodeEvents(parsed: DataFrame, meta: TableMeta): DataFrame = {
-    // P5-style source restriction: filter on database only when the
-    // spool carries it (unit fixtures may omit the column).
-    val dbFilter =
-      if (parsed.columns.contains("database")) col("database") === meta.id.database
-      else lit(true)
-    val forTable = parsed.filter(
-      dbFilter &&
-        col("p.schema") === meta.id.schema && col("p.table") === meta.id.table &&
-        !col("p.table").startsWith("pg_temp")) // P6 table-rewrite artifacts
-
-    val vals = map_from_arrays(col("p.columnnames"), col("p.columnvalues"))
-    val oldm = map_from_arrays(col("p.oldkeys.keynames"), col("p.oldkeys.keyvalues"))
-    val pkLits = array(meta.pkCols.map(lit): _*)
-    val newKey = transform(pkLits, c => element_at(vals, c))
-    val oldKey = transform(pkLits, c => element_at(oldm, c))
-
-    val isIns = col("p.kind") === "insert"
-    val isDel = col("p.kind") === "delete"
-    val isUpd = col("p.kind") === "update"
-    // PK changed: new values present for every pk col and any differs.
-    val pkChanged = isUpd && col("p.oldkeys").isNotNull &&
-      !exists(newKey, _.isNull) &&
-      exists(zip_with(newKey, oldKey, (n, o) => !(n <=> o)), identity)
-    val updKey = when(col("p.oldkeys").isNotNull, oldKey).otherwise(newKey)
-
-    def ev(sub: Int, op: String, key: Column, v: Column) =
-      struct(lit(sub).as("sub"), lit(op).as("op"), key.as("key"), v.as("vals"))
-
-    val events = array(
-      when(isIns, ev(0, "row", newKey, vals)),
-      when(isDel, ev(0, "del", oldKey, emptyVals)),
-      when(isUpd && !pkChanged, ev(0, "patch", updKey, vals)),
-      when(pkChanged, ev(0, "del", oldKey, emptyVals)),
-      when(pkChanged, ev(1, "row", newKey, vals)))
-
-    forTable
+  def decodeEvents(parsed: DataFrame, meta: TableMeta): DataFrame =
+    forTable(parsed, meta)
       .select(
         col("xid_timestamp"), col("lsn_start"),
-        explode(filter(events, _.isNotNull)).as("e"))
+        explode(graft.plans.NativeCols.decodeEvents(col("p"), meta.pkCols)).as("e"))
       .select(
         struct(
           col("xid_timestamp").as("ts"),
@@ -211,5 +192,17 @@ object Wal2Json {
         col("e.op").as("op"),
         col("e.key").as("key"),
         col("e.vals").as("vals"))
+
+  /** The parsed changes of ONE table. P5-style source restriction:
+    * filter on database only when the spool carries it (unit fixtures
+    * may omit the column). */
+  private[graft] def forTable(parsed: DataFrame, meta: TableMeta): DataFrame = {
+    val dbFilter =
+      if (parsed.columns.contains("database")) col("database") === meta.id.database
+      else lit(true)
+    parsed.filter(
+      dbFilter &&
+        col("p.schema") === meta.id.schema && col("p.table") === meta.id.table &&
+        !col("p.table").startsWith("pg_temp")) // P6 table-rewrite artifacts
   }
 }

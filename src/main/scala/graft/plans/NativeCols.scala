@@ -74,9 +74,10 @@ object NativeCols {
     * (see [[DHashMd5Expression]]). */
   def dhashMd5(media: Column): Column = cl(DHashMd5Expression(ex(media)))
 
-  /** Codegen per-key CDC event fold (see [[CollapseEventsExpression]]). */
-  def collapseEvents(events: Column): Column =
-    cl(CollapseEventsExpression(ex(events)))
+  /** Codegen wal2json change → merge events
+    * (see [[DecodeEventsExpression]]). */
+  def decodeEvents(change: Column, pkCols: Seq[String]): Column =
+    cl(DecodeEventsExpression(ex(change), pkCols))
 
   /** Codegen distinct folded char-bit ids (see [[CharBitsExpression]]). */
   def charBits(text: Column): Column = cl(CharBitsExpression(ex(text)))

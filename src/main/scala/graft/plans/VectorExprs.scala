@@ -1260,16 +1260,15 @@ final case class Md5LshKeysExpression(child: Expression, dim: Int,
 }
 
 /** `collapse_events(events)`: codegen per-key CDC event fold — the
-  * native form of [[graft.apply.ApplyEngine.collapse]]'s
-  * `aggregate(array_sort(collect_list(…)), init, step)`, which
+  * fold [[CollapseByKey]] runs per key for
+  * [[graft.apply.ApplyEngine.collapse]], and the native form of the
+  * lambda `aggregate(array_sort(collect_list(…)), init, step)`, which
   * evaluated an interpreted comparator per sort comparison and an
   * interpreted step lambda (with `map_filter` + `map_concat` map
-  * rebuilds) per EVENT — on the CDC replay loop, the engine's
-  * production path. Semantics preserved exactly:
-  *  - events sort by their `ord` field under the SQL `<` ordering
-  *    with the fold's null-compares-equal quirk (a null ord returned
-  *    0 from the `when` comparator), via a stable sort — tie order is
-  *    collect_list order, same as `array_sort`;
+  * rebuilds) per EVENT. Semantics preserved exactly:
+  *  - events sort by their `ord` field under the SQL `<` ordering,
+  *    nulls first, via a stable sort — tie order is the input order,
+  *    as in `array_sort`;
   *  - fold: `row` replaces, `del` tombstones (patch-after-delete
   *    increments `viol`), first patch on `base` adopts the event map,
   *    later patches overlay column-wise in `overwrite`'s exact entry

@@ -35,7 +35,6 @@ final class CdcStreamEngine(
     archiveDir: Option[String] = None,
     quarantineDir: Option[String] = None,
     startLsn: Option[Long] = None,
-    tableParallelism: Int = 4,
     aggViews: Seq[CdcStreamEngine.AggView] = Seq.empty,
     // P5: per-db slot restriction (replayer/connemara_replay.pl:779-799)
     // — a database with a configured slot only accepts rows from that
@@ -139,18 +138,6 @@ final class CdcStreamEngine(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema)
       }
 
-  /** One micro-batch: the replay loop body. Public for batch-mode
-    * reuse and direct testing.
-    *
-    * DDL is a barrier AT ITS STREAM POSITION (A8): the batch splits
-    * into segments around each DDL, DML segments apply in order with
-    * the DDL executed between them — so e.g. a RENAME COLUMN
-    * mid-batch sees pre-rename DML under the old name and
-    * post-rename DML under the new one, exactly like the reference's
-    * commit-barrier routing (`replayer/connemara_replay.pl:862-876`).
-    * Segment merges chain lazily per table; everything is staged and
-    * committed once at the end of the batch.
-    */
   /** Fold one segment's collapsed change set into every registered
     * materialized aggregate of this table ([[IncrementalAgg]]): the
     * view is seeded from the pre-batch table on first touch, then
@@ -160,19 +147,42 @@ final class CdcStreamEngine(
     * `seed` must be the FULL pre-batch table. Views bind to the
     * source's TableId — maintain views across DDL renames by
     * re-registering under the new id (DDL batches also disable the
-    * delta path, so the common case is untouched). */
+    * delta path, so the common case is untouched). Returns the views'
+    * new working entries; reads `viewWorking` only, so tables of one
+    * segment can run it concurrently. */
   private def maintainViews(meta: TableMeta, preImages: DataFrame,
-                            seed: => DataFrame, collapsed: DataFrame): Unit =
-    aggViews.filter(_.source == meta.id).foreach { v =>
+                            seed: => DataFrame, collapsed: DataFrame): Seq[(TableId, DataFrame)] =
+    aggViews.filter(_.source == meta.id).map { v =>
       val prior = viewWorking.get(v.view)
         .orElse(if (store.exists(v.view)) Some(store.read(v.view)) else None)
         .getOrElse(IncrementalAgg.groupState(seed, v.groupCol,
           v.value(c => col(c))))
       val d = IncrementalAgg.delta(preImages, collapsed, meta, v.groupCol, v.value)
-      viewWorking(v.view) = IncrementalAgg.applyDelta(prior, d, v.groupCol)
+      v.view -> IncrementalAgg.applyDelta(prior, d, v.groupCol)
         .localCheckpoint(eager = false)
     }
 
+  /** One micro-batch: the replay loop body. Public for batch-mode
+    * reuse and direct testing.
+    *
+    * DDL is a barrier AT ITS STREAM POSITION (A8): the batch splits
+    * into segments around each DDL, DML segments apply in order with
+    * the DDL executed between them — so e.g. a RENAME COLUMN
+    * mid-batch sees pre-rename DML under the old name and
+    * post-rename DML under the new one, exactly like the reference's
+    * commit-barrier routing (`replayer/connemara_replay.pl:862-876`).
+    * The DDL handler (and with it the rename and truncate hooks) runs
+    * on the calling thread, between segments.
+    *
+    * Within a segment the touched tables apply concurrently on the
+    * batch's table pool (one thread per core — the reference's
+    * `nb_threads` workers, `replayer/connemara_replay.pl:764-777`):
+    * each table decodes, collapses (hash-partitioned by key over every
+    * core, [[ApplyEngine.collapse]]) and merges on its own thread.
+    * Segment merges chain lazily per table; everything is staged on
+    * the same pool and committed once, in one manifest write, at the
+    * end of the batch.
+    */
   def processBatch(batch0: DataFrame, batchId: Long): Unit = {
     // basebackup→stream handoff: the snapshot already contains every
     // effect up to its pinned LSN (Snapshot.readStartLsn), so events
@@ -187,6 +197,8 @@ final class CdcStreamEngine(
     val batch =
       startLsn.fold(batchSlotted)(l => batchSlotted.filter(col("lsn_start") >= l))
     val parsedAll = Wal2Json.parse(batch).cache()
+    // the batch's table pool, started on first use
+    var pool: java.util.concurrent.ExecutorService = null
     try {
       // P7: DDL routing predicate splits the stream. Only INSERTs
       // carry statements; deletes/updates of the DDL spool table
@@ -194,6 +206,32 @@ final class CdcStreamEngine(
       val isDdl = col("p.schema") === "public" &&
         col("p.table") === "sql_ddl_statements"
       val bad = Wal2Json.invalid
+
+      // §1.5 of the optimization guide: label the replay loop's jobs so
+      // a slow trigger decomposes in the UI / profiler without guesswork
+      def label(phase: String): Unit =
+        spark.sparkContext.setJobDescription(s"cdc batch $batchId: $phase")
+
+      // Run one task per table, concurrently when there are several;
+      // results in task order. Every task finishes before the first
+      // failure (in task order) is rethrown. Tasks keep the calling
+      // thread's job label.
+      def perTable[A](tasks: Seq[() => A]): Seq[A] =
+        if (tasks.length <= 1) tasks.map(_())
+        else {
+          import scala.concurrent.{Await, ExecutionContext, Future}
+          import scala.concurrent.duration.Duration
+          if (pool == null) pool = java.util.concurrent.Executors.newFixedThreadPool(
+            spark.sparkContext.defaultParallelism)
+          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+          val desc = spark.sparkContext.getLocalProperty("spark.job.description")
+          val running = tasks.map(t => Future {
+            spark.sparkContext.setJobDescription(desc)
+            t()
+          })
+          running.foreach(Await.ready(_, Duration.Inf))
+          running.map(_.value.get.get)
+        }
 
       // ONE preamble action where there used to be four driver
       // round-trips per micro-batch (the emptiness probe, the strict
@@ -205,10 +243,6 @@ final class CdcStreamEngine(
       // reference cadence each one saved is latency on every batch
       // forever (opt guide §1.2: fix the distributed-algorithm shape
       // first; a collect per phase IS the shape here).
-      // §1.5 of the optimization guide: label the replay loop's jobs so
-      // a slow trigger decomposes in the UI / profiler without guesswork
-      def label(phase: String): Unit =
-        spark.sparkContext.setJobDescription(s"cdc batch $batchId: $phase")
       label("preamble")
       val pre = parsedAll.agg(
         count(lit(1)).as("__n"),
@@ -296,67 +330,78 @@ final class CdcStreamEngine(
         .distinct().collect().toSeq
         .map(r => TableId(r.getString(0), r.getString(1), r.getString(2)))
 
+      // one table's merge of one segment: its new working entry, the
+      // buckets it covers (bucket-level path) and its views' entries
+      final case class Applied(df: DataFrame, buckets: Option[Set[Int]],
+                               views: Seq[(TableId, DataFrame)])
+
+      def applyTable(segDml: DataFrame, meta: TableMeta): Applied = {
+        val baseVer = committed.get(meta.id.qualified)
+        val deltaSpec =
+          if (allowDelta && !working.contains(meta.id))
+            store.bucketSpec(meta.id)
+              .filter(_ => baseVer.exists(store.isBucketedAt(meta.id, _)))
+          else None
+        def checkStrict(target: DataFrame, collapsed: DataFrame): Unit =
+          if (strict) {
+            val nViol = ApplyEngine.violations(target, collapsed, meta).count()
+            if (nViol > 0) throw new IllegalStateException(
+              s"batch $batchId: $nViol apply violations on ${meta.id.qualified}")
+          }
+        deltaSpec match {
+          case Some(spec) =>
+            // bucket-level path: read ONLY the buckets the
+            // change keys hash into; the restricted merge equals
+            // the full merge restricted to those buckets (every
+            // changed key's bucket is in the set by construction)
+            val collapsed =
+              ApplyEngine.collapse(Wal2Json.decodeEvents(segDml, meta))
+                .localCheckpoint(eager = false)
+            val changed =
+              BucketedPublish.changedBuckets(collapsed, meta, spec.n)
+            val target = store.readBuckets(meta.id, changed, baseVer.get)
+            // a patch's target row, if it exists, is in the
+            // changed bucket set — restricted check ≡ full
+            checkStrict(target, collapsed)
+            // views: pre-images from the restricted buckets
+            // (they cover every change key); seed, if first
+            // touch, from the full committed table
+            val views = maintainViews(meta, target, store.read(meta.id), collapsed)
+            Applied(ApplyEngine.merge(target, collapsed, meta, broadcastChanges = true),
+              Some(changed), views)
+          case None =>
+            val target = working.getOrElse(meta.id, store.read(meta.id))
+            val collapsed0 = ApplyEngine.collapse(Wal2Json.decodeEvents(segDml, meta))
+            // strict and view maintenance each add a consumer of
+            // the collapsed plan beyond the merge — materialize once
+            val collapsed =
+              if (strict || aggViews.nonEmpty)
+                collapsed0.localCheckpoint(eager = false)
+              else collapsed0
+            checkStrict(target, collapsed)
+            val views = maintainViews(meta, target, target, collapsed)
+            // a batch's change set is ≪ the table: broadcast it, as the
+            // bucket-level path does (the collapse's size estimate is
+            // the raw events', which can miss the broadcast threshold)
+            Applied(ApplyEngine.merge(target, collapsed, meta, broadcastChanges = true),
+              None, views)
+        }
+      }
+
       def applySegment(segDml: DataFrame, touched: Seq[TableId]): Unit = {
-        touched.foreach { tid =>
-          registry.get(tid)
-            .filter(meta => committed.get(meta.id.qualified).forall(_ < targetVersion))
-            // registry-known but neither in-flight nor in the store:
-            // the only way here is replaying a committed batch whose
-            // rename barrier already retired this name — the final
-            // state is published, skip (a fresh CREATE commits v=0
-            // immediately, so it never hits this)
-            .filter(meta => working.contains(meta.id) || store.exists(meta.id))
-            .foreach { meta =>
-              val baseVer = committed.get(meta.id.qualified)
-              val deltaSpec =
-                if (allowDelta && !working.contains(meta.id))
-                  store.bucketSpec(meta.id)
-                    .filter(_ => baseVer.exists(store.isBucketedAt(meta.id, _)))
-                else None
-              deltaSpec match {
-                case Some(spec) =>
-                  // bucket-level path: read ONLY the buckets the
-                  // change keys hash into; the restricted merge equals
-                  // the full merge restricted to those buckets (every
-                  // changed key's bucket is in the set by construction)
-                  val collapsed =
-                    ApplyEngine.collapse(Wal2Json.decodeEvents(segDml, meta))
-                      .localCheckpoint(eager = false)
-                  val changed =
-                    BucketedPublish.changedBuckets(collapsed, meta, spec.n)
-                  val target = store.readBuckets(meta.id, changed, baseVer.get)
-                  if (strict) {
-                    // a patch's target row, if it exists, is in the
-                    // changed bucket set — restricted check ≡ full
-                    val nViol = ApplyEngine.violations(target, collapsed, meta).count()
-                    if (nViol > 0) throw new IllegalStateException(
-                      s"batch $batchId: $nViol apply violations on ${meta.id.qualified}")
-                  }
-                  // views: pre-images from the restricted buckets
-                  // (they cover every change key); seed, if first
-                  // touch, from the full committed table
-                  maintainViews(meta, target, store.read(meta.id), collapsed)
-                  working(meta.id) =
-                    ApplyEngine.merge(target, collapsed, meta, broadcastChanges = true)
-                  workingBuckets(meta.id) = changed
-                case None =>
-                  val target = working.getOrElse(meta.id, store.read(meta.id))
-                  val collapsed0 = ApplyEngine.collapse(Wal2Json.decodeEvents(segDml, meta))
-                  // strict and view maintenance each add a consumer of
-                  // the collapsed plan beyond the merge — materialize once
-                  val collapsed =
-                    if (strict || aggViews.nonEmpty)
-                      collapsed0.localCheckpoint(eager = false)
-                    else collapsed0
-                  if (strict) {
-                    val nViol = ApplyEngine.violations(target, collapsed, meta).count()
-                    if (nViol > 0) throw new IllegalStateException(
-                      s"batch $batchId: $nViol apply violations on ${meta.id.qualified}")
-                  }
-                  maintainViews(meta, target, target, collapsed)
-                  working(meta.id) = ApplyEngine.merge(target, collapsed, meta)
-              }
-            }
+        val metas = touched.flatMap(registry.get)
+          .filter(meta => committed.get(meta.id.qualified).forall(_ < targetVersion))
+          // registry-known but neither in-flight nor in the store:
+          // the only way here is replaying a committed batch whose
+          // rename barrier already retired this name — the final
+          // state is published, skip (a fresh CREATE commits v=0
+          // immediately, so it never hits this)
+          .filter(meta => working.contains(meta.id) || store.exists(meta.id))
+        val applied = perTable(metas.map(meta => () => applyTable(segDml, meta)))
+        metas.zip(applied).foreach { case (meta, a) =>
+          working(meta.id) = a.df
+          a.buckets.foreach(workingBuckets(meta.id) = _)
+          viewWorking ++= a.views
         }
       }
 
@@ -407,23 +452,9 @@ final class CdcStreamEngine(
           }
         }
         // parallel staging: disjoint dirs, one commit after the barrier
-        // (the reference's nb_threads worker pool, replay.pl:764-777)
-        if (entries.length <= 1)
-          entries.map { case (tid, df) =>
-            stageOne(tid, df); tid -> targetVersion
-          }.toMap
-        else {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(entries.length, tableParallelism))
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          try Await.result(
-            Future.sequence(entries.map { case (tid, df) =>
-              Future { stageOne(tid, df); tid -> targetVersion }
-            }), Duration.Inf).toMap
-          finally pool.shutdown()
-        }
+        perTable(entries.map { case (tid, df) =>
+          () => { stageOne(tid, df); tid -> targetVersion }
+        }).toMap
       }
 
       // A2/A3: one atomic cross-table commit per batch; renamed-away
@@ -456,6 +487,7 @@ final class CdcStreamEngine(
       }
       maybeFail(batchId, "post_commit")
     } finally {
+      if (pool != null) pool.shutdown()
       spark.sparkContext.setJobDescription(null)
       parsedAll.unpersist()
     }

@@ -141,15 +141,24 @@ final class TableStore(spark: SparkSession, val root: String) {
     readVersion(id, v)
   }
 
-  /** Stage a new version of one table (no manifest update yet). */
-  def stage(id: TableId, df: DataFrame, version: Long): Unit =
+  /** Stage a new version of one table (no manifest update yet), with
+    * the `_schema.json` sidecar that lets [[readVersion]] skip parquet
+    * schema inference (a Spark job and a driver round-trip per read). */
+  def stage(id: TableId, df: DataFrame, version: Long): Unit = {
     df.write.mode("overwrite").parquet(dir(id, version))
+    // sidecar AFTER the data write (overwrite clears the dir)
+    Files.writeString(schemaPath(id, version), df.schema.json)
+  }
 
-  /** Read one specific staged version (committed or not). */
+  /** Read one specific staged version (committed or not). A version
+    * staged without a schema sidecar (by older code) infers its schema
+    * from the parquet footers. */
   def readVersion(id: TableId, version: Long): DataFrame =
     bucketSpec(id) match {
       case Some(spec) if Files.exists(bucketMapPath(id, version)) =>
         readBuckets(id, (0 until spec.n).toSet, version)
+      case _ if Files.exists(schemaPath(id, version)) =>
+        spark.read.schema(versionSchema(id, version)).parquet(dir(id, version))
       case _ => spark.read.parquet(dir(id, version))
     }
 

@@ -122,11 +122,11 @@ class ApplyPropertySpec extends SparkSpec {
         r.getInt(3))).toSeq
         .sortBy(_._1.mkString("|"))
     assert(states(ApplyEngine.collapse(events)) ==
-      states(ApplyEngine.collapseFold(events)), s"seed=$seed (native fold)")
+      states(ReferenceFolds.collapseFold(events)), s"seed=$seed (native fold)")
     // native two-phase skew kernels ≡ the interpreted two-phase fold ≡
     // the single-phase collapse, state-for-state
     assert(states(ApplyEngine.collapseSkewResistant(events, 30)) ==
-      states(ApplyEngine.collapseSkewResistantFold(events, 30)),
+      states(ReferenceFolds.collapseSkewResistantFold(events, 30)),
       s"seed=$seed (native skew fold)")
     assert(states(ApplyEngine.collapseSkewResistant(events, 30)) ==
       states(ApplyEngine.collapse(events)), s"seed=$seed (skew ≡ collapse)")
@@ -167,6 +167,44 @@ class ApplyPropertySpec extends SparkSpec {
         r.getInt(3))).toSeq.sortBy(_._1.mkString("|"))
     // must not throw, and native ≡ fold on the same mixed-null input
     assert(states(ApplyEngine.collapse(events)) ==
-      states(ApplyEngine.collapseFold(events)))
+      states(ReferenceFolds.collapseFold(events)))
+  }
+
+  test("collapse ≡ lambda fold across partitions: many keys, null key, null del maps") {
+    // ~600 keys: every hash partition folds well past 128 keys (where
+    // collect_list's aggregate fell back to a sort)
+    val rnd = new Random(11L)
+    val rows = (0 until 3000).map { i =>
+      val key: Seq[String] =
+        if (rnd.nextInt(200) == 0) null
+        else Seq(rnd.nextInt(300).toString, if (rnd.nextBoolean()) "a" else null)
+      // unique ords: equal ords fold in arrival order, which the two
+      // plans' shuffles need not share
+      val ord = (java.sql.Timestamp.valueOf(s"2024-01-01 00:00:${rnd.nextInt(60)}"),
+        i.toLong, rnd.nextInt(2))
+      val op = Seq("row", "patch", "del")(rnd.nextInt(3))
+      // decode gives every del a null map (a null row/patch map trips
+      // the lambda fold's non-null result type)
+      val vals: Map[String, String] =
+        if (op == "del" && rnd.nextBoolean()) null
+        else Seq("c", "d", "e").filter(_ => rnd.nextBoolean())
+          .map(c => c -> (if (rnd.nextInt(6) == 0) null else s"v$i")).toMap
+      (ord, op, key, vals)
+    }
+    val events = rows.toDF("ord0", "op", "key", "vals")
+      .select(
+        struct(col("ord0._1").as("ts"), col("ord0._2").as("lsn"),
+          col("ord0._3").as("sub")).as("ord"),
+        col("op"), col("key"), col("vals"))
+    def states(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (Option(r.getSeq[String](0)).map(_.mkString("|")).orNull,
+        r.getString(1),
+        if (r.isNullAt(2)) null else r.getMap[String, String](2),
+        r.getInt(3))).toSeq.sortBy(s => String.valueOf(s._1))
+    val native = states(ApplyEngine.collapse(events))
+    assert(native.size > 500 && native.exists(_._1 == null))
+    val reference = states(ReferenceFolds.collapseFold(events))
+    assert(native == reference,
+      s"native-only: ${native.diff(reference)}; reference-only: ${reference.diff(native)}")
   }
 }

@@ -481,4 +481,122 @@ class CdcStreamSpec extends SparkSpec {
       s"${tid.qualified}=0\n${other.qualified}=0\n")
     assert(store.manifest().size == 2 && store.manifestSeq() == 0L)
   }
+
+  private val ordId = TableId("srcdb", "public", "orders")
+  private val liId = TableId("srcdb", "public", "lineitem")
+
+  /** customer, orders and lineitem (composite PK), all at v=0. */
+  private def threeTables(): (TableStore, SchemaRegistry) = {
+    val (_, store, registry, _, _) = freshEngine()
+    registry.register(TableMeta(ordId, StructType(Seq(
+      StructField("o_orderkey", LongType),
+      StructField("o_total", DoubleType))), Seq("o_orderkey")))
+    registry.register(TableMeta(liId, StructType(Seq(
+      StructField("l_orderkey", LongType),
+      StructField("l_linenumber", IntegerType),
+      StructField("l_qty", DoubleType))), Seq("l_orderkey", "l_linenumber")))
+    store.stage(ordId, Seq((100L, 5.0), (101L, 6.0)).toDF("o_orderkey", "o_total"), 0L)
+    store.stage(liId, Seq((100L, 1, 1.0), (100L, 2, 2.0), (101L, 1, 3.0))
+      .toDF("l_orderkey", "l_linenumber", "l_qty"), 0L)
+    store.commit(Map(ordId -> 0L, liId -> 0L))
+    (store, registry)
+  }
+
+  private val threeTableChanges: Seq[(Long, String)] = Seq(
+    (1L, """{"kind":"update","schema":"public","table":"customer",
+      "columnnames":["c_custkey","c_acctbal"],"columnvalues":[1,77.0],
+      "oldkeys":{"keynames":["c_custkey"],"keyvalues":[1]}}"""),
+    (2L, """{"kind":"insert","schema":"public","table":"orders",
+      "columnnames":["o_orderkey","o_total"],"columnvalues":[102,9.0]}"""),
+    (3L, """{"kind":"update","schema":"public","table":"lineitem",
+      "columnnames":["l_orderkey","l_linenumber","l_qty"],"columnvalues":[100,2,20.0],
+      "oldkeys":{"keynames":["l_orderkey","l_linenumber"],"keyvalues":[100,2]}}"""),
+    (4L, """{"kind":"delete","schema":"public","table":"customer",
+      "oldkeys":{"keynames":["c_custkey"],"keyvalues":[2]}}"""),
+    (5L, """{"kind":"update","schema":"public","table":"orders",
+      "columnnames":["o_orderkey","o_total"],"columnvalues":[200,6.5],
+      "oldkeys":{"keynames":["o_orderkey"],"keyvalues":[101]}}"""),
+    (6L, """{"kind":"delete","schema":"public","table":"lineitem",
+      "oldkeys":{"keynames":["l_orderkey","l_linenumber"],"keyvalues":[101,1]}}"""),
+    (7L, """{"kind":"insert","schema":"public","table":"lineitem",
+      "columnnames":["l_orderkey","l_linenumber","l_qty"],"columnvalues":[102,1,4.0]}"""),
+    (8L, """{"kind":"update","schema":"public","table":"customer",
+      "columnnames":["c_custkey","c_name"],"columnvalues":[1,"Alicia"],
+      "oldkeys":{"keynames":["c_custkey"],"keyvalues":[1]}}"""))
+
+  private def tableRows(store: TableStore, id: TableId): Seq[Row] = {
+    val df = store.read(id)
+    df.orderBy(df.columns.map(col).toIndexedSeq: _*).collect().toSeq
+  }
+
+  test("DML batch over 3 tables: concurrent apply ≡ one table at a time, one manifest write") {
+    val (store, registry) = threeTables()
+    val seq0 = store.manifestSeq()
+    new CdcStreamEngine(spark, registry, store)
+      .processBatch(spoolBatch(threeTableChanges: _*), 0L)
+    assert(store.manifestSeq() == seq0 + 1, "the batch must commit in one manifest write")
+    assert(Seq(tid, ordId, liId).map(t => store.manifest()(t.qualified)) == Seq(1L, 1L, 1L))
+
+    // reference: each table's changes as a batch of its own, in turn
+    val (refStore, refRegistry) = threeTables()
+    val refEngine = new CdcStreamEngine(spark, refRegistry, refStore)
+    Seq("customer", "orders", "lineitem").zipWithIndex.foreach { case (t, i) =>
+      refEngine.processBatch(spoolBatch(
+        threeTableChanges.filter(_._2.contains(s"\"table\":\"$t\"")): _*), i.toLong)
+    }
+    Seq(tid, ordId, liId).foreach { t =>
+      assert(tableRows(store, t) == tableRows(refStore, t), t.qualified)
+    }
+    assert(tableRows(store, tid) == Seq(Row(1L, "Alicia", 77.0), Row(3L, "Carol", 30.0)))
+    assert(tableRows(store, ordId) == Seq(Row(100L, 5.0), Row(102L, 9.0), Row(200L, 6.5)))
+    assert(tableRows(store, liId) ==
+      Seq(Row(100L, 1, 1.0), Row(100L, 2, 20.0), Row(102L, 1, 4.0)))
+  }
+
+  test("strict violation in one of 3 concurrently applied tables fails the batch, naming it") {
+    val (store, registry) = threeTables()
+    val seq0 = store.manifestSeq()
+    val before = Seq(tid, ordId, liId).map(tableRows(store, _))
+    val bad = (9L, """{"kind":"update","schema":"public","table":"orders",
+      "columnnames":["o_orderkey","o_total"],"columnvalues":[404,1.0],
+      "oldkeys":{"keynames":["o_orderkey"],"keyvalues":[404]}}""")
+    val e = intercept[IllegalStateException] {
+      new CdcStreamEngine(spark, registry, store, strict = true)
+        .processBatch(spoolBatch(threeTableChanges :+ bad: _*), 0L)
+    }
+    assert(e.getMessage.contains("apply violations on srcdb_public.orders"), e.getMessage)
+    assert(store.manifestSeq() == seq0)
+    assert(Seq(tid, ordId, liId).map(tableRows(store, _)) == before)
+  }
+
+  test("a payload torn right after \"keyvalues\" is quarantined, or fails a strict batch") {
+    // from_json keeps the fields it parsed before the tear: without the
+    // corrupt-record check this is a complete-looking update with
+    // oldkeys = null, keyed by its new values
+    val torn = """{"kind":"update","schema":"public","table":"customer",""" +
+      """"columnnames":["c_custkey","c_acctbal"],"columnvalues":[3,-1.0],""" +
+      """"oldkeys":{"keynames":["c_custkey"],"keyvalues""""
+    val good = """{"kind":"update","schema":"public","table":"customer",
+      "columnnames":["c_custkey","c_acctbal"],"columnvalues":[1,11.5],
+      "oldkeys":{"keynames":["c_custkey"],"keyvalues":[1]}}"""
+
+    val (_, store, registry, _, _) = freshEngine()
+    val qdir = Files.createTempDirectory("graft-quar-").toString
+    new CdcStreamEngine(spark, registry, store, quarantineDir = Some(qdir))
+      .processBatch(spoolBatch((1L, good), (2L, torn)), 0L)
+    assert(state(store) == Seq(
+      Row(1L, "Alice", 11.5), Row(2L, "Bob", 20.0), Row(3L, "Carol", 30.0)))
+    val quarantined = graft.stream.Quarantine.read(spark, qdir)
+      .select("payload").as[String].collect().toSeq
+    assert(quarantined == Seq(torn))
+
+    val (_, store2, registry2, _, _) = freshEngine()
+    val e = intercept[IllegalStateException] {
+      new CdcStreamEngine(spark, registry2, store2, strict = true)
+        .processBatch(spoolBatch((1L, good), (2L, torn)), 0L)
+    }
+    assert(e.getMessage.contains("1 unparseable change payloads"), e.getMessage)
+    assert(state(store2) == Seq(
+      Row(1L, "Alice", 10.0), Row(2L, "Bob", 20.0), Row(3L, "Carol", 30.0)))
+  }
 }
