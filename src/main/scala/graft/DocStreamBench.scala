@@ -167,14 +167,20 @@ object DocStreamBench {
 
     // ---- index-maintenance economics (post-run; the stream is done,
     // so every batch is committed and compaction is safe) ----
-    // One batch dir per micro-batch is the small-file decay compaction
+    // One part per micro-batch is the small-file decay compaction
     // exists for; record its cost and what a probe gains from it.
-    def indexStats(): (Int, Int) = {
-      val root = new java.io.File(idxDir)
-      val ds = Option(root.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-      (ds.length, ds.map(d =>
-        d.listFiles().count(_.getName.endsWith(".parquet"))).sum)
+    val index = new graft.stream.AppendTable(spark, idxDir)
+    // (parts the committed index reads, their parquet files, version
+    // dirs on disk — vacuum keeps one superseded version for readers)
+    def indexStats(): (Int, Int, Long) = {
+      val parts = index.parts().map(p => new java.io.File(p._1))
+      val onDisk = {
+        val s = Files.walk(Paths.get(idxDir), 2)
+        try s.filter(_.getFileName.toString.startsWith("v=")).count()
+        finally s.close()
+      }
+      (parts.length, parts.map(d =>
+        d.listFiles().count(_.getName.endsWith(".parquet"))).sum, onDisk)
     }
     // probe: near-dups of the first slice under fresh ids — the
     // steady-state admission shape (mostly rejections via the index)
@@ -185,20 +191,19 @@ object DocStreamBench {
     def timeProbe(): (Double, Long) = {
       System.gc()
       val t = System.nanoTime()
-      val ix = spark.read.parquet(idxDir).filter(col("batch") =!= 9999999L)
-      val (surv, _) = DocIngest.admitBatch(probeBatch, Some(ix),
+      val (surv, _) = DocIngest.admitBatch(probeBatch, index.read(),
         "doc_id", "text")
       val n = surv.count()
       ((System.nanoTime() - t) / 1e9, n)
     }
-    val (dirsBefore, filesBefore) = indexStats()
+    val (dirsBefore, filesBefore, _) = indexStats()
     val (probeBeforeSec, survBefore) = timeProbe()
     System.gc()
     val tc = System.nanoTime()
     val merged = DocIngest.compactIndex(spark, idxDir,
       upToBatch = progress.map(_.batchId).max)
     val compactSec = (System.nanoTime() - tc) / 1e9
-    val (dirsAfter, filesAfter) = indexStats()
+    val (dirsAfter, filesAfter, dirsOnDisk) = indexStats()
     val (probeAfterSec, survAfter) = timeProbe()
     val compactOk = merged == dirsBefore && dirsAfter == 1 &&
       survAfter == survBefore
@@ -213,6 +218,7 @@ object DocStreamBench {
         s""""p50_ms":${pct(0.5)},"p95_ms":${pct(0.95)},""" +
         s""""index_dirs_before":$dirsBefore,"index_files_before":$filesBefore,""" +
         s""""index_dirs_after":$dirsAfter,"index_files_after":$filesAfter,""" +
+        s""""index_dirs_on_disk":$dirsOnDisk,""" +
         s""""compact_sec":${fmt(compactSec)},""" +
         s""""probe_before_sec":${fmt(probeBeforeSec)},""" +
         s""""probe_after_sec":${fmt(probeAfterSec)},""" +

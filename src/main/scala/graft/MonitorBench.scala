@@ -13,14 +13,14 @@ import org.apache.spark.sql.types._
   * to [[graft.stream.EventStreams.rateMonitor]]'s round-15 retention:
   * the same synthetic event stream is run TWICE through the monitor,
   * once without retention (the control: registers grow with uptime,
-  * one batch dir per trigger) and once with
+  * one register part per trigger) and once with
   * `retainPeriods`/`compactEvery` (in-loop retention compaction).
   * The claims to measure:
   *
   *  1. retained register state is bounded by
   *     types × (retainPeriods + uncompacted slack) while the control
   *     grows ∝ stream age;
-  *  2. the retained directory stays at O(compactEvery) batch dirs
+  *  2. the retained registers stay at O(compactEvery) parts
   *     while the control holds one per trigger;
   *  3. the view read ([[graft.stream.EventStreams.rateMonitorView]]
   *     over the retained window, `sincePeriod` at the cutoff) gets
@@ -122,9 +122,10 @@ object MonitorBench {
       q.awaitTermination()
       val wallSec = (System.nanoTime() - t0) / 1e9
       q.exception.foreach(throw _)
-      val dirs = new java.io.File(s"$dir/counts").listFiles()
-        .count(f => f.isDirectory && f.getName.startsWith("batch="))
-      val regs = spark.read.parquet(s"$dir/counts")
+      // parts the committed registers read (every view scans them all)
+      val counts = new graft.stream.AppendTable(spark, s"$dir/counts")
+      val dirs = counts.parts().size
+      val regs = counts.read().get
       val rows = regs.count()
       val minPeriod = regs.agg(min(col("period"))).head().getLong(0)
       // the monitoring read an operator runs: the anomaly view over

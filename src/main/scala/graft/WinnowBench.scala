@@ -16,8 +16,8 @@ import org.apache.spark.sql.types._
   * → h-sorted append loop under sustained load, then the two
   * maintenance questions an operator prices:
   *
-  *  1. the DIRS/PROBE-COST CURVE: how much does a fragmented index
-  *     (one dir per micro-batch) cost a probe, and what does windowed
+  *  1. the PARTS/PROBE-COST CURVE: how much does a fragmented index
+  *     (one part per micro-batch) cost a probe, and what does windowed
   *     compaction buy — probe latency measured at the post-run dir
   *     count, after a half compaction, and after a full compaction;
   *  2. the PRUNED-PROBE benefit: the same probe against a
@@ -180,13 +180,12 @@ object WinnowBench {
       .select((col("doc_id") + lit(1000000L * (nBatches + 1)))
         .as("doc_id"), col("text"))
       .localCheckpoint() // timings must measure the PROBE
-    def indexDirs(): Int = new java.io.File(idxDir).listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("batch="))
+    val index = new graft.stream.AppendTable(spark, idxDir)
+    def indexDirs(): Int = index.parts().size
     def timeProbe(): (Double, Long) = {
       System.gc()
       val t = System.nanoTime()
-      val ix = spark.read.parquet(idxDir).filter(col("batch") =!= 9999999L)
-      val n = Winnowing.incrementalWinnowPairs(probeBatch, ix,
+      val n = Winnowing.incrementalWinnowPairs(probeBatch, index.read().get,
         "doc_id", "text").count()
       ((System.nanoTime() - t) / 1e9, n)
     }
@@ -213,7 +212,7 @@ object WinnowBench {
     // persist the full index as an h-range-clustered fleet + manifest
     val fleetDir = Files.createTempDirectory("graft-wbench-fleet-")
       .toString + "/ix"
-    val fullIndex = spark.read.parquet(idxDir).drop("batch")
+    val fullIndex = index.read().get
     Winnowing.writeWinnowIndex(spark, fullIndex, fleetDir, nFiles = 64)
     // a NARROW probe (one doc) — the needle-lookup shape pruning serves
     // same headroom rule as the probe batch: one slot past the probe

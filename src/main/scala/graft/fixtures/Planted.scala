@@ -38,6 +38,9 @@ object Planted {
       vs: Seq[(Column, Seq[(String, Column)])]): DataFrame = {
     require(vs.nonEmpty, "Planted.variants: need at least one variant")
     val cols = base.columns.toSeq
+    require(!cols.contains("__v"),
+      "Planted.variants: base already has a __v column (the internal " +
+        "variant tag) — rename it first")
     vs.foreach { case (_, mods) =>
       val unknown = mods.map(_._1).toSet -- cols.toSet
       require(unknown.isEmpty,

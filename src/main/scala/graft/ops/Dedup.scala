@@ -753,11 +753,6 @@ object Dedup {
   def setJaccard(ca: Column, cb: Column): Column =
     size(array_intersect(ca, cb)).cast("double") / size(array_union(ca, cb))
 
-  /** Character-set Jaccard similarity of two raw texts (convenience;
-    * for joins use charSet + setJaccard on precomputed sets). */
-  def charJaccard(a: Column, b: Column): Column =
-    setJaccard(charSet(a), charSet(b))
-
   /** ASCII char set as a 128-bit bitmap `(lo, hi)` — for ASCII text
     * this represents exactly the distinct-char set, and pairwise
     * Jaccard becomes two ANDs + two ORs + popcounts instead of array

@@ -234,13 +234,12 @@ object IvfIndex {
   def buildSq8(corpus: DataFrame, idCol: String, vecCol: String, dir: String,
                kCells: Int, iters: Int, levels: Int = 255,
                scale: Int = 1000): Unit = {
-    val (_, cents) =
+    val (assigned, cents) =
       KMeans.trainWithCentroids(corpus, idCol, vecCol, kCells, iters, scale)
     cents.write.mode("overwrite").parquet(s"$dir/centroids")
     // lazy localCheckpoint: the 1-row stats frame feeds the stats
     // write AND the encode broadcast — one dim-stats corpus pass, not
-    // two (opt round 16, guide §2.4; per-run staging, released by the
-    // caller's post-query cache clear)
+    // two; released below once both writes have consumed it
     val stats = ScalarQuant.dimStats(corpus, vecCol, scale)
       .localCheckpoint(eager = false)
     stats.write.mode("overwrite").parquet(s"$dir/stats")
@@ -253,6 +252,8 @@ object IvfIndex {
         cents, scale),
       stats, "id", "vec", levels, scale, keep = Seq("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/postings")
+    // the training cuts (corpus, codebook) and the stats cut
+    Seq(assigned, stats).foreach(Lineage.release)
   }
 
   /** Add a batch to a [[buildSq8]] index WITHOUT retraining: cell

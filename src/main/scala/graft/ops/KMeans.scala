@@ -105,12 +105,14 @@ object KMeans {
           s => s.getField("sv")).as("s_new"))
       val cnt = assigned.groupBy(col("cell"))
         .agg(count(lit(1)).as("n_new"))
+      val superseded = centroids
       centroids = centroids.as("old")
         .join(sums.join(cnt, Seq("cell")), Seq("cell"), "left")
         .select(col("cell"),
           coalesce(col("s_new"), col("s")).as("s"),
           coalesce(col("n_new"), col("n")).as("n"))
         .localCheckpoint()
+      Lineage.release(superseded) // the eager cut above no longer reads it
     }
     (assign(q, centroids).select(col("id"), col("cell").as("cluster")),
       centroids)

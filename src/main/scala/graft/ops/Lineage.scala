@@ -57,6 +57,16 @@ object Lineage {
       (df.sparkSession.read.parquet(path), Some(path))
   }
 
+  /** Unpersist the local checkpoints `df` reads (the leaves of its
+    * plan): for a caller that has consumed `df` and owns those cuts,
+    * so their blocks do not outlive it in a long-lived session. */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false); ()
+      case _ => ()
+    }
+
   /** Delete every `state_N` scratch dir under `dir`. Call AFTER the
     * loop's result has been consumed (collected, joined-and-written,
     * or re-rooted through another cut) — the final state(s) back the

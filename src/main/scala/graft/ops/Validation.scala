@@ -36,14 +36,6 @@ object Validation {
       .select(col("s.check_name"), col("s.n_violations"), col("s.n_rows"))
   }
 
-  /** Key-uniqueness violations: keys appearing more than once, with
-    * their multiplicity. One keyed shuffle; at 100 TB the map-side
-    * combine collapses each partition's duplicates first. */
-  def duplicateKeys(df: DataFrame, keyCols: Seq[String]): DataFrame =
-    df.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("n_rows"))
-      .filter(col("n_rows") > 1)
-
   /** Total surplus rows under a uniqueness expectation (0 = unique):
     * Σ(multiplicity − 1) over duplicated keys, as a single row that
     * unions onto a [[report]]. */

@@ -452,14 +452,14 @@ object Winnowing {
   /** The probe core shared by the in-memory and pruned-read forms:
     * join the index on the broadcast batch hash set, df-cap over
     * batch ∪ matched (= global df for every batch-carried hash), then
-    * the pair join. Matched index rows pass through DISTINCT: a
-    * crashed compaction can legitimately leave the same (id, h) row
-    * in both a staging target and a stale source dir until the next
-    * compaction's heal, and a duplicate row would otherwise inflate
-    * n_shared past the threshold (the minhash band index tolerates
-    * duplicates — components are edge-duplication-invariant — but
-    * winnowing's SHARED-COUNT semantics are not; the distinct runs
-    * over the matched sliver only, never the index). */
+    * the pair join. Matched index rows pass through DISTINCT: an
+    * index assembled by appending overlapping winnowIndex frames can
+    * hold the same (id, h) row twice, and a duplicate row would
+    * otherwise inflate n_shared past the threshold (the minhash band
+    * index tolerates duplicates — components are
+    * edge-duplication-invariant — but winnowing's SHARED-COUNT
+    * semantics are not; the distinct runs over the matched sliver
+    * only, never the index). */
   private def probePairs(bf: DataFrame, index: DataFrame,
       minShared: Long, maxDf: Int): DataFrame = {
     val matched = index

@@ -15,6 +15,19 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * At 100 TB/day this is the shape that holds: every stage is either
   * a narrow map or keyed streaming state with eviction; nothing
   * accumulates unbounded.
+  *
+  * == Crash contract ==
+  * The persisted state — the band index ([[nearDupIngest]]), the
+  * winnow index ([[winnowIngest]]) and the sketch registers
+  * ([[sketchStream]]) — is an [[AppendTable]] per directory, published
+  * through its [[TableStore]] manifest: a batch's rows become visible
+  * in one manifest write that also records the batch id, so a replay
+  * after a crash either re-stages an unpublished batch or skips a
+  * published one, and a compaction becomes visible in one manifest
+  * write too. Readers and probes resolve through the manifest and
+  * never see a half-applied batch or compaction. The survivors and
+  * drift-metrics outputs are batch-keyed overwrites, idempotent under
+  * replay. Directories are local/POSIX paths.
   */
 object DocIngest {
 
@@ -143,8 +156,8 @@ object DocIngest {
     * "runnable unchanged as a bounded-state streaming aggregation"
     * contract: each micro-batch's log-histogram registers
     * ([[graft.ops.Sketches.logHistogram]] of `measure`, grouped by
-    * `groupCols`) land in a batch-keyed directory (overwrite →
-    * replay-idempotent, the [[nearDupIngest]] discipline), and the
+    * `groupCols`) are one [[AppendTable]] append, published with the
+    * batch id (a replayed batch finds them applied and skips), and the
     * corpus-lifetime sketch is merge-on-read: counts ADD, so reading
     * is one bounded aggregation over ≤ batches·groups·buckets rows —
     * the corpus itself is long gone. Quantile readout via
@@ -162,112 +175,33 @@ object DocIngest {
     trigger.foreach(writer.trigger)
     writer
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Sketches.logHistogram(batch, groupCols, measure, subBits)
-          .write.mode("overwrite").parquet(s"$sketchDir/batch=$batchId")
-        ()
+        val regs = new AppendTable(batch.sparkSession, sketchDir)
+        if (!regs.applied(batchId)) regs.append(
+          graft.ops.Sketches.logHistogram(batch, groupCols, measure, subBits),
+          batchId)
       }
       .start()
   }
 
   /** The corpus-lifetime sketch from a [[sketchStream]] directory:
-    * merge-on-read over the batch-keyed register dirs (counts add).
-    * Runs [[compactSketch]]'s crash recovery first — a compaction
-    * that died between its rename and its source deletions would
-    * otherwise leave the merged counts ALSO present in the stale
-    * source dirs, silently doubling them in the sum. */
+    * merge-on-read over the committed register parts (counts add). */
   def mergedSketch(spark: org.apache.spark.sql.SparkSession,
-      sketchDir: String, groupCols: Seq[String],
-      stagingGraceMs: Long = 60000L): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(sketchDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) recoverSketchDir(fs, root, stagingGraceMs)
-    spark.read.parquet(sketchDir).drop("batch")
+      sketchDir: String, groupCols: Seq[String]): DataFrame = {
+    val regs = new AppendTable(spark, sketchDir).read()
+    require(regs.isDefined, s"mergedSketch: no registers at $sketchDir")
+    regs.get
       .groupBy((groupCols :+ "bucket").map(col): _*)
       .agg(sum(col("count")).as("count"))
   }
 
-  // the shared staging prefix: every compactor's recovery pass must
-  // recognize every family's staging dirs the same way
-  private val sketchStagingPrefix = IndexLifecycle.stagingPrefix
-  private val sketchManifestName = "_merged_dirs.txt"
-
-  /** [[compactSketch]]'s roll-forward recovery, shared with
-    * [[mergedSketch]]: finish a crashed swap's rename if its target
-    * is missing, then finish the manifest's source deletions. A
-    * manifest is only trusted when its END terminator survived the
-    * write — a truncated "batch=12" read as "batch=1" must never
-    * delete the wrong directory.
-    *
-    * `stagingGraceMs` makes recovery safe on READ paths that may race
-    * a LIVE compaction ([[mergedSketch]],
-    * [[graft.stream.EventStreams.monitorCounts]]): a staging dir
-    * younger than the grace is left untouched — it is either an
-    * in-flight write (deleting it would nuke the compactor's output
-    * out from under it) or a crash so fresh the next recovery pass
-    * will heal it. Compaction's own call passes 0 — its contract
-    * already forbids a concurrent writer on the same directory. The
-    * manifest-driven source deletions below carry no such risk (a
-    * manifest is written only after the staged data is complete) and
-    * always run. */
-  private def recoverSketchDir(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      stagingGraceMs: Long = 0L): Unit = {
-    import org.apache.hadoop.fs.Path
-    def readManifest(dir: Path): Option[Seq[String]] = {
-      val mf = new Path(dir, sketchManifestName)
-      if (!fs.exists(mf)) None
-      else {
-        val in = fs.open(mf)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().toList.filter(_.nonEmpty)
-          finally in.close()
-        if (lines.lastOption.contains("END")) Some(lines.init) else None
-      }
-    }
-    IndexLifecycle.stagingDirs(fs, root)
-      .filter(st =>
-        System.currentTimeMillis() - st.getModificationTime >= stagingGraceMs)
-      .foreach { st =>
-        val targetName = st.getPath.getName.stripPrefix(sketchStagingPrefix)
-        val target = new Path(root, targetName)
-        if (!fs.exists(target)) {
-          // the target is only ever deleted AFTER the manifest write
-          // completed, so a missing target implies a trusted manifest
-          if (readManifest(st.getPath).isEmpty) throw new IllegalStateException(
-            s"compactSketch: staging for $targetName has no valid manifest " +
-              "but its target is gone — refusing to guess")
-          if (!fs.rename(st.getPath, target)) throw new IllegalStateException(
-            s"compactSketch: recovery rename to $target failed")
-        } else fs.delete(st.getPath, true) // write never finished; sources intact
-      }
-    fs.listStatus(root).filter(_.getPath.getName.startsWith("batch="))
-      .foreach { d =>
-        readManifest(d.getPath).foreach { merged =>
-          merged.filterNot(_ == d.getPath.getName)
-            .foreach(n => fs.delete(new Path(root, n), true))
-          fs.delete(new Path(d.getPath, sketchManifestName), false)
-        }
-      }
-  }
-
-  /** Compact a [[sketchStream]] register directory: merge the
-    * batch-keyed dirs for batches ≤ `upToBatch` into the lowest one,
-    * ADDING counts (every non-`count` column is a key). This is NOT
-    * [[compactIndex]]: register rows are additive state, so the
-    * row-set heal (`distinct()`) that makes the band index crash-
-    * tolerant would corrupt counts here — instead the staging dir
-    * carries a `_merged_dirs.txt` manifest of its source dirs, and
-    * recovery ROLLS FORWARD by completing the rename and then
-    * deleting exactly the listed sources, so merged counts are never
-    * double-represented. (Files starting with `_` are hidden from
-    * Spark's parquet reader, so the manifest rides inside the data
-    * dir safely.) Like every compaction here: a maintenance-window
-    * op — run with the stream stopped or ≥ 1 batch ahead; concurrent
-    * readers mid-swap can observe a partial merge.
+  /** Compact a [[sketchStream]] register directory: fold the parts of
+    * batches ≤ `upToBatch` into one, ADDING counts (every non-`count`
+    * column is a key), and publish it as one [[AppendTable]]
+    * compaction — a reader sees either the parts or the fold, never
+    * both, so merged counts are never double-represented.
     *
     * No windowed form is needed here (unlike [[compactIndex]]'s
-    * in-loop window): registers are FIXED-STATE sketches — each dir
+    * in-loop window): registers are FIXED-STATE sketches — each part
     * is ≤ groups·buckets rows regardless of corpus size, so even a
     * full merge is bounded by batches·groups·buckets, never by data
     * volume.
@@ -277,136 +211,75 @@ object DocIngest {
     * [[graft.stream.EventStreams.rateMonitor]] period registers —
     * bounded per unit time but monotonically growing forever without
     * it): after merging, only rows with `keyCol >= max(keyCol) − n + 1`
-    * (max over the MERGED dirs) survive, so compacted state is
+    * (max over the MERGED parts) survive, so compacted state is
     * bounded by the analysis window, not by uptime — the TableStore
     * vacuum discipline applied to monitor registers. With retention a
-    * single eligible dir is still rewritten (the trim is the point);
-    * dropped periods are gone from the compacted dir, so pick `n` at
+    * single eligible part is still rewritten (the trim is the point);
+    * dropped periods are gone from the compacted part, so pick `n` at
     * or above the widest analysis window any view will ask for.
     *
-    * Returns the number of directories merged (0 = nothing to do).
+    * Returns the number of parts merged (0 = nothing to do).
     */
   def compactSketch(spark: org.apache.spark.sql.SparkSession,
       sketchDir: String, upToBatch: Long,
-      retain: Option[(String, Long)] = None,
-      recoveryGraceMs: Long = 0L): Int = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(sketchDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0
-    val manifestName = sketchManifestName
-    recoverSketchDir(fs, root, recoveryGraceMs)
-    val ks = IndexLifecycle.listBatchKeys(fs, root, Long.MinValue, upToBatch)
-    if (ks.length < (if (retain.isDefined) 1 else 2)) return 0
-    val sources = ks.map(IndexLifecycle.batchPath(root, _))
-    val targetName = s"batch=${ks.head}"
-    val staging = new Path(root, s"$sketchStagingPrefix$targetName")
-    fs.delete(staging, true)
-    val df = spark.read.parquet(sources.map(_.toString).toSeq: _*)
-    val keys = df.columns.filterNot(_ == "count").toSeq
-    val merged = df.groupBy(keys.map(col): _*)
-      .agg(sum(col("count")).as("count"))
-    val retained = retain match {
-      case Some((keyCol, n)) =>
-        require(n > 0, "retain window must be positive")
-        // cutoff from the merged data itself (no wall clock in the
-        // loop — deterministic, replay-stable): keep the last n key
-        // values of what these dirs carry. The 1-row agg collect is
-        // bounded control-plane, not a global window over the rows.
-        val row = merged.agg((max(col(keyCol)) - lit(n - 1)).as("c"))
-          .collect().head
-        if (row.isNullAt(0)) merged
-        else merged.filter(col(keyCol) >= lit(row.get(0)))
-      case None => merged
+      retain: Option[(String, Long)] = None): Int =
+    new AppendTable(spark, sketchDir).compact(Long.MinValue, upToBatch,
+        minParts = if (retain.isDefined) 1 else 2) { (df, _) =>
+      val keys = df.columns.filterNot(_ == "count").toSeq
+      val merged = df.groupBy(keys.map(col): _*)
+        .agg(sum(col("count")).as("count"))
+      val retained = retain match {
+        case Some((keyCol, n)) =>
+          require(n > 0, "retain window must be positive")
+          // cutoff from the merged data itself (no wall clock in the
+          // loop — deterministic, replay-stable): keep the last n key
+          // values of what these parts carry. The 1-row agg collect is
+          // bounded control-plane, not a global window over the rows.
+          val row = merged.agg((max(col(keyCol)) - lit(n - 1)).as("c"))
+            .collect().head
+          if (row.isNullAt(0)) merged
+          else merged.filter(col(keyCol) >= lit(row.get(0)))
+        case None => merged
+      }
+      retained.coalesce(1)
     }
-    retained
-      .coalesce(1)
-      .write.mode("overwrite").parquet(staging.toString)
-    val out = fs.create(new Path(staging, manifestName), true)
-    try out.write((ks.map(k => s"batch=$k") :+ "END")
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    // target first (staging then holds the only copy → roll forward),
-    // rename, then the manifest-driven deletion of the other sources
-    // (additive contract: sources go AFTER the rename, via the
-    // manifest, never inside the swap)
-    IndexLifecycle.swapIn(fs, root, staging, targetName, "compactSketch")
-    ks.tail.foreach(k => fs.delete(IndexLifecycle.batchPath(root, k), true))
-    fs.delete(new Path(root, targetName + "/" + manifestName), false)
-    ks.length
-  }
 
-  /** Compact the [[nearDupIngest]] band index: merge the batch-keyed
-    * directories `batch=K` for `fromBatch` ≤ K ≤ `upToBatch` into the
-    * LOWEST such directory (the default `fromBatch = 0` folds
-    * everything committed — the offline maintenance form; the in-loop
-    * caller passes a trailing window so compaction cost stays ∝ the
-    * window, not the index) — without this the index accumulates one small
-    * directory per micro-batch forever (the same small-file decay the
-    * persisted IVF index's append lifecycle compacts away). Probe
-    * correctness is preserved because [[nearDupIngest]]'s replay
-    * filter only excludes the CURRENT batch id: once K is
-    * checkpoint-committed it can never replay, so its rows may live
-    * under any other committed batch id. Callers must therefore pass
-    * an `upToBatch` strictly below the oldest batch that could still
-    * replay (i.e. only checkpoint-committed batches, with the stream
-    * stopped or at least one batch ahead).
+  /** Compact the [[nearDupIngest]] band index: fold the parts whose
+    * lowest batch K lies in `fromBatch` ≤ K ≤ `upToBatch` into one
+    * (the default `fromBatch = 0` folds everything committed — the
+    * offline maintenance form; the in-loop caller passes a trailing
+    * window so compaction cost stays ∝ the window, not the index) —
+    * without this the index accumulates one small part per
+    * micro-batch forever (the same small-file decay the persisted IVF
+    * index's append lifecycle compacts away). Only checkpoint-committed
+    * batches are folded: callers pass an `upToBatch` strictly below the
+    * batch the stream may still replay. The fold is one [[AppendTable]]
+    * compaction: a probe sees either the window's parts or the fold.
+    * Offline, run it with the stream stopped (one writer per index).
     *
-    * Crash safety is roll-forward: rows are staged to
-    * `.compact_staging_<target>`, then the target dir is deleted
-    * FIRST, the other source dirs after, and the staging renamed in
-    * last — so at every crash point either the sources are intact
-    * (staging discarded on recovery) or the staging holds every row
-    * (recovery completes the rename; stale source dirs merely
-    * duplicate rows, which is admission-invariant — duplicate band
-    * rows make duplicate candidate edges, and connected components
-    * are unchanged by edge duplication — and the next compaction's
-    * `distinct()` heals the layout). Recovery runs automatically at
-    * the start of every call.
+    * `sortCol` (the winnow index's h) keeps the range-clustered sorted
+    * layout through compaction so row-group stats stay tight.
     *
-    * Returns the number of directories merged (0 = nothing to do).
+    * Returns the number of parts merged (0 = nothing to do).
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, upToBatch: Long,
       targetFileBytes: Long = 128L << 20,
       fromBatch: Long = 0L,
       sortCol: Option[String] = None): Int = {
-    import org.apache.hadoop.fs.Path
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val root = new Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0
-    // roll-forward recovery from a previous crash (row-set contract)
-    IndexLifecycle.recoverRowSetDir(fs, root, "compactIndex")
-    val ks = IndexLifecycle.listBatchKeys(fs, root, fromBatch, upToBatch)
-    if (ks.length < 2) return 0
-    val sources = ks.map(IndexLifecycle.batchPath(root, _))
-    val targetName = s"batch=${ks.head}"
-    val staging = new Path(root,
-      s"${IndexLifecycle.stagingPrefix}$targetName")
-    fs.delete(staging, true)
-    val bytes = sources.map(fs.getContentSummary(_).getLength).sum
-    val nFiles = math.max(1L,
-      (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    // distinct() both merges and HEALS duplicates a past crash left
-    val healed = spark.read.parquet(sources.map(_.toString).toSeq: _*)
-      .distinct()
-    // sortCol (the winnow index's h): preserve the range-clustered
-    // sorted layout through compaction so row-group stats stay tight
-    // — random repartition would scatter every file across the full
-    // hash domain and undo the pruned-probe story
-    val arranged = sortCol match {
-      case Some(c) => healed.repartitionByRange(nFiles, col(c))
-        .sortWithinPartitions(col(c))
-      case None => healed.repartition(nFiles)
+    new AppendTable(spark, indexDir).compact(fromBatch, upToBatch,
+        minParts = 2) { (rows, bytes) =>
+      val nFiles = math.max(1L,
+        (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+      // random repartition would scatter every file across the full
+      // hash domain and undo the winnow index's pruned-probe layout
+      sortCol match {
+        case Some(c) => rows.repartitionByRange(nFiles, col(c))
+          .sortWithinPartitions(col(c))
+        case None => rows.repartition(nFiles)
+      }
     }
-    arranged.write.mode("overwrite").parquet(staging.toString)
-    // target deleted FIRST inside swapIn: once anything is deleted,
-    // the staging (which holds every row) is the recovery source of
-    // truth; the other sources follow pre-rename (row-set contract)
-    IndexLifecycle.swapIn(fs, root, staging, targetName, "compactIndex",
-      alsoDelete = sources.tail)
-    ks.length
   }
 
   /** Per-batch distribution drift gate: each micro-batch's `bucket`
@@ -424,9 +297,7 @@ object DocIngest {
     *
     * Metrics go to batch-keyed directories with overwrite, so a
     * replayed batch rewrites its own row idempotently (rows carry
-    * their batch id — row-set semantics, so [[compactIndex]] applies
-    * unchanged if the one-dir-per-batch listing ever matters; the
-    * additive-state [[compactSketch]] is NOT needed here). Empty batches
+    * their batch id). Empty batches
     * are recorded with a NULL tvd (no distribution to compare) and
     * never trip the gate. `reference` must be a non-empty
     * `(bucket, n_ref)` histogram — freeze it from a trusted corpus
@@ -475,14 +346,21 @@ object DocIngest {
   }
 
   /** Streaming cross-batch near-dup ingest: every micro-batch is
-    * [[admitBatch]]ed against the persisted band index, survivors land
-    * in `outDir`, and their index rows are appended — corpus growth
+    * [[admitBatch]]ed against the committed band index, survivors land
+    * in `outDir/batch=<id>` (overwrite: a replay rewrites them), and
+    * their index rows are one [[AppendTable]] append — corpus growth
     * with near-dup admission at O(batch + collisions) per batch.
+    * Survivors are written before the append commits, and a replayed
+    * batch whose append already committed skips both, so each batch
+    * is admitted against exactly the index its first run saw.
     *
-    * Both writes go to batch-keyed subdirectories with overwrite, so
-    * a replayed batch (crash between write and checkpoint commit)
-    * rewrites its own directories idempotently — the [[TableStore]]
-    * versioning discipline applied to the index/output pair.
+    * `compactEvery = Some(n)`: every n-th batch folds the trailing
+    * WINDOW of n committed batches (strictly before this one) with
+    * [[compactIndex]]. Windowed, not from-zero: a full merge would
+    * rewrite the whole index every n batches (quadratic over the
+    * stream's life); the window keeps compaction cost ∝ n batches of
+    * rows and bounds the part count at ≈ batches/n. Run the unwindowed
+    * [[compactIndex]] offline when parts should fold further.
     */
   def nearDupIngest(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, outDir: String, checkpointDir: String,
@@ -498,78 +376,37 @@ object DocIngest {
     writer
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        // hadoop FS, not java.io.File: indexDir may be hdfs://, s3a://…
-        // — a local-only probe would silently skip the index forever
-        val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-        val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // a compaction crash leaves index rows visible ONLY in the
-        // (reader-hidden) staging dir — roll forward BEFORE probing,
-        // or a replayed batch would admit near-dups of every doc whose
-        // rows were mid-swap. compactIndex with an empty range is
-        // exactly the recovery pass (merges nothing). Unconditional,
-        // not gated on compactEvery: an OFFLINE compactIndex
-        // maintenance run can crash too, and a stream restarted
-        // without compactEvery must still heal it — the pass is one
-        // directory listing when no staging dir exists.
-        if (fs.exists(idxPath))
-          compactIndex(spark, indexDir, upToBatch = -1L)
-        val haveIndex = fs.exists(idxPath) &&
-          fs.listStatus(idxPath).exists(_.getPath.getName.startsWith("batch="))
-        val index =
-          if (haveIndex)
-            // a replayed batch must not probe rows it wrote itself
-            Some(spark.read.parquet(indexDir)
-              .filter(col("batch") =!= batchId))
-          else None
-        val (survivors, idxRows) = admitBatch(
-          batch, index, idCol, textCol, numHashes, bands, threshold)
-        survivors.write.mode("overwrite")
-          .parquet(s"$outDir/batch=$batchId")
-        idxRows.write.mode("overwrite")
-          .parquet(s"$indexDir/batch=$batchId")
-        // in-loop maintenance: every N batches, fold the trailing
-        // WINDOW of committed dirs (strictly before this batch — this
-        // batch can still replay, and its probe filter must keep
-        // excluding its own rows by dir) into the window's lowest id.
-        // Windowed, not from-zero: a full merge would rewrite the
-        // whole index every N batches (O(index) each time — quadratic
-        // over the stream's life); the window keeps compaction cost
-        // ∝ N batches of rows (amortized O(1) per row) and bounds dir
-        // count at ≈ batches/N. Run the unwindowed compactIndex as an
-        // offline maintenance pass when dirs should fold further.
-        // Idempotent under replay (re-merging a merged window is a
-        // no-op); a crash mid-compaction rolls forward on the next
-        // call.
+        val ix = new AppendTable(spark, indexDir)
+        if (!ix.applied(batchId)) {
+          val (survivors, idxRows) = admitBatch(
+            batch, ix.read(), idCol, textCol, numHashes, bands, threshold)
+          survivors.write.mode("overwrite")
+            .parquet(s"$outDir/batch=$batchId")
+          ix.append(idxRows, batchId)
+        }
         compactEvery.foreach { n =>
           if (batchId > 0 && batchId % n == 0)
             compactIndex(spark, indexDir, upToBatch = batchId - 1,
               fromBatch = batchId - n)
         }
-        ()
       }
       .start()
   }
 
   /** [[nearDupIngest]]'s winnowing sibling: every micro-batch is
-    * [[admitBatchWinnow]]ed against the persisted fingerprint index,
+    * [[admitBatchWinnow]]ed against the committed fingerprint index,
     * survivors land in `outDir`, and their index rows are appended —
     * corpus growth with SPAN-MATCH admission at O(batch + collisions)
     * per batch, completing [[graft.ops.Winnowing.winnowIndex]]'s
     * production lifecycle (build → append → probe → compact).
     *
-    * Same crash discipline as [[nearDupIngest]]: batch-keyed
-    * subdirectories with overwrite (replay-idempotent), unconditional
-    * torn-compaction roll-forward BEFORE probing, and a replay filter
-    * excluding the current batch's own rows. Winnowing adds two
-    * refinements: index rows are written h-SORTED (each batch dir is
-    * one range-clustered file, and compaction preserves the order via
+    * Same publish protocol and in-loop compaction as [[nearDupIngest]].
+    * Index rows are appended h-SORTED (each part is one
+    * range-clustered file, and compaction keeps the order via
     * `sortCol` — the row-group-pruning layout
-    * [[graft.ops.Winnowing.writeWinnowIndex]] enforces for the
-    * offline form), and the probe core dedupes matched index rows, so
-    * the duplicate rows a crashed compaction can transiently leave
-    * never inflate a pair's shared-fingerprint count past threshold
-    * (minhash admission is edge-duplication-invariant; winnowing's
-    * n_shared is not).
+    * [[graft.ops.Winnowing.writeWinnowIndex]] enforces for the offline
+    * form), and the index dir carries the (k, w) params sidecar, so a
+    * restart with different params fails loudly.
     */
   def winnowIngest(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, outDir: String, checkpointDir: String,
@@ -585,52 +422,38 @@ object DocIngest {
     writer
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
+        val ix = new AppendTable(spark, indexDir)
         val idxPath = new org.apache.hadoop.fs.Path(indexDir)
         val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // heal a torn compaction BEFORE probing (see nearDupIngest)
-        if (fs.exists(idxPath))
-          compactIndex(spark, indexDir, upToBatch = -1L, sortCol = Some("h"))
-        val haveIndex = fs.exists(idxPath) &&
-          fs.listStatus(idxPath).exists(_.getPath.getName.startsWith("batch="))
         // params guard, once per batch at O(1): the sidecar (written
-        // below after the first index append) proves the whole
-        // directory's (k, w), so the probe skips the DataFrame-form
-        // distinct-params scan that would otherwise touch the FULL
-        // index every micro-batch. A sidecar-less dir with index rows
-        // (pre-sidecar layout) falls back to the scan once — the
-        // sidecar write below then upgrades it.
+        // below after the first append) proves the whole index's
+        // (k, w), so the probe skips the DataFrame-form distinct-params
+        // scan that would otherwise touch the FULL index every
+        // micro-batch
         val sidecar = graft.ops.Winnowing.readParamsSidecar(fs, idxPath)
         sidecar.foreach(p => require(p == s"$k:$w",
           s"winnowIngest: index at $indexDir carries params {$p} but " +
             s"this stream uses $k:$w — restarted with different " +
             "winnowing params?"))
-        val index =
-          if (haveIndex)
-            Some(spark.read.parquet(indexDir)
-              .filter(col("batch") =!= batchId))
-          else None
-        val (survivors, idxRows) = admitBatchWinnow(
-          batch, index, idCol, textCol, k, w, minShared, maxDf,
-          validateParams = sidecar.isEmpty)
-        survivors.write.mode("overwrite")
-          .parquet(s"$outDir/batch=$batchId")
-        // one h-sorted file per batch dir: batch fingerprint sets are
-        // small (≈ 2/(w+1) of the batch's grams), and the sorted
-        // layout keeps row-group h-stats tight from the first write
-        idxRows.repartitionByRange(1, col("h"))
-          .sortWithinPartitions(col("h"))
-          .write.mode("overwrite")
-          .parquet(s"$indexDir/batch=$batchId")
+        if (!ix.applied(batchId)) {
+          val (survivors, idxRows) = admitBatchWinnow(
+            batch, ix.read(), idCol, textCol, k, w, minShared, maxDf,
+            validateParams = sidecar.isEmpty)
+          survivors.write.mode("overwrite")
+            .parquet(s"$outDir/batch=$batchId")
+          // one h-sorted file per part: batch fingerprint sets are
+          // small (≈ 2/(w+1) of the batch's grams), and the sorted
+          // layout keeps row-group h-stats tight from the first write
+          ix.append(idxRows.repartitionByRange(1, col("h"))
+            .sortWithinPartitions(col("h")), batchId)
+        }
         if (sidecar.isEmpty)
           graft.ops.Winnowing.writeParamsSidecar(fs, idxPath, k, w)
-        // in-loop windowed compaction (see nearDupIngest for why the
-        // window, not from-zero), order-preserving via sortCol
         compactEvery.foreach { n =>
           if (batchId > 0 && batchId % n == 0)
             compactIndex(spark, indexDir, upToBatch = batchId - 1,
               fromBatch = batchId - n, sortCol = Some("h"))
         }
-        ()
       }
       .start()
   }

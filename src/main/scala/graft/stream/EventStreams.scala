@@ -138,14 +138,13 @@ object EventStreams {
   }
 
   /** Streaming rate monitor, register side: each micro-batch's
-    * (`typeCol`, period, count) partial counts land in a batch-keyed
-    * directory (overwrite → replay-idempotent). Registers are
-    * ADDITIVE — counts sum on read — so the monitor's state is
-    * bounded by wall-clock periods × types, never by event volume,
-    * and [[DocIngest.compactSketch]] applies UNCHANGED (its contract
-    * is "every non-`count` column is a key"; its manifest-driven
-    * roll-forward keeps merged counts single-represented through
-    * crashes). This is the production wiring of
+    * (`typeCol`, period, count) partial counts are one [[AppendTable]]
+    * append, published with the batch id (a replayed batch finds them
+    * applied and skips). Registers are ADDITIVE — counts sum on read —
+    * so the monitor's state is bounded by wall-clock periods × types,
+    * never by event volume, and [[DocIngest.compactSketch]] applies
+    * UNCHANGED (its contract is "every non-`count` column is a key").
+    * This is the production wiring of
     * [[graft.ops.EventAnalytics.rateAnomaly]]'s horizon: the raw
     * events are long gone when the operator asks "is anything dead?"
     * — the registers plus the CURRENT clock answer it
@@ -155,21 +154,20 @@ object EventStreams {
     * bounded per unit time but grows monotonically forever (a 60 s
     * period adds ~526 k periods/type/year, all re-read on every
     * view). With `retainPeriods = Some(n)`, every `compactEvery`-th
-    * batch folds the checkpoint-committed register dirs (strictly
-    * below the current batch — it could still replay) into one and
-    * drops periods older than `max(period) − n + 1` over the merged
-    * dirs, so steady-state register volume is bounded by
-    * types × (n + the few periods the uncompacted recent batches
-    * carry) — the TableStore vacuum discipline. Pick `n` at or above
-    * the widest analysis window any view will ask for; detectors over
-    * the retained window are unchanged (spec-pinned). Late events
-    * older than the retention cutoff would resurrect a PARTIAL count
-    * for a dropped period — bound views with `sincePeriod` at or
-    * above the cutoff ([[monitorCounts]]) for deterministic reads,
-    * the same contract a watermark gives a streaming agg. In-loop
-    * compaction runs inside foreachBatch (never concurrent with the
-    * writer); readers race it safely via [[monitorCounts]]'s
-    * recovery grace.
+    * batch folds the checkpoint-committed register parts (strictly
+    * below the current batch) into one and drops periods older than
+    * `max(period) − n + 1` over the merged parts, so steady-state
+    * register volume is bounded by types × (n + the few periods the
+    * uncompacted recent batches carry) — the TableStore vacuum
+    * discipline. Pick `n` at or above the widest analysis window any
+    * view will ask for; detectors over the retained window are
+    * unchanged (spec-pinned). Late events older than the retention
+    * cutoff would resurrect a PARTIAL count for a dropped period —
+    * bound views with `sincePeriod` at or above the cutoff
+    * ([[monitorCounts]]) for deterministic reads, the same contract a
+    * watermark gives a streaming agg. In-loop compaction runs inside
+    * foreachBatch (never concurrent with the writer); readers never
+    * see it half-done, because it is published in one manifest write.
     */
   def rateMonitor(events: DataFrame, typeCol: String, tsCol: String,
       periodSec: Long, countsDir: String, checkpointDir: String,
@@ -184,37 +182,33 @@ object EventStreams {
     trigger.foreach(writer.trigger)
     writer
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
+        val regs = new AppendTable(batch.sparkSession, countsDir)
+        if (!regs.applied(batchId)) regs.append(batch
           .filter(col(tsCol).isNotNull) // the rateAnomaly drop, visible
           .groupBy(col(typeCol),
             floor(unix_micros(col(tsCol)) / us).as("period"))
-          .agg(count(lit(1)).as("count"))
-          .write.mode("overwrite").parquet(s"$countsDir/batch=$batchId")
+          .agg(count(lit(1)).as("count")), batchId)
+        // only batches strictly below the current one: the fold covers
+        // checkpoint-committed batches alone
         if (retainPeriods.isDefined && batchId > 0 &&
-            batchId % compactEvery == 0) {
-          // only batches strictly below the current one: batchId
-          // itself could replay after a crash and must stay addressable
-          // under its own key for the overwrite to be idempotent
+            batchId % compactEvery == 0)
           DocIngest.compactSketch(batch.sparkSession, countsDir,
             upToBatch = batchId - 1,
             retain = retainPeriods.map(("period", _)))
-          ()
-        }
         ()
       }
       .start()
   }
 
   /** Streaming rate monitor, read side: merge the [[rateMonitor]]
-    * registers (counts ADD; [[DocIngest.compactSketch]]'s crash
-    * recovery runs first so a torn compaction can't double-count) and
-    * run the exact-integer anomaly gate over the gap-filled grid with
-    * the CALLER'S clock as the horizon — a producer dead since its
-    * last event shows zero-filled flagged periods up to `horizonSec`.
-    * Row-identical to batch [[graft.ops.EventAnalytics.rateAnomaly]]
-    * over the concatenated event log with the same horizon
-    * (spec-pinned: the registers are the same (type, period) counts,
-    * merged by the same monoid Spark runs map-side).
+    * registers (counts ADD) and run the exact-integer anomaly gate
+    * over the gap-filled grid with the CALLER'S clock as the horizon —
+    * a producer dead since its last event shows zero-filled flagged
+    * periods up to `horizonSec`. Row-identical to batch
+    * [[graft.ops.EventAnalytics.rateAnomaly]] over the concatenated
+    * event log with the same horizon (spec-pinned: the registers are
+    * the same (type, period) counts, merged by the same monoid Spark
+    * runs map-side).
     */
   def rateMonitorView(spark: SparkSession, countsDir: String,
       typeCol: String, periodSec: Long, kSigma: Int,
@@ -226,9 +220,9 @@ object EventStreams {
       kSigma, horizonPeriod(periodSec, horizonSec), maxSpanPeriods)
 
   /** The merged (typeCol, period, cnt) counts of a [[rateMonitor]]
-    * register directory — crash recovery first, counts summed across
-    * batch dirs. ONE register family feeds every detector: feed this
-    * to [[graft.ops.EventAnalytics.rateAnomalyFromCounts]] (the
+    * register directory, summed over the committed register parts.
+    * ONE register family feeds every detector: feed this to
+    * [[graft.ops.EventAnalytics.rateAnomalyFromCounts]] (the
     * [[rateMonitorView]] convenience), `changepointFromCounts` (CUSUM
     * level shifts), `seasonalAnomalyFromCounts` /
     * `multiSeasonalAnomalyFromCounts` (cadence violations), or
@@ -243,27 +237,18 @@ object EventStreams {
     * late event resurrecting a partial count for an already-dropped
     * period can never skew the grid.
     *
-    * Safe to call while the monitor is RUNNING: the recovery pass
-    * leaves staging dirs younger than `stagingGraceMs` untouched, so
-    * it cannot delete an in-flight in-loop compaction's output out
-    * from under the writer (the torn state it would have healed is
-    * healed by the writer itself, or by the next read once the dir
-    * ages past the grace). */
+    * Safe to call while the monitor is RUNNING: the read resolves the
+    * committed version through the store's manifest, so a batch or a
+    * compaction the writer has staged but not committed is invisible,
+    * and a committed compaction replaces its source parts in the same
+    * manifest write — no count is ever read twice. */
   def monitorCounts(spark: SparkSession, countsDir: String,
-      typeCol: String, sincePeriod: Option[Long] = None,
-      stagingGraceMs: Long = 60000L): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(countsDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(root),
+      typeCol: String, sincePeriod: Option[Long] = None): DataFrame = {
+    val regs = new AppendTable(spark, countsDir).read()
+    require(regs.isDefined,
       s"monitorCounts: no registers at $countsDir — has rateMonitor " +
         "committed a batch yet?")
-    // recovery-only pass: upToBatch = -1 merges nothing but completes
-    // any (grace-aged) torn compaction before the read trusts the
-    // directory
-    DocIngest.compactSketch(spark, countsDir, upToBatch = -1L,
-      recoveryGraceMs = stagingGraceMs)
-    val all = spark.read.parquet(countsDir).drop("batch")
-    sincePeriod.fold(all)(p => all.filter(col("period") >= p))
+    sincePeriod.fold(regs.get)(p => regs.get.filter(col("period") >= p))
       .groupBy(col(typeCol), col("period"))
       .agg(sum(col("count")).as("cnt"))
   }

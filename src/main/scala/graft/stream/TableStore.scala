@@ -18,22 +18,37 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * manifest `root/_latest` names one committed version for every
   * table, written via temp-file + verify + atomic rename. Readers
   * resolve through the manifest, so they always see one consistent
-  * cut even while a new batch is writing. Re-running a batch
-  * (streaming restart before checkpoint commit) rewrites the same
-  * version dir — idempotent, which is what makes checkpoint-replay
-  * exactly-once.
+  * cut even while a new batch is writing.
+  *
+  * == Crash contract ==
+  * Every writer follows one protocol: stage a version dir above the
+  * committed one, then publish it in ONE manifest write. A crash
+  * before the manifest write leaves the previous cut (the staged dir
+  * is invisible, and the retry overwrites it); a crash after it leaves
+  * the new cut. A version's sidecars name every older dir it reads —
+  * `_bucketmap` for PK buckets, `_parts` for append parts — and
+  * [[vacuum]] keeps every dir a kept version names. Two consumers
+  * share the protocol:
+  *  - the CDC engine publishes batch N as version N+1 of each touched
+  *    table; a replay finds its version already committed and skips;
+  *  - the stream families ([[AppendTable]]: band and winnow indexes,
+  *    sketch and rate-monitor registers) publish each micro-batch's
+  *    rows as append version `committed + 1` together with the batch
+  *    id ([[origin]], the replication-origin analog), and each
+  *    compaction as one more version; a replayed batch the origin
+  *    already covers is skipped.
   *
   * == Filesystem requirement (read this before pointing `root` at S3) ==
-  * The cross-table atomicity of `_latest` rests on `Files.move(…,
-  * ATOMIC_MOVE)` being a true atomic rename — POSIX filesystems and
-  * HDFS give that; S3-class object stores do NOT (rename is
-  * copy+delete, and a reader can observe a half-copied object). The
-  * manifest therefore defends in depth rather than trusting the
-  * filesystem blindly:
+  * Paths are local/POSIX (`java.nio.file`). The cross-table atomicity
+  * of `_latest` rests on `Files.move(…, ATOMIC_MOVE)` being a true
+  * atomic rename — POSIX filesystems give that; S3-class object stores
+  * do NOT (rename is copy+delete, and a reader can observe a
+  * half-copied object). The manifest therefore defends in depth rather
+  * than trusting the filesystem blindly:
   *  - every manifest carries a header `#graft-manifest seq=… entries=…
   *    crc=…`; [[manifest()]] verifies entry count and CRC32 and
-  *    REFUSES a torn/truncated manifest (`IllegalStateException`)
-  *    instead of serving a partial table cut;
+  *    REFUSES a torn, truncated or headerless manifest
+  *    (`IllegalStateException`) instead of serving a partial table cut;
   *  - `seq` increases by exactly one per publish; after the rename the
   *    writer reads the manifest back and fails loudly if its publish
   *    regressed or vanished (the lost-update signature of a
@@ -53,7 +68,7 @@ final class TableStore(spark: SparkSession, val root: String) {
     * restart). */
   def registryPath: java.nio.file.Path = Paths.get(root, "_registry.json")
 
-  private def dir(id: TableId, version: Long): String =
+  private[stream] def dir(id: TableId, version: Long): String =
     s"$root/${id.qualified}/v=$version"
 
   /** table → committed version. Throws `IllegalStateException` on a
@@ -157,6 +172,8 @@ final class TableStore(spark: SparkSession, val root: String) {
     bucketSpec(id) match {
       case Some(spec) if Files.exists(bucketMapPath(id, version)) =>
         readBuckets(id, (0 until spec.n).toSet, version)
+      case _ if Files.exists(partsPath(id, version)) =>
+        readParts(id, version, parts(id, version).map(_._1))
       case _ if Files.exists(schemaPath(id, version)) =>
         spark.read.schema(versionSchema(id, version)).parquet(dir(id, version))
       case _ => spark.read.parquet(dir(id, version))
@@ -257,6 +274,71 @@ final class TableStore(spark: SparkSession, val root: String) {
         (spec.n.toString +: spec.pkCols).mkString("", "\n", "\n"))
   }
 
+  // ── Append versions ───────────────────────────────────────────────
+  //
+  // A stream family's rows (an index, a register set) grow by a small
+  // append per micro-batch. An append version's dir holds ONLY the
+  // batch's new rows; its `_parts` sidecar names every version dir the
+  // version reads, itself included, each with the lowest stream batch
+  // whose rows it holds (`version=batch` lines, the way `_bucketmap`
+  // names bucket dirs). A compaction folds a window of parts into one
+  // new dir and stages a version whose `_parts` drops the window.
+
+  private def partsPath(id: TableId, version: Long) =
+    Paths.get(dir(id, version), "_parts")
+
+  /** (part version, lowest batch its rows hold) of an append version,
+    * in version order. */
+  def parts(id: TableId, version: Long): Seq[(Long, Long)] =
+    Files.readAllLines(partsPath(id, version)).asScala.toSeq
+      .filter(_.nonEmpty)
+      .map { line =>
+        val Array(v, b) = line.split("=", 2)
+        v.toLong -> b.toLong
+      }
+
+  /** Some parts of an append version, typed by its schema sidecar. */
+  def readParts(id: TableId, version: Long, partVersions: Seq[Long]): DataFrame =
+    spark.read.schema(versionSchema(id, version))
+      .parquet(partVersions.map(dir(id, _)): _*)
+
+  /** Stage an append version holding only `df`, the rows of stream
+    * batch `batch`; it also reads every part of `base`. */
+  def stageAppend(id: TableId, df: DataFrame, version: Long, batch: Long,
+                  base: Option[Long]): Unit =
+    stageParts(id, df, version,
+      base.fold(Seq.empty[(Long, Long)])(parts(id, _)) :+ (version -> batch))
+
+  /** Stage a compaction of `base`: `df` holds the folded rows of its
+    * `window` parts, and the new version reads `df` instead of them. */
+  def stageCompaction(id: TableId, df: DataFrame, version: Long, base: Long,
+                      window: Seq[Long]): Unit = {
+    val (folded, kept) = parts(id, base).partition(p => window.contains(p._1))
+    require(folded.nonEmpty, s"${id.qualified}: empty compaction window")
+    stageParts(id, df, version, kept :+ (version -> folded.map(_._2).min))
+  }
+
+  private def stageParts(id: TableId, df: DataFrame, version: Long,
+                         ps: Seq[(Long, Long)]): Unit = {
+    stage(id, df, version)
+    Files.writeString(partsPath(id, version),
+      ps.map { case (v, b) => s"$v=$b" }.mkString("", "\n", "\n"))
+  }
+
+  /** The last stream batch published into `id` by [[commitBatch]]. */
+  def origin(id: TableId): Option[Long] = manifest().get(originKey(id))
+
+  private def originKey(id: TableId) = s"${id.qualified}@origin"
+
+  /** Publish `version` of `id` and record `batch` as its [[origin]] in
+    * ONE manifest write, so a replay of `batch` finds it applied. Both
+    * entries are monotonic, as in [[commit]]. */
+  def commitBatch(id: TableId, version: Long, batch: Long): Unit =
+    updateManifest { cur =>
+      def up(k: String, v: Long) = k -> math.max(v, cur.getOrElse(k, Long.MinValue))
+      cur + up(id.qualified, version) + up(originKey(id), batch)
+    }
+
   /** Atomically publish a set of staged versions: the cross-table
     * commit barrier. Tables not in `updates` keep their version.
     *
@@ -309,11 +391,12 @@ final class TableStore(spark: SparkSession, val root: String) {
       }
     }
 
-  /** Delete version directories below the committed one (keeping the
-    * committed version plus `keepHistory` older ones for in-flight
-    * readers). The spool-retirement analog for table versions —
-    * without it every batch's full rewrite accumulates forever.
-    * Returns the number of directories removed.
+  /** Delete version directories below the committed one, keeping the
+    * committed version, `keepHistory` older ones for in-flight
+    * readers, and every dir a kept version's `_bucketmap` or `_parts`
+    * names. The spool-retirement analog for table versions — without
+    * it every batch's full rewrite accumulates forever. Returns the
+    * number of directories removed.
     */
   def vacuum(keepHistory: Int = 1, reclaimDropped: Boolean = false): Int = {
     val m = manifest()
@@ -327,29 +410,29 @@ final class TableStore(spark: SparkSession, val root: String) {
       val qualified = tableDir.getFileName.toString
       m.get(qualified) match {
         case Some(committed) =>
-          // a bucketed table's committed bucketmap may point into old
-          // version dirs — those are live data, never reclaimable
-          val committedMap = tableDir.resolve(s"v=$committed").resolve("_bucketmap")
-          val referenced: Set[Long] =
-            if (!Files.exists(committedMap)) Set.empty
-            else Files.readAllLines(committedMap).asScala
-              .filter(_.nonEmpty).map(_.split("=", 2)(1).toLong).toSet
-          val children = {
+          val versions = {
             val s = Files.list(tableDir)
             try s.iterator().asScala.toList finally s.close()
+          }.map(_.getFileName.toString).filter(_.startsWith("v="))
+            .map(_.stripPrefix("v=").toLong)
+          // versions above `committed` may be a batch in flight — only
+          // superseded history is reclaimable, and an old dir a kept
+          // version still reads is live data
+          val floor = committed - keepHistory
+          def refs(v: Long, sidecar: String, field: Int): Seq[Long] = {
+            val f = tableDir.resolve(s"v=$v").resolve(sidecar)
+            if (!Files.exists(f)) Nil
+            else Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)
+              .map(_.split("=", 2)(field).toLong)
           }
-          children.foreach { p =>
-            val name = p.getFileName.toString
-            if (name.startsWith("v=")) {
-              val v = name.stripPrefix("v=").toLong
-              // versions above `committed` may be a batch in flight —
-              // only reclaim superseded history
-              if (v < committed - keepHistory && !referenced.contains(v)) {
-                deleteRecursively(p)
-                removed += 1
-              }
+          val referenced = versions.filter(_ >= floor)
+            .flatMap(v => refs(v, "_bucketmap", 1) ++ refs(v, "_parts", 0))
+            .toSet
+          versions.filter(v => v < floor && !referenced.contains(v))
+            .foreach { v =>
+              deleteRecursively(tableDir.resolve(s"v=$v"))
+              removed += 1
             }
-          }
         case None =>
           // no manifest entry: either a DROPped table (drop() defers
           // its data dirs to vacuum) or a table whose FIRST version is
@@ -410,40 +493,36 @@ object TableStore {
   /** Parse + validate a manifest. The header's entry count and CRC32
     * make a torn write (truncation, half-copied object, interleaved
     * concurrent writers) DETECTABLE: readers refuse it instead of
-    * resolving tables through a partial cut. Headerless content is
-    * accepted as a legacy manifest (seq 0, no integrity check) so
-    * stores written by older code stay readable. */
+    * resolving tables through a partial cut. A manifest without the
+    * header is refused the same way. */
   private[stream] def parseManifestContent(
       content: String, where: String): (Long, Map[String, Long]) = {
     def torn(why: String): Nothing = throw new IllegalStateException(
       s"torn manifest at $where: $why — refusing to serve a partial " +
         "table cut (was this store written through a non-atomic rename?)")
     val lines = content.split("\n", -1).toSeq
-    def entriesOf(ls: Seq[String]): Map[String, Long] =
-      ls.filter(_.nonEmpty).map { line =>
-        line.split("=", 2) match {
-          case Array(t, v) if v.nonEmpty && v.forall(_.isDigit) => t -> v.toLong
-          case _ => torn(s"unparseable entry line '$line'")
-        }
-      }.toMap
-    lines.headOption match {
-      case Some(h) if h.startsWith("#graft-manifest ") =>
-        val attrs = h.stripPrefix("#graft-manifest ").split(" ")
-          .flatMap(_.split("=", 2) match {
-            case Array(k, v) => Some(k -> v)
-            case _ => None
-          }).toMap
-        val seq = attrs.get("seq").flatMap(_.toLongOption)
-          .getOrElse(torn("header missing seq"))
-        val n = attrs.get("entries").flatMap(_.toIntOption)
-          .getOrElse(torn("header missing entries"))
-        val crc = attrs.getOrElse("crc", torn("header missing crc"))
-        val body = lines.tail.mkString("\n")
-        if (crc32(body) != crc) torn(s"CRC mismatch (expected $crc)")
-        val m = entriesOf(lines.tail)
-        if (m.size != n) torn(s"expected $n entries, found ${m.size}")
-        (seq, m)
-      case _ => (0L, entriesOf(lines)) // legacy headerless manifest
-    }
+    val header = lines.head
+    if (!header.startsWith("#graft-manifest "))
+      torn("missing #graft-manifest header")
+    val attrs = header.stripPrefix("#graft-manifest ").split(" ")
+      .flatMap(_.split("=", 2) match {
+        case Array(k, v) => Some(k -> v)
+        case _ => None
+      }).toMap
+    val seq = attrs.get("seq").flatMap(_.toLongOption)
+      .getOrElse(torn("header missing seq"))
+    val n = attrs.get("entries").flatMap(_.toIntOption)
+      .getOrElse(torn("header missing entries"))
+    val crc = attrs.getOrElse("crc", torn("header missing crc"))
+    val body = lines.tail.mkString("\n")
+    if (crc32(body) != crc) torn(s"CRC mismatch (expected $crc)")
+    val m = lines.tail.filter(_.nonEmpty).map { line =>
+      line.split("=", 2) match {
+        case Array(t, v) if v.nonEmpty && v.forall(_.isDigit) => t -> v.toLong
+        case _ => torn(s"unparseable entry line '$line'")
+      }
+    }.toMap
+    if (m.size != n) torn(s"expected $n entries, found ${m.size}")
+    (seq, m)
   }
 }

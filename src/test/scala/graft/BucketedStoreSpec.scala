@@ -149,6 +149,56 @@ class BucketedStoreSpec extends SparkSpec {
     assert(store.read(tid).orderBy("k").collect().toSeq == got)
   }
 
+  test("vacuum keeps the bucket dirs of every kept history version") {
+    val (store, root) = fresh()
+    seed(store, n = 200)
+    // deltas rewriting bucket 5, then 0, then 5 again
+    Seq(1L -> 5, 2L -> 0, 3L -> 5).foreach { case (v, b) =>
+      store.stageBucketed(tid, store.readBuckets(tid, Set(b), v - 1), v,
+        spec, changed = Some(Set(b)), baseVersion = Some(v - 1))
+      store.commit(Map(tid -> v))
+    }
+    // v=1 is history below the kept window, but kept v=2 reads bucket
+    // 5 from it
+    assert(store.vacuum(keepHistory = 1) == 0)
+    assert(Files.exists(Paths.get(root, tid.qualified, "v=1")))
+    assert(store.readVersion(tid, 2L).count() == 200L)
+    assert(store.readVersion(tid, 3L).count() == 200L)
+  }
+
+  test("append versions: a compaction drops its window's parts, and " +
+      "vacuum keeps every part a kept version reads") {
+    val (store, root) = fresh()
+    def rows(ks: Range) = ks.map(i => (i.toLong, s"v$i")).toDF("k", "v")
+    def keys(v: Long) = store.readVersion(tid, v).select("k").as[Long]
+      .collect().sorted.toSeq
+    store.stageAppend(tid, rows(1 to 3), 0L, batch = 0L, base = None)
+    store.commitBatch(tid, 0L, batch = 0L)
+    store.stageAppend(tid, rows(4 to 5), 1L, batch = 1L, base = Some(0L))
+    store.commitBatch(tid, 1L, batch = 1L)
+    store.stageAppend(tid, rows(6 to 6), 2L, batch = 2L, base = Some(1L))
+    store.commitBatch(tid, 2L, batch = 2L)
+    assert(store.origin(tid).contains(2L))
+    assert(store.parts(tid, 2L) == Seq(0L -> 0L, 1L -> 1L, 2L -> 2L))
+    assert(keys(2L) == (1L to 6L))
+    // fold parts 0 and 1; the new part carries their lowest batch
+    store.stageCompaction(tid, store.readParts(tid, 2L, Seq(0L, 1L)), 3L,
+      base = 2L, window = Seq(0L, 1L))
+    assert(store.manifest()(tid.qualified) == 2L, "staged, not published")
+    store.commit(Map(tid -> 3L))
+    assert(store.parts(tid, 3L) == Seq(2L -> 2L, 3L -> 0L))
+    assert(keys(3L) == (1L to 6L))
+    // v=2 (kept history) still reads parts 0 and 1; once it leaves the
+    // window they are reclaimed, and v=2 itself is still a part of v=3
+    assert(store.vacuum(keepHistory = 1) == 0)
+    store.stageAppend(tid, rows(7 to 7), 4L, batch = 3L, base = Some(3L))
+    store.commitBatch(tid, 4L, batch = 3L)
+    assert(store.vacuum(keepHistory = 1) == 2)
+    assert(!Files.exists(Paths.get(root, tid.qualified, "v=0")))
+    assert(Files.exists(Paths.get(root, tid.qualified, "v=2")))
+    assert(keys(4L) == (1L to 7L))
+  }
+
   test("engine DML batch over a bucketed table stages only touched buckets") {
     val root = Files.createTempDirectory("graft-bstore-").toString
     val custSchema = StructType(Seq(

@@ -476,10 +476,11 @@ class CdcStreamSpec extends SparkSpec {
     store.commit(Map(tid -> 0L))
     assert(store.manifestSeq() == 3L && store.manifest()(tid.qualified) == 0L)
 
-    // legacy headerless manifests stay readable (no integrity header)
+    // a headerless manifest has no integrity check: refused as torn
     Files.writeString(manifest,
       s"${tid.qualified}=0\n${other.qualified}=0\n")
-    assert(store.manifest().size == 2 && store.manifestSeq() == 0L)
+    assert(intercept[IllegalStateException](store.manifest())
+      .getMessage.contains("missing #graft-manifest header"))
   }
 
   private val ordId = TableId("srcdb", "public", "orders")

@@ -2,13 +2,18 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.stream.DocIngest
+import graft.stream.{AppendTable, DocIngest}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-class DocIngestSpec extends SparkSpec {
+class DocIngestSpec extends SparkSpec with StreamCrash {
   import spark.implicits._
+
+  /** The committed rows of an index or register directory. */
+  private def committed(dir: String): DataFrame =
+    new AppendTable(spark, dir).read().get
 
   case class Doc(doc_id: Long, ts: Timestamp, text: String)
 
@@ -68,7 +73,7 @@ class DocIngestSpec extends SparkSpec {
     val out = spark.read.parquet(s"$dir/out")
       .select("doc_id").as[Long].collect().toSet
     assert(out == Set(1L, 2L, 4L), s"admitted: $out")
-    val indexed = spark.read.parquet(s"$dir/index")
+    val indexed = committed(s"$dir/index")
       .select("id").distinct().as[Long].collect().toSet
     assert(indexed == Set(1L, 2L, 4L), s"indexed: $indexed")
   }
@@ -117,14 +122,14 @@ class DocIngestSpec extends SparkSpec {
     val out = spark.read.parquet(s"$dir/out")
       .select("doc_id").as[Long].collect().toSet
     assert(out == Set(1L, 2L, 4L), s"admitted: $out")
-    val ix = spark.read.parquet(s"$dir/index")
+    val ix = committed(s"$dir/index")
     assert(ix.select("id").distinct().as[Long].collect().toSet ==
       Set(1L, 2L, 4L))
-    // every appended dir carries the params stamp and ONE h-sorted file
+    // every appended part carries the params stamp and ONE h-sorted file
     assert(ix.select("params").distinct().as[String].collect().toSeq ==
       Seq("4:4"))
-    val batchDirs = new java.io.File(s"$dir/index").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
+    val batchDirs = new AppendTable(spark, s"$dir/index").parts()
+      .map(p => new java.io.File(p._1))
     assert(batchDirs.length == 2)
     batchDirs.foreach { d =>
       val parts = d.listFiles().filter(_.getName.endsWith(".parquet"))
@@ -183,9 +188,7 @@ class DocIngestSpec extends SparkSpec {
       q.stop()
       val out = spark.read.parquet(s"$dir/out")
         .select("doc_id").as[Long].collect().toSet
-      val dirs = new java.io.File(s"$dir/index").listFiles()
-        .count(f => f.isDirectory && f.getName.startsWith("batch="))
-      (out, dirs, s"$dir/index")
+      (out, new AppendTable(spark, s"$dir/index").parts().size, s"$dir/index")
     }
     val (plain, plainDirs, _) = run(None)
     val (compacted, compDirs, compIdx) = run(Some(2))
@@ -196,9 +199,9 @@ class DocIngestSpec extends SparkSpec {
       s"compaction must bound dirs: $compDirs !< $plainDirs")
     // order-preserving compaction: every surviving parquet file —
     // merged or fresh — is individually h-sorted
-    val parts = new java.io.File(compIdx).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-      .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
+    val parts = new AppendTable(spark, compIdx).parts()
+      .flatMap(p => new java.io.File(p._1).listFiles()
+        .filter(_.getName.endsWith(".parquet")))
     assert(parts.nonEmpty)
     parts.foreach { p =>
       val hs = spark.read.parquet(p.toString).select("h")
@@ -229,7 +232,7 @@ class DocIngestSpec extends SparkSpec {
       s"doc 3 should be re-admitted after state eviction: $ids")
   }
 
-  test("compactIndex: one dir, same rows, same admissions; crashed swap rolls forward") {
+  test("compactIndex: one part, same rows, same admissions; a refold is a no-op") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("compact").toString
     val mem = MemoryStream[RawDoc]
@@ -243,33 +246,20 @@ class DocIngestSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val before = spark.read.parquet(s"$dir/index").drop("batch")
-      .distinct().collect().toSet
+    def rows() = committed(s"$dir/index").collect().map(_.toString).sorted.toSeq
+    val before = rows()
     assert(DocIngest.compactIndex(spark, s"$dir/index", upToBatch = 2L) == 3)
-    val dirs = new java.io.File(s"$dir/index").listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.getName).toSeq
-    assert(dirs == Seq("batch=0"), s"expected one compacted dir: $dirs")
-    val after = spark.read.parquet(s"$dir/index").drop("batch")
-      .distinct().collect().toSet
-    assert(after == before, "compaction must preserve the row set")
+    val parts = new AppendTable(spark, s"$dir/index").parts()
+    assert(parts.map(_._2) == Seq(0L), s"expected one compacted part: $parts")
+    assert(rows() == before, "compaction must preserve the rows exactly")
+    assert(DocIngest.compactIndex(spark, s"$dir/index", upToBatch = 2L) == 0)
 
     // probe the compacted index exactly as batch 3 would: a near-dup
     // of doc 1 (admitted in batch 0) must still be rejected
     val probe = Seq((10L, "w1 w2 w3 w4 w5 w6 w7 w8 x1")).toDF("doc_id", "text")
-    val ix = spark.read.parquet(s"$dir/index").filter(col("batch") =!= 3L)
-    val (surv, _) = DocIngest.admitBatch(probe, Some(ix), "doc_id", "text")
+    val (surv, _) = DocIngest.admitBatch(probe,
+      Some(committed(s"$dir/index")), "doc_id", "text")
     assert(surv.isEmpty, "near-dup of a compacted-index doc must be rejected")
-
-    // crash between target delete and staging rename: roll forward
-    val fs = new org.apache.hadoop.fs.Path(s"$dir/index")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(
-      new org.apache.hadoop.fs.Path(s"$dir/index/batch=0"),
-      new org.apache.hadoop.fs.Path(s"$dir/index/.compact_staging_batch=0")))
-    assert(DocIngest.compactIndex(spark, s"$dir/index", upToBatch = 2L) == 0)
-    val healed = spark.read.parquet(s"$dir/index").drop("batch")
-      .distinct().collect().toSet
-    assert(healed == before, "recovery must restore the staged rows")
   }
 
   test("sketchStream: merged streaming registers ≡ one-shot batch sketch") {
@@ -323,71 +313,137 @@ class DocIngestSpec extends SparkSpec {
       q.stop()
       val admitted = spark.read.parquet(s"$dir/out")
         .select("doc_id").as[Long].collect().toSet
-      val nDirs = new java.io.File(s"$dir/index").listFiles()
-        .count(_.getName.startsWith("batch="))
-      (admitted, nDirs)
+      (admitted, new AppendTable(spark, s"$dir/index").parts().size)
     }
     val (plain, plainDirs) = run(None)
     val (auto, autoDirs) = run(Some(2))
     assert(plain == auto, s"compaction changed admissions: $plain vs $auto")
     assert(plain == Set(1L, 2L, 3L, 5L, 6L), plain.toString)
-    // windowed merges: batch 2 folds [0,1]→batch=0, batch 4 folds
-    // [2,3]→batch=2, batch=4 stays — ≈ batches/N dirs, and no merge
-    // ever rewrote the whole index
+    // windowed merges: batch 2 folds [0,1] into one part, batch 4
+    // folds [2,3], batch 4's part stays — ≈ batches/N parts, and no
+    // merge ever rewrote the whole index
     assert(plainDirs == 5 && autoDirs == 3,
       s"expected windowed compaction dirs: $autoDirs vs $plainDirs")
   }
 
-  test("nearDupIngest heals a torn compaction BEFORE probing — replay can't skip the index") {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("tornc").toString
-    val spool = s"$dir/spool"; new java.io.File(spool).mkdirs()
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    def addFile(n: Int, rows: (Long, String)*): Unit = {
-      val stage = s"$dir/stage$n"
-      rows.toSeq.toDF("doc_id", "text").coalesce(1)
-        .write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val target = new java.io.File(spool, f"f$n%03d.parquet")
-      assert(part.renameTo(target))
-      target.setLastModified(1700000000000L + n * 60000L); ()
-    }
-    def run(): Unit = {
-      val q = DocIngest.nearDupIngest(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-          .parquet(spool),
-        "doc_id", "text", s"$dir/index", s"$dir/out", s"$dir/ckpt",
-        trigger = Some(Trigger.AvailableNow()), compactEvery = Some(2))
-      q.awaitTermination()
-      assert(q.exception.isEmpty, q.exception.map(_.toString).getOrElse(""))
-    }
-    addFile(1, 1L -> "w1 w2 w3 w4 w5 w6 w7 w8")
-    addFile(2, 2L -> "z1 z2 z3 z4 z5 z6 z7 z8")
-    addFile(3, 3L -> "y1 y2 y3 y4 y5 y6 y7 y8")
-    run() // batches 0–2; at batch 2 the window [0,1] folded into batch=0
+  private val rawSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("doc_id",
+      org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("text",
+      org.apache.spark.sql.types.StringType)))
 
-    // crash window: the merged dir staged but never renamed — its rows
-    // (docs 1 and 2) are invisible to a plain reader
-    val fs = new org.apache.hadoop.fs.Path(s"$dir/index")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(
-      new org.apache.hadoop.fs.Path(s"$dir/index/batch=0"),
-      new org.apache.hadoop.fs.Path(s"$dir/index/.compact_staging_batch=0")))
-
-    // next batch delivers a near-dup of doc 1: without pre-probe
-    // recovery it would sail past the (partial) index
-    addFile(4, 10L -> "w1 w2 w3 w4 w5 w6 w7 w8 x1")
-    run()
-    val admitted = spark.read.parquet(s"$dir/out")
-      .select("doc_id").as[Long].collect().toSet
-    assert(admitted == Set(1L, 2L, 3L),
-      s"near-dup 10 must be rejected against the recovered index: $admitted")
+  /** A 4-file doc spool; batches 2 and 3 re-deliver batch 0 and 1
+    * content, so the crash windows decide real rejections. */
+  private def docSpool(files: Seq[Seq[(Long, String)]]): String = {
+    val spool = java.nio.file.Files.createTempDirectory("spool").toString
+    files.zipWithIndex.foreach { case (rows, i) =>
+      addSpoolFile(spool, i + 1, rows.toDF("doc_id", "text"))
+    }
+    spool
   }
 
-  test("compactSketch: counts add into one dir; torn swaps roll forward without double counts") {
+  /** (admitted ids, committed index rows) of one ingest run over
+    * `spool` with in-loop compaction every 2 batches, crashing once
+    * at `failpoint`. */
+  private def ingestRun(spool: String, failpoint: Option[(Long, String)])
+      (ingest: (DataFrame, String, String, String) =>
+        org.apache.spark.sql.streaming.StreamingQuery)
+      : (Seq[Long], Seq[String]) = {
+    val dir = java.nio.file.Files.createTempDirectory("crash").toString
+    runCrashing(s"$dir/index", failpoint) { () =>
+      ingest(spark.readStream.schema(rawSchema)
+        .option("maxFilesPerTrigger", 1).parquet(spool),
+        s"$dir/index", s"$dir/out", s"$dir/ckpt")
+    }
+    (spark.read.parquet(s"$dir/out").select("doc_id").as[Long]
+      .collect().sorted.toSeq,
+      committed(s"$dir/index").collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("band index: a crash before or after each append and compaction " +
+      "commit ends with the uninterrupted admissions and index rows") {
+    import org.apache.spark.sql.streaming.Trigger
+    val spool = docSpool(Seq(
+      Seq(1L -> "w1 w2 w3 w4 w5 w6 w7 w8"),
+      Seq(2L -> "z1 z2 z3 z4 z5 z6 z7 z8"),
+      Seq(3L -> "y1 y2 y3 y4 y5 y6 y7 y8", 10L -> "w1 w2 w3 w4 w5 w6 w7 w8 x1"),
+      Seq(4L -> "v1 v2 v3 v4 v5 v6 v7 v8", 11L -> "z1 z2 z3 z4 z5 z6 z7 z8 x2")))
+    def run(fp: Option[(Long, String)]) = ingestRun(spool, fp) {
+      (in, ix, out, ckpt) => DocIngest.nearDupIngest(in, "doc_id", "text",
+        ix, out, ckpt, trigger = Some(Trigger.AvailableNow()),
+        compactEvery = Some(2))
+    }
+    val clean = run(None)
+    assert(clean._1 == Seq(1L, 2L, 3L, 4L), s"admitted: ${clean._1}")
+    // batch 1's append, and the fold of batches [0, 1] inside batch 2
+    crashPoints(batch = 1L, compactUpTo = 1L).foreach { fp =>
+      assert(run(Some(fp)) == clean, s"crash at $fp")
+    }
+  }
+
+  test("winnow index: a crash before or after each append and compaction " +
+      "commit ends with the uninterrupted admissions and index rows") {
+    import org.apache.spark.sql.streaming.Trigger
+    def fresh(p: String) = (1 to 12).map(j => s"$p$j").mkString(" ")
+    def echo(p: String, tag: String) =
+      s"$tag ${(3 to 9).map(j => s"$p$j").mkString(" ")} ${tag}x ${tag}y"
+    val spool = docSpool(Seq(
+      Seq(1L -> fresh("a")),
+      Seq(2L -> fresh("b")),
+      Seq(3L -> fresh("c"), 10L -> echo("a", "e")),
+      Seq(4L -> fresh("d"), 11L -> echo("b", "f"))))
+    def run(fp: Option[(Long, String)]) = ingestRun(spool, fp) {
+      (in, ix, out, ckpt) => DocIngest.winnowIngest(in, "doc_id", "text",
+        ix, out, ckpt, k = 4, w = 4, minShared = 1, maxDf = 64,
+        trigger = Some(Trigger.AvailableNow()), compactEvery = Some(2))
+    }
+    val clean = run(None)
+    assert(clean._1 == Seq(1L, 2L, 3L, 4L), s"admitted: ${clean._1}")
+    crashPoints(batch = 1L, compactUpTo = 1L).foreach { fp =>
+      assert(run(Some(fp)) == clean, s"crash at $fp")
+    }
+  }
+
+  test("sketch registers: a crash before or after an append or a " +
+      "compaction commit never changes or doubles the merged counts") {
+    import org.apache.spark.sql.streaming.Trigger
+    val spool = docSpool(Seq(
+      Seq(1L -> "a b c", 2L -> (1 to 40).mkString(" ")),
+      Seq(3L -> "a b c"),
+      Seq(4L -> (1 to 40).mkString(" "))))
+    val measure = graft.ops.TextAnalysis.tokenCount(col("text"))
+    def counts(sk: String) = DocIngest.mergedSketch(spark, sk, Seq.empty)
+      .as[(Long, Long)].collect().sorted.toSeq
+    def run(fp: Option[(Long, String)]): (String, Seq[(Long, Long)]) = {
+      val dir = java.nio.file.Files.createTempDirectory("skcrash").toString
+      runCrashing(s"$dir/sk", fp) { () =>
+        DocIngest.sketchStream(spark.readStream.schema(rawSchema)
+          .option("maxFilesPerTrigger", 1).parquet(spool), measure,
+          Seq.empty, s"$dir/sk", s"$dir/ckpt", subBits = 4,
+          trigger = Some(Trigger.AvailableNow()))
+      }
+      (s"$dir/sk", counts(s"$dir/sk"))
+    }
+    val (_, clean) = run(None)
+    Seq(1L -> "append_staged", 1L -> "append_committed").foreach { fp =>
+      assert(run(Some(fp))._2 == clean, s"crash at $fp")
+    }
+    // the offline compaction, crashed at each side of its commit, then
+    // re-run: counts are the uninterrupted ones at every step
+    Seq("compact_staged", "compact_committed").foreach { point =>
+      val (sk, _) = run(None)
+      AppendTable.failpoint = Some((sk, 2L, point))
+      val e = intercept[IllegalStateException](
+        DocIngest.compactSketch(spark, sk, upToBatch = 2L))
+      assert(e.getMessage.contains("failpoint"), e.getMessage)
+      assert(counts(sk) == clean, s"after a crash at $point")
+      DocIngest.compactSketch(spark, sk, upToBatch = 2L)
+      assert(counts(sk) == clean, s"after recovering from $point")
+      assert(new AppendTable(spark, sk).parts().size == 1)
+    }
+  }
+
+  test("compactSketch: counts add into one part; the sources leave in the same commit") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("sksum").toString
     val mem = MemoryStream[RawDoc]
@@ -404,37 +460,14 @@ class DocIngestSpec extends SparkSpec {
     def rows() = DocIngest.mergedSketch(spark, s"$dir/sk", Seq.empty)
       .as[(Long, Long)].collect().toSet
     val before = rows()
+    val regs = new AppendTable(spark, s"$dir/sk")
+    assert(regs.parts().map(_._2) == Seq(0L, 1L, 2L))
     assert(DocIngest.compactSketch(spark, s"$dir/sk", upToBatch = 2L) == 3)
-    val dirs = new java.io.File(s"$dir/sk").listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.getName).toSeq
-    assert(dirs == Seq("batch=0"), s"expected one compacted dir: $dirs")
+    assert(regs.parts().map(_._2) == Seq(0L), s"one compacted part: ${regs.parts()}")
     assert(rows() == before, "compaction must preserve merged counts")
-
-    // crash after rename, before source deletion: plant a manifest in
-    // the target naming a still-present source — recovery must delete
-    // the source (its counts are already merged) and nothing else
-    val fs = new org.apache.hadoop.fs.Path(s"$dir/sk")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stale = graft.ops.Sketches.logHistogram(
-      Seq((9L, "a b c")).toDF("doc_id", "text"), Seq.empty, measure, 4)
-    stale.write.mode("overwrite").parquet(s"$dir/sk/batch=9")
-    val mf = fs.create(
-      new org.apache.hadoop.fs.Path(s"$dir/sk/batch=0/_merged_dirs.txt"), true)
-    mf.write("batch=0\nbatch=9\nEND".getBytes("UTF-8")); mf.close()
-    // the READ path itself must heal: a consumer calling mergedSketch
-    // right after the crash gets correct (not doubled) counts
-    assert(rows() == before, "mergedSketch must recover before summing")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/sk/batch=9")),
-      "manifest-listed source must be deleted on recovery")
-
-    // truncated manifest (no END): must be ignored, nothing deleted
-    stale.write.mode("overwrite").parquet(s"$dir/sk/batch=9")
-    val mf2 = fs.create(
-      new org.apache.hadoop.fs.Path(s"$dir/sk/batch=0/_merged_dirs.txt"), true)
-    mf2.write("batch=0\nbatch=9".getBytes("UTF-8")); mf2.close()
-    assert(DocIngest.compactSketch(spark, s"$dir/sk", upToBatch = 0L) == 0)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/sk/batch=9")),
-      "a manifest without END must never drive deletions")
+    // the folded register rows are the summed counts, one row per bucket
+    assert(committed(s"$dir/sk").count() == before.size.toLong)
+    assert(DocIngest.compactSketch(spark, s"$dir/sk", upToBatch = 2L) == 0)
   }
 
   case class LangDoc(doc_id: Long, lang: String)

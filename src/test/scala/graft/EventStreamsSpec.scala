@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-class EventStreamsSpec extends SparkSpec {
+class EventStreamsSpec extends SparkSpec with StreamCrash {
   import spark.implicits._
 
   // base divisible by 30 s so tumbling windows align at sec 0/30/60…
@@ -357,7 +357,8 @@ class EventStreamsSpec extends SparkSpec {
     // must stay replayable, so its periods 16-19 are uncompacted) and
     // retained the last 6 → registers hold exactly periods pb+10 ..
     // pb+19: types × (retainPeriods + the uncompacted batch's slack)
-    val regs = spark.read.parquet(s"$dir/counts")
+    val table = new graft.stream.AppendTable(spark, s"$dir/counts")
+    val regs = table.read().get
     val periods = regs.select("period").distinct()
       .as[Long].collect().sorted
     assert(periods.head == pb + 10,
@@ -365,10 +366,9 @@ class EventStreamsSpec extends SparkSpec {
     assert(periods.length == 10, s"expected 10 retained periods: ${periods.length}")
     assert(regs.count() == 2 * 10,
       "register rows must be bounded by types × (retainPeriods + slack)")
-    val dirs = new java.io.File(s"$dir/counts").listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.getName).sorted.toSeq
-    assert(dirs == Seq("batch=0", "batch=4"),
-      s"multi-compaction must fold committed dirs: $dirs")
+    val parts = table.parts().map(_._2).sorted
+    assert(parts == Seq(0L, 4L),
+      s"multi-compaction must fold committed parts: $parts")
 
     // detector row-identity over the retained window: view with
     // sincePeriod at the cutoff ≡ batch ops over the events of those
@@ -391,5 +391,76 @@ class EventStreamsSpec extends SparkSpec {
       winEvents.toDF(), "event_type", "ts", 10L)
       .collect().map(_.toSeq).toSet
     assert(cpView == cpBatch)
+  }
+  /** A 5-file event spool, 4 periods per file, types D and L. */
+  private def eventSpool(): String = {
+    val spool = java.nio.file.Files.createTempDirectory("evspool").toString
+    (0 until 5).foreach { b =>
+      addSpoolFile(spool, b + 1, (4 * b until 4 * b + 4).flatMap { p =>
+        (0 until 3).map(i => Event(p * 100L + i, ts(p * 10L), "D", 0.0)) ++
+          (0 until 2).map(i => Event(p * 100L + 50 + i, ts(p * 10L), "L", 0.0))
+      }.toDF())
+    }
+    spool
+  }
+
+  private def countRows(countsDir: String) =
+    EventStreams.monitorCounts(spark, countsDir, "event_type")
+      .collect().map(_.toString).sorted.toSeq
+
+  test("rate-monitor registers: a crash before or after each append and " +
+      "retention compaction commit ends with the uninterrupted counts") {
+    import org.apache.spark.sql.streaming.Trigger
+    val spool = eventSpool()
+    val schema = org.apache.spark.sql.Encoders.product[Event].schema
+    def run(fp: Option[(Long, String)]): Seq[String] = {
+      val dir = java.nio.file.Files.createTempDirectory("moncrash").toString
+      runCrashing(s"$dir/counts", fp) { () =>
+        EventStreams.rateMonitor(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", 1).parquet(spool),
+          "event_type", "ts", periodSec = 10L, s"$dir/counts",
+          s"$dir/ckpt", trigger = Some(Trigger.AvailableNow()),
+          retainPeriods = Some(6L), compactEvery = 2)
+      }
+      countRows(s"$dir/counts")
+    }
+    val clean = run(None)
+    // retention folded batches ≤ 3 down to their last 6 periods, plus
+    // batch 4's 4 periods, for 2 types
+    assert(clean.size == 2 * 10, clean.mkString("\n"))
+    crashPoints(batch = 1L, compactUpTo = 3L).foreach { fp =>
+      assert(run(Some(fp)) == clean, s"crash at $fp")
+    }
+  }
+
+  test("monitorCounts during a staged, uncommitted register compaction " +
+      "reads the pre-compaction counts; after the commit, the same counts") {
+    import org.apache.spark.sql.streaming.Trigger
+    val dir = java.nio.file.Files.createTempDirectory("monrace").toString
+    val counts = s"$dir/counts"
+    runCrashing(counts, None) { () =>
+      EventStreams.rateMonitor(spark.readStream
+        .schema(org.apache.spark.sql.Encoders.product[Event].schema)
+        .option("maxFilesPerTrigger", 1).parquet(eventSpool()),
+        "event_type", "ts", periodSec = 10L, counts, s"$dir/ckpt",
+        trigger = Some(Trigger.AvailableNow()))
+    }
+    def versionDirs(): Long = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(counts), 2)
+      try s.filter(_.getFileName.toString.startsWith("v=")).count()
+      finally s.close()
+    }
+    val before = countRows(counts)
+    val dirsBefore = versionDirs()
+    graft.stream.AppendTable.failpoint = Some((counts, 4L, "compact_staged"))
+    val e = intercept[IllegalStateException](
+      graft.stream.DocIngest.compactSketch(spark, counts, upToBatch = 4L))
+    assert(e.getMessage.contains("failpoint"), e.getMessage)
+    // the fold is on disk, above the committed version, but unpublished
+    assert(versionDirs() == dirsBefore + 1)
+    assert(countRows(counts) == before)
+    assert(graft.stream.DocIngest.compactSketch(spark, counts, upToBatch = 4L) == 5)
+    assert(countRows(counts) == before)
+    assert(new graft.stream.AppendTable(spark, counts).parts().size == 1)
   }
 }

@@ -152,4 +152,12 @@ class FixtureEncodingSpec extends SparkSpec {
       k = 3, dim = 64)
     assert(lsh.count() > 0)
   }
+
+  test("Planted.variants refuses a base frame that already has a __v column") {
+    val spark = TestSpark.spark
+    val base = spark.range(3).select(col("id"), col("id").as("__v"))
+    val e = intercept[IllegalArgumentException](
+      graft.fixtures.Planted.variants(base, Seq(lit(true) -> Seq.empty)))
+    assert(e.getMessage.contains("__v"), e.getMessage)
+  }
 }

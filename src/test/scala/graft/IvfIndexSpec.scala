@@ -140,6 +140,14 @@ class IvfIndexSpec extends SparkSpec {
     assert(fromIndex.nonEmpty && fromIndex == direct)
   }
 
+  test("buildSq8 releases every checkpoint it pins once its writes are done") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    IvfIndex.buildSq8(corpus, "vec_id", "embedding", tmpDir("sq8rel"),
+      kCells = 8, iters = 2)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"persistent RDDs left by the build: $left")
+  }
+
   test("appendSq8: frozen stats encode, findable; raw/SQ8 appends don't cross") {
     val dir = tmpDir("sq8app")
     IvfIndex.buildSq8(corpus, "vec_id", "embedding", dir,

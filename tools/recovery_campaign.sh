@@ -3,7 +3,7 @@
 # indices x 2 crash points x 2 repeats (20 runs), sf0.1, 20 batches.
 # Appends one JSON line per run to RECOVERY_CAMPAIGN.jsonl.
 set -u
-cd /root/repo
+cd "$(dirname "$0")/.."
 OUT=RECOVERY_CAMPAIGN.jsonl
 : > "$OUT"
 for rep in 1 2; do
