@@ -1,10 +1,7 @@
 package graft.snapshot
 
-import java.nio.file.{Files, Paths}
-
 import graft.model.{SchemaRegistry, TableId, TableMeta}
 import graft.stream.TableStore
-import graft.types.LsnCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -227,16 +224,27 @@ object Snapshot {
       Await.result(Future.sequence(fs), Duration.Inf)
     }
     metas.foreach(registry.register)
-    // all tables commit together: one consistent snapshot cut
-    store.commit(entries.map(_._1 -> 0L).toMap)
-    Files.writeString(Paths.get(storeRoot, "_start_lsn"), LsnCodec.format(startLsn))
+    // all tables and the start LSN commit together: one consistent
+    // snapshot cut, and no published snapshot without its LSN
+    store.commit(entries.map(_._1 -> 0L).toMap, startLsn = Some(startLsn))
+    maybeFail(storeRoot, "post_commit")
     Report(reports, startLsn)
   }
 
-  def readStartLsn(storeRoot: String): Option[Long] = {
-    val p = Paths.get(storeRoot, "_start_lsn")
-    if (Files.exists(p)) Some(LsnCodec.parse(Files.readString(p).trim)) else None
-  }
+  /** The start LSN committed with the store's snapshot cut. */
+  def readStartLsn(storeRoot: String): Option[Long] =
+    TableStore.startLsnAt(storeRoot)
+
+  /** Crash-injection point for tests: `(storeRoot, "post_commit")`
+    * throws right after the snapshot's commit. Never set in
+    * production. */
+  @volatile private[graft] var failpoint: Option[(String, String)] = None
+
+  private def maybeFail(storeRoot: String, point: String): Unit =
+    if (failpoint.contains((storeRoot, point))) {
+      failpoint = None
+      throw new IllegalStateException(s"failpoint: injected crash ($point) in $storeRoot")
+    }
 
   /** Post-data PK validation (K7: "PK/unique enforcement becomes a
     * validation query"): key tuples appearing more than once. */

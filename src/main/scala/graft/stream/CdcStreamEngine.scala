@@ -237,12 +237,13 @@ final class CdcStreamEngine(
       // round-trips per micro-batch (the emptiness probe, the strict
       // quarantine count, the DDL collect, and the first segment's
       // touched-tables collect): row/malformed counts, the batch's
-      // ordered DDL events, and the touched-table set all return from
-      // a single aggregate over the cached parse. Per-trigger driver
-      // round-trips are the replay loop's fixed cost — at the 30 s
-      // reference cadence each one saved is latency on every batch
-      // forever (opt guide §1.2: fix the distributed-algorithm shape
-      // first; a collect per phase IS the shape here).
+      // ordered DDL events, the touched-table set and the payload
+      // bytes all return from a single aggregate over the cached
+      // parse. Per-trigger driver round-trips are the replay loop's
+      // fixed cost — at the 30 s reference cadence each one saved is
+      // latency on every batch forever (opt guide §1.2: fix the
+      // distributed-algorithm shape first; a collect per phase IS the
+      // shape here).
       label("preamble")
       val pre = parsedAll.agg(
         count(lit(1)).as("__n"),
@@ -254,9 +255,17 @@ final class CdcStreamEngine(
         collect_set(when(!bad && !isDdl &&
             !col("p.table").startsWith("pg_temp"),
           struct(col("database"), col("p.schema"), col("p.table"))))
-          .as("__touched")).head()
+          .as("__touched"),
+        coalesce(sum(octet_length(col("payload"))), lit(0L)).as("__bytes")).head()
       if (pre.getLong(0) == 0L) return
       val nBad = pre.getLong(1)
+      // Broadcast the change side of every merge while it surely fits:
+      // the batch's payload bytes bound any one table's collapsed change
+      // set (decode keeps a subset of each payload's text). Above the
+      // session's broadcast threshold (or with broadcasts off) the
+      // planner picks the join from its own estimates.
+      val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+      val broadcastChanges = threshold >= 0 && pre.getLong(4) <= threshold
 
       // Malformed payloads: fail fast in strict mode (A9 — the
       // reference dies on the first bad row); otherwise drop them
@@ -367,7 +376,7 @@ final class CdcStreamEngine(
             // (they cover every change key); seed, if first
             // touch, from the full committed table
             val views = maintainViews(meta, target, store.read(meta.id), collapsed)
-            Applied(ApplyEngine.merge(target, collapsed, meta, broadcastChanges = true),
+            Applied(ApplyEngine.merge(target, collapsed, meta, broadcastChanges),
               Some(changed), views)
           case None =>
             val target = working.getOrElse(meta.id, store.read(meta.id))
@@ -380,10 +389,10 @@ final class CdcStreamEngine(
               else collapsed0
             checkStrict(target, collapsed)
             val views = maintainViews(meta, target, target, collapsed)
-            // a batch's change set is ≪ the table: broadcast it, as the
-            // bucket-level path does (the collapse's size estimate is
-            // the raw events', which can miss the broadcast threshold)
-            Applied(ApplyEngine.merge(target, collapsed, meta, broadcastChanges = true),
+            // the collapse's own size estimate is the raw events', which
+            // can miss the broadcast threshold: the batch-level guard
+            // above decides, as on the bucket-level path
+            Applied(ApplyEngine.merge(target, collapsed, meta, broadcastChanges),
               None, views)
         }
       }

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import graft.model.TableId
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 
 /** Versioned parquet table store with an atomically-published batch
   * manifest — the engine's answer to the reference's cross-table
@@ -27,8 +27,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * is invisible, and the retry overwrites it); a crash after it leaves
   * the new cut. A version's sidecars name every older dir it reads —
   * `_bucketmap` for PK buckets, `_parts` for append parts — and
-  * [[vacuum]] keeps every dir a kept version names. Two consumers
+  * [[vacuum]] keeps every dir a kept version names. Three consumers
   * share the protocol:
+  *  - the snapshot publishes version 0 of every table and its start
+  *    LSN (`@start_lsn`, [[TableStore.startLsnAt]]) in one write;
   *  - the CDC engine publishes batch N as version N+1 of each touched
   *    table; a replay finds its version already committed and skips;
   *  - the stream families ([[AppendTable]]: band and winnow indexes,
@@ -79,11 +81,8 @@ final class TableStore(spark: SparkSession, val root: String) {
   /** publish sequence of the current manifest (0 = none yet). */
   def manifestSeq(): Long = parseManifest()._1
 
-  private def parseManifest(): (Long, Map[String, Long]) = {
-    if (!Files.exists(manifestPath)) return (0L, Map.empty)
-    TableStore.parseManifestContent(Files.readString(manifestPath),
-      manifestPath.toString)
-  }
+  private def parseManifest(): (Long, Map[String, Long]) =
+    TableStore.readManifest(manifestPath)
 
   /** The manifest update is a read-modify-write of the FULL
     * table→version map, so concurrent committers must serialize — an
@@ -186,12 +185,24 @@ final class TableStore(spark: SparkSession, val root: String) {
   // (`__gb = pmod(hash(pk…), n)`), each version directory holds ONLY
   // the buckets that batch rewrote, and a per-version `_bucketmap`
   // sidecar names, for every bucket, the version dir holding its
-  // current file. A 1-key batch reads 1 bucket and writes 1 bucket —
+  // current rows. A 1-key batch reads 1 bucket and writes 1 bucket —
   // O(|changes|) instead of O(|table|) per 30 s batch, the same
   // in-place granularity as the reference's per-row UPDATE replay
   // (`replayer/connemara_replay.pl:220-251`). The cross-table commit
   // barrier is untouched: `_latest` still names one version per
   // table; that version's bucketmap closes over the full table state.
+  //
+  // Files: a version dir holds its rows with two reserved columns, the
+  // bucket id `__gb` and the writing version `__gv`, sorted by `__gb`
+  // within each file. The file count follows the bytes written, not
+  // the buckets touched: the adaptive planner merges small shuffle
+  // partitions and splits ones over its advisory size, so a small
+  // version is one file and a bucket spans files only when its bytes
+  // call for it. Reads keep a row only where its `__gv` is the
+  // bucketmap's version for its `__gb`, so rows of a bucket that a
+  // later version rewrote never show.
+
+  import TableStore.{BucketCol, VersionCol}
 
   private def bucketSpecPath(id: TableId) =
     Paths.get(root, id.qualified, "_bucketed")
@@ -214,7 +225,7 @@ final class TableStore(spark: SparkSession, val root: String) {
       Some(TableStore.BucketSpec(lines.head.toInt, lines.tail.filter(_.nonEmpty)))
     }
 
-  /** bucket → version dir currently holding that bucket's file. */
+  /** bucket → version dir currently holding that bucket's rows. */
   private def bucketMap(id: TableId, version: Long): Map[Int, Long] =
     Files.readAllLines(bucketMapPath(id, version)).asScala
       .filter(_.nonEmpty)
@@ -228,39 +239,67 @@ final class TableStore(spark: SparkSession, val root: String) {
       .asInstanceOf[StructType]
 
   /** Read a subset of buckets as of `version` — the pruned target
-    * scan for an incremental merge. Missing bucket dirs are empty
-    * buckets (partitioned writes skip rowless groups); the version's
-    * schema sidecar keeps the read well-typed even when every
-    * requested bucket is empty. */
+    * scan for an incremental merge. One scan over the version dirs the
+    * requested buckets map to, filtered to `OR` over those dirs of
+    * (`__gv = v AND __gb IN (buckets mapped to v)`): a row of a bucket
+    * that a later version rewrote never shows, and Parquet evaluates
+    * the filter on the row-group statistics of the bucket-sorted
+    * files, so other buckets' row groups are skipped, not decoded. The
+    * version's schema sidecar types the read (an empty bucket has no
+    * rows, and no bucket at all gives an empty, typed frame). A
+    * version dir in the older per-bucket-dir layout (`__gb=N`
+    * subdirs) is refused, naming the dir: this scan would read it as
+    * empty. */
   def readBuckets(id: TableId, buckets: Set[Int], version: Long): DataFrame = {
-    val bm = bucketMap(id, version)
     val schema = versionSchema(id, version)
-    val paths = buckets.toSeq.sorted
-      .flatMap(b => bm.get(b).map(v => s"${dir(id, v)}/__gb=$b"))
-      .filter(p => Files.exists(Paths.get(p)))
-    if (paths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else spark.read.schema(schema).parquet(paths: _*)
+    val byDir = bucketMap(id, version).toSeq
+      .filter { case (b, _) => buckets.contains(b) }
+      .groupBy(_._2).toSeq.sortBy(_._1)
+      .map { case (v, bs) => v -> bs.map(_._1).sorted }
+    byDir.foreach { case (v, _) =>
+      val s = Files.list(Paths.get(dir(id, v)))
+      val old =
+        try s.iterator().asScala.exists(_.getFileName.toString.startsWith(s"$BucketCol="))
+        finally s.close()
+      if (old) throw new IllegalStateException(
+        s"${dir(id, v)} holds per-bucket $BucketCol=N subdirs, a bucketed layout " +
+          "this store no longer reads; re-seed the table with a full snapshot")
+    }
+    if (byDir.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read
+      .schema(schema.add(BucketCol, IntegerType).add(VersionCol, LongType))
+      .parquet(byDir.map { case (v, _) => dir(id, v) }: _*)
+      .filter(byDir.map { case (v, bs) =>
+        col(VersionCol) === lit(v) && col(BucketCol).isin(bs: _*)
+      }.reduce(_ || _))
+      .drop(BucketCol, VersionCol)
   }
 
   /** Stage a bucketed version. `changed = None` writes every bucket (a
     * full rewrite: create, snapshot load, or a schema-evolving DDL
     * batch); `Some(buckets)` writes ONLY those buckets — `df` must
     * hold exactly their post-merge rows — and the new bucketmap points
-    * every other bucket at `baseVersion`'s file. Re-running a version
-    * (crash replay) overwrites the same dir: idempotent. */
+    * every other bucket at `baseVersion`'s rows. The rows are
+    * rebalanced by bucket, so the adaptive planner sizes the files by
+    * bytes both ways (a small version is one file; a partition over
+    * the advisory size is split), and each file is sorted by bucket. A table column named like a reserved
+    * layout column is refused. Re-running a version (crash replay)
+    * overwrites the same dir: idempotent. */
   def stageBucketed(id: TableId, df: DataFrame, version: Long,
                     spec: TableStore.BucketSpec,
                     changed: Option[Set[Int]] = None,
                     baseVersion: Option[Long] = None): Unit = {
     require(changed.isEmpty || baseVersion.nonEmpty,
       "delta staging needs the base version its bucketmap extends")
-    val withBucket = df.withColumn("__gb",
-      pmod(hash(spec.pkCols.map(df(_)): _*), lit(spec.n)))
-    // one task per written bucket → one file per bucket dir
-    withBucket
-      .repartition(math.max(1, changed.map(_.size).getOrElse(spec.n)), col("__gb"))
-      .write.mode("overwrite").partitionBy("__gb").parquet(dir(id, version))
+    df.columns.find(c => Seq(BucketCol, VersionCol).exists(_.equalsIgnoreCase(c)))
+      .foreach(c => throw new IllegalArgumentException(
+        s"${id.qualified}: column '$c' collides with a reserved column of " +
+          "the bucketed layout"))
+    df.withColumn(BucketCol, pmod(hash(spec.pkCols.map(df(_)): _*), lit(spec.n)))
+      .withColumn(VersionCol, lit(version))
+      .hint("rebalance", col(BucketCol))
+      .sortWithinPartitions(BucketCol)
+      .write.mode("overwrite").parquet(dir(id, version))
     // sidecars AFTER the data write (overwrite clears the dir)
     Files.writeString(schemaPath(id, version), df.schema.json)
     val bm: Map[Int, Long] = changed match {
@@ -281,8 +320,9 @@ final class TableStore(spark: SparkSession, val root: String) {
   // batch's new rows; its `_parts` sidecar names every version dir the
   // version reads, itself included, each with the lowest stream batch
   // whose rows it holds (`version=batch` lines, the way `_bucketmap`
-  // names bucket dirs). A compaction folds a window of parts into one
-  // new dir and stages a version whose `_parts` drops the window.
+  // names each bucket's version dir). A compaction folds a window of
+  // parts into one new dir and stages a version whose `_parts` drops
+  // the window.
 
   private def partsPath(id: TableId, version: Long) =
     Paths.get(dir(id, version), "_parts")
@@ -341,6 +381,8 @@ final class TableStore(spark: SparkSession, val root: String) {
 
   /** Atomically publish a set of staged versions: the cross-table
     * commit barrier. Tables not in `updates` keep their version.
+    * `startLsn`, the snapshot's consistent point, is recorded in the
+    * same write ([[TableStore.startLsnAt]] reads it back).
     *
     * MONOTONIC: a commit can never lower a table's published version.
     * Versions only ever advance batch-by-batch, so a lower incoming
@@ -349,10 +391,12 @@ final class TableStore(spark: SparkSession, val root: String) {
     * attempt already published v=N+1) — regressing would point readers
     * at stale or empty data.
     */
-  def commit(updates: Map[TableId, Long]): Unit =
+  def commit(updates: Map[TableId, Long], startLsn: Option[Long] = None): Unit = {
+    startLsn.foreach(l => require(l >= 0L, s"start LSN $l is negative"))
     updateManifest(cur => cur ++ updates.map { case (id, v) =>
       id.qualified -> math.max(v, cur.getOrElse(id.qualified, Long.MinValue))
-    })
+    } ++ startLsn.map(TableStore.StartLsnKey -> _))
+  }
 
   /** Remove a table from the committed manifest (DROP TABLE). Data
     * dirs are left for vacuum — readers can no longer resolve them.
@@ -467,6 +511,11 @@ object TableStore {
     * typed values in the same column order). */
   final case class BucketSpec(n: Int, pkCols: Seq[String])
 
+  /** Reserved columns of the bucketed layout's files: the row's PK
+    * bucket and the version that wrote it. */
+  val BucketCol = "__gb"
+  val VersionCol = "__gv"
+
   /** One JVM-global monitor per (normalized) store root: serializes
     * manifest commits across TableStore INSTANCES in this JVM, so the
     * cross-process file lock never sees an overlapping same-JVM
@@ -477,6 +526,19 @@ object TableStore {
     monitors.computeIfAbsent(
       Paths.get(root).toAbsolutePath.normalize.toString,
       _ => new Object)
+
+  /** Manifest entry of the snapshot's start LSN (no table name holds
+    * an `@`). */
+  private val StartLsnKey = "@start_lsn"
+
+  /** The start LSN committed with the snapshot cut of the store at
+    * `root`, if any. */
+  def startLsnAt(root: String): Option[Long] =
+    readManifest(Paths.get(root, "_latest"))._2.get(StartLsnKey)
+
+  private def readManifest(p: java.nio.file.Path): (Long, Map[String, Long]) =
+    if (!Files.exists(p)) (0L, Map.empty)
+    else parseManifestContent(Files.readString(p), p.toString)
 
   private def crc32(body: String): String = {
     val c = new java.util.zip.CRC32

@@ -58,9 +58,9 @@ object PgTypeMapper {
   * (`connemara_replication/src/connemara_replication.c:207-215,806-808`).
   */
 object LsnCodec {
-  /** `"16/B374D848"` → 0x16B374D848; malformed input (truncated
-    * `_start_lsn` file, junk hex) raises a diagnosable error instead
-    * of a bare MatchError/NumberFormatException. */
+  /** `"16/B374D848"` → 0x16B374D848; malformed input (a truncated
+    * string, junk hex) raises a diagnosable error instead of a bare
+    * MatchError/NumberFormatException. */
   def parse(s: String): Long = s.split("/", 2) match {
     case Array(hi, lo) =>
       try (java.lang.Long.parseLong(hi, 16) << 32) | java.lang.Long.parseLong(lo, 16)

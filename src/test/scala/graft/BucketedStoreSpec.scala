@@ -13,8 +13,8 @@ import org.apache.spark.sql.types._
 
 /** PK-bucketed incremental publish: a batch rewrites ONLY the buckets
   * its keys hash into; everything else is carried by bucketmap
-  * reference. The scale property under test is physical — we count
-  * the bucket dirs a version actually wrote.
+  * reference. The scale property under test is physical — we read
+  * the buckets present in the files a version actually wrote.
   */
 class BucketedStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -37,14 +37,15 @@ class BucketedStoreSpec extends SparkSpec {
     store.commit(Map(tid -> 0L))
   }
 
-  /** __gb= dirs physically present under one version dir. */
-  private def bucketsWritten(root: String, version: Long): Set[Int] = {
-    val vd = Paths.get(root, tid.qualified, s"v=$version")
-    val s = Files.list(vd)
-    try s.iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(_.startsWith("__gb="))
-      .map(_.stripPrefix("__gb=").toInt).toSet
+  /** Bucket ids present in the files of one version dir. */
+  private def bucketsWritten(root: String, version: Long, id: TableId = tid): Set[Int] =
+    spark.read.parquet(Paths.get(root, id.qualified, s"v=$version").toString)
+      .select(TableStore.BucketCol).distinct().as[Int].collect().toSet
+
+  /** Parquet data files of one version dir. */
+  private def dataFiles(root: String, version: Long): Seq[java.nio.file.Path] = {
+    val s = Files.list(Paths.get(root, tid.qualified, s"v=$version"))
+    try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq
     finally s.close()
   }
 
@@ -102,6 +103,10 @@ class BucketedStoreSpec extends SparkSpec {
     val got = store.read(tid).orderBy("k").collect().toSeq
     assert(got == (1 to 20).map(i => Row(i.toLong,
       if (i == 1) "A" else if (i == 2) "B" else s"v$i")))
+    // one pushable OR over the dirs read, each with its own buckets
+    val plan = store.read(tid).queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters: [Or(") &&
+      plan.contains("And(EqualTo(__gv,0),In(__gb, ["), plan)
   }
 
   test("replaying the same delta version is idempotent") {
@@ -232,12 +237,7 @@ class BucketedStoreSpec extends SparkSpec {
     engine.processBatch(batch, 0L)
 
     // version 1 wrote only the buckets keys 5 and 6 hash into
-    val vd = Paths.get(root, ctid.qualified, "v=1")
-    val s = Files.list(vd)
-    val written =
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("__gb=")).toSet
-      finally s.close()
+    val written = bucketsWritten(root, 1L, ctid)
     assert(written.size <= 2 && written.nonEmpty)
     val got = store.read(ctid).orderBy("c_custkey").collect().toSeq
     assert(got.length == 63)
@@ -263,5 +263,195 @@ class BucketedStoreSpec extends SparkSpec {
     val m = new TableStore(spark, root).manifest()
     assert(ids.forall(id => m.get(id.qualified).contains(0L)),
       s"lost entries: ${ids.map(_.qualified).filterNot(m.contains)}")
+  }
+
+  test("a version is one bucket-sorted file, not one file per bucket") {
+    val (store, root) = fresh()
+    seed(store)
+    BucketedPublish.stageDelta(store, meta, spec, collapsedOf(
+      ("patch", 1L, Map("v" -> "A")), ("patch", 2L, Map("v" -> "B")),
+      ("patch", 3L, Map("v" -> "C"))), 1L, 0L)
+    Seq(0L, 1L).foreach { v =>
+      val files = dataFiles(root, v)
+      assert(files.size == 1, s"v=$v: $files")
+      val gb = spark.read.parquet(files.head.toString)
+        .select(TableStore.BucketCol).as[Int].collect().toSeq
+      assert(gb == gb.sorted, s"v=$v: file not sorted by bucket")
+    }
+    assert(bucketsWritten(root, 0L) == (0 until spec.n).toSet)
+  }
+
+  test("a version over the advisory partition size is split into more files, " +
+      "still bucket-sorted, and reads back") {
+    val (store, root) = fresh()
+    val rows = spark.range(0, 20000, 1, 4)
+      .select(col("id").as("k"), concat(lit("v"), col("id")).as("v"))
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val old = spark.conf.getOption(key)
+    // 20k rows are ~300 KB in the shuffle: over 64 KB, files follow bytes
+    spark.conf.set(key, "64k")
+    try store.stageBucketed(tid, rows, 0L, spec)
+    finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    store.commit(Map(tid -> 0L))
+    val files = dataFiles(root, 0L)
+    assert(files.size > 1, s"one file for ~300 KB at a 64 KB advisory size: $files")
+    files.foreach { f =>
+      val gb = spark.read.parquet(f.toString)
+        .select(TableStore.BucketCol).as[Int].collect().toSeq
+      assert(gb == gb.sorted, s"$f: not sorted by bucket")
+    }
+    assert(store.read(tid).exceptAll(rows).isEmpty &&
+      rows.exceptAll(store.read(tid)).isEmpty)
+    val two = Set(2, 5)
+    val want = rows.filter(pmod(hash(col("k")), lit(spec.n)).isin(two.toSeq: _*))
+    assert(store.readBuckets(tid, two, 0L).exceptAll(want).isEmpty &&
+      want.exceptAll(store.readBuckets(tid, two, 0L)).isEmpty)
+    // the version and bucket filter reaches Parquet, so row groups of
+    // other buckets are skipped by their statistics
+    val plan = store.readBuckets(tid, two, 0L).queryExecution.executedPlan.toString
+    assert(plan.contains("EqualTo(__gv,0)") && plan.contains("In(__gb, [2,5])"), plan)
+  }
+
+  test("a column named like a reserved layout column is refused, by name") {
+    val (store, root) = fresh()
+    Seq(TableStore.BucketCol, "__GV").foreach { c =>
+      val e = intercept[IllegalArgumentException] {
+        store.stageBucketed(tid, Seq((1L, 7)).toDF("k", c), 0L, spec)
+      }
+      assert(e.getMessage.contains(s"'$c'"), e.getMessage)
+    }
+    assert(!Files.exists(Paths.get(root, tid.qualified, "v=0")))
+  }
+
+  test("a version in the per-bucket-dir layout fails naming its dir, never reads empty") {
+    val (store, root) = fresh()
+    // the layout older code wrote: one __gb=N subdir per bucket
+    val vdir = Paths.get(root, tid.qualified, "v=0")
+    (1 to 20).map(i => (i.toLong, s"v$i")).toDF("k", "v")
+      .withColumn(TableStore.BucketCol, pmod(hash(col("k")), lit(spec.n)))
+      .write.partitionBy(TableStore.BucketCol).parquet(vdir.toString)
+    Files.writeString(vdir.resolve("_schema.json"), schema.json)
+    Files.writeString(vdir.resolve("_bucketmap"),
+      (0 until spec.n).map(b => s"$b=0").mkString("", "\n", "\n"))
+    Files.writeString(Paths.get(root, tid.qualified, "_bucketed"), "8\nk\n")
+    store.commit(Map(tid -> 0L))
+    val e = intercept[IllegalStateException](store.read(tid).count())
+    assert(e.getMessage.contains(vdir.toString), e.getMessage)
+    val e2 = intercept[IllegalStateException](store.readBuckets(tid, Set(3), 0L).count())
+    assert(e2.getMessage.contains(vdir.toString), e2.getMessage)
+  }
+
+  test("property: every version of a random delta chain reads as the fold, " +
+      "also after vacuum") {
+    // each key's bucket, from the store's own hash
+    val bucketOf = spark.range(0, 400)
+      .select(col("id"), pmod(hash(col("id")), lit(spec.n)))
+      .as[(Long, Int)].collect().toMap
+    def rows(state: Map[Long, String]) = state.toSeq.toDF("k", "v")
+    var removed = 0
+    Seq(11L, 12L, 13L).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val (store, _) = fresh()
+      var state = (0L until 120L).map(k => k -> s"v0-$k").toMap
+      val folds = scala.collection.mutable.Map(0L -> state)
+      def check(v: Long, when: String): Unit =
+        assert(store.readVersion(tid, v).as[(Long, String)].collect().toSeq.sorted ==
+          folds(v).toSeq.sorted, s"seed $seed, v=$v $when")
+      store.stageBucketed(tid, rows(state), 0L, spec)
+      store.commit(Map(tid -> 0L))
+      // a multi-bucket delta, a delta rewriting part of it, random
+      // deltas and one full rewrite (None)
+      val first = rnd.shuffle((0 until spec.n).toList).take(3).toSet
+      def some() = Some(rnd.shuffle((0 until spec.n).toList).take(1 + rnd.nextInt(3)).toSet)
+      val chain = Seq(Some(first), Some(Set(first.head)), some(), None, some(), some())
+      chain.zipWithIndex.foreach { case (changed, i) =>
+        val v = i + 1L
+        val touched = changed.getOrElse((0 until spec.n).toSet)
+        val mine = (k: Long) => touched.contains(bucketOf(k))
+        state = state.collect {
+          case (k, x) if !mine(k) => k -> x
+          case (k, x) if rnd.nextInt(5) > 0 =>
+            k -> (if (rnd.nextBoolean()) s"v$v-$k" else x)
+        } ++ bucketOf.keys.filter(k => mine(k) && !state.contains(k) &&
+          rnd.nextInt(8) == 0).map(k => k -> s"v$v-$k")
+        store.stageBucketed(tid, rows(state.filter { case (k, _) => mine(k) }), v,
+          spec, changed, changed.map(_ => v - 1))
+        store.commit(Map(tid -> v))
+        folds(v) = state
+        check(v, "before vacuum")
+        removed += store.vacuum(keepHistory = 1)
+        check(v - 1, "after vacuum")
+        check(v, "after vacuum")
+      }
+    }
+    assert(removed > 0, "no chain reclaimed a dir: the vacuum checks were vacuous")
+  }
+
+  test("over the broadcast threshold a batch plans a shuffle join, same rows") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val custSchema = StructType(Seq(
+      StructField("c_custkey", LongType), StructField("c_acctbal", DoubleType)))
+    // customer takes the bucket-level path, orders the full rewrite
+    val cust = TableId("srcdb", "public", "customer")
+    val orders = TableId("srcdb", "public", "orders")
+    val batch = Seq("customer", "orders").zipWithIndex.flatMap { case (t, j) =>
+      Seq(
+        (10L * j + 1, s"""{"kind":"update","schema":"public","table":"$t",
+          "columnnames":["c_custkey","c_acctbal"],"columnvalues":[5,99.0],
+          "oldkeys":{"keynames":["c_custkey"],"keyvalues":[5]}}"""),
+        (10L * j + 2, s"""{"kind":"delete","schema":"public","table":"$t",
+          "oldkeys":{"keynames":["c_custkey"],"keyvalues":[6]}}"""),
+        (10L * j + 3, s"""{"kind":"insert","schema":"public","table":"$t",
+          "columnnames":["c_custkey","c_acctbal"],"columnvalues":[100,1.5]}"""))
+    }.toDF("lsn_start", "payload")
+      .withColumn("insert_timestamp",
+        timestamp_seconds(lit(1700000000L) + col("lsn_start")))
+      .withColumn("database", lit("srcdb"))
+      .withColumn("xid", col("lsn_start"))
+      .withColumn("xid_timestamp", col("insert_timestamp"))
+      .withColumn("source_slotname", lit("slot1"))
+    object Plans extends AdaptiveSparkPlanHelper {
+      def joins(p: SparkPlan): Seq[BaseJoinExec] = collect(p) { case j: BaseJoinExec => j }
+    }
+    def run(threshold: Option[String]): (Seq[Seq[Row]], Seq[BaseJoinExec]) = {
+      val registry = new SchemaRegistry
+      val store = new TableStore(spark, Files.createTempDirectory("graft-bcast-").toString)
+      val base = (1 to 64).map(i => (i.toLong, i * 1.0)).toDF("c_custkey", "c_acctbal")
+      registry.register(TableMeta(cust, custSchema, Seq("c_custkey")))
+      registry.register(TableMeta(orders, custSchema, Seq("c_custkey")))
+      store.stageBucketed(cust, base, 0L, TableStore.BucketSpec(8, Seq("c_custkey")))
+      store.stage(orders, base, 0L)
+      store.commit(Map(cust -> 0L, orders -> 0L))
+      val joins = new java.util.concurrent.ConcurrentLinkedQueue[BaseJoinExec]
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                      ns: Long): Unit = Plans.joins(qe.executedPlan).foreach(joins.add)
+        def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                      e: Exception): Unit = ()
+      }
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      spark.listenerManager.register(listener)
+      threshold.foreach(spark.conf.set(key, _))
+      try new CdcStreamEngine(spark, registry, store).processBatch(batch, 0L)
+      finally threshold.foreach(_ => spark.conf.unset(key))
+      // listener events arrive asynchronously: one merge per table
+      val deadline = System.currentTimeMillis() + 30000L
+      while (joins.size < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      spark.listenerManager.unregister(listener)
+      (Seq(cust, orders).map(t => store.read(t).orderBy("c_custkey").collect().toSeq),
+        joins.asScala.toSeq)
+    }
+    val (forced, forcedJoins) = run(None)
+    val (guarded, guardedJoins) = run(Some("1"))
+    assert(forcedJoins.size == 2 &&
+      forcedJoins.forall(_.isInstanceOf[BroadcastHashJoinExec]), forcedJoins)
+    assert(guardedJoins.size == 2 &&
+      guardedJoins.forall(!_.isInstanceOf[BroadcastHashJoinExec]), guardedJoins)
+    assert(guarded == forced)
+    assert(forced.head.length == 64 &&
+      forced.head.find(_.getLong(0) == 5L).get.getDouble(1) == 99.0)
   }
 }

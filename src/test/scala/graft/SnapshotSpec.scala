@@ -29,6 +29,25 @@ class SnapshotSpec extends SparkSpec {
     assert(Snapshot.readStartLsn(root).contains(0xA0000000BL))
   }
 
+  test("a crash right after the snapshot commit keeps the start LSN: one manifest write") {
+    import spark.implicits._
+    val src = Files.createTempDirectory("snap-crash-src-").resolve("region.parquet").toString
+    (0 until 5).map(i => (i.toLong, s"r$i")).toDF("r_regionkey", "r_name")
+      .write.parquet(src)
+    val root = Files.createTempDirectory("snap-crash-").toString
+    val store = new TableStore(spark, root)
+    val rid = TableId("srcdb", "public", "region")
+    Snapshot.failpoint = Some((root, "post_commit"))
+    val e = intercept[IllegalStateException] {
+      Snapshot.basebackup(spark, Seq(Snapshot.TableSpec(rid, Seq("r_regionkey"), src)),
+        new SchemaRegistry, store, root, 0xC00000001L, buckets = Some(4))
+    }
+    assert(e.getMessage.contains("failpoint"), e.getMessage)
+    // the snapshot is published, and its LSN with it
+    assert(store.read(rid).count() == 5)
+    assert(Snapshot.readStartLsn(root).contains(0xC00000001L))
+  }
+
   test("basebackup validatePk refuses a non-key-unique table, before staging") {
     val sf = "/root/testdata/sf0.001"
     val root = Files.createTempDirectory("snap-dup-").toString
