@@ -1,8 +1,10 @@
 package graft.apply
 
+import scala.jdk.CollectionConverters._
+
 import graft.model.TableMeta
 import graft.types.PgTypeMapper
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -22,7 +24,9 @@ import org.apache.spark.sql.types._
   * No UDFs, no driver-side loops: the collapse is a compiled plan
   * node over a shuffle by key, the merge is built from codegen'd
   * built-ins (`map_*`, `when`) over a broadcast or shuffle by PK, and
-  * both scale horizontally.
+  * both scale horizontally. A change set small enough that AQE would
+  * coalesce those shuffles into one partition runs both in one
+  * partition instead, with no exchange (`onePartition`).
   */
 object ApplyEngine {
 
@@ -42,17 +46,31 @@ object ApplyEngine {
     * from a hash table ([[graft.plans.CollapseByKey]]) — no map-side
     * partial aggregate and no sort fallback. Within a key the events
     * sort by `ord`, nulls first, ties in arrival order.
-    * ApplyPropertySpec proves it equal to the lambda fold. */
-  def collapse(events: DataFrame): DataFrame =
-    graft.plans.CollapseByKey(events, events.sparkSession.sparkContext.defaultParallelism)
-
-  /** Apply collapsed per-key states onto the target table; returns the
-    * post-batch table with the target's exact schema.
+    * ApplyPropertySpec proves it equal to the lambda fold.
     *
-    * At scale: the collapsed change set is normally ≪ target, so the
-    * join broadcasts (AQE decides; `broadcastChanges` forces it). The
-    * target side never shuffles when bucketed/partitioned by PK.
-    */
+    * `onePartition` is the small-trigger shape: the events fold in ONE
+    * partition (a `coalesce(1)`, no exchange), in the task that
+    * decodes them. The stream engine picks it when the batch's payload
+    * bytes are at most the session's
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize` — below
+    * that, AQE would coalesce the hash shuffle into one partition
+    * anyway, so the shuffle only added a job and its driver round-trip
+    * ([[graft.stream.CdcStreamEngine.Shape]]). */
+  def collapse(events: DataFrame, onePartition: Boolean = false): DataFrame =
+    graft.plans.CollapseByKey(events,
+      if (onePartition) 1 else events.sparkSession.sparkContext.defaultParallelism)
+
+  /** `rows` collected from `like` (or from `like` with more columns
+    * after its own) re-served as a local relation with `like`'s schema:
+    * later plans read a small change set with no job and no exchange,
+    * and it feeds several consumers without a checkpoint. */
+  def toLocal(like: DataFrame, rows: Seq[Row]): DataFrame = {
+    val n = like.schema.length
+    like.sparkSession.createDataFrame(
+      rows.map(r => if (r.length == n) r else Row.fromSeq(r.toSeq.take(n))).asJava,
+      like.schema)
+  }
+
   /** Skew-resistant two-phase collapse. The fold state `(st, vals,
     * viol)` is a MONOID under "apply B's events after A's": `row`
     * replaces, `del` tombstones, `patch` overlays column-wise — so a
@@ -97,7 +115,10 @@ object ApplyEngine {
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
 
-  /** The merge is deliberately NOT a full-outer join: full-outer
+  /** Apply collapsed per-key states onto the target table; returns the
+    * post-batch table with the target's exact schema.
+    *
+    * The merge is deliberately NOT a full-outer join: full-outer
     * can only run as a shuffle join in Spark, which re-shuffles the
     * ENTIRE target per batch. Instead:
     *
@@ -106,13 +127,25 @@ object ApplyEngine {
     *   replaced = changes where st = `row`, built purely from vals
     *   result   = kept ∪ replaced
     *
-    * One scan of the target; with a small change set the left-outer
-    * join broadcasts (forced by `broadcastChanges`, or AQE decides),
-    * so the target never shuffles — the property that matters at
-    * 100 TB where changes/batch ≪ table size.
+    * One scan of the target, in one of two shapes:
+    *  - large (default): with a small change set the left-outer join
+    *    broadcasts (forced by `broadcastChanges`, or AQE decides), so
+    *    the target never shuffles — the property that matters at
+    *    100 TB where changes/batch ≪ table size. A change set that is
+    *    not a local relation is checkpointed once for its two readers.
+    *  - `onePartition`: both sides are coalesced to one partition and
+    *    hash-joined there, with no exchange and no broadcast job (a
+    *    local relation's broadcast still runs one); the result is one
+    *    partition. For a driver-local change set ([[toLocal]]) over a
+    *    target whose files are at most the session's
+    *    `spark.sql.adaptive.coalescePartitions.minPartitionSize`, where
+    *    AQE would coalesce a shuffle of the merged rows into one
+    *    partition anyway. The stream engine picks it per table
+    *    ([[graft.stream.CdcStreamEngine.Shape.onePartition]]).
     */
   def merge(target0: DataFrame, collapsed: DataFrame, meta: TableMeta,
-            broadcastChanges: Boolean = false): DataFrame = {
+            broadcastChanges: Boolean = false,
+            onePartition: Boolean = false): DataFrame = {
     val target = conform(target0, meta.schema)
     // Typed PK columns from the key array, registry order.
     val typedKeys = meta.pkCols.zipWithIndex.map { case (c, i) =>
@@ -123,13 +156,19 @@ object ApplyEngine {
     // whole decode→collapse subtree runs twice (exchange reuse does
     // not fire across the differing branch filters). localCheckpoint
     // is lazy=false-free and needs no explicit unpersist bookkeeping
-    // at call sites; the collapsed set is small (≤ batch keys).
+    // at call sites; the collapsed set is small (≤ batch keys). A
+    // local relation is already materialized.
     // Reserved __-prefixed names: a replicated table with columns
     // literally named `st`/`vals` must not make the join ambiguous.
     val chg0 = collapsed.select(
       typedKeys :+ col("st").as("__st") :+ col("vals").as("__vals"): _*)
-      .localCheckpoint(eager = false)
-    val chg = if (broadcastChanges) broadcast(chg0) else chg0
+    val chg = if (collapsed.isLocal) chg0 else chg0.localCheckpoint(eager = false)
+    // join inputs per shape; the strategy hint goes on the join input
+    // only (on `chg` it would also reach the `replaced` branch, which
+    // joins nothing, and Spark warns once per merge)
+    val (left, right) =
+      if (onePartition) (target.coalesce(1), chg.coalesce(1).hint("shuffle_hash"))
+      else (target, if (broadcastChanges) broadcast(chg) else chg)
 
     def fromVals(c: String): Column = {
       val dt = meta.colType(c)
@@ -141,7 +180,7 @@ object ApplyEngine {
     val joinCond = meta.pkCols
       .map(c => target(c) <=> chg(s"__k_$c"))
       .reduce(_ && _)
-    val kept = target.join(chg, joinCond, "left_outer")
+    val kept = left.join(right, joinCond, "left_outer")
       .filter(col("__st").isNull || col("__st") === "patch")
       .select(meta.schema.fieldNames.toIndexedSeq.map { c =>
         when(col("__st") === "patch", fromVals(c).otherwise(target(c)))
@@ -157,7 +196,8 @@ object ApplyEngine {
         else fromVals(c).otherwise(lit(null).cast(dt)).as(c)
       }: _*)
 
-    kept.unionByName(replaced)
+    val merged = kept.unionByName(replaced)
+    if (onePartition) merged.coalesce(1) else merged
   }
 
   /** Parity validations (strict mode, SURVEY §2.8 A9 fail-fast):

@@ -36,12 +36,15 @@ object CollapseByKey {
 
   /** `events(key, ord, op, vals)` hash-partitioned by `key` into
     * `partitions` and folded per key. The output columns are `key`,
-    * `st`, `vals` and `viol`. */
+    * `st`, `vals` and `viol`. One partition is a `coalesce(1)`, not a
+    * shuffle: a single partition satisfies the node's clustering, so
+    * the fold runs in its input's task with no exchange planned. */
   def apply(events: DataFrame, partitions: Int): DataFrame = {
     val session = events.sparkSession
     install(session)
-    val byKey = events.select(col("key"), col("ord"), col("op"), col("vals"))
-      .repartition(partitions, col("key"))
+    val evs = events.select(col("key"), col("ord"), col("op"), col("vals"))
+    val byKey =
+      if (partitions == 1) evs.coalesce(1) else evs.repartition(partitions, col("key"))
     val in = byKey.queryExecution.analyzed
     val Seq(key, ord, op, vals) = in.output
     val folded = Seq(

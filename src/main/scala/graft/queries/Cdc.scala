@@ -59,8 +59,9 @@ object Cdc {
 
   /** Same apply, through the PK-bucketed incremental publish path:
     * snapshot seeds a bucketed v=0, the batch merges/rewrites ONLY the
-    * buckets its keys hash into, and the read-back resolves through
-    * the version's bucketmap. Oracle identical to [[cdc_apply]] — the
+    * buckets its keys hash into (the stream engine's own bucket-delta
+    * path, in the shape it would pick for the log), and the read-back
+    * resolves through the version's bucketmap. Oracle identical to [[cdc_apply]] — the
     * two paths must be indistinguishable by result; what changes is
     * per-batch work: O(touched buckets), not O(|table|). */
   val cdc_apply_bucketed = GraftQuery(
@@ -75,11 +76,16 @@ object Cdc {
       val store = new graft.stream.TableStore(s, root)
       store.stageBucketed(meta.id, c, 0L, spec)
       store.commit(Map(meta.id -> 0L))
-      val spool = SyntheticCdc.customerLog(s, dir)
-      val collapsed = ApplyEngine.collapse(
-        Wal2Json.decodeEvents(Wal2Json.parse(spool), meta))
+      // the log as one trigger, planned in the shape the stream engine
+      // would pick for it from its payload bytes. The byte count reads
+      // only `payload`, so the parse is pruned out of that job; a cached
+      // parse measured no faster.
+      val parsed = Wal2Json.parse(SyntheticCdc.customerLog(s, dir))
+      val shape = graft.stream.CdcStreamEngine.Shape(s,
+        parsed.agg(graft.stream.CdcStreamEngine.payloadBytes).head().getLong(0))
+      val collapsed = ApplyEngine.collapse(Wal2Json.decodeEvents(parsed, meta), shape.small)
       graft.stream.BucketedPublish.stageDelta(
-        store, meta, spec, collapsed, 1L, 0L)
+        store, meta, spec, collapsed, 1L, 0L, shape)
       store.commit(Map(meta.id -> 1L))
       store.read(meta.id).orderBy(col("c_custkey"))
     },

@@ -3,8 +3,9 @@ package graft.stream
 import graft.apply.{ApplyEngine, IncrementalAgg}
 import graft.decode.Wal2Json
 import graft.model.{ChangeRecord, SchemaRegistry, TableId, TableMeta}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured-Streaming CDC replay (SURVEY §2.8): spool file source →
@@ -177,11 +178,28 @@ final class CdcStreamEngine(
     * Within a segment the touched tables apply concurrently on the
     * batch's table pool (one thread per core — the reference's
     * `nb_threads` workers, `replayer/connemara_replay.pl:764-777`):
-    * each table decodes, collapses (hash-partitioned by key over every
-    * core, [[ApplyEngine.collapse]]) and merges on its own thread.
+    * each table decodes, collapses and merges on its own thread.
     * Segment merges chain lazily per table; everything is staged on
     * the same pool and committed once, in one manifest write, at the
     * end of the batch.
+    *
+    * The preamble's payload bytes pick the batch's shape
+    * ([[CdcStreamEngine.Shape]]); both shapes give the same tables.
+    *  - Small (payload ≤ the session's
+    *    `spark.sql.adaptive.coalescePartitions.minPartitionSize`, where
+    *    AQE would coalesce a shuffle of the batch into one partition
+    *    anyway): each table decodes and collapses in one partition with
+    *    no exchange, and one job brings the collapsed rows — with their
+    *    PK buckets, for a bucket delta — to the driver as a local
+    *    relation. A table whose target files are also at most
+    *    `minPartitionSize` then merges in one partition with no
+    *    exchange and no broadcast job, and stages as one file: a
+    *    DML-only trigger over such a bucketed table runs the preamble's
+    *    jobs, the collect and the write.
+    *  - Large: the collapse hash-partitions by key over every core
+    *    ([[ApplyEngine.collapse]]), the change side is broadcast while
+    *    the payload fits the broadcast threshold, and the write
+    *    rebalances by bytes.
     */
   def processBatch(batch0: DataFrame, batchId: Long): Unit = {
     // basebackup→stream handoff: the snapshot already contains every
@@ -256,16 +274,10 @@ final class CdcStreamEngine(
             !col("p.table").startsWith("pg_temp"),
           struct(col("database"), col("p.schema"), col("p.table"))))
           .as("__touched"),
-        coalesce(sum(octet_length(col("payload"))), lit(0L)).as("__bytes")).head()
+        CdcStreamEngine.payloadBytes.as("__bytes")).head()
       if (pre.getLong(0) == 0L) return
       val nBad = pre.getLong(1)
-      // Broadcast the change side of every merge while it surely fits:
-      // the batch's payload bytes bound any one table's collapsed change
-      // set (decode keeps a subset of each payload's text). Above the
-      // session's broadcast threshold (or with broadcasts off) the
-      // planner picks the join from its own estimates.
-      val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-      val broadcastChanges = threshold >= 0 && pre.getLong(4) <= threshold
+      val shape = CdcStreamEngine.Shape(spark, pre.getLong(4))
 
       // Malformed payloads: fail fast in strict mode (A9 — the
       // reference dies on the first bad row); otherwise drop them
@@ -357,42 +369,43 @@ final class CdcStreamEngine(
             if (nViol > 0) throw new IllegalStateException(
               s"batch $batchId: $nViol apply violations on ${meta.id.qualified}")
           }
+        val collapsed0 =
+          ApplyEngine.collapse(Wal2Json.decodeEvents(segDml, meta), shape.small)
         deltaSpec match {
           case Some(spec) =>
             // bucket-level path: read ONLY the buckets the
             // change keys hash into; the restricted merge equals
             // the full merge restricted to those buckets (every
             // changed key's bucket is in the set by construction)
-            val collapsed =
-              ApplyEngine.collapse(Wal2Json.decodeEvents(segDml, meta))
-                .localCheckpoint(eager = false)
-            val changed =
-              BucketedPublish.changedBuckets(collapsed, meta, spec.n)
-            val target = store.readBuckets(meta.id, changed, baseVer.get)
+            val d = BucketedPublish.delta(store, meta, spec, collapsed0, baseVer.get, shape)
             // a patch's target row, if it exists, is in the
             // changed bucket set — restricted check ≡ full
-            checkStrict(target, collapsed)
+            checkStrict(d.target, d.collapsed)
             // views: pre-images from the restricted buckets
             // (they cover every change key); seed, if first
             // touch, from the full committed table
-            val views = maintainViews(meta, target, store.read(meta.id), collapsed)
-            Applied(ApplyEngine.merge(target, collapsed, meta, broadcastChanges),
-              Some(changed), views)
+            val views = maintainViews(meta, d.target, store.read(meta.id), d.collapsed)
+            Applied(d.merged, Some(d.changed), views)
           case None =>
+            // a committed target has known file bytes; a chained
+            // working entry (a later segment, a hook) does not
+            val onePartition = !working.contains(meta.id) &&
+              baseVer.exists(v => shape.onePartition(store.scanBytes(meta.id, v)))
             val target = working.getOrElse(meta.id, store.read(meta.id))
-            val collapsed0 = ApplyEngine.collapse(Wal2Json.decodeEvents(segDml, meta))
             // strict and view maintenance each add a consumer of
             // the collapsed plan beyond the merge — materialize once
+            // (a small trigger's change set is collected anyway)
             val collapsed =
-              if (strict || aggViews.nonEmpty)
+              if (shape.small) ApplyEngine.toLocal(collapsed0, collapsed0.collect().toSeq)
+              else if (strict || aggViews.nonEmpty)
                 collapsed0.localCheckpoint(eager = false)
               else collapsed0
             checkStrict(target, collapsed)
             val views = maintainViews(meta, target, target, collapsed)
             // the collapse's own size estimate is the raw events', which
             // can miss the broadcast threshold: the batch-level guard
-            // above decides, as on the bucket-level path
-            Applied(ApplyEngine.merge(target, collapsed, meta, broadcastChanges),
+            // decides, as on the bucket-level path
+            Applied(ApplyEngine.merge(target, collapsed, meta, shape.broadcast, onePartition),
               None, views)
         }
       }
@@ -447,16 +460,15 @@ final class CdcStreamEngine(
           viewWorking.toSeq
         // delta entries write only their changed buckets; bucketed
         // tables touched any other way (DDL batch, hooks) keep the
-        // bucketed layout via a full bucket rewrite
+        // bucketed layout via a full bucket rewrite. A one-partition
+        // merge stages as one file either way.
         def stageOne(tid: TableId, df: DataFrame): Unit = {
           label(s"stage ${tid.qualified}")
           store.bucketSpec(tid) match {
-            case Some(spec) => workingBuckets.get(tid) match {
-              case Some(changed) =>
-                store.stageBucketed(tid, df, targetVersion, spec,
-                  Some(changed), Some(committed(tid.qualified)))
-              case None => store.stageBucketed(tid, df, targetVersion, spec)
-            }
+            case Some(spec) =>
+              val changed = workingBuckets.get(tid)
+              store.stageBucketed(tid, df, targetVersion, spec, changed,
+                changed.map(_ => committed(tid.qualified)))
             case None => store.stage(tid, df, targetVersion)
           }
         }
@@ -570,6 +582,47 @@ final class CdcStreamEngine(
 }
 
 object CdcStreamEngine {
+  /** How one trigger's change sets are planned, from the payload bytes
+    * its preamble counts. Those bytes bound any one table's collapsed
+    * change set (decode keeps a subset of each payload's text), so
+    * each rule compares them with the session setting that AQE or the
+    * planner would apply to a shuffle of the batch:
+    *  - `small`: at most `minPartitionSize`, the session's
+    *    `spark.sql.adaptive.coalescePartitions.minPartitionSize`. AQE
+    *    would coalesce a shuffle of the batch into one partition
+    *    anyway, so the collapse runs in one partition with no exchange
+    *    and its result is collected to the driver.
+    *  - `onePartition`: a small trigger whose target files are also at
+    *    most `minPartitionSize` merges and writes in one partition. AQE
+    *    sizes the write's rebalance by the shuffle bytes over the core
+    *    count, never below `minPartitionSize`, so only such a merge would
+    *    come out of it as one partition.
+    *  - `broadcast`: at most `spark.sql.autoBroadcastJoinThreshold`
+    *    (and broadcasts on): the merge broadcasts the change side;
+    *    above it the planner picks the join from its own estimates.
+    * The settings are the engine session's own; no workload knob. */
+  final case class Shape(payloadBytes: Long, minPartitionSize: Long, broadcast: Boolean) {
+    def small: Boolean = payloadBytes <= minPartitionSize
+
+    /** Whether a merge onto target files of `targetBytes` runs in one
+      * partition with no exchange ([[ApplyEngine.merge]]); the bytes are
+      * counted only for a small trigger. */
+    def onePartition(targetBytes: => Long): Boolean = small && targetBytes <= minPartitionSize
+  }
+
+  /** A batch's payload bytes, as the preamble sums them: the figure a
+    * [[Shape]] is chosen from. */
+  def payloadBytes: Column = coalesce(sum(octet_length(col("payload"))), lit(0L))
+
+  object Shape {
+    def apply(spark: SparkSession, payloadBytes: Long): Shape = {
+      val conf = spark.sessionState.conf
+      val threshold = conf.autoBroadcastJoinThreshold
+      Shape(payloadBytes, conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE),
+        broadcast = threshold >= 0 && payloadBytes <= threshold)
+    }
+  }
+
   /** A live materialized aggregate over a replicated table: GROUP BY
     * `groupCol` with COUNT + SUM(`value`), maintained per micro-batch
     * by [[graft.apply.IncrementalAgg]] deltas and published

@@ -2,10 +2,12 @@ package graft.stream
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
 
 import graft.model.TableId
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Repartition}
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 
@@ -275,6 +277,37 @@ final class TableStore(spark: SparkSession, val root: String) {
       .drop(BucketCol, VersionCol)
   }
 
+  /** Bytes of the data files a read of `version` scans: for a bucketed
+    * version, the dirs its bucketmap maps `buckets` (default: all) to,
+    * as [[readBuckets]] reads them; otherwise the version's dir.
+    * Sidecars are not counted. A file listing, no Spark job. */
+  def scanBytes(id: TableId, version: Long, buckets: Option[Set[Int]] = None): Long = {
+    val dirs: Seq[Long] =
+      if (isBucketedAt(id, version))
+        bucketMap(id, version).toSeq
+          .collect { case (b, v) if buckets.forall(_.contains(b)) => v }.distinct
+      else Seq(version)
+    dirs.map { v =>
+      val s = Files.list(Paths.get(dir(id, v)))
+      try s.iterator().asScala
+        .filter(f => !f.getFileName.toString.startsWith("_") &&
+          !f.getFileName.toString.startsWith(".") && Files.isRegularFile(f))
+        .map(Files.size).sum
+      finally s.close()
+    }.sum
+  }
+
+  /** Whether `df` is one partition by its plan: a `coalesce(1)` under
+    * projections (renames, [[graft.apply.ApplyEngine.conform]]). */
+  private def onePartition(df: DataFrame): Boolean = {
+    @tailrec def go(p: LogicalPlan): Boolean = p match {
+      case Repartition(1, false, _) => true
+      case Project(_, child) => go(child)
+      case _ => false
+    }
+    go(df.queryExecution.analyzed)
+  }
+
   /** Stage a bucketed version. `changed = None` writes every bucket (a
     * full rewrite: create, snapshot load, or a schema-evolving DDL
     * batch); `Some(buckets)` writes ONLY those buckets — `df` must
@@ -282,9 +315,13 @@ final class TableStore(spark: SparkSession, val root: String) {
     * every other bucket at `baseVersion`'s rows. The rows are
     * rebalanced by bucket, so the adaptive planner sizes the files by
     * bytes both ways (a small version is one file; a partition over
-    * the advisory size is split), and each file is sorted by bucket. A table column named like a reserved
-    * layout column is refused. Re-running a version (crash replay)
-    * overwrites the same dir: idempotent. */
+    * the advisory size is split), and each file is sorted by bucket.
+    * A `df` that is already one partition (a `coalesce(1)` under
+    * projections: the stream engine's one-partition merge) skips the
+    * rebalance's exchange and writes its one bucket-sorted file
+    * straight from its own plan, one job sooner. A table column
+    * named like a reserved layout column is refused. Re-running a
+    * version (crash replay) overwrites the same dir: idempotent. */
   def stageBucketed(id: TableId, df: DataFrame, version: Long,
                     spec: TableStore.BucketSpec,
                     changed: Option[Set[Int]] = None,
@@ -295,9 +332,9 @@ final class TableStore(spark: SparkSession, val root: String) {
       .foreach(c => throw new IllegalArgumentException(
         s"${id.qualified}: column '$c' collides with a reserved column of " +
           "the bucketed layout"))
-    df.withColumn(BucketCol, pmod(hash(spec.pkCols.map(df(_)): _*), lit(spec.n)))
+    val rows = df.withColumn(BucketCol, pmod(hash(spec.pkCols.map(df(_)): _*), lit(spec.n)))
       .withColumn(VersionCol, lit(version))
-      .hint("rebalance", col(BucketCol))
+    (if (onePartition(df)) rows else rows.hint("rebalance", col(BucketCol)))
       .sortWithinPartitions(BucketCol)
       .write.mode("overwrite").parquet(dir(id, version))
     // sidecars AFTER the data write (overwrite clears the dir)

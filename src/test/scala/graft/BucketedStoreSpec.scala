@@ -49,6 +49,10 @@ class BucketedStoreSpec extends SparkSpec {
     finally s.close()
   }
 
+  /** The shape a tiny batch takes, and today's shape for a large one. */
+  private def small = CdcStreamEngine.Shape(spark, 0L)
+  private val large = CdcStreamEngine.Shape(1L, minPartitionSize = 0L, broadcast = true)
+
   private def collapsedOf(rows: (String, Long, Map[String, String])*): DataFrame =
     rows.toSeq
       .map { case (st, k, vals) => (Seq(k.toString), st, vals, 0) }
@@ -66,7 +70,7 @@ class BucketedStoreSpec extends SparkSpec {
     val (store, root) = fresh()
     seed(store)
     val changed = BucketedPublish.stageDelta(store, meta, spec,
-      collapsedOf(("patch", 7L, Map("v" -> "PATCHED"))), 1L, 0L)
+      collapsedOf(("patch", 7L, Map("v" -> "PATCHED"))), 1L, 0L, small)
     store.commit(Map(tid -> 1L))
     assert(changed.size == 1)
     assert(bucketsWritten(root, 1L) == changed)
@@ -76,29 +80,31 @@ class BucketedStoreSpec extends SparkSpec {
   }
 
   test("delta insert/delete/replace merge matches the full-table merge") {
-    val (store, _) = fresh()
-    seed(store)
-    val collapsed = collapsedOf(
-      ("row", 3L, Map("k" -> "3", "v" -> "REPLACED")),
-      ("row", 1000L, Map("k" -> "1000", "v" -> "NEW")),
-      ("del", 5L, Map.empty),
-      ("patch", 42L, Map("v" -> "P42")))
-    val expected = ApplyEngine.merge(
-      store.readVersion(tid, 0L), collapsed, meta)
-      .orderBy("k").collect().toSeq
-    BucketedPublish.stageDelta(store, meta, spec, collapsed, 1L, 0L)
-    store.commit(Map(tid -> 1L))
-    assert(store.read(tid).orderBy("k").collect().toSeq == expected)
+    Seq(small, large).foreach { shape =>
+      val (store, _) = fresh()
+      seed(store)
+      val collapsed = collapsedOf(
+        ("row", 3L, Map("k" -> "3", "v" -> "REPLACED")),
+        ("row", 1000L, Map("k" -> "1000", "v" -> "NEW")),
+        ("del", 5L, Map.empty),
+        ("patch", 42L, Map("v" -> "P42")))
+      val expected = ApplyEngine.merge(
+        store.readVersion(tid, 0L), collapsed, meta)
+        .orderBy("k").collect().toSeq
+      BucketedPublish.stageDelta(store, meta, spec, collapsed, 1L, 0L, shape)
+      store.commit(Map(tid -> 1L))
+      assert(store.read(tid).orderBy("k").collect().toSeq == expected, shape)
+    }
   }
 
   test("chained deltas resolve each bucket at its latest writing version") {
     val (store, _) = fresh()
     seed(store, n = 20)
     BucketedPublish.stageDelta(store, meta, spec,
-      collapsedOf(("patch", 1L, Map("v" -> "A"))), 1L, 0L)
+      collapsedOf(("patch", 1L, Map("v" -> "A"))), 1L, 0L, small)
     store.commit(Map(tid -> 1L))
     BucketedPublish.stageDelta(store, meta, spec,
-      collapsedOf(("patch", 2L, Map("v" -> "B"))), 2L, 1L)
+      collapsedOf(("patch", 2L, Map("v" -> "B"))), 2L, 1L, small)
     store.commit(Map(tid -> 2L))
     val got = store.read(tid).orderBy("k").collect().toSeq
     assert(got == (1 to 20).map(i => Row(i.toLong,
@@ -113,8 +119,8 @@ class BucketedStoreSpec extends SparkSpec {
     val (store, _) = fresh()
     seed(store, n = 10)
     val collapsed = collapsedOf(("patch", 4L, Map("v" -> "X")))
-    BucketedPublish.stageDelta(store, meta, spec, collapsed, 1L, 0L)
-    BucketedPublish.stageDelta(store, meta, spec, collapsed, 1L, 0L)
+    BucketedPublish.stageDelta(store, meta, spec, collapsed, 1L, 0L, small)
+    BucketedPublish.stageDelta(store, meta, spec, collapsed, 1L, 0L, small)
     store.commit(Map(tid -> 1L))
     assert(store.read(tid).filter($"k" === 4L).collect().toSeq ==
       Seq(Row(4L, "X")))
@@ -135,10 +141,10 @@ class BucketedStoreSpec extends SparkSpec {
     val (store, root) = fresh()
     seed(store, n = 50)
     BucketedPublish.stageDelta(store, meta, spec,
-      collapsedOf(("patch", 1L, Map("v" -> "A"))), 1L, 0L)
+      collapsedOf(("patch", 1L, Map("v" -> "A"))), 1L, 0L, small)
     store.commit(Map(tid -> 1L))
     BucketedPublish.stageDelta(store, meta, spec,
-      collapsedOf(("patch", 2L, Map("v" -> "B"))), 2L, 1L)
+      collapsedOf(("patch", 2L, Map("v" -> "B"))), 2L, 1L, small)
     store.commit(Map(tid -> 2L))
     // v0 (most buckets) and v1 are still referenced by v2's bucketmap
     assert(store.vacuum(keepHistory = 0) == 0)
@@ -266,19 +272,23 @@ class BucketedStoreSpec extends SparkSpec {
   }
 
   test("a version is one bucket-sorted file, not one file per bucket") {
-    val (store, root) = fresh()
-    seed(store)
-    BucketedPublish.stageDelta(store, meta, spec, collapsedOf(
-      ("patch", 1L, Map("v" -> "A")), ("patch", 2L, Map("v" -> "B")),
-      ("patch", 3L, Map("v" -> "C"))), 1L, 0L)
-    Seq(0L, 1L).foreach { v =>
-      val files = dataFiles(root, v)
-      assert(files.size == 1, s"v=$v: $files")
-      val gb = spark.read.parquet(files.head.toString)
-        .select(TableStore.BucketCol).as[Int].collect().toSeq
-      assert(gb == gb.sorted, s"v=$v: file not sorted by bucket")
+    // small: the one-partition merge writes its file; large: the
+    // rebalance sizes the delta's files by bytes
+    Seq(small, large).foreach { shape =>
+      val (store, root) = fresh()
+      seed(store)
+      BucketedPublish.stageDelta(store, meta, spec, collapsedOf(
+        ("patch", 1L, Map("v" -> "A")), ("patch", 2L, Map("v" -> "B")),
+        ("patch", 3L, Map("v" -> "C"))), 1L, 0L, shape)
+      Seq(0L, 1L).foreach { v =>
+        val files = dataFiles(root, v)
+        assert(files.size == 1, s"$shape, v=$v: $files")
+        val gb = spark.read.parquet(files.head.toString)
+          .select(TableStore.BucketCol).as[Int].collect().toSeq
+        assert(gb == gb.sorted, s"$shape, v=$v: file not sorted by bucket")
+      }
+      assert(bucketsWritten(root, 0L) == (0 until spec.n).toSet)
     }
-    assert(bucketsWritten(root, 0L) == (0 until spec.n).toSet)
   }
 
   test("a version over the advisory partition size is split into more files, " +
@@ -433,10 +443,14 @@ class BucketedStoreSpec extends SparkSpec {
                       e: Exception): Unit = ()
       }
       val key = "spark.sql.autoBroadcastJoinThreshold"
+      // a 1-byte minimum partition size makes this tiny batch large:
+      // the broadcast guard is the large shape's join choice
+      val minPart = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
       spark.listenerManager.register(listener)
       threshold.foreach(spark.conf.set(key, _))
+      spark.conf.set(minPart, "1")
       try new CdcStreamEngine(spark, registry, store).processBatch(batch, 0L)
-      finally threshold.foreach(_ => spark.conf.unset(key))
+      finally { threshold.foreach(_ => spark.conf.unset(key)); spark.conf.unset(minPart) }
       // listener events arrive asynchronously: one merge per table
       val deadline = System.currentTimeMillis() + 30000L
       while (joins.size < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
