@@ -87,8 +87,6 @@ object StreamBench {
       "kill-recovery mode runs on the single-db topology")
     val killPoint = sys.env.getOrElse("SPARK_GRAFT_STREAM_KILL_POINT",
       "pre_commit")
-    require(killAt.isEmpty || ddlEvery == 0,
-      "kill-recovery mode assumes a DDL-free run (static registry)")
     require(Set("pre_commit", "post_commit").contains(killPoint),
       s"unknown kill point $killPoint")
     require(nBatches < 100, "insert-key space exhausted at 100 batches")
@@ -230,26 +228,33 @@ object StreamBench {
       .write.format("noop").mode("overwrite").save()
     System.gc()
 
+    // the DDL interpreter only on a DDL-bearing stream; the P5
+    // restriction engages only in federation mode — the single-db
+    // workload keeps its historical stamps (srcdb/slot1)
+    val restriction = if (nDbs == 1) Map.empty[String, String] else slotByDb
+    def engineOf(reg: SchemaRegistry, st: TableStore): CdcStreamEngine =
+      if (ddlEvery > 0) CdcStreamEngine.withDdl(spark, reg, st, slotByDb = restriction)
+      else new CdcStreamEngine(spark, reg, st, slotByDb = restriction)
+
     killAt.foreach { k =>
       require(k >= 0 && k < nBatches, s"kill batch $k outside 0..${nBatches - 1}")
-      def seedStore(): TableStore = {
-        val r = Files.createTempDirectory("graft-sbench-store-").toString
-        val st = new TableStore(spark, r)
-        if (nBuckets > 0)
-          st.stageBucketed(tid, cust, 0L,
-            TableStore.BucketSpec(nBuckets, Seq("c_custkey")))
-        else st.stage(tid, cust, 0L)
-        st.commit(Map(tid -> 0L))
-        st
-      }
+      // the killed run's store, seeded like `store` and publishing the
+      // registry before the reference run evolves it: the killed and
+      // the restarted engine load their registry from it, as a
+      // restarted driver does
+      val store2 = new TableStore(spark,
+        Files.createTempDirectory("graft-sbench-store-").toString)
+      if (nBuckets > 0)
+        store2.stageBucketed(tid, cust, 0L, TableStore.BucketSpec(nBuckets, Seq("c_custkey")))
+      else store2.stage(tid, cust, 0L)
+      store2.commitWithDrops(Map(tid -> 0L), Set.empty, registry = Some(registry))
       // reference: the same workload uninterrupted (state to match)
-      new CdcStreamEngine(spark, registry, store)
+      engineOf(registry, store)
         .start(spool, ckpt, maxFilesPerTrigger = 1).awaitTermination()
 
-      // killed run: fresh store+checkpoint, failpoint at batch k
-      val store2 = seedStore()
+      // killed run: fresh checkpoint, failpoint at batch k
       val ckpt2 = Files.createTempDirectory("graft-sbench-ckpt-").toString
-      val eKill = new CdcStreamEngine(spark, registry, store2)
+      val eKill = engineOf(SchemaRegistry.load(store2.registryPath), store2)
       eKill.failpoint = Some((k, killPoint))
       val qKill = eKill.start(spool, ckpt2, maxFilesPerTrigger = 1)
       val killed =
@@ -268,7 +273,7 @@ object StreamBench {
       // restart: a NEW engine against the same checkpoint + store —
       // the driver-restart analog. Timed region = restart-to-caught-up
       // (stream init + replay of batch k + remaining batches).
-      val eRec = new CdcStreamEngine(spark, registry, store2)
+      val eRec = engineOf(SchemaRegistry.load(store2.registryPath), store2)
       val t0 = System.nanoTime()
       val qRec = eRec.start(spool, ckpt2, maxFilesPerTrigger = 1)
       qRec.awaitTermination()
@@ -276,13 +281,15 @@ object StreamBench {
       qRec.exception.foreach(throw _)
       val replayed = qRec.recentProgress.count(_.numInputRows > 0)
 
-      // the recovered state must ROW-MATCH the uninterrupted run —
-      // exactly-once as an observable, not a spec claim
+      // the recovered state must ROW-MATCH the uninterrupted run, in
+      // the same columns — exactly-once as an observable, not a spec
+      // claim
       val colsSorted = store.read(tid).columns.sorted.toIndexedSeq
       def rowsOf(st: TableStore) = st.read(tid)
         .select(colsSorted.map(col): _*)
         .orderBy(colsSorted.map(col): _*).collect().toSeq
-      val stateMatch = rowsOf(store) == rowsOf(store2)
+      val stateMatch = store2.read(tid).columns.sorted.toIndexedSeq == colsSorted &&
+        rowsOf(store) == rowsOf(store2)
 
       def fmt(v: Double) =
         String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
@@ -290,7 +297,7 @@ object StreamBench {
         s"""{"metric":"stream_recovery_sec","value":${fmt(recoverySec)},""" +
           s""""unit":"sec","kill_at":$k,"kill_point":"$killPoint",""" +
           s""""replayed_batches":$replayed,"batches":$nBatches,""" +
-          s""""state_match":$stateMatch,"scale":$scale,""" +
+          s""""state_match":$stateMatch,"scale":$scale,"ddl_every":$ddlEvery,""" +
           s""""buckets":$nBuckets,"sf":"$sfDir"}"""
       java.nio.file.Files.write(Paths.get("STREAMBENCH_RECOVERY.json"),
         line.getBytes("UTF-8"))
@@ -300,13 +307,7 @@ object StreamBench {
     }
 
     // ---- timed region: the streaming replay loop ----
-    // the P5 restriction engages only in federation mode — the
-    // single-db workload keeps its historical stamps (srcdb/slot1)
-    val restriction = if (nDbs == 1) Map.empty[String, String] else slotByDb
-    val engine =
-      if (ddlEvery > 0)
-        CdcStreamEngine.withDdl(spark, registry, store, slotByDb = restriction)
-      else new CdcStreamEngine(spark, registry, store, slotByDb = restriction)
+    val engine = engineOf(registry, store)
     val t0 = System.nanoTime()
     val q = engine.start(spool, ckpt,
       maxFilesPerTrigger = 1)

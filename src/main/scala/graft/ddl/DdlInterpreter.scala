@@ -38,9 +38,12 @@ final class DdlInterpreter(
     onRenameData: (TableId, String, String) => Unit = null,
     /** Applies a TRUNCATE to table DATA. Default: commit an empty
       * version (monotonic, never regressing to v=0); the stream
-      * engine overrides to truncate its in-flight working chain — a
-      * mid-batch store commit would collide with the batch's own
-      * version and be overwritten by the chained result. */
+      * engine overrides to truncate its in-flight working chain, so
+      * the truncate publishes in the batch's one commit with its rows
+      * and LSN watermarks — a mid-batch store commit would be
+      * overwritten by the chained result, and a crash after it would
+      * leave the truncate published under watermarks that replay the
+      * whole batch over it. */
     onTruncateData: TableId => Unit = null,
     /** Notifies the caller that a table was renamed (ALTER TABLE …
       * RENAME TO): the stream engine re-keys its in-flight working

@@ -97,7 +97,8 @@ final class SchemaRegistry {
   /** Persist all metadata to one JSON file (atomic rename). The
     * streaming checkpoint only stores source offsets; DDL-evolved
     * schemas must survive a driver restart too, or replay decodes
-    * against stale types. */
+    * against stale types — [[graft.stream.TableStore.commitWithDrops]]
+    * saves it as a registry version published with the data. */
   def save(path: java.nio.file.Path): Unit = {
     val q = graft.JsonUtil.quote _
     val json = tables.values.toSeq

@@ -37,9 +37,11 @@ object Snapshot {
       bounds: Option[(Long, Long)] = None)
 
   /** Copy every table of one pinned snapshot into the store as
-    * version 0 and record the consistent-point LSN the stream must
-    * resume from (`CREATE_REPLICATION_SLOT … consistent_point`,
-    * `connemara_python/connemara/schema_dump.py:31-37`).
+    * version 0 and start the LSN watermark of every database it seeds
+    * at `startLsn`, the consistent point the stream resumes from
+    * (`CREATE_REPLICATION_SLOT … consistent_point`,
+    * `connemara_python/connemara/schema_dump.py:31-37`). `registry`
+    * is the store's: it is published with the snapshot.
     */
   def basebackup(
       spark: SparkSession,
@@ -72,8 +74,9 @@ object Snapshot {
     * partition. `startLsn` is the snapshot's consistent point — on
     * PostgreSQL the `CREATE_REPLICATION_SLOT … consistent_point` taken
     * while the snapshot transaction is held; generic JDBC has no
-    * portable equivalent, so the caller supplies it and the usual
-    * stream handoff (`readStartLsn` → engine `startLsn`) applies.
+    * portable equivalent, so the caller supplies it. It becomes each
+    * seeded database's LSN watermark, as on the parquet path: the
+    * stream engine drops every change below it.
     * `connectionProps` carries driver/user/password. */
   def basebackupJdbc(
       spark: SparkSession,
@@ -224,16 +227,14 @@ object Snapshot {
       Await.result(Future.sequence(fs), Duration.Inf)
     }
     metas.foreach(registry.register)
-    // all tables and the start LSN commit together: one consistent
-    // snapshot cut, and no published snapshot without its LSN
-    store.commit(entries.map(_._1 -> 0L).toMap, startLsn = Some(startLsn))
+    // all tables, their databases' watermarks and the registry commit
+    // together: one consistent snapshot cut, and no published snapshot
+    // without its LSN or its schemas
+    store.commitWithDrops(entries.map(_._1 -> 0L).toMap, Set.empty,
+      lsns = entries.map(_._1.database -> startLsn).toMap, registry = Some(registry))
     maybeFail(storeRoot, "post_commit")
     Report(reports, startLsn)
   }
-
-  /** The start LSN committed with the store's snapshot cut. */
-  def readStartLsn(storeRoot: String): Option[Long] =
-    TableStore.startLsnAt(storeRoot)
 
   /** Crash-injection point for tests: `(storeRoot, "post_commit")`
     * throws right after the snapshot's commit. Never set in

@@ -18,12 +18,24 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    key, [[ApplyEngine.collapse]] sorts by the same clock.
   *  - 30 s event-time commit cadence (A2) ≈ micro-batch boundary; the
   *    manifest is the all-tables-commit-together barrier (A3).
-  *  - exactly-once (A6): checkpoint stores source offsets; version
-  *    dirs keyed by batchId make replayed batches idempotent.
+  *  - exactly-once (A6): each source database's LSN watermark — the
+  *    first LSN not yet applied, the replication origin's analog — is
+  *    committed in the same manifest write as the data it covers
+  *    ([[TableStore.watermarks]]), and every trigger drops the rows
+  *    below it before the parse. A replayed committed trigger is then
+  *    empty, whatever the checkpoint says; batch ids record no
+  *    progress. This assumes a source transaction never spans spool
+  *    files (the reference writes one COPY per transaction, K1): the
+  *    rows of one LSN are consumed by one trigger.
   *  - DDL barrier (A8): DDL records are routed to `ddlHandler`
   *    BEFORE the batch's DML merge, then the registry-backed plans
   *    rebuild — the `DISCARD`/cache-invalidation analog.
   *  - backpressure (A10): `maxFilesPerTrigger`.
+  *  - archive (K5 `--keep_data`): `archiveDir` keeps every consumed
+  *    spool row, partitioned by batch id and written before the
+  *    commit. Batch ids restart at 0 with a new checkpoint, whose
+  *    batches then overwrite the old checkpoint's partitions of the
+  *    same id.
   *  - fail-fast (A9): `strict=true` counts merge violations and
   *    aborts the query (affected-rows==1 parity).
   */
@@ -35,7 +47,6 @@ final class CdcStreamEngine(
     strict: Boolean = false,
     archiveDir: Option[String] = None,
     quarantineDir: Option[String] = None,
-    startLsn: Option[Long] = None,
     aggViews: Seq[CdcStreamEngine.AggView] = Seq.empty,
     // P5: per-db slot restriction (replayer/connemara_replay.pl:779-799)
     // — a database with a configured slot only accepts rows from that
@@ -58,18 +69,14 @@ final class CdcStreamEngine(
   // their working entry covers (absence = the entry is full-table)
   private val workingBuckets =
     scala.collection.mutable.Map.empty[TableId, Set[Int]]
-  // the batch being replayed: its target version and the manifest
-  // snapshot taken at batch start — the DDL data hooks consult these
-  // so crash-replay can't re-apply effects already published
-  private var currentTargetVersion: Long = Long.MinValue
-  private var committedAtBatchStart: Map[String, Long] = Map.empty
 
   /** Crash-injection point for recovery measurement (StreamBench
     * SPARK_GRAFT_STREAM_KILL_AT / CdcStreamSpec): kill the stream at
-    * batch `id`, either `pre_commit` (versions staged, manifest NOT
-    * advanced — the torn-stage crash; replay re-stages and commits) or
-    * `post_commit` (manifest advanced, checkpoint NOT — the
-    * double-apply window; replay takes the versioned-publish skip).
+    * batch `id`, either `pre_commit` (versions staged and the archive
+    * written, manifest NOT advanced — the torn-stage crash; replay
+    * re-stages, overwrites the archive partition and commits) or
+    * `post_commit` (manifest and watermarks advanced, checkpoint NOT —
+    * the double-apply window; the watermarks empty the replay).
     * Parquet staging is itself rename-published, so "mid-write" is
     * not an observable third state — a killed write leaves no visible
     * partial file, only staged-vs-committed. Never set in production.
@@ -85,9 +92,9 @@ final class CdcStreamEngine(
   /** Rename-hook target for [[graft.ddl.DdlInterpreter]]: renames in
     * the in-flight working chain, loading the committed version into
     * the chain first if the table wasn't touched yet this batch. No
-    * mid-batch store commit — that would collide with the batch's own
-    * targetVersion and, on crash-replay, trip the double-apply guard
-    * into silently skipping the batch's DML. */
+    * mid-batch store commit: the rename publishes with the batch's
+    * rows and watermarks, so a crash before the batch's commit leaves
+    * neither. */
   def renameTableData(id: TableId, from: String, to: String): Unit =
     working.get(id) match {
       case Some(df) => working(id) = df.withColumnRenamed(from, to)
@@ -122,22 +129,13 @@ final class CdcStreamEngine(
   /** Truncate-hook target: TRUNCATE takes effect inside the working
     * chain at its stream position — pre-truncate DML vanishes with
     * the old rows, post-truncate DML applies onto the empty table;
-    * everything commits once with the batch.
-    *
-    * Crash-replay guard: if this table's manifest version already
-    * reached the batch's target, a previous attempt of THIS batch
-    * committed the post-truncate state — truncating again would stage
-    * an empty table over it and erase the batch's post-truncate DML
-    * (the DML segments are skipped by the same-version guard). */
+    * everything commits once with the batch, so a replay of a
+    * committed batch (emptied by the watermarks) never runs it. */
   def truncateTableData(id: TableId): Unit =
-    registry.get(id)
-      .filter(meta => committedAtBatchStart.get(meta.id.qualified)
-        .forall(_ < currentTargetVersion))
-      .foreach { meta =>
-        if (working.contains(id) || store.exists(id))
-          working(id) = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema)
-      }
+    registry.get(id).foreach { meta =>
+      if (working.contains(id) || store.exists(id))
+        working(id) = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], meta.schema)
+    }
 
   /** Fold one segment's collapsed change set into every registered
     * materialized aggregate of this table ([[IncrementalAgg]]): the
@@ -202,18 +200,24 @@ final class CdcStreamEngine(
     *    rebalances by bytes.
     */
   def processBatch(batch0: DataFrame, batchId: Long): Unit = {
-    // basebackup→stream handoff: the snapshot already contains every
-    // effect up to its pinned LSN (Snapshot.readStartLsn), so events
-    // before the cut must not replay — a pre-cut update applied on
-    // top of the (newer) snapshotted row would regress it. Mirrors
-    // the reference starting replication AT the slot's
-    // consistent_point rather than from the WAL's beginning.
     val batchSlotted =
       if (slotByDb.isEmpty) batch0
       else batch0.filter(graft.functions.Routing.dbSlotRestriction(
         slotByDb, col("database"), col("source_slotname")))
+    // The one replay-skip rule: a row applies only at or above its
+    // database's LSN watermark. Rows below it are already in the store
+    // — applied by a committed trigger, or inside the snapshot image,
+    // whose consistent point starts the watermark (the reference starts
+    // replication AT the slot's consistent_point). A database with no
+    // watermark yet passes whole. The watermarks enter the plan as one
+    // map literal, which generated code references instead of
+    // inlining: the filter's code, unlike its values, is the same
+    // every trigger, so it compiles once.
+    val watermarks = store.watermarks()
     val batch =
-      startLsn.fold(batchSlotted)(l => batchSlotted.filter(col("lsn_start") >= l))
+      if (watermarks.isEmpty) batchSlotted
+      else batchSlotted.filter(col("lsn_start") >= coalesce(
+        try_element_at(typedLit(watermarks), col("database")), lit(Long.MinValue)))
     val parsedAll = Wal2Json.parse(batch).cache()
     // the batch's table pool, started on first use
     var pool: java.util.concurrent.ExecutorService = null
@@ -254,17 +258,16 @@ final class CdcStreamEngine(
       // ONE preamble action where there used to be four driver
       // round-trips per micro-batch (the emptiness probe, the strict
       // quarantine count, the DDL collect, and the first segment's
-      // touched-tables collect): row/malformed counts, the batch's
-      // ordered DDL events, the touched-table set and the payload
-      // bytes all return from a single aggregate over the cached
-      // parse. Per-trigger driver round-trips are the replay loop's
-      // fixed cost — at the 30 s reference cadence each one saved is
-      // latency on every batch forever (opt guide §1.2: fix the
-      // distributed-algorithm shape first; a collect per phase IS the
-      // shape here).
+      // touched-tables collect): per source database, the malformed
+      // count, the ordered DDL events, the touched-table set, the
+      // payload bytes and the highest LSN consumed all return from a
+      // single aggregate over the cached parse. Per-trigger driver
+      // round-trips are the replay loop's fixed cost — at the 30 s
+      // reference cadence each one saved is latency on every batch
+      // forever (opt guide §1.2: fix the distributed-algorithm shape
+      // first; a collect per phase IS the shape here).
       label("preamble")
-      val pre = parsedAll.agg(
-        count(lit(1)).as("__n"),
+      val pre = parsedAll.groupBy(col("database")).agg(
         count(when(bad, lit(1))).as("__nbad"),
         collect_list(when(!bad && isDdl && col("p.kind") === "insert",
           struct(col("xid_timestamp"), col("lsn_start"), col("database"),
@@ -274,10 +277,16 @@ final class CdcStreamEngine(
             !col("p.table").startsWith("pg_temp"),
           struct(col("database"), col("p.schema"), col("p.table"))))
           .as("__touched"),
-        CdcStreamEngine.payloadBytes.as("__bytes")).head()
-      if (pre.getLong(0) == 0L) return
-      val nBad = pre.getLong(1)
-      val shape = CdcStreamEngine.Shape(spark, pre.getLong(4))
+        CdcStreamEngine.payloadBytes.as("__bytes"),
+        max(col("lsn_start")).as("__lsn")).collect().toSeq
+      if (pre.isEmpty) return
+      val nBad = pre.map(_.getLong(1)).sum
+      val shape = CdcStreamEngine.Shape(spark, pre.map(_.getLong(4)).sum)
+      // the watermarks this trigger's commit moves: past every LSN it
+      // consumed, applied or quarantined
+      val consumed = pre.collect {
+        case r if !r.isNullAt(0) && !r.isNullAt(5) => r.getString(0) -> (r.getLong(5) + 1)
+      }.toMap
 
       // Malformed payloads: fail fast in strict mode (A9 — the
       // reference dies on the first bad row); otherwise drop them
@@ -302,7 +311,7 @@ final class CdcStreamEngine(
 
       // driver-side (ts, lsn) sort replaces the orderBy the old
       // per-batch DDL collect paid for — the list is tiny by cadence
-      val ddls = pre.getSeq[Row](2)
+      val ddls = pre.flatMap(_.getSeq[Row](2))
         .map { r =>
           (r.getTimestamp(0), r.getLong(1),
             graft.ddl.DdlInterpreter.eventFrom(
@@ -321,14 +330,7 @@ final class CdcStreamEngine(
       val dml = parsed.filter(!isDdl)
       val pos = struct(col("xid_timestamp"), col("lsn_start"))
 
-      // Batch N publishes version N+1 (v=0 is the initial snapshot).
-      // A table already at version ≥ N+1 was committed by a previous
-      // attempt of this same batch (crash between manifest commit and
-      // checkpoint commit) — skip it, or the replay would double-apply.
-      val targetVersion = batchId + 1
       val committed = store.manifest()
-      currentTargetVersion = targetVersion
-      committedAtBatchStart = committed
 
       working.clear() // chained working state per table across segments
       viewWorking.clear()
@@ -412,13 +414,6 @@ final class CdcStreamEngine(
 
       def applySegment(segDml: DataFrame, touched: Seq[TableId]): Unit = {
         val metas = touched.flatMap(registry.get)
-          .filter(meta => committed.get(meta.id.qualified).forall(_ < targetVersion))
-          // registry-known but neither in-flight nor in the store:
-          // the only way here is replaying a committed batch whose
-          // rename barrier already retired this name — the final
-          // state is published, skip (a fresh CREATE commits v=0
-          // immediately, so it never hits this)
-          .filter(meta => working.contains(meta.id) || store.exists(meta.id))
         val applied = perTable(metas.map(meta => () => applyTable(segDml, meta)))
         metas.zip(applied).foreach { case (meta, a) =>
           working(meta.id) = a.df
@@ -428,7 +423,7 @@ final class CdcStreamEngine(
       }
 
       if (ddls.isEmpty)
-        applySegment(dml, pre.getSeq[Row](3)
+        applySegment(dml, pre.flatMap(_.getSeq[Row](3))
           .map(r => TableId(r.getString(0), r.getString(1), r.getString(2))))
       else {
         val bounds = ddls.map { case (ts, lsn, _) => struct(lit(ts), lit(lsn)) }
@@ -458,6 +453,13 @@ final class CdcStreamEngine(
           // their source tables — a reader never sees a view ahead of
           // or behind the table it summarizes
           viewWorking.toSeq
+        // every entry stages at one version, one above the highest the
+        // manifest holds for any of them (read now: a CREATE TABLE in
+        // this batch committed its v=0 mid-batch), so no committed dir
+        // is rewritten and one trigger's entries share a version
+        val now = store.manifest()
+        val targetVersion =
+          entries.flatMap { case (tid, _) => now.get(tid.qualified) }.foldLeft(-1L)(math.max) + 1
         // delta entries write only their changed buckets; bucketed
         // tables touched any other way (DDL batch, hooks) keep the
         // bucketed layout via a full bucket rewrite. A one-partition
@@ -478,24 +480,13 @@ final class CdcStreamEngine(
         }).toMap
       }
 
-      // A2/A3: one atomic cross-table commit per batch; renamed-away
-      // old names retire in the SAME manifest write (the rename
-      // barrier — no crash window between re-key and publish)
-      val dropped = pendingRenames.map(_._1)
-        .filterNot(o => updates.contains(o)).toSet
-      maybeFail(batchId, "pre_commit")
-      if (updates.nonEmpty || dropped.nonEmpty)
-        store.commitWithDrops(updates, dropped)
-      // the checkpoint only persists source offsets — DDL-evolved
-      // schemas must survive a driver restart too (A8)
-      if (ddls.nonEmpty) registry.save(store.registryPath)
-      ()
-
       // K5 --keep_data / E4 archive CTE analog: applied spool records
-      // move to the audit table instead of vanishing. Partitioned by
-      // batch so a replayed batch overwrites its own partition
-      // (idempotent), mirroring `WITH deleted AS (DELETE … RETURNING *)
-      // INSERT INTO replication.replayed` (`replayer/connemara_replay.pl:521-526`).
+      // move to the audit table instead of vanishing, mirroring `WITH
+      // deleted AS (DELETE … RETURNING *) INSERT INTO
+      // replication.replayed` (`replayer/connemara_replay.pl:521-526`).
+      // Written BEFORE the commit and partitioned by batch: a replay
+      // of an uncommitted batch overwrites its own partition, and a
+      // committed one replays empty and never gets here.
       archiveDir.foreach { dir =>
         label("archive")
         // raw rows from the cached parse (drop("p") restores the exact
@@ -506,6 +497,17 @@ final class CdcStreamEngine(
           .partitionBy("batch_id")
           .parquet(dir)
       }
+
+      // A2/A3: one atomic cross-table commit per batch, carrying the
+      // watermarks and, after DDL, the registry (A8: the checkpoint
+      // persists only source offsets); renamed-away old names retire
+      // in the SAME manifest write (the rename barrier — no crash
+      // window between re-key and publish)
+      val dropped = pendingRenames.map(_._1)
+        .filterNot(o => updates.contains(o)).toSet
+      maybeFail(batchId, "pre_commit")
+      store.commitWithDrops(updates, dropped, consumed,
+        if (ddls.nonEmpty) Some(registry) else None)
       maybeFail(batchId, "post_commit")
     } finally {
       if (pool != null) pool.shutdown()

@@ -3,6 +3,7 @@ package graft.stream
 import graft.decode.Wal2Json
 import graft.model.ChangeRecord
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -55,17 +56,16 @@ object Quarantine {
     * the quarantine to hold only the still-bad rows — the
     * delete-on-success the fixer performs after a manual apply.
     *
-    * Re-stamping (on by default): requeued rows re-enter the stream
-    * as NEW events — their `insert_timestamp` is advanced past the
-    * newest spool event (relative order within the requeued set is
-    * preserved by `lsn_start` at the shared new timestamp). A repair
-    * is the operator's newest statement about the row; without the
-    * re-stamp, a repaired OLD event applied by a later micro-batch
-    * would silently travel back in time and overwrite changes that
-    * newer, already-applied events made to the same key. Pass
-    * `restamp = false` only when the stream is known to hold no
-    * newer events for the affected keys (the reference's model, where
-    * failures block the batch until fixed).
+    * Requeued rows re-enter the stream as NEW events: their
+    * `insert_timestamp` moves past the spool's newest and their
+    * `lsn_start` to just above the spool's highest, in their own LSN
+    * order. A repair is the operator's newest statement about the row
+    * — an old event applied late would overwrite newer changes to the
+    * key — and the trigger that quarantined it moved its database's
+    * LSN watermark ([[TableStore.watermarks]]) past its old LSN. So the
+    * spool must still hold the newest consumed event, and a requeue
+    * belongs between source deliveries: an event emitted but not yet
+    * spooled may carry an LSN the requeue hands out.
     *
     * @param repair spool-shaped rows in, spool-shaped rows out
     *               (typically a `withColumn("payload", …)` rewrite);
@@ -75,8 +75,7 @@ object Quarantine {
     * @return (requeued, stillBad) counts
     */
   def requeue(spark: SparkSession, quarantineDir: String, spoolDir: String,
-              repair: DataFrame => DataFrame,
-              restamp: Boolean = true): (Long, Long) = {
+              repair: DataFrame => DataFrame): (Long, Long) = {
     val spoolCols = ChangeRecord.schema.fieldNames.map(col).toSeq
     val q = read(spark, quarantineDir)
     val repaired = repair(q)
@@ -88,22 +87,22 @@ object Quarantine {
       else stillBad0.withColumn("batch_id", lit(-1L))
 
     val requeued0 = valid.select(spoolCols: _*)
-    val requeued =
-      if (!restamp) requeued0
-      else {
-        val sp = new org.apache.hadoop.fs.Path(spoolDir)
-        val sfs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!sfs.exists(sp)) requeued0
-        else {
-          // one tiny agg over the spool; empty spool → no shift needed
-          val maxTs = spark.read.schema(ChangeRecord.schema).parquet(spoolDir)
-            .agg(max(col("insert_timestamp"))).collect()(0)
-          if (maxTs.isNullAt(0)) requeued0
-          else requeued0.withColumn("insert_timestamp",
-            greatest(col("insert_timestamp"),
-              lit(maxTs.getTimestamp(0)) + expr("INTERVAL 1 SECOND")))
-        }
+    val requeued = {
+      val sp = new org.apache.hadoop.fs.Path(spoolDir)
+      val sfs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // one tiny agg over the spool; empty spool → no shift needed
+      val newest =
+        if (!sfs.exists(sp)) None
+        else Some(spark.read.schema(ChangeRecord.schema).parquet(spoolDir)
+          .agg(max(col("insert_timestamp")), max(col("lsn_start"))).collect()(0))
+      newest.filterNot(n => n.isNullAt(0) || n.isNullAt(1)).fold(requeued0) { n =>
+        requeued0
+          .withColumn("insert_timestamp", greatest(col("insert_timestamp"),
+            lit(n.getTimestamp(0)) + expr("INTERVAL 1 SECOND")))
+          .withColumn("lsn_start", lit(n.getLong(1)) +
+            dense_rank().over(Window.orderBy(col("lsn_start"))))
       }
+    }
     // materialize once: count() and the spool append share the
     // repair/parse/validate pipeline
     val toWrite = requeued.localCheckpoint(eager = true)

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
 
-import graft.model.TableId
+import graft.model.{SchemaRegistry, TableId}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Repartition}
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
@@ -29,12 +29,20 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
   * is invisible, and the retry overwrites it); a crash after it leaves
   * the new cut. A version's sidecars name every older dir it reads —
   * `_bucketmap` for PK buckets, `_parts` for append parts — and
-  * [[vacuum]] keeps every dir a kept version names. Three consumers
-  * share the protocol:
-  *  - the snapshot publishes version 0 of every table and its start
-  *    LSN (`@start_lsn`, [[TableStore.startLsnAt]]) in one write;
-  *  - the CDC engine publishes batch N as version N+1 of each touched
-  *    table; a replay finds its version already committed and skips;
+  * [[vacuum]] keeps every dir a kept version names. Besides the
+  * tables, the manifest holds `@`-keyed progress entries, which
+  * [[manifest]] leaves out: each source database's LSN watermark
+  * (`<db>@lsn`, [[watermarks]]), the schema registry's version
+  * (`@registry`, [[registryPath]]) and each append table's origin
+  * (`<table>@origin`, [[origin]]). Three consumers share the protocol:
+  *  - the snapshot publishes version 0 of every table, the watermark of
+  *    every database it seeds (its consistent point) and the registry
+  *    in one write;
+  *  - the CDC engine publishes each trigger's tables and views one
+  *    version above the committed ones, together with the watermarks
+  *    moved past the LSNs the trigger consumed and, after DDL, the
+  *    registry ([[commitWithDrops]]); a replay drops every row below
+  *    its database's watermark, so a committed trigger replays empty;
   *  - the stream families ([[AppendTable]]: band and winnow indexes,
   *    sketch and rate-monitor registers) publish each micro-batch's
   *    rows as append version `committed + 1` together with the batch
@@ -67,18 +75,49 @@ final class TableStore(spark: SparkSession, val root: String) {
   private val manifestPath = Paths.get(root, "_latest")
   Files.createDirectories(Paths.get(root))
 
-  /** Canonical location for the persisted [[graft.model.SchemaRegistry]]
-    * (saved by the stream engine after DDL batches, loaded on
-    * restart). */
-  def registryPath: java.nio.file.Path = Paths.get(root, "_registry.json")
+  /** The committed [[graft.model.SchemaRegistry]], for
+    * `SchemaRegistry.load` on a driver restart: the file named by the
+    * manifest's `@registry` entry, which the snapshot and every DDL
+    * trigger publish with their data ([[commitWithDrops]]). A store
+    * with no such entry answers `_registry.json`, where older code
+    * saved it. */
+  def registryPath: java.nio.file.Path =
+    entries().get(TableStore.RegistryKey)
+      .fold(Paths.get(root, "_registry.json"))(registryFile)
+
+  private def registryFile(version: Long) =
+    Paths.get(root, s"_registry.v$version.json")
 
   private[stream] def dir(id: TableId, version: Long): String =
     s"$root/${id.qualified}/v=$version"
 
-  /** table → committed version. Throws `IllegalStateException` on a
-    * torn manifest (bad CRC, truncated or surplus entries) — serving a
+  /** table → committed version: the table cut, without the `@`-keyed
+    * progress entries. Throws `IllegalStateException` on a torn
+    * manifest (bad CRC, truncated or surplus entries) — serving a
     * partial cut would silently break the cross-table barrier. */
-  def manifest(): Map[String, Long] = parseManifest()._2
+  def manifest(): Map[String, Long] = entries().filterNot(_._1.contains('@'))
+
+  /** Every manifest entry, progress entries included. */
+  private def entries(): Map[String, Long] = parseManifest()._2
+
+  /** Source database → its LSN watermark, the first LSN the CDC engine
+    * has not applied: the snapshot starts it at its consistent point,
+    * and each trigger's commit moves it past the LSNs the trigger
+    * consumed. Refuses a store whose manifest holds an `@`-led entry
+    * this store does not write — an older store's single start LSN:
+    * such a store has no watermark, and a replay would start at LSN 0. */
+  def watermarks(): Map[String, Long] = {
+    val m = entries()
+    m.keys.find(k => k.startsWith("@") && k != TableStore.RegistryKey).foreach { k =>
+      throw new IllegalStateException(
+        s"store $root holds the manifest entry '$k' and no per-database LSN " +
+          "watermark, so a replay would start at LSN 0; re-seed it: run the " +
+          "snapshot into a new store")
+    }
+    m.collect { case (k, v) if k.endsWith(TableStore.LsnSuffix) =>
+      k.stripSuffix(TableStore.LsnSuffix) -> v
+    }
+  }
 
   /** publish sequence of the current manifest (0 = none yet). */
   def manifestSeq(): Long = parseManifest()._1
@@ -403,7 +442,7 @@ final class TableStore(spark: SparkSession, val root: String) {
   }
 
   /** The last stream batch published into `id` by [[commitBatch]]. */
-  def origin(id: TableId): Option[Long] = manifest().get(originKey(id))
+  def origin(id: TableId): Option[Long] = entries().get(originKey(id))
 
   private def originKey(id: TableId) = s"${id.qualified}@origin"
 
@@ -416,24 +455,9 @@ final class TableStore(spark: SparkSession, val root: String) {
       cur + up(id.qualified, version) + up(originKey(id), batch)
     }
 
-  /** Atomically publish a set of staged versions: the cross-table
-    * commit barrier. Tables not in `updates` keep their version.
-    * `startLsn`, the snapshot's consistent point, is recorded in the
-    * same write ([[TableStore.startLsnAt]] reads it back).
-    *
-    * MONOTONIC: a commit can never lower a table's published version.
-    * Versions only ever advance batch-by-batch, so a lower incoming
-    * version is always a crash-replay re-running an already-published
-    * effect (e.g. CREATE TABLE committing v=0 after a died-mid-batch
-    * attempt already published v=N+1) — regressing would point readers
-    * at stale or empty data.
-    */
-  def commit(updates: Map[TableId, Long], startLsn: Option[Long] = None): Unit = {
-    startLsn.foreach(l => require(l >= 0L, s"start LSN $l is negative"))
-    updateManifest(cur => cur ++ updates.map { case (id, v) =>
-      id.qualified -> math.max(v, cur.getOrElse(id.qualified, Long.MinValue))
-    } ++ startLsn.map(TableStore.StartLsnKey -> _))
-  }
+  /** Publish a set of staged versions: [[commitWithDrops]] with
+    * nothing else. */
+  def commit(updates: Map[TableId, Long]): Unit = commitWithDrops(updates, Set.empty)
 
   /** Remove a table from the committed manifest (DROP TABLE). Data
     * dirs are left for vacuum — readers can no longer resolve them.
@@ -461,16 +485,39 @@ final class TableStore(spark: SparkSession, val root: String) {
     }
   }
 
-  /** Atomic commit with removals — the rename barrier: publish the
-    * batch's staged versions AND retire re-keyed old names in ONE
-    * manifest write, so readers never see both or neither. */
-  def commitWithDrops(updates: Map[TableId, Long], drops: Set[TableId]): Unit =
+  /** Atomically publish a set of staged versions: the cross-table
+    * commit barrier. In ONE manifest write it publishes `updates`,
+    * retires `drops` (re-keyed old names — the rename barrier: readers
+    * never see both or neither), moves each database's LSN watermark
+    * ([[watermarks]]) to `lsns` and, given a `registry`, publishes it
+    * ([[registryPath]]). Tables not in `updates` keep their version.
+    *
+    * MONOTONIC: a commit never lowers a table's published version or a
+    * database's watermark — a lower incoming value is always a
+    * crash-replay re-running an already-published effect (e.g. CREATE
+    * TABLE committing v=0 after a died-mid-batch attempt already
+    * published a later version), and regressing would point readers at
+    * stale or empty data, or replay applied changes again.
+    */
+  def commitWithDrops(updates: Map[TableId, Long], drops: Set[TableId],
+                      lsns: Map[String, Long] = Map.empty,
+                      registry: Option[SchemaRegistry] = None): Unit = {
+    lsns.foreach { case (db, l) => require(l >= 0L, s"$db: LSN watermark $l is negative") }
     updateManifest { cur =>
       val kept = cur -- drops.map(_.qualified)
-      kept ++ updates.map { case (id, v) =>
-        id.qualified -> math.max(v, kept.getOrElse(id.qualified, Long.MinValue))
+      def up(k: String, v: Long) = k -> math.max(v, kept.getOrElse(k, Long.MinValue))
+      // the registry file is staged under the lock: its version is one
+      // above the committed one, and it is visible only once this
+      // write names it
+      val reg = registry.map { r =>
+        val v = cur.get(TableStore.RegistryKey).fold(0L)(_ + 1)
+        r.save(registryFile(v))
+        TableStore.RegistryKey -> v
       }
+      kept ++ updates.map { case (id, v) => up(id.qualified, v) } ++
+        lsns.map { case (db, l) => up(db + TableStore.LsnSuffix, l) } ++ reg
     }
+  }
 
   /** Delete version directories below the committed one, keeping the
     * committed version, `keepHistory` older ones for in-flight
@@ -564,14 +611,11 @@ object TableStore {
       Paths.get(root).toAbsolutePath.normalize.toString,
       _ => new Object)
 
-  /** Manifest entry of the snapshot's start LSN (no table name holds
-    * an `@`). */
-  private val StartLsnKey = "@start_lsn"
-
-  /** The start LSN committed with the snapshot cut of the store at
-    * `root`, if any. */
-  def startLsnAt(root: String): Option[Long] =
-    readManifest(Paths.get(root, "_latest"))._2.get(StartLsnKey)
+  /** Manifest keys of the progress entries (no table name holds an
+    * `@`): a database's LSN watermark is `<db>@lsn`, the registry's
+    * version `@registry`. */
+  private val LsnSuffix = "@lsn"
+  private val RegistryKey = "@registry"
 
   private def readManifest(p: java.nio.file.Path): (Long, Map[String, Long]) =
     if (!Files.exists(p)) (0L, Map.empty)

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.model.{SchemaRegistry, TableId, TableMeta}
 import graft.stream.{CdcStreamEngine, TableStore}
 import org.apache.spark.sql.{DataFrame, Row}
@@ -40,9 +42,28 @@ class CdcStreamSpec extends SparkSpec {
     store.stage(tid, Seq(
       (1L, "Alice", 10.0), (2L, "Bob", 20.0), (3L, "Carol", 30.0))
       .toDF("c_custkey", "c_name", "c_acctbal"), 0L)
-    store.commit(Map(tid -> 0L))
+    // published with its registry, as a snapshot publishes it
+    store.commitWithDrops(Map(tid -> 0L), Set.empty, registry = Some(registry))
     (new CdcStreamEngine(spark, registry, store, ddl), store, registry, spool, ckpt)
   }
+
+  /** [[CdcStreamEngine.withDdl]]'s wiring, plus an archive dir. */
+  private def ddlEngine(registry: SchemaRegistry, store: TableStore,
+                        archive: String): CdcStreamEngine = {
+    var engine: CdcStreamEngine = null
+    val interp = new graft.ddl.DdlInterpreter(spark, registry, store,
+      onRenameData = (id, from, to) => engine.renameTableData(id, from, to),
+      onTruncateData = id => engine.truncateTableData(id),
+      onRenameTable = (o, n) => engine.renameTableEntry(o, n))
+    engine = new CdcStreamEngine(spark, registry, store, interp.execute,
+      archiveDir = Some(archive))
+    engine
+  }
+
+  private def ddl(lsn: Long, sql: String): (Long, String) =
+    (lsn, s"""{"kind":"insert","schema":"public","table":"sql_ddl_statements",
+      "columnnames":["current_query","search_path","command_tags"],
+      "columnvalues":["$sql","\\"$$user\\", public","{\\"ALTER TABLE\\"}"]}""")
 
   private def run(engine: CdcStreamEngine, spool: String, ckpt: String): Unit = {
     val q = engine.start(spool, ckpt)
@@ -87,39 +108,117 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("failpoint kills at both crash points; restart recovers the exact state") {
-    // two spool files -> two batches; kill at batch 1, restart, and
-    // the final state must equal the uninterrupted run's. pre_commit
-    // leaves a staged-but-unreferenced version (replay re-stages and
-    // commits); post_commit leaves the manifest ahead of the
-    // checkpoint (replay takes the versioned-publish skip).
-    Seq("pre_commit", "post_commit").foreach { point =>
-      val (engine, store, registry, spool, ckpt) = freshEngine()
-      spoolBatch(
-        (1L, """{"kind":"update","schema":"public","table":"customer",
-          "columnnames":["c_custkey","c_acctbal"],"columnvalues":[1,11.5],
-          "oldkeys":{"keynames":["c_custkey"],"keyvalues":[1]}}"""))
-        .coalesce(1).write.mode("append").parquet(spool)
-      run(engine, spool, ckpt)
-      spoolBatch(
-        (2L, """{"kind":"insert","schema":"public","table":"customer",
+    // three spool files: file 1 is batch 0, files 2 and 3 are batch 1,
+    // killed at both points and restarted by a NEW engine that loads
+    // its registry from the store, as a restarted driver does. File 3
+    // carries ADD COLUMN and RENAME TABLE. pre_commit leaves staged
+    // versions and an archive partition but no commit (the replay
+    // re-stages, re-archives and commits); post_commit leaves the
+    // manifest, watermarks and registry ahead of the checkpoint (the
+    // watermarks empty the replay). Both must reach the uninterrupted
+    // run's rows and schema, with every spool row archived once.
+    val files = Seq(
+      Seq((1L, """{"kind":"update","schema":"public","table":"customer",
+        "columnnames":["c_custkey","c_acctbal"],"columnvalues":[1,11.5],
+        "oldkeys":{"keynames":["c_custkey"],"keyvalues":[1]}}""")),
+      Seq((2L, """{"kind":"insert","schema":"public","table":"customer",
           "columnnames":["c_custkey","c_name","c_acctbal"],
           "columnvalues":[9,"Zed",90.0]}"""),
         (3L, """{"kind":"delete","schema":"public","table":"customer",
-          "oldkeys":{"keynames":["c_custkey"],"keyvalues":[2]}}"""))
-        .coalesce(1).write.mode("append").parquet(spool)
-      engine.failpoint = Some((1L, point))
-      val q = engine.start(spool, ckpt)
+          "oldkeys":{"keynames":["c_custkey"],"keyvalues":[2]}}""")),
+      Seq(ddl(4L, "ALTER TABLE customer ADD COLUMN c_note text"),
+        (5L, """{"kind":"update","schema":"public","table":"customer",
+          "columnnames":["c_custkey","c_note"],"columnvalues":[1,"pre"],
+          "oldkeys":{"keynames":["c_custkey"],"keyvalues":[1]}}"""),
+        ddl(6L, "ALTER TABLE customer RENAME TO clients"),
+        (7L, """{"kind":"update","schema":"public","table":"clients",
+          "columnnames":["c_custkey","c_note"],"columnvalues":[3,"post"],
+          "oldkeys":{"keynames":["c_custkey"],"keyvalues":[3]}}""")))
+    val clients = TableId("srcdb", "public", "clients")
+    def write(spool: String, i: Int): Unit =
+      spoolBatch(files(i): _*).coalesce(1).write.mode("append").parquet(spool)
+    def outcome(store: TableStore) = {
+      val reg = SchemaRegistry.load(store.registryPath)
+      (reg.ids, reg(clients).schema, store.manifest().keySet, tableRows(store, clients))
+    }
+
+    val want = {
+      val (_, store, registry, spool, ckpt) = freshEngine()
+      val archive = Files.createTempDirectory("graft-arch-").toString
+      write(spool, 0); run(ddlEngine(registry, store, archive), spool, ckpt)
+      write(spool, 1); write(spool, 2); run(ddlEngine(registry, store, archive), spool, ckpt)
+      outcome(store)
+    }
+    assert(want._1 == Set(clients) && want._2.fieldNames.last == "c_note")
+    assert(want._4 == Seq(Row(1L, "Alice", 11.5, "pre"), Row(3L, "Carol", 30.0, "post"),
+      Row(9L, "Zed", 90.0, null)))
+
+    Seq("pre_commit", "post_commit").foreach { point =>
+      val (_, store, registry, spool, ckpt) = freshEngine()
+      val archive = Files.createTempDirectory("graft-arch-").toString
+      val lsns = scala.collection.mutable.Buffer(store.watermarks())
+      write(spool, 0)
+      run(ddlEngine(registry, store, archive), spool, ckpt)
+      lsns += store.watermarks()
+      write(spool, 1); write(spool, 2)
+      val killed = ddlEngine(SchemaRegistry.load(store.registryPath), store, archive)
+      killed.failpoint = Some((1L, point))
+      val q = killed.start(spool, ckpt)
       val died = try { q.awaitTermination(); false } catch {
         case e: org.apache.spark.sql.streaming.StreamingQueryException =>
           assert(e.toString.contains("failpoint"), e.toString); true
       }
       assert(died, s"$point failpoint never fired")
-      // driver restart: a FRESH engine on the same checkpoint + store
-      run(new CdcStreamEngine(spark, registry, store), spool, ckpt)
-      assert(state(store) == Seq(
-        Row(1L, "Alice", 11.5), Row(3L, "Carol", 30.0), Row(9L, "Zed", 90.0)),
-        s"$point: recovered state diverged")
+      lsns += store.watermarks()
+      // driver restart: a FRESH engine and registry on the same
+      // checkpoint + store
+      run(ddlEngine(SchemaRegistry.load(store.registryPath), store, archive), spool, ckpt)
+      lsns += store.watermarks()
+      assert(outcome(store) == want, s"$point: recovered state diverged")
+      assert(lsns.zip(lsns.tail).forall { case (a, b) =>
+        a.forall { case (db, l) => b.get(db).exists(_ >= l) } }, s"$point: $lsns")
+      assert(lsns.last == Map("srcdb" -> 8L), s"$point: $lsns")
+      val archived = spark.read.parquet(archive).select("lsn_start").as[Long].collect().sorted
+      assert(archived.toSeq == (1L to 7L), s"$point: archive $archived")
     }
+  }
+
+  test("a new checkpoint over an advanced store applies only the new file") {
+    // the store's watermark, not the checkpoint, says what is applied:
+    // a new checkpoint re-reads every file as its batch 0, the two
+    // applied files drop out (a strict engine would fail on their
+    // re-applied delete), and the new file publishes one version up
+    val (engine, store, registry, spool, ckpt) = freshEngine()
+    spoolBatch((1L, """{"kind":"delete","schema":"public","table":"customer",
+        "oldkeys":{"keynames":["c_custkey"],"keyvalues":[2]}}"""))
+      .coalesce(1).write.mode("append").parquet(spool)
+    run(engine, spool, ckpt)
+    spoolBatch((2L, """{"kind":"insert","schema":"public","table":"customer",
+        "columnnames":["c_custkey","c_name","c_acctbal"],"columnvalues":[9,"Zed",90.0]}"""))
+      .coalesce(1).write.mode("append").parquet(spool)
+    run(engine, spool, ckpt)
+    assert(store.manifest()(tid.qualified) == 2L)
+    def committedFiles = {
+      val s = Files.walk(java.nio.file.Paths.get(store.root, tid.qualified))
+      try s.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => f.toString -> Files.getLastModifiedTime(f)).toMap
+      finally s.close()
+    }
+    val before = committedFiles
+
+    spoolBatch((3L, """{"kind":"update","schema":"public","table":"customer",
+        "columnnames":["c_custkey","c_acctbal"],"columnvalues":[9,91.0],
+        "oldkeys":{"keynames":["c_custkey"],"keyvalues":[9]}}"""))
+      .coalesce(1).write.mode("append").parquet(spool)
+    run(new CdcStreamEngine(spark, registry, store, strict = true), spool,
+      Files.createTempDirectory("graft-ckpt2-").toString)
+    assert(state(store) == Seq(
+      Row(1L, "Alice", 10.0), Row(3L, "Carol", 30.0), Row(9L, "Zed", 91.0)))
+    assert(store.manifest()(tid.qualified) == 3L)
+    assert(store.watermarks() == Map("srcdb" -> 4L))
+    val after = committedFiles
+    assert(before.forall { case (f, t) => after.get(f).contains(t) },
+      "a committed version dir was rewritten")
   }
 
   test("DDL records hit the handler in order, before DML merges") {
@@ -360,6 +459,7 @@ class CdcStreamSpec extends SparkSpec {
 
     val maxBefore = spark.read.parquet(spool)
       .agg(max(col("insert_timestamp"))).collect()(0).getTimestamp(0)
+    val maxLsnBefore = spark.read.parquet(spool).agg(max(col("lsn_start"))).head().getLong(0)
     val (requeued, _) = graft.stream.Quarantine.requeue(
       spark, qdir, spool,
       q => q.withColumn("payload",
@@ -370,6 +470,11 @@ class CdcStreamSpec extends SparkSpec {
       .filter(col("payload").contains("11.0"))
       .select("insert_timestamp").collect()(0).getTimestamp(0)
     assert(reTs.after(maxBefore), s"$reTs not after $maxBefore")
+    // and its LSN past the spool's highest: its old one is below the
+    // watermark the quarantining trigger moved
+    val reLsn = spark.read.parquet(spool).filter(col("payload").contains("11.0"))
+      .select("lsn_start").head().getLong(0)
+    assert(reLsn == maxLsnBefore + 1, s"requeued at LSN $reLsn, spool max $maxLsnBefore")
     // and the replay applies it as the NEWEST statement about the key
     run(engine, spool, ckpt)
     assert(state(store).collect { case Row(1L, _, b) => b } == Seq(11.0))
@@ -538,14 +643,13 @@ class CdcStreamSpec extends SparkSpec {
     assert(store.manifestSeq() == seq0 + 1, "the batch must commit in one manifest write")
     assert(Seq(tid, ordId, liId).map(t => store.manifest()(t.qualified)) == Seq(1L, 1L, 1L))
 
-    // reference: each table's changes as a batch of its own, in turn
-    val (refStore, refRegistry) = threeTables()
-    val refEngine = new CdcStreamEngine(spark, refRegistry, refStore)
-    Seq("customer", "orders", "lineitem").zipWithIndex.foreach { case (t, i) =>
-      refEngine.processBatch(spoolBatch(
-        threeTableChanges.filter(_._2.contains(s"\"table\":\"$t\"")): _*), i.toLong)
-    }
-    Seq(tid, ordId, liId).foreach { t =>
+    // reference: each table's changes as a batch of its own, in a
+    // store of its own (in one store, a later table's changes would
+    // sit below the LSN watermark an earlier batch moved)
+    Seq(tid -> "customer", ordId -> "orders", liId -> "lineitem").foreach { case (t, name) =>
+      val (refStore, refRegistry) = threeTables()
+      new CdcStreamEngine(spark, refRegistry, refStore).processBatch(spoolBatch(
+        threeTableChanges.filter(_._2.contains(s"\"table\":\"$name\"")): _*), 0L)
       assert(tableRows(store, t) == tableRows(refStore, t), t.qualified)
     }
     assert(tableRows(store, tid) == Seq(Row(1L, "Alicia", 77.0), Row(3L, "Carol", 30.0)))

@@ -26,7 +26,7 @@ class SnapshotSpec extends SparkSpec {
     // store readable through the manifest (committed cut)
     assert(store.read(TableId("srcdb", "public", "region")).count() == 5)
     // LSN pin round-trips through the %X/%X rendering
-    assert(Snapshot.readStartLsn(root).contains(0xA0000000BL))
+    assert(store.watermarks() == Map("srcdb" -> 0xA0000000BL))
   }
 
   test("a crash right after the snapshot commit keeps the start LSN: one manifest write") {
@@ -45,7 +45,7 @@ class SnapshotSpec extends SparkSpec {
     assert(e.getMessage.contains("failpoint"), e.getMessage)
     // the snapshot is published, and its LSN with it
     assert(store.read(rid).count() == 5)
-    assert(Snapshot.readStartLsn(root).contains(0xC00000001L))
+    assert(store.watermarks() == Map("srcdb" -> 0xC00000001L))
   }
 
   test("basebackup validatePk refuses a non-key-unique table, before staging") {
@@ -170,8 +170,7 @@ class SnapshotSpec extends SparkSpec {
       .withColumn("source_slotname", lit("slot1"))
       .coalesce(1).write.mode("append").parquet(spool)
 
-    val engine = new graft.stream.CdcStreamEngine(spark, registry, store,
-      startLsn = Snapshot.readStartLsn(root))
+    val engine = new graft.stream.CdcStreamEngine(spark, registry, store)
     val q = engine.start(spool, ckpt)
     q.awaitTermination()
     assert(q.exception.isEmpty, q.exception.map(_.toString).getOrElse(""))
@@ -180,6 +179,93 @@ class SnapshotSpec extends SparkSpec {
       .select("r_regionkey", "r_name").as[(Long, String)].collect().toMap
     assert(names(1L) == "FRESH", s"post-cut event did not apply: $names")
     assert(names(0L) != "STALE", s"pre-cut event replayed over the snapshot: $names")
+  }
+
+  /** A small region-shaped parquet source (r_regionkey 0..4). */
+  private def regionSource(): String = {
+    val src = Files.createTempDirectory("snap-src-").resolve("region.parquet").toString
+    (0 until 5).map(i => (i.toLong, s"r$i")).toDF("r_regionkey", "r_name").write.parquet(src)
+    src
+  }
+
+  test("basebackup publishes the registry with its cut: a restarted driver loads every table") {
+    val root = Files.createTempDirectory("snap-reg-").toString
+    val store = new TableStore(spark, root)
+    val specs = Seq("region", "nation").map(t =>
+      Snapshot.TableSpec(TableId("srcdb", "public", t), Seq("r_regionkey"), regionSource()))
+    val registry = new SchemaRegistry
+    Snapshot.basebackup(spark, specs, registry, store, root, 7L, njobs = 2)
+    val loaded = SchemaRegistry.load(new TableStore(spark, root).registryPath)
+    assert(loaded.ids == specs.map(_.id).toSet)
+    specs.foreach(s => assert(loaded(s.id) == registry(s.id), s.id.qualified))
+  }
+
+  test("per-database handoff: each database resumes at its own snapshot's LSN") {
+    // two source databases, two WALs: db1 snapshotted at LSN 100, db2
+    // at 500. Of db1's changes at 50 and 200 and db2's at 400 and 600,
+    // only 200 and 600 are past their database's cut
+    val root = Files.createTempDirectory("snap-perdb-").toString
+    val spool = Files.createTempDirectory("snap-perdb-spool-").toString
+    val ckpt = Files.createTempDirectory("snap-perdb-ckpt-").toString
+    val store = new TableStore(spark, root)
+    val registry = new SchemaRegistry
+    Seq("db1" -> 100L, "db2" -> 500L).foreach { case (db, lsn) =>
+      Snapshot.basebackup(spark, Seq(Snapshot.TableSpec(TableId(db, "public", "region"),
+        Seq("r_regionkey"), regionSource())), registry, store, root, lsn, njobs = 1)
+    }
+    assert(store.watermarks() == Map("db1" -> 100L, "db2" -> 500L))
+    def upd(db: String, lsn: Long, key: Int) = (db, lsn,
+      s"""{"kind":"update","schema":"public","table":"region",
+        "columnnames":["r_regionkey","r_name"],"columnvalues":[$key,"at $lsn"],
+        "oldkeys":{"keynames":["r_regionkey"],"keyvalues":[$key]}}""")
+    Seq(upd("db1", 50L, 0), upd("db1", 200L, 1), upd("db2", 400L, 0), upd("db2", 600L, 1))
+      .toDF("database", "lsn_start", "payload")
+      .withColumn("insert_timestamp", timestamp_seconds(lit(1700000000L) + col("lsn_start")))
+      .withColumn("xid", col("lsn_start"))
+      .withColumn("xid_timestamp", col("insert_timestamp"))
+      .withColumn("source_slotname", lit("slot1"))
+      .coalesce(1).write.mode("append").parquet(spool)
+    val q = new graft.stream.CdcStreamEngine(spark,
+      SchemaRegistry.load(store.registryPath), store).start(spool, ckpt)
+    q.awaitTermination()
+    assert(q.exception.isEmpty, q.exception.map(_.toString).getOrElse(""))
+    val applied = Seq("db1", "db2").flatMap { db =>
+      store.read(TableId(db, "public", "region")).filter(col("r_name").startsWith("at "))
+        .select("r_name").as[String].collect().toSeq
+    }
+    assert(applied.sorted == Seq("at 200", "at 600"))
+    assert(store.watermarks() == Map("db1" -> 201L, "db2" -> 601L))
+  }
+
+  test("a store from before per-database watermarks is refused, naming the store") {
+    // its manifest holds the single start LSN and no watermark: a
+    // replay would start at LSN 0 and re-apply what the snapshot holds
+    val root = Files.createTempDirectory("snap-old-").toString
+    val rid = TableId("srcdb", "public", "region")
+    val store = new TableStore(spark, root)
+    store.stage(rid, Seq((0L, "r0")).toDF("r_regionkey", "r_name"), 0L)
+    val body = s"@start_lsn=100\n${rid.qualified}=0\n"
+    val crc = new java.util.zip.CRC32
+    crc.update(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    Files.writeString(java.nio.file.Paths.get(root, "_latest"),
+      s"#graft-manifest seq=1 entries=2 crc=${java.lang.Long.toHexString(crc.getValue)}\n$body")
+    assert(store.manifest() == Map(rid.qualified -> 0L))
+    val registry = new SchemaRegistry
+    registry.register(graft.model.TableMeta(rid, store.read(rid).schema, Seq("r_regionkey")))
+    val batch = Seq((1L, """{"kind":"delete","schema":"public","table":"region",
+        "oldkeys":{"keynames":["r_regionkey"],"keyvalues":[0]}}"""))
+      .toDF("lsn_start", "payload")
+      .withColumn("insert_timestamp", timestamp_seconds(lit(1700000000L)))
+      .withColumn("database", lit("srcdb"))
+      .withColumn("xid", col("lsn_start"))
+      .withColumn("xid_timestamp", col("insert_timestamp"))
+      .withColumn("source_slotname", lit("slot1"))
+    val e = intercept[IllegalStateException] {
+      new graft.stream.CdcStreamEngine(spark, registry, store).processBatch(batch, 0L)
+    }
+    assert(e.getMessage.contains(root) && e.getMessage.contains("@start_lsn") &&
+      e.getMessage.contains("re-seed"), e.getMessage)
+    assert(store.read(rid).count() == 1L)
   }
 
   test("JDBC basebackup: partitioned parallel copy from a live database (S5)") {
@@ -233,7 +319,7 @@ class SnapshotSpec extends SparkSpec {
       assert(registry(cid).pkCols == Seq("c_custkey"))
       // the LSN pin hands off to the stream engine exactly like the
       // parquet path
-      assert(Snapshot.readStartLsn(root).contains(0xB0000000FL))
+      assert(store.watermarks() == Map("srcdb" -> 0xB0000000FL))
     } finally conn.close()
   }
 }
