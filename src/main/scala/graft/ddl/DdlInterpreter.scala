@@ -40,9 +40,9 @@ final class DdlInterpreter(
       * version (monotonic, never regressing to v=0); the stream
       * engine overrides to truncate its in-flight working chain, so
       * the truncate publishes in the batch's one commit with its rows
-      * and LSN watermarks — a mid-batch store commit would be
+      * and spool positions — a mid-batch store commit would be
       * overwritten by the chained result, and a crash after it would
-      * leave the truncate published under watermarks that replay the
+      * leave the truncate published under positions that replay the
       * whole batch over it. */
     onTruncateData: TableId => Unit = null,
     /** Notifies the caller that a table was renamed (ALTER TABLE …

@@ -37,8 +37,8 @@ object Snapshot {
       bounds: Option[(Long, Long)] = None)
 
   /** Copy every table of one pinned snapshot into the store as
-    * version 0 and start the LSN watermark of every database it seeds
-    * at `startLsn`, the consistent point the stream resumes from
+    * version 0 and set the handoff LSN of every database it seeds
+    * to `startLsn`, the consistent point the stream resumes from
     * (`CREATE_REPLICATION_SLOT … consistent_point`,
     * `connemara_python/connemara/schema_dump.py:31-37`). `registry`
     * is the store's: it is published with the snapshot.
@@ -75,7 +75,7 @@ object Snapshot {
     * PostgreSQL the `CREATE_REPLICATION_SLOT … consistent_point` taken
     * while the snapshot transaction is held; generic JDBC has no
     * portable equivalent, so the caller supplies it. It becomes each
-    * seeded database's LSN watermark, as on the parquet path: the
+    * seeded database's handoff LSN, as on the parquet path: the
     * stream engine drops every change below it.
     * `connectionProps` carries driver/user/password. */
   def basebackupJdbc(
@@ -227,11 +227,11 @@ object Snapshot {
       Await.result(Future.sequence(fs), Duration.Inf)
     }
     metas.foreach(registry.register)
-    // all tables, their databases' watermarks and the registry commit
+    // all tables, their databases' handoff LSNs and the registry commit
     // together: one consistent snapshot cut, and no published snapshot
     // without its LSN or its schemas
     store.commitWithDrops(entries.map(_._1 -> 0L).toMap, Set.empty,
-      lsns = entries.map(_._1.database -> startLsn).toMap, registry = Some(registry))
+      handoffs = entries.map(_._1.database -> startLsn).toMap, registry = Some(registry))
     maybeFail(storeRoot, "post_commit")
     Report(reports, startLsn)
   }

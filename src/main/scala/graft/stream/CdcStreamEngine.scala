@@ -18,15 +18,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    key, [[ApplyEngine.collapse]] sorts by the same clock.
   *  - 30 s event-time commit cadence (A2) ≈ micro-batch boundary; the
   *    manifest is the all-tables-commit-together barrier (A3).
-  *  - exactly-once (A6): each source database's LSN watermark — the
-  *    first LSN not yet applied, the replication origin's analog — is
-  *    committed in the same manifest write as the data it covers
-  *    ([[TableStore.watermarks]]), and every trigger drops the rows
-  *    below it before the parse. A replayed committed trigger is then
-  *    empty, whatever the checkpoint says; batch ids record no
-  *    progress. This assumes a source transaction never spans spool
-  *    files (the reference writes one COPY per transaction, K1): the
-  *    rows of one LSN are consumed by one trigger.
+  *  - exactly-once (A6): each source database's replay progress —
+  *    the replication origin's analog — is committed in the same
+  *    manifest write as the data it covers ([[TableStore.progress]]):
+  *    the spool position `(insert_timestamp, lsn_start)` of the last
+  *    row consumed, and the snapshot's handoff LSN. Every trigger drops
+  *    the rows at or before the position and below the handoff LSN
+  *    before the parse. A replayed committed trigger is then empty,
+  *    whatever the checkpoint says; batch ids record no progress. The
+  *    position is spool order, not LSN order: a transaction's
+  *    `lsn_start` is where it began, and concurrent transactions
+  *    spool in commit order. This assumes each database's rows reach
+  *    the spool in position order, a source transaction never
+  *    spanning spool files — one daemon per database, one COPY per
+  *    transaction, each stamped after the last (K1).
   *  - DDL barrier (A8): DDL records are routed to `ddlHandler`
   *    BEFORE the batch's DML merge, then the registry-backed plans
   *    rebuild — the `DISCARD`/cache-invalidation analog.
@@ -75,8 +80,8 @@ final class CdcStreamEngine(
     * batch `id`, either `pre_commit` (versions staged and the archive
     * written, manifest NOT advanced — the torn-stage crash; replay
     * re-stages, overwrites the archive partition and commits) or
-    * `post_commit` (manifest and watermarks advanced, checkpoint NOT —
-    * the double-apply window; the watermarks empty the replay).
+    * `post_commit` (manifest and progress advanced, checkpoint NOT —
+    * the double-apply window; the progress empties the replay).
     * Parquet staging is itself rename-published, so "mid-write" is
     * not an observable third state — a killed write leaves no visible
     * partial file, only staged-vs-committed. Never set in production.
@@ -93,7 +98,7 @@ final class CdcStreamEngine(
     * the in-flight working chain, loading the committed version into
     * the chain first if the table wasn't touched yet this batch. No
     * mid-batch store commit: the rename publishes with the batch's
-    * rows and watermarks, so a crash before the batch's commit leaves
+    * rows and progress, so a crash before the batch's commit leaves
     * neither. */
   def renameTableData(id: TableId, from: String, to: String): Unit =
     working.get(id) match {
@@ -130,7 +135,7 @@ final class CdcStreamEngine(
     * chain at its stream position — pre-truncate DML vanishes with
     * the old rows, post-truncate DML applies onto the empty table;
     * everything commits once with the batch, so a replay of a
-    * committed batch (emptied by the watermarks) never runs it. */
+    * committed batch (emptied by the progress) never runs it. */
   def truncateTableData(id: TableId): Unit =
     registry.get(id).foreach { meta =>
       if (working.contains(id) || store.exists(id))
@@ -204,20 +209,27 @@ final class CdcStreamEngine(
       if (slotByDb.isEmpty) batch0
       else batch0.filter(graft.functions.Routing.dbSlotRestriction(
         slotByDb, col("database"), col("source_slotname")))
-    // The one replay-skip rule: a row applies only at or above its
-    // database's LSN watermark. Rows below it are already in the store
-    // — applied by a committed trigger, or inside the snapshot image,
-    // whose consistent point starts the watermark (the reference starts
-    // replication AT the slot's consistent_point). A database with no
-    // watermark yet passes whole. The watermarks enter the plan as one
-    // map literal, which generated code references instead of
+    // The one replay-skip rule: a row applies only past its database's
+    // progress — after the spool position of the last row a committed
+    // trigger consumed, and at or above the snapshot's handoff LSN
+    // (rows below it are inside the snapshot image; the reference
+    // starts replication AT the slot's consistent_point). A database
+    // with no progress yet passes whole. The progress enters the plan
+    // as one map literal, which generated code references instead of
     // inlining: the filter's code, unlike its values, is the same
     // every trigger, so it compiles once.
-    val watermarks = store.watermarks()
+    val progress = store.progress()
     val batch =
-      if (watermarks.isEmpty) batchSlotted
-      else batchSlotted.filter(col("lsn_start") >= coalesce(
-        try_element_at(typedLit(watermarks), col("database")), lit(Long.MinValue)))
+      if (progress.isEmpty) batchSlotted
+      else {
+        val none = Long.MinValue
+        val p = try_element_at(typedLit(progress.map { case (db, pr) =>
+          db -> (pr.handoffLsn.getOrElse(none), pr.consumed.getOrElse((none, none)))
+        }), col("database"))
+        val (ts, at) = (CdcStreamEngine.spoolTs, p("_2"))
+        batchSlotted.filter(p.isNull || (col("lsn_start") >= p("_1") &&
+          (ts > at("_1") || (ts === at("_1") && col("lsn_start") > at("_2")))))
+      }
     val parsedAll = Wal2Json.parse(batch).cache()
     // the batch's table pool, started on first use
     var pool: java.util.concurrent.ExecutorService = null
@@ -260,7 +272,7 @@ final class CdcStreamEngine(
       // quarantine count, the DDL collect, and the first segment's
       // touched-tables collect): per source database, the malformed
       // count, the ordered DDL events, the touched-table set, the
-      // payload bytes and the highest LSN consumed all return from a
+      // payload bytes and the last spool position consumed return from a
       // single aggregate over the cached parse. Per-trigger driver
       // round-trips are the replay loop's fixed cost — at the 30 s
       // reference cadence each one saved is latency on every batch
@@ -278,14 +290,17 @@ final class CdcStreamEngine(
           struct(col("database"), col("p.schema"), col("p.table"))))
           .as("__touched"),
         CdcStreamEngine.payloadBytes.as("__bytes"),
-        max(col("lsn_start")).as("__lsn")).collect().toSeq
+        max(when(col("lsn_start").isNotNull,
+          struct(CdcStreamEngine.spoolTs, col("lsn_start")))).as("__pos")).collect().toSeq
       if (pre.isEmpty) return
       val nBad = pre.map(_.getLong(1)).sum
       val shape = CdcStreamEngine.Shape(spark, pre.map(_.getLong(4)).sum)
-      // the watermarks this trigger's commit moves: past every LSN it
-      // consumed, applied or quarantined
+      // the spool positions this trigger's commit moves to: the last
+      // row it consumed per database, applied or quarantined
       val consumed = pre.collect {
-        case r if !r.isNullAt(0) && !r.isNullAt(5) => r.getString(0) -> (r.getLong(5) + 1)
+        case r if !r.isNullAt(0) && !r.isNullAt(5) =>
+          val pos = r.getStruct(5)
+          r.getString(0) -> (pos.getLong(0), pos.getLong(1))
       }.toMap
 
       // Malformed payloads: fail fast in strict mode (A9 — the
@@ -454,12 +469,14 @@ final class CdcStreamEngine(
           // or behind the table it summarizes
           viewWorking.toSeq
         // every entry stages at one version, one above the highest the
-        // manifest holds for any of them (read now: a CREATE TABLE in
-        // this batch committed its v=0 mid-batch), so no committed dir
-        // is rewritten and one trigger's entries share a version
+        // manifest holds for any of them or for the names they were
+        // renamed from (read now: a CREATE TABLE in this batch committed
+        // its v=0 mid-batch), so no committed dir is rewritten — a name
+        // reused by a rename back sits above its old incarnation's
+        // versions — and one trigger's entries share a version
         val now = store.manifest()
-        val targetVersion =
-          entries.flatMap { case (tid, _) => now.get(tid.qualified) }.foldLeft(-1L)(math.max) + 1
+        val targetVersion = (entries.map(_._1) ++ pendingRenames.map(_._1))
+          .flatMap(tid => now.get(tid.qualified)).foldLeft(-1L)(math.max) + 1
         // delta entries write only their changed buckets; bucketed
         // tables touched any other way (DDL batch, hooks) keep the
         // bucketed layout via a full bucket rewrite. A one-partition
@@ -499,15 +516,15 @@ final class CdcStreamEngine(
       }
 
       // A2/A3: one atomic cross-table commit per batch, carrying the
-      // watermarks and, after DDL, the registry (A8: the checkpoint
+      // spool positions and, after DDL, the registry (A8: the checkpoint
       // persists only source offsets); renamed-away old names retire
       // in the SAME manifest write (the rename barrier — no crash
       // window between re-key and publish)
       val dropped = pendingRenames.map(_._1)
         .filterNot(o => updates.contains(o)).toSet
       maybeFail(batchId, "pre_commit")
-      store.commitWithDrops(updates, dropped, consumed,
-        if (ddls.nonEmpty) Some(registry) else None)
+      store.commitWithDrops(updates, dropped, consumed = consumed,
+        registry = if (ddls.nonEmpty) Some(registry) else None)
       maybeFail(batchId, "post_commit")
     } finally {
       if (pool != null) pool.shutdown()
@@ -615,6 +632,11 @@ object CdcStreamEngine {
   /** A batch's payload bytes, as the preamble sums them: the figure a
     * [[Shape]] is chosen from. */
   def payloadBytes: Column = coalesce(sum(octet_length(col("payload"))), lit(0L))
+
+  /** A spool row's `insert_timestamp` in µs, the first half of its
+    * spool position ([[TableStore.Progress]]); a row without one sorts
+    * first. */
+  def spoolTs: Column = coalesce(unix_micros(col("insert_timestamp")), lit(Long.MinValue))
 
   object Shape {
     def apply(spark: SparkSession, payloadBytes: Long): Shape = {

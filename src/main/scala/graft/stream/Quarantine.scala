@@ -3,7 +3,6 @@ package graft.stream
 import graft.decode.Wal2Json
 import graft.model.ChangeRecord
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -56,16 +55,16 @@ object Quarantine {
     * the quarantine to hold only the still-bad rows — the
     * delete-on-success the fixer performs after a manual apply.
     *
-    * Requeued rows re-enter the stream as NEW events: their
-    * `insert_timestamp` moves past the spool's newest and their
-    * `lsn_start` to just above the spool's highest, in their own LSN
-    * order. A repair is the operator's newest statement about the row
-    * — an old event applied late would overwrite newer changes to the
-    * key — and the trigger that quarantined it moved its database's
-    * LSN watermark ([[TableStore.watermarks]]) past its old LSN. So the
-    * spool must still hold the newest consumed event, and a requeue
-    * belongs between source deliveries: an event emitted but not yet
-    * spooled may carry an LSN the requeue hands out.
+    * Requeued rows re-enter the stream as NEW events: each keeps its
+    * `lsn_start`, and its `insert_timestamp` moves 1 µs past the
+    * newest spool row of its own database. A repair is the operator's
+    * newest statement about the row — an old event applied late would
+    * overwrite newer changes to the key — and the trigger that
+    * quarantined it moved its database's spool position
+    * ([[TableStore.progress]]) past its old one. The move is per
+    * database because each database's position is its own: a
+    * timestamp taken from another database's rows could jump this one
+    * past rows its source has yet to spool.
     *
     * @param repair spool-shaped rows in, spool-shaped rows out
     *               (typically a `withColumn("payload", …)` rewrite);
@@ -90,18 +89,16 @@ object Quarantine {
     val requeued = {
       val sp = new org.apache.hadoop.fs.Path(spoolDir)
       val sfs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // one tiny agg over the spool; empty spool → no shift needed
+      // one tiny agg over the spool: each database's newest row, in µs
       val newest =
-        if (!sfs.exists(sp)) None
-        else Some(spark.read.schema(ChangeRecord.schema).parquet(spoolDir)
-          .agg(max(col("insert_timestamp")), max(col("lsn_start"))).collect()(0))
-      newest.filterNot(n => n.isNullAt(0) || n.isNullAt(1)).fold(requeued0) { n =>
-        requeued0
-          .withColumn("insert_timestamp", greatest(col("insert_timestamp"),
-            lit(n.getTimestamp(0)) + expr("INTERVAL 1 SECOND")))
-          .withColumn("lsn_start", lit(n.getLong(1)) +
-            dense_rank().over(Window.orderBy(col("lsn_start"))))
-      }
+        if (!sfs.exists(sp)) Map.empty[String, Long]
+        else spark.read.schema(ChangeRecord.schema).parquet(spoolDir)
+          .groupBy(col("database")).agg(max(unix_micros(col("insert_timestamp"))))
+          .collect().collect { case r if !r.isNullAt(0) && !r.isNullAt(1) =>
+            r.getString(0) -> r.getLong(1)
+          }.toMap
+      requeued0.withColumn("insert_timestamp", greatest(col("insert_timestamp"),
+        timestamp_micros(try_element_at(typedLit(newest), col("database")) + 1)))
     }
     // materialize once: count() and the spool append share the
     // repair/parse/validate pipeline

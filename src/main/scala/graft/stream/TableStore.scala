@@ -31,18 +31,21 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
   * `_bucketmap` for PK buckets, `_parts` for append parts — and
   * [[vacuum]] keeps every dir a kept version names. Besides the
   * tables, the manifest holds `@`-keyed progress entries, which
-  * [[manifest]] leaves out: each source database's LSN watermark
-  * (`<db>@lsn`, [[watermarks]]), the schema registry's version
-  * (`@registry`, [[registryPath]]) and each append table's origin
+  * [[manifest]] leaves out: each source database's replay progress
+  * ([[progress]]: the snapshot's handoff LSN `<db>@lsn` and the spool
+  * position of the last row consumed, `<db>@spool_ts` and
+  * `<db>@spool_lsn`), the schema registry's version (`@registry`,
+  * [[registryPath]]) and each append table's origin
   * (`<table>@origin`, [[origin]]). Three consumers share the protocol:
-  *  - the snapshot publishes version 0 of every table, the watermark of
-  *    every database it seeds (its consistent point) and the registry
-  *    in one write;
+  *  - the snapshot publishes version 0 of every table, the handoff LSN
+  *    of every database it seeds (its consistent point) and the
+  *    registry in one write;
   *  - the CDC engine publishes each trigger's tables and views one
-  *    version above the committed ones, together with the watermarks
-  *    moved past the LSNs the trigger consumed and, after DDL, the
-  *    registry ([[commitWithDrops]]); a replay drops every row below
-  *    its database's watermark, so a committed trigger replays empty;
+  *    version above the committed ones, together with each database's
+  *    spool position moved past the rows the trigger consumed and,
+  *    after DDL, the registry ([[commitWithDrops]]); a replay drops
+  *    every row at or before its database's position, so a committed
+  *    trigger replays empty;
   *  - the stream families ([[AppendTable]]: band and winnow indexes,
   *    sketch and rate-monitor registers) publish each micro-batch's
   *    rows as append version `committed + 1` together with the batch
@@ -78,12 +81,12 @@ final class TableStore(spark: SparkSession, val root: String) {
   /** The committed [[graft.model.SchemaRegistry]], for
     * `SchemaRegistry.load` on a driver restart: the file named by the
     * manifest's `@registry` entry, which the snapshot and every DDL
-    * trigger publish with their data ([[commitWithDrops]]). A store
-    * with no such entry answers `_registry.json`, where older code
-    * saved it. */
+    * trigger publish with their data ([[commitWithDrops]]). Throws on
+    * a store that has published no registry. */
   def registryPath: java.nio.file.Path =
-    entries().get(TableStore.RegistryKey)
-      .fold(Paths.get(root, "_registry.json"))(registryFile)
+    registryFile(entries().getOrElse(TableStore.RegistryKey,
+      throw new IllegalStateException(
+        s"store $root has published no schema registry; seed it with the snapshot")))
 
   private def registryFile(version: Long) =
     Paths.get(root, s"_registry.v$version.json")
@@ -100,23 +103,28 @@ final class TableStore(spark: SparkSession, val root: String) {
   /** Every manifest entry, progress entries included. */
   private def entries(): Map[String, Long] = parseManifest()._2
 
-  /** Source database → its LSN watermark, the first LSN the CDC engine
-    * has not applied: the snapshot starts it at its consistent point,
-    * and each trigger's commit moves it past the LSNs the trigger
-    * consumed. Refuses a store whose manifest holds an `@`-led entry
-    * this store does not write — an older store's single start LSN:
-    * such a store has no watermark, and a replay would start at LSN 0. */
-  def watermarks(): Map[String, Long] = {
+  /** Source database → its replay progress ([[TableStore.Progress]]):
+    * the snapshot sets the handoff LSN, and each trigger's commit
+    * moves the spool position past the rows the trigger consumed.
+    * Refuses a store whose manifest holds an `@`-led entry this store
+    * does not write — an older store's single start LSN: such a store
+    * has no per-database progress, and a replay would start at LSN 0. */
+  def progress(): Map[String, TableStore.Progress] = {
     val m = entries()
     m.keys.find(k => k.startsWith("@") && k != TableStore.RegistryKey).foreach { k =>
       throw new IllegalStateException(
-        s"store $root holds the manifest entry '$k' and no per-database LSN " +
-          "watermark, so a replay would start at LSN 0; re-seed it: run the " +
+        s"store $root holds the manifest entry '$k' and no per-database replay " +
+          "progress, so a replay would start at LSN 0; re-seed it: run the " +
           "snapshot into a new store")
     }
-    m.collect { case (k, v) if k.endsWith(TableStore.LsnSuffix) =>
-      k.stripSuffix(TableStore.LsnSuffix) -> v
+    def of(suffix: String) = m.collect { case (k, v) if k.endsWith(suffix) =>
+      k.stripSuffix(suffix) -> v
     }
+    val (handoff, ts, lsn) =
+      (of(TableStore.LsnSuffix), of(TableStore.SpoolTsSuffix), of(TableStore.SpoolLsnSuffix))
+    (handoff.keySet ++ ts.keySet).map { db =>
+      db -> TableStore.Progress(handoff.get(db), ts.get(db).map(_ -> lsn(db)))
+    }.toMap
   }
 
   /** publish sequence of the current manifest (0 = none yet). */
@@ -488,24 +496,32 @@ final class TableStore(spark: SparkSession, val root: String) {
   /** Atomically publish a set of staged versions: the cross-table
     * commit barrier. In ONE manifest write it publishes `updates`,
     * retires `drops` (re-keyed old names — the rename barrier: readers
-    * never see both or neither), moves each database's LSN watermark
-    * ([[watermarks]]) to `lsns` and, given a `registry`, publishes it
-    * ([[registryPath]]). Tables not in `updates` keep their version.
+    * never see both or neither), sets each database's handoff LSN to
+    * `handoffs` and its spool position to `consumed` ([[progress]])
+    * and, given a `registry`, publishes it ([[registryPath]]). Tables
+    * not in `updates` keep their version.
     *
-    * MONOTONIC: a commit never lowers a table's published version or a
-    * database's watermark — a lower incoming value is always a
-    * crash-replay re-running an already-published effect (e.g. CREATE
+    * MONOTONIC: a commit never lowers a table's published version, a
+    * handoff LSN or a spool position — a lower incoming value is always
+    * a crash-replay re-running an already-published effect (e.g. CREATE
     * TABLE committing v=0 after a died-mid-batch attempt already
     * published a later version), and regressing would point readers at
     * stale or empty data, or replay applied changes again.
     */
   def commitWithDrops(updates: Map[TableId, Long], drops: Set[TableId],
-                      lsns: Map[String, Long] = Map.empty,
+                      handoffs: Map[String, Long] = Map.empty,
+                      consumed: Map[String, (Long, Long)] = Map.empty,
                       registry: Option[SchemaRegistry] = None): Unit = {
-    lsns.foreach { case (db, l) => require(l >= 0L, s"$db: LSN watermark $l is negative") }
+    handoffs.foreach { case (db, l) => require(l >= 0L, s"$db: handoff LSN $l is negative") }
     updateManifest { cur =>
       val kept = cur -- drops.map(_.qualified)
       def up(k: String, v: Long) = k -> math.max(v, kept.getOrElse(k, Long.MinValue))
+      // a spool position moves as one (timestamp, LSN) pair
+      val positions = consumed.toSeq.flatMap { case (db, (ts, lsn)) =>
+        val (tk, lk) = (db + TableStore.SpoolTsSuffix, db + TableStore.SpoolLsnSuffix)
+        val at = (kept.getOrElse(tk, Long.MinValue), kept.getOrElse(lk, Long.MinValue))
+        if (Ordering[(Long, Long)].gt((ts, lsn), at)) Seq(tk -> ts, lk -> lsn) else Nil
+      }
       // the registry file is staged under the lock: its version is one
       // above the committed one, and it is visible only once this
       // write names it
@@ -515,20 +531,27 @@ final class TableStore(spark: SparkSession, val root: String) {
         TableStore.RegistryKey -> v
       }
       kept ++ updates.map { case (id, v) => up(id.qualified, v) } ++
-        lsns.map { case (db, l) => up(db + TableStore.LsnSuffix, l) } ++ reg
+        handoffs.map { case (db, l) => up(db + TableStore.LsnSuffix, l) } ++ positions ++ reg
     }
   }
 
   /** Delete version directories below the committed one, keeping the
     * committed version, `keepHistory` older ones for in-flight
     * readers, and every dir a kept version's `_bucketmap` or `_parts`
-    * names. The spool-retirement analog for table versions — without
-    * it every batch's full rewrite accumulates forever. Returns the
-    * number of directories removed.
+    * names; registry files below the committed registry version go by
+    * the same rule. The spool-retirement analog for table versions —
+    * without it every batch's full rewrite accumulates forever.
+    * Returns the number of directories and registry files removed.
     */
   def vacuum(keepHistory: Int = 1, reclaimDropped: Boolean = false): Int = {
-    val m = manifest()
+    val all = entries()
+    val m = all.filterNot(_._1.contains('@'))
     var removed = 0
+    all.get(TableStore.RegistryKey).foreach { committed =>
+      (0L until committed - keepHistory).foreach { v =>
+        if (Files.deleteIfExists(registryFile(v))) removed += 1
+      }
+    }
     val tableDirs = {
       val s = Files.list(Paths.get(root))
       try s.iterator().asScala.toList.filter(Files.isDirectory(_))
@@ -611,10 +634,20 @@ object TableStore {
       Paths.get(root).toAbsolutePath.normalize.toString,
       _ => new Object)
 
+  /** A source database's replay progress, the replication origin's
+    * analog (A6). `handoffLsn`: the snapshot's consistent point — rows
+    * below it are in the snapshot image. `consumed`: the spool position
+    * `(insert_timestamp µs, lsn_start)` of the last row a committed
+    * trigger consumed — rows at or before it are applied. */
+  final case class Progress(handoffLsn: Option[Long], consumed: Option[(Long, Long)])
+
   /** Manifest keys of the progress entries (no table name holds an
-    * `@`): a database's LSN watermark is `<db>@lsn`, the registry's
-    * version `@registry`. */
+    * `@`): a database's handoff LSN is `<db>@lsn`, its spool position
+    * `<db>@spool_ts` and `<db>@spool_lsn`, the registry's version
+    * `@registry`. */
   private val LsnSuffix = "@lsn"
+  private val SpoolTsSuffix = "@spool_ts"
+  private val SpoolLsnSuffix = "@spool_lsn"
   private val RegistryKey = "@registry"
 
   private def readManifest(p: java.nio.file.Path): (Long, Map[String, Long]) =

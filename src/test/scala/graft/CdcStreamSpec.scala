@@ -31,6 +31,33 @@ class CdcStreamSpec extends SparkSpec {
       .withColumn("xid_timestamp", col("insert_timestamp"))
       .withColumn("source_slotname", lit("slot1"))
 
+  /** Spool rows with their own database and spool time:
+    * (database, lsn_start, insert_timestamp in epoch seconds, payload). */
+  private def spoolRows(rows: (String, Long, Long, String)*): DataFrame =
+    rows.toSeq.toDF("database", "lsn_start", "ts", "payload")
+      .withColumn("insert_timestamp", timestamp_seconds(col("ts"))).drop("ts")
+      .withColumn("xid", col("lsn_start"))
+      .withColumn("xid_timestamp", col("insert_timestamp"))
+      .withColumn("source_slotname", lit("slot1"))
+
+  /** A customer-shaped update payload; `kind` may be misspelled. */
+  private def upd(key: Long, bal: Double, kind: String = "update"): String =
+    s"""{"kind":"$kind","schema":"public","table":"customer",
+      "columnnames":["c_custkey","c_acctbal"],"columnvalues":[$key,$bal],
+      "oldkeys":{"keynames":["c_custkey"],"keyvalues":[$key]}}"""
+
+  /** The spool position of a [[spoolBatch]] row. */
+  private def posOf(lsn: Long): Option[(Long, Long)] =
+    Some(((1700000000L + lsn) * 1000000L, lsn))
+
+  /** Every file under the store's version dirs, with its mtime. */
+  private def versionFiles(store: TableStore): Map[String, java.nio.file.attribute.FileTime] = {
+    val s = Files.walk(java.nio.file.Paths.get(store.root))
+    try s.iterator().asScala.filter(f => Files.isRegularFile(f) && f.toString.contains("/v="))
+      .map(f => f.toString -> Files.getLastModifiedTime(f)).toMap
+    finally s.close()
+  }
+
   private def freshEngine(ddl: graft.ddl.DdlEvent => Unit = _ => ())
       : (CdcStreamEngine, TableStore, SchemaRegistry, String, String) = {
     val root = Files.createTempDirectory("graft-store-").toString
@@ -114,8 +141,8 @@ class CdcStreamSpec extends SparkSpec {
     // carries ADD COLUMN and RENAME TABLE. pre_commit leaves staged
     // versions and an archive partition but no commit (the replay
     // re-stages, re-archives and commits); post_commit leaves the
-    // manifest, watermarks and registry ahead of the checkpoint (the
-    // watermarks empty the replay). Both must reach the uninterrupted
+    // manifest, progress and registry ahead of the checkpoint (the
+    // progress empties the replay). Both must reach the uninterrupted
     // run's rows and schema, with every spool row archived once.
     val files = Seq(
       Seq((1L, """{"kind":"update","schema":"public","table":"customer",
@@ -156,10 +183,10 @@ class CdcStreamSpec extends SparkSpec {
     Seq("pre_commit", "post_commit").foreach { point =>
       val (_, store, registry, spool, ckpt) = freshEngine()
       val archive = Files.createTempDirectory("graft-arch-").toString
-      val lsns = scala.collection.mutable.Buffer(store.watermarks())
+      val progress = scala.collection.mutable.Buffer(store.progress())
       write(spool, 0)
       run(ddlEngine(registry, store, archive), spool, ckpt)
-      lsns += store.watermarks()
+      progress += store.progress()
       write(spool, 1); write(spool, 2)
       val killed = ddlEngine(SchemaRegistry.load(store.registryPath), store, archive)
       killed.failpoint = Some((1L, point))
@@ -169,17 +196,28 @@ class CdcStreamSpec extends SparkSpec {
           assert(e.toString.contains("failpoint"), e.toString); true
       }
       assert(died, s"$point failpoint never fired")
-      lsns += store.watermarks()
+      progress += store.progress()
       // driver restart: a FRESH engine and registry on the same
       // checkpoint + store
       run(ddlEngine(SchemaRegistry.load(store.registryPath), store, archive), spool, ckpt)
-      lsns += store.watermarks()
+      progress += store.progress()
       assert(outcome(store) == want, s"$point: recovered state diverged")
-      assert(lsns.zip(lsns.tail).forall { case (a, b) =>
-        a.forall { case (db, l) => b.get(db).exists(_ >= l) } }, s"$point: $lsns")
-      assert(lsns.last == Map("srcdb" -> 8L), s"$point: $lsns")
+      assert(progress.zip(progress.tail).forall { case (a, b) =>
+        a.forall { case (db, p) => p.consumed.forall(c =>
+          b.get(db).flatMap(_.consumed).exists(Ordering[(Long, Long)].gteq(_, c))) }
+      }, s"$point: $progress")
+      assert(progress.last == Map("srcdb" -> TableStore.Progress(None, posOf(7L))),
+        s"$point: $progress")
       val archived = spark.read.parquet(archive).select("lsn_start").as[Long].collect().sorted
       assert(archived.toSeq == (1L to 7L), s"$point: archive $archived")
+      // the seed and the DDL trigger each published a registry version;
+      // a vacuum keeping no history leaves only the committed one
+      def registryFiles = Files.list(java.nio.file.Paths.get(store.root)).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("_registry")).toSet
+      assert(registryFiles == Set("_registry.v0.json", "_registry.v1.json"), s"$point")
+      store.vacuum(keepHistory = 0)
+      assert(registryFiles == Set("_registry.v1.json"), s"$point")
+      assert(outcome(store) == want, s"$point: vacuumed state diverged")
     }
   }
 
@@ -198,13 +236,7 @@ class CdcStreamSpec extends SparkSpec {
       .coalesce(1).write.mode("append").parquet(spool)
     run(engine, spool, ckpt)
     assert(store.manifest()(tid.qualified) == 2L)
-    def committedFiles = {
-      val s = Files.walk(java.nio.file.Paths.get(store.root, tid.qualified))
-      try s.iterator().asScala.filter(Files.isRegularFile(_))
-        .map(f => f.toString -> Files.getLastModifiedTime(f)).toMap
-      finally s.close()
-    }
-    val before = committedFiles
+    val before = versionFiles(store)
 
     spoolBatch((3L, """{"kind":"update","schema":"public","table":"customer",
         "columnnames":["c_custkey","c_acctbal"],"columnvalues":[9,91.0],
@@ -215,10 +247,76 @@ class CdcStreamSpec extends SparkSpec {
     assert(state(store) == Seq(
       Row(1L, "Alice", 10.0), Row(3L, "Carol", 30.0), Row(9L, "Zed", 91.0)))
     assert(store.manifest()(tid.qualified) == 3L)
-    assert(store.watermarks() == Map("srcdb" -> 4L))
-    val after = committedFiles
+    assert(store.progress() == Map("srcdb" -> TableStore.Progress(None, posOf(3L))))
+    val after = versionFiles(store)
     assert(before.forall { case (f, t) => after.get(f).contains(t) },
       "a committed version dir was rewritten")
+  }
+
+  test("a transaction spooled after one that began later still applies") {
+    // T1 begins at LSN 100 and T2 at 150; T2 commits first, so the
+    // daemon spools it first, in a file of its own. Spool order, not
+    // LSN order, is what a trigger consumes: T1 still applies
+    val (engine, store, _, spool, ckpt) = freshEngine()
+    spoolRows(("srcdb", 150L, 1700000001L, upd(2, 22.0)))
+      .coalesce(1).write.mode("append").parquet(spool)
+    run(engine, spool, ckpt)
+    spoolRows(("srcdb", 100L, 1700000002L, upd(1, 11.0)))
+      .coalesce(1).write.mode("append").parquet(spool)
+    run(engine, spool, ckpt)
+    assert(state(store) == Seq(
+      Row(1L, "Alice", 11.0), Row(2L, "Bob", 22.0), Row(3L, "Carol", 30.0)))
+  }
+
+  test("renaming a table away and back rewrites no committed file") {
+    // the name the second rename reuses still holds the first
+    // incarnation's version dirs: the new one stages above them
+    val (_, store, registry, spool, ckpt) = freshEngine()
+    val archive = Files.createTempDirectory("graft-arch-").toString
+    spoolBatch(ddl(1L, "ALTER TABLE customer RENAME TO clients"))
+      .coalesce(1).write.mode("append").parquet(spool)
+    run(ddlEngine(registry, store, archive), spool, ckpt)
+    assert(store.manifest().keySet == Set("srcdb_public.clients"))
+    val before = versionFiles(store)
+    spoolBatch(ddl(2L, "ALTER TABLE clients RENAME TO customer"), (3L, upd(1, 11.0)))
+      .coalesce(1).write.mode("append").parquet(spool)
+    run(ddlEngine(registry, store, archive), spool, ckpt)
+    assert(store.manifest() == Map(tid.qualified -> 2L))
+    assert(state(store) == Seq(
+      Row(1L, "Alice", 11.0), Row(2L, "Bob", 20.0), Row(3L, "Carol", 30.0)))
+    val after = versionFiles(store)
+    assert(before.forall { case (f, t) => after.get(f).contains(t) },
+      "a committed version dir was rewritten")
+  }
+
+  test("a requeue moves only its own database's spool position") {
+    // two databases, two WALs: their LSN ranges and spool clocks do not
+    // overlap (srcdb's LSNs start at 1000 and its rows spool a day after
+    // db2's). A db2 row is quarantined and requeued; the later rows of
+    // both databases still apply
+    val (_, store, registry, spool, ckpt) = freshEngine()
+    val qdir = Files.createTempDirectory("graft-quar-").toString
+    val db2 = TableId("db2", "public", "customer")
+    registry.register(TableMeta(db2, custSchema, Seq("c_custkey")))
+    store.stage(db2, Seq((1L, "Ann", 1.0), (2L, "Ben", 2.0))
+      .toDF("c_custkey", "c_name", "c_acctbal"), 0L)
+    store.commit(Map(db2 -> 0L))
+    val engine = new CdcStreamEngine(spark, registry, store, quarantineDir = Some(qdir))
+    val (t0, day) = (1700000000L, 86400L)
+    def write(rows: (String, Long, Long, String)*): Unit =
+      spoolRows(rows: _*).coalesce(1).write.mode("append").parquet(spool)
+    write(("srcdb", 1000L, t0 + day, upd(1, 11.0)),
+      ("db2", 1L, t0, upd(1, 5.0, kind = "upd8")), ("db2", 2L, t0 + 1, upd(2, 6.0)))
+    run(engine, spool, ckpt)
+    val (requeued, _) = graft.stream.Quarantine.requeue(spark, qdir, spool,
+      q => q.withColumn("payload", regexp_replace(col("payload"), "\"upd8\"", "\"update\"")))
+    assert(requeued == 1)
+    run(engine, spool, ckpt)
+    write(("db2", 3L, t0 + 2, upd(2, 7.0)), ("srcdb", 1001L, t0 + day + 1, upd(3, 33.0)))
+    run(engine, spool, ckpt)
+    assert(tableRows(store, db2) == Seq(Row(1L, "Ann", 5.0), Row(2L, "Ben", 7.0)))
+    assert(state(store) == Seq(
+      Row(1L, "Alice", 11.0), Row(2L, "Bob", 20.0), Row(3L, "Carol", 33.0)))
   }
 
   test("DDL records hit the handler in order, before DML merges") {
@@ -459,7 +557,6 @@ class CdcStreamSpec extends SparkSpec {
 
     val maxBefore = spark.read.parquet(spool)
       .agg(max(col("insert_timestamp"))).collect()(0).getTimestamp(0)
-    val maxLsnBefore = spark.read.parquet(spool).agg(max(col("lsn_start"))).head().getLong(0)
     val (requeued, _) = graft.stream.Quarantine.requeue(
       spark, qdir, spool,
       q => q.withColumn("payload",
@@ -470,11 +567,10 @@ class CdcStreamSpec extends SparkSpec {
       .filter(col("payload").contains("11.0"))
       .select("insert_timestamp").collect()(0).getTimestamp(0)
     assert(reTs.after(maxBefore), s"$reTs not after $maxBefore")
-    // and its LSN past the spool's highest: its old one is below the
-    // watermark the quarantining trigger moved
-    val reLsn = spark.read.parquet(spool).filter(col("payload").contains("11.0"))
-      .select("lsn_start").head().getLong(0)
-    assert(reLsn == maxLsnBefore + 1, s"requeued at LSN $reLsn, spool max $maxLsnBefore")
+    // by 1 µs, keeping its LSN
+    val (reLsn, reMicros) = spark.read.parquet(spool).filter(col("payload").contains("11.0"))
+      .select(col("lsn_start"), unix_micros(col("insert_timestamp"))).as[(Long, Long)].head()
+    assert(reLsn == 1L && reMicros == maxBefore.getTime * 1000L + 1, s"requeued at $reLsn, $reMicros")
     // and the replay applies it as the NEWEST statement about the key
     run(engine, spool, ckpt)
     assert(state(store).collect { case Row(1L, _, b) => b } == Seq(11.0))

@@ -26,7 +26,7 @@ class SnapshotSpec extends SparkSpec {
     // store readable through the manifest (committed cut)
     assert(store.read(TableId("srcdb", "public", "region")).count() == 5)
     // LSN pin round-trips through the %X/%X rendering
-    assert(store.watermarks() == Map("srcdb" -> 0xA0000000BL))
+    assert(store.progress() == Map("srcdb" -> TableStore.Progress(Some(0xA0000000BL), None)))
   }
 
   test("a crash right after the snapshot commit keeps the start LSN: one manifest write") {
@@ -45,7 +45,7 @@ class SnapshotSpec extends SparkSpec {
     assert(e.getMessage.contains("failpoint"), e.getMessage)
     // the snapshot is published, and its LSN with it
     assert(store.read(rid).count() == 5)
-    assert(store.watermarks() == Map("srcdb" -> 0xC00000001L))
+    assert(store.progress() == Map("srcdb" -> TableStore.Progress(Some(0xC00000001L), None)))
   }
 
   test("basebackup validatePk refuses a non-key-unique table, before staging") {
@@ -213,7 +213,9 @@ class SnapshotSpec extends SparkSpec {
       Snapshot.basebackup(spark, Seq(Snapshot.TableSpec(TableId(db, "public", "region"),
         Seq("r_regionkey"), regionSource())), registry, store, root, lsn, njobs = 1)
     }
-    assert(store.watermarks() == Map("db1" -> 100L, "db2" -> 500L))
+    assert(store.progress() == Map(
+      "db1" -> TableStore.Progress(Some(100L), None),
+      "db2" -> TableStore.Progress(Some(500L), None)))
     def upd(db: String, lsn: Long, key: Int) = (db, lsn,
       s"""{"kind":"update","schema":"public","table":"region",
         "columnnames":["r_regionkey","r_name"],"columnvalues":[$key,"at $lsn"],
@@ -234,11 +236,16 @@ class SnapshotSpec extends SparkSpec {
         .select("r_name").as[String].collect().toSeq
     }
     assert(applied.sorted == Seq("at 200", "at 600"))
-    assert(store.watermarks() == Map("db1" -> 201L, "db2" -> 601L))
+    // each database's position is its last consumed row: (its
+    // insert_timestamp in µs, its LSN)
+    def at(lsn: Long) = Some(((1700000000L + lsn) * 1000000L, lsn))
+    assert(store.progress() == Map(
+      "db1" -> TableStore.Progress(Some(100L), at(200L)),
+      "db2" -> TableStore.Progress(Some(500L), at(600L))))
   }
 
-  test("a store from before per-database watermarks is refused, naming the store") {
-    // its manifest holds the single start LSN and no watermark: a
+  test("a store from before per-database replay progress is refused, naming the store") {
+    // its manifest holds the single start LSN and no progress: a
     // replay would start at LSN 0 and re-apply what the snapshot holds
     val root = Files.createTempDirectory("snap-old-").toString
     val rid = TableId("srcdb", "public", "region")
@@ -319,7 +326,7 @@ class SnapshotSpec extends SparkSpec {
       assert(registry(cid).pkCols == Seq("c_custkey"))
       // the LSN pin hands off to the stream engine exactly like the
       // parquet path
-      assert(store.watermarks() == Map("srcdb" -> 0xB0000000FL))
+      assert(store.progress() == Map("srcdb" -> TableStore.Progress(Some(0xB0000000FL), None)))
     } finally conn.close()
   }
 }
