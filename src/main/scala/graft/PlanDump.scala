@@ -80,7 +80,7 @@ object PlanDump {
     "td_ann_sq8" ->
       "SQ8 scalar-quantized ANN: per-dimension stats aggregate map-side into dim cells and collapse to ONE broadcast array row; encoding is a narrow map; scoring broadcasts the tiny query batch over the codes scan (1 B/dim instead of 4) and per-query top-k plans as a partial+final WindowGroupLimit — no cartesian product, no global sort.",
     "td_ann_ivf_sq8" ->
-      "Persisted IVF index with SQ8 postings (FAISS IVF…,SQ8): probes prune the postings read to probed-cell DIRECTORIES (PartitionFilters), candidates carry byte codes only, and the ADC ranking reads two dim-sized broadcast rows (stats + centroids) — 4x less index I/O per probe than raw-vector postings, same frozen-codebook lifecycle.",
+      "Persisted IVF index with SQ8 postings (FAISS IVF…,SQ8): the probed cells reach the postings scan as a pushed In(cell, …) filter over cell-sorted files, so Parquet skips the other cells' row groups by their statistics; candidates carry byte codes only, and the ADC ranking reads two dim-sized broadcast rows (stats + centroids) — 4x less index I/O per probe than raw-vector postings, same frozen-codebook lifecycle.",
     "td_hard_negatives" ->
       "Hard-negative mining: identical IVF candidate shape to td_ann_ivf (broadcast-codebook narrow cell assignment, probed-cell equi-join — per anchor only nProbe/nCells of the corpus is touched); the label-mismatch filter runs BEFORE the exact cosine so positives never reach scoring; the only window ranks per-anchor cell-bounded candidates.",
     "td_content_chunks" ->

@@ -1,191 +1,227 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import graft.model.TableId
+import graft.stream.TableStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Persisted IVF index — the production shape of the ANN surface.
-  * [[KMeans.ivfTrainedTopK]] retrains the codebook and reassigns the
-  * whole corpus on every call; at 100 TB an IVF index is built ONCE,
-  * stored as inverted lists, probed incrementally, and extended with
-  * new vectors WITHOUT retraining (Jégou et al. 2011 — the quantizer
-  * is frozen after training; only the lists grow). This module is
-  * that lifecycle over parquet:
+/** Persisted IVF index — the production shape of the ANN surface. An
+  * IVF index is built ONCE, stored as inverted lists, probed
+  * incrementally, and extended with new vectors WITHOUT retraining
+  * (Jégou et al. 2011 — the quantizer is frozen after training; only
+  * the lists grow). The index directory is a [[TableStore]] root
+  * holding three tables: `centroids` (cell, component-sum s, count n —
+  * the exact representation, so later assignments use the SAME
+  * arithmetic that trained it), `stats` (the SQ8 range row, SQ8
+  * indexes only) and `postings` (id, vec or codes, cell), an append
+  * table whose `_parts` sidecar names the part dirs of each version.
   *
-  *  - `build`: train ([[KMeans.trainWithCentroids]], exact integer
-  *    Lloyd), persist `centroids/` (cell, component-sum s, count n —
-  *    the exact representation, so later assignments use the SAME
-  *    arithmetic that trained it) and `postings/` (id, vec)
-  *    PARTITIONED BY cell — the directory layout IS the inverted
-  *    list: a probe lists only its cells' directories.
-  *  - `append`: assign a new batch against the frozen codebook (one
-  *    broadcast crossJoin + map-side-combinable min_by argmin — the
-  *    [[KMeans]] assignment shape) and append its postings
-  *    partitions; nothing existing is read or rewritten.
-  *  - `query`: probe each query's `nProbe` nearest cells, then scan
-  *    ONLY those partitions (the probed-cell set is ≤ kCells ints —
-  *    bounded control plane, same discipline as the sketch-register
-  *    collects) and rank candidates by exact cosine.
+  * == Lifecycle ==
+  *  - `build` / `buildSq8`: train ([[KMeans.trainWithCentroids]],
+  *    exact integer Lloyd), stage every table one version above the
+  *    committed ones, and publish them in ONE manifest commit. A
+  *    rebuild into the same dir replaces the whole index in that one
+  *    step (a raw build also retires an earlier SQ8 build's stats).
+  *  - `append` / `appendSq8`: assign a new batch against the frozen
+  *    codebook (one broadcast crossJoin + map-side-combinable argmin,
+  *    [[KMeans.assign]]), stage ONLY its rows as one more postings
+  *    part, and commit once: nothing existing is read or rewritten.
+  *  - `compact`: fold every part appended since the build into one
+  *    part and commit once.
+  *  - `query` / `querySq8`: probe each query's `nProbe` nearest cells,
+  *    then scan the committed postings with `cell IN (probed)`. The
+  *    postings files are sorted by cell and sized by bytes, so Parquet
+  *    skips other cells' row groups by their statistics.
   *
-  * `build` + `query` is plan-for-plan the same math as
-  * [[KMeans.ivfTrainedTopK]] — IvfIndexSpec asserts result equality,
-  * and the registered `td_ann_ivf_indexed` shares
-  * `td_ann_ivf_trained`'s oracle SQL, so the parquet round-trip
-  * itself (partition-column typing included) is hash-checked.
+  * == Crash contract ==
+  * The store's ([[TableStore]]): a crash before a commit leaves the
+  * previous index, a crash after it the new one, and a retry
+  * overwrites the staged, never-published dirs. A reader resolves the
+  * committed versions when it plans. Every commit is followed by a
+  * vacuum that keeps one version of history, so a probe planned
+  * before a build, append or compaction still finds its files
+  * afterwards. One writer per dir.
+  *
+  * The dir must be a local/POSIX path (the store's atomic rename). A
+  * dir in the older per-cell-directory layout (`postings/cell=N`, no
+  * manifest) is refused, naming the dir: rebuild the index.
+  *
+  * `build` + `query` is plan-for-plan the same math as the trained
+  * in-memory path ([[queryFrames]]), and the registered
+  * `td_ann_ivf_indexed` shares `td_ann_ivf_trained`'s oracle SQL, so
+  * the parquet round-trip itself is hash-checked.
   */
 object IvfIndex {
 
-  /** Train a `kCells`-cell codebook on `corpus` and persist the index
-    * under `dir`: `centroids/` + cell-partitioned `postings/`.
+  private val Centroids = TableId("graft", "ivf", "centroids")
+  private val Stats = TableId("graft", "ivf", "stats")
+  private[graft] val Postings = TableId("graft", "ivf", "postings")
+
+  /** Train a `kCells`-cell codebook on `corpus` and publish the index
+    * under `dir`: centroids + cell-sorted postings, one commit.
     *
-    * The postings write assigns the corpus with ONE [[nearestCell]]
-    * pass against the frozen codebook (the [[append]] shape) — the
-    * same exact argmin that [[KMeans.trainWithCentroids]]'s final
-    * assignment runs, carrying the raw vector through min_by, so the
-    * earlier `corpus ⋈ assignment` id-shuffle join (three exchanges:
-    * assignment groupBy + two join sides) collapses to the argmin's
-    * single map-side-combinable exchange (opt round 16, guide §2.4). */
+    * The postings assign the corpus with ONE [[nearestCell]] pass
+    * against the frozen codebook (the [[append]] shape) — the same
+    * exact argmin that [[KMeans.trainWithCentroids]]'s final
+    * assignment runs, carrying the raw vector through min_by, so no
+    * `corpus ⋈ assignment` id-shuffle join is needed. */
   def build(corpus: DataFrame, idCol: String, vecCol: String, dir: String,
             kCells: Int, iters: Int, scale: Int = 1000): Unit = {
     val (_, cents) =
       KMeans.trainWithCentroids(corpus, idCol, vecCol, kCells, iters, scale)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    nearestCell(
-      corpus.select(col(idCol).as("id"), col(vecCol).as("vec")),
-      cents, scale)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/postings")
+    val store = new TableStore(corpus.sparkSession, dir)
+    val v = nextVersion(versions(store))
+    store.stage(Centroids, cents, v)
+    store.stageAppend(Postings,
+      byCell(nearestCell(rows(corpus, idCol, vecCol), cents, scale)), v, v, None)
+    publish(store, dir, "build", Map(Centroids -> v, Postings -> v), drops = Set(Stats))
   }
 
-  /** Nearest frozen cell per (id, vec) row — broadcast codebook,
-    * map-side-combinable argmin, exact integer metric (the
-    * [[KMeans.assign]] shape, carrying the raw vector through). */
+  /** Nearest frozen cell per (id, vec) row — the [[KMeans.assign]]
+    * argmin, carrying the raw vector through. */
   private def nearestCell(rows: DataFrame, cents: DataFrame,
                           scale: Int): DataFrame =
-    rows
-      .withColumn("qv", KMeans.quantize(col("vec"), scale))
-      .crossJoin(broadcast(cents))
-      .withColumn("f", KMeans.dotL(col("s"), col("s")) -
-        lit(2L) * col("n") * KMeans.dotL(col("qv"), col("s")))
-      .withColumn("g",
-        col("f").cast("double") / (col("n") * col("n")).cast("double"))
-      .groupBy(col("id"))
-      .agg(min_by(struct(col("cell"), col("vec")),
-        struct(col("g"), col("cell"))).as("w"))
-      .select(col("id"), col("w.vec").as("vec"), col("w.cell").as("cell"))
+    KMeans.assign(rows.withColumn("qv", KMeans.quantize(col("vec"), scale)),
+      cents, carry = "vec")
 
-  /** Add a batch of new vectors to an existing index WITHOUT
-    * retraining: assignment against the persisted codebook, postings
-    * appended partition-wise. Cost ∝ the batch, never the corpus.
-    *
-    * Every append adds at least one file per touched cell, so a
-    * long-lived index degrades into small-file soup (each probe then
-    * pays per-file open cost instead of sequential reads). Pass
-    * `compactTargetBytes` to fold the touched cells back into
-    * target-sized files after the append ([[compact]]) — cost ∝ the
-    * touched cells' list size, never the whole index. */
-  def append(newRows: DataFrame, idCol: String, vecCol: String,
-             dir: String, scale: Int = 1000,
-             compactTargetBytes: Option[Long] = None): Unit = {
-    requirePostingsColumn(newRows.sparkSession, dir, "vec", "append")
-    val cents = newRows.sparkSession.read.parquet(s"$dir/centroids")
-    val assigned = nearestCell(
-      newRows.select(col(idCol).as("id"), col(vecCol).as("vec")),
-      cents, scale)
-      .localCheckpoint(eager = false) // feeds the write AND the cell collect
-    assigned.write.mode("append").partitionBy("cell").parquet(s"$dir/postings")
-    compactTargetBytes.foreach { target =>
-      // bounded control plane: the batch's touched-cell set is ≤ kCells
-      // ints, same discipline as query's probed-cell collect
-      val touched = assigned.select(col("cell")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      compact(newRows.sparkSession, dir, touched, target)
-    }
+  private def rows(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("id"), col(vecCol).as("vec"))
+
+  /** Postings files sorted by cell and sized by bytes: the rebalance
+    * lets the adaptive planner merge small partitions and split large
+    * ones (the layout of [[TableStore.stageBucketed]]). */
+  private def byCell(postings: DataFrame): DataFrame =
+    postings.hint("rebalance", col("cell")).sortWithinPartitions("cell")
+
+  /** The committed version of each index table. */
+  private def versions(store: TableStore): Map[TableId, Long] = {
+    val m = store.manifest()
+    Seq(Centroids, Stats, Postings).flatMap(t => m.get(t.qualified).map(t -> _)).toMap
   }
 
-  /** Rewrite the given cells' inverted lists as ⌈bytes/target⌉
-    * files each — the maintenance pass that keeps a frequently
-    * appended index probe-efficient. One pruned scan + one shuffle
-    * over ONLY the named cells (per-cell file counts come from the
-    * driver-side directory listing — metadata, no data read), staged
-    * to `.compact_staging` and swapped in per cell. The swap is a
-    * delete+rename per cell directory, not atomic across the index:
-    * run it as a maintenance window op (the same contract as any
-    * parquet-level compaction without a table format — concurrent
-    * probes of a cell mid-swap can observe a partial list). A crash
-    * BETWEEN a cell's delete and its rename is rolled forward on the
-    * next call: any staged cell whose live directory is missing is
-    * renamed in before the staging area is cleared, so the staged
-    * copy (which holds the cell's full list) is never discarded while
-    * it is the only copy. */
-  def compact(spark: SparkSession, dir: String, cells: Seq[Int],
-              targetFileBytes: Long = 128L << 20): Unit = {
-    require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val postings = new Path(s"$dir/postings")
-    val fs = postings.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prevStaging = new Path(s"$dir/.compact_staging")
-    if (fs.exists(prevStaging)) {
-      fs.listStatus(prevStaging)
-        .filter(_.getPath.getName.startsWith("cell="))
-        .foreach { st =>
-          val live = new Path(postings, st.getPath.getName)
-          if (!fs.exists(live) && !fs.rename(st.getPath, live))
-            throw new IllegalStateException(
-              s"IvfIndex.compact: recovery rename to $live failed")
-        }
+  /** One above every committed version of the index's tables. */
+  private def nextVersion(vs: Map[TableId, Long]): Long =
+    vs.values.maxOption.fold(0L)(_ + 1)
+
+  /** Commit the staged versions in one manifest write, then vacuum
+    * with one version of history: a probe planned before this commit
+    * still finds its files, and a rebuild does not keep every earlier
+    * build on disk. */
+  private def publish(store: TableStore, dir: String, op: String,
+                      updates: Map[TableId, Long],
+                      drops: Set[TableId] = Set.empty): Unit = {
+    maybeFail(dir, s"${op}_staged")
+    store.commitWithDrops(updates, drops)
+    maybeFail(dir, s"${op}_committed")
+    store.vacuum(keepHistory = 1)
+  }
+
+  /** The store at `dir` and the committed version of each index table.
+    * Refuses the older per-cell-directory layout, a dir with no index,
+    * and (given `column`) postings without that column: raw and SQ8
+    * indexes are not interchangeable. */
+  private def committed(spark: SparkSession, dir: String, op: String,
+                        column: Option[String]): (TableStore, Map[TableId, Long]) = {
+    val store = new TableStore(spark, dir)
+    val old = Paths.get(dir, "postings")
+    if (store.manifestSeq() == 0L && Files.isDirectory(old)) {
+      val s = Files.list(old)
+      val cellDirs =
+        try s.iterator().asScala.exists(_.getFileName.toString.startsWith("cell="))
+        finally s.close()
+      if (cellDirs) throw new IllegalStateException(
+        s"IvfIndex.$op: $dir holds per-cell postings/cell=N dirs and no manifest, " +
+          "a layout this index no longer reads; rebuild the index")
     }
-    val present = cells.distinct.filter(c =>
-      fs.exists(new Path(postings, s"cell=$c")))
-    if (present.isEmpty) return
-    val nFilesByCell = present.map { c =>
-      val bytes = fs.getContentSummary(new Path(postings, s"cell=$c")).getLength
-      c -> math.max(1L,
-        (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    }.toMap
-    val staging = new Path(s"$dir/.compact_staging")
-    fs.delete(staging, true)
-    // one job for all touched cells: partition-pruned scan, shuffle on
-    // (cell, slice) so each cell lands in its computed file count, the
-    // partitioned write splits files per cell
-    val slices = typedlit(nFilesByCell)
-    spark.read.parquet(postings.toString)
-      .filter(col("cell").isin(present: _*))
-      .withColumn("slice",
-        pmod(hash(col("id")), element_at(slices, col("cell"))))
-      .repartition(col("cell"), col("slice"))
-      .drop("slice")
-      .write.mode("overwrite").partitionBy("cell").parquet(staging.toString)
-    present.foreach { c =>
-      val live = new Path(postings, s"cell=$c")
-      val staged = new Path(staging, s"cell=$c")
-      if (fs.exists(staged)) {
-        fs.delete(live, true)
-        if (!fs.rename(staged, live)) throw new IllegalStateException(
-          s"IvfIndex.compact: failed to swap in compacted cell=$c")
-      }
+    val vs = versions(store)
+    if (!vs.contains(Postings))
+      throw new IllegalStateException(s"IvfIndex.$op: no index at $dir; build one first")
+    column.foreach { c =>
+      val fields = store.readVersion(Postings, vs(Postings)).schema.fieldNames
+      require(fields.contains(c),
+        s"IvfIndex.$op: postings at $dir carry ${fields.mkString(",")} — " +
+          s"not an index layout with '$c' (raw and SQ8 indexes are " +
+          "not interchangeable)")
     }
-    fs.delete(staging, true)
-    ()
+    (store, vs)
+  }
+
+  /** Add a batch of new vectors to an existing index WITHOUT
+    * retraining: assignment against the committed codebook, the batch's
+    * postings staged as one more part and committed once. Cost ∝ the
+    * batch, never the corpus. */
+  def append(newRows: DataFrame, idCol: String, vecCol: String,
+             dir: String, scale: Int = 1000): Unit = {
+    val (store, vs) = committed(newRows.sparkSession, dir, "append", Some("vec"))
+    val cents = store.readVersion(Centroids, vs(Centroids))
+    stageBatch(store, dir, vs,
+      nearestCell(rows(newRows, idCol, vecCol), cents, scale), "append")
+  }
+
+  private def stageBatch(store: TableStore, dir: String, vs: Map[TableId, Long],
+                         postings: DataFrame, op: String): Unit = {
+    val v = nextVersion(vs)
+    store.stageAppend(Postings, byCell(postings), v, v, Some(vs(Postings)))
+    publish(store, dir, op, Map(Postings -> v))
+  }
+
+  /** Fold every postings part appended since the build into one part
+    * and commit it once; a probe planned before the fold still finds
+    * its files. The build's own part is not rewritten: the cost is ∝
+    * the appended rows.
+    * Returns the number of parts folded (0 = fewer than two appended
+    * parts, nothing to do). */
+  def compact(spark: SparkSession, dir: String): Int = {
+    val (store, vs) = committed(spark, dir, "compact", None)
+    val base = vs(Postings)
+    val window = store.parts(Postings, base).map(_._1).filter(_ > vs(Centroids))
+    if (window.size < 2) 0
+    else {
+      val v = nextVersion(vs)
+      store.stageCompaction(Postings,
+        byCell(store.readParts(Postings, base, window)), v, base, window)
+      publish(store, dir, "compact", Map(Postings -> v))
+      window.size
+    }
   }
 
   /** Top-`topK` neighbors per query from the persisted index: each
     * query probes its `nProbe` nearest cells (same exact metric that
-    * trained the codebook), the postings scan is PRUNED to the probed
-    * cells' directories, and candidates rank by true cosine.
+    * trained the codebook), the committed postings are read with
+    * `cell IN (probed)`, and candidates rank by true cosine.
     * Output (query_id, rank, neighbor_id) — identical contract (and,
     * given the same build params, identical values) to
-    * [[KMeans.ivfTrainedTopK]]. */
+    * [[queryFrames]] over the trained frames. */
   def query(queries: DataFrame, idCol: String, vecCol: String, dir: String,
             topK: Int, nProbe: Int, scale: Int = 1000): DataFrame = {
-    val spark = queries.sparkSession
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val probes = probeCells(queries, idCol, vecCol, cents, nProbe, scale)
-    val postings = spark.read.parquet(s"$dir/postings")
-      .filter(col("cell").isin(probedCellIds(probes): _*))
-      .select(col("cell"), col("id").as("neighbor_id"), col("vec").as("cvec"))
+    val (store, vs) = committed(queries.sparkSession, dir, "query", Some("vec"))
+    val probes = probeCells(queries, idCol, vecCol,
+      store.readVersion(Centroids, vs(Centroids)), nProbe, scale)
+      .localCheckpoint(eager = false) // feeds the probed-cell collect AND the join
+    rankByCosine(probes, probedPostings(store, vs, probes), topK)
+  }
+
+  /** [[query]]'s probe and ranking over in-memory frames, with no
+    * store: `cents` is a codebook as [[KMeans.trainWithCentroids]]
+    * returns it, `postings` (id, vec, cell) the corpus in its cells. */
+  private[graft] def queryFrames(queries: DataFrame, idCol: String, vecCol: String,
+                                 cents: DataFrame, postings: DataFrame, topK: Int,
+                                 nProbe: Int, scale: Int = 1000): DataFrame =
+    rankByCosine(probeCells(queries, idCol, vecCol, cents, nProbe, scale),
+      postings, topK)
+
+  private def rankByCosine(probes: DataFrame, postings: DataFrame,
+                           topK: Int): DataFrame = {
     val byRank = Window.partitionBy("query_id")
       .orderBy(col("csim").desc, col("neighbor_id"))
-    probes.join(postings, Seq("cell"))
+    // a corpus row lives in exactly one cell → no duplicate pairs
+    probes.join(postings.select(col("cell"), col("id").as("neighbor_id"),
+        col("vec").as("cvec")), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("csim", Similarity.cosine(col("qvec"), col("cvec")))
       .withColumn("rank", row_number().over(byRank))
@@ -195,123 +231,100 @@ object IvfIndex {
 
   /** Each query's `nProbe` nearest frozen cells (same exact metric
     * that trained the codebook). Carries both the raw vector (for
-    * exact-cosine ranking) and its quantized form (for ADC ranking);
-    * localCheckpointed because it feeds the probed-cell collect AND
-    * the candidate join.
+    * exact-cosine ranking) and its quantized form (for ADC ranking).
     * @return (query_id, qvec, qv, cell) */
-  private def probeCells(queries: DataFrame, idCol: String, vecCol: String,
+  private[ops] def probeCells(queries: DataFrame, idCol: String, vecCol: String,
       cents: DataFrame, nProbe: Int, scale: Int): DataFrame = {
     val byQuery = Window.partitionBy("query_id").orderBy(col("g"), col("cell"))
     queries
       .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
         KMeans.quantize(col(vecCol), scale).as("qv"))
       .crossJoin(broadcast(cents))
-      .withColumn("f", KMeans.dotL(col("s"), col("s")) -
-        lit(2L) * col("n") * KMeans.dotL(col("qv"), col("s")))
-      .withColumn("g",
-        col("f").cast("double") / (col("n") * col("n")).cast("double"))
+      .withColumn("g", KMeans.cellScore(col("qv"), col("s"), col("n")))
       .withColumn("rn", row_number().over(byQuery))
       .filter(col("rn") <= nProbe)
       .select(col("query_id"), col("qvec"), col("qv"), col("cell"))
-      .localCheckpoint(eager = false)
   }
 
-  /** Bounded control plane (≤ kCells ints): turning the probed cells
-    * into a partition-column isin is what makes the postings read
-    * list ONLY those directories — the disk analog of an IVF probe. */
-  private def probedCellIds(probes: DataFrame): Seq[Int] =
-    probes.select(col("cell")).distinct().collect().map(_.getInt(0)).toSeq
+  /** The committed postings of the probed cells. The probed-cell set
+    * is ≤ kCells ints (a bounded control plane); its `cell IN (…)`
+    * reaches Parquet as a pushed filter, which skips the row groups of
+    * the other cells — the disk analog of an IVF probe. */
+  private def probedPostings(store: TableStore, vs: Map[TableId, Long],
+                             probes: DataFrame): DataFrame = {
+    val cells = probes.select(col("cell")).distinct().collect().map(_.getInt(0)).toSeq
+    store.readVersion(Postings, vs(Postings)).filter(col("cell").isin(cells: _*))
+  }
 
   /** [[build]] with SQ8-compressed postings ([[ScalarQuant]]): the
     * inverted lists store one byte per dimension (codes) instead of a
     * raw float vector — a 4× smaller index whose probe path reads
     * codes plus two dim-sized broadcast rows (stats + centroids) and
     * ranks by the exact-integer ADC score. The production trade
-    * (FAISS `IVF…,SQ8`): same cell pruning, same frozen-codebook
+    * (FAISS `IVF…,SQ8`): same cell filter, same frozen-codebook
     * lifecycle, a quarter of the bytes per candidate, recall bounded
     * by the one-step quantization error instead of PQ's subspace
-    * collapse. */
+    * collapse. Centroids, stats and postings publish in one commit. */
   def buildSq8(corpus: DataFrame, idCol: String, vecCol: String, dir: String,
                kCells: Int, iters: Int, levels: Int = 255,
                scale: Int = 1000): Unit = {
     val (assigned, cents) =
       KMeans.trainWithCentroids(corpus, idCol, vecCol, kCells, iters, scale)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
+    val store = new TableStore(corpus.sparkSession, dir)
+    val v = nextVersion(versions(store))
+    store.stage(Centroids, cents, v)
     // lazy localCheckpoint: the 1-row stats frame feeds the stats
     // write AND the encode broadcast — one dim-stats corpus pass, not
     // two; released below once both writes have consumed it
     val stats = ScalarQuant.dimStats(corpus, vecCol, scale)
       .localCheckpoint(eager = false)
-    stats.write.mode("overwrite").parquet(s"$dir/stats")
-    // one nearestCell pass replaces encode ⋈ assignment (same collapse
-    // as [[build]]: three exchanges to one); `keep` carries the cell
-    // through the narrow encode projection
-    ScalarQuant.encode(
-      nearestCell(
-        corpus.select(col(idCol).as("id"), col(vecCol).as("vec")),
-        cents, scale),
-      stats, "id", "vec", levels, scale, keep = Seq("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/postings")
+    store.stage(Stats, stats, v)
+    store.stageAppend(Postings,
+      byCell(sq8Postings(rows(corpus, idCol, vecCol), cents, stats, levels, scale)),
+      v, v, None)
     // the training cuts (corpus, codebook) and the stats cut
     Seq(assigned, stats).foreach(Lineage.release)
+    publish(store, dir, "build", Map(Centroids -> v, Stats -> v, Postings -> v))
   }
+
+  /** One [[nearestCell]] pass, then the encode; `keep` carries the cell
+    * through the narrow encode projection. */
+  private def sq8Postings(rows: DataFrame, cents: DataFrame, stats: DataFrame,
+                          levels: Int, scale: Int): DataFrame =
+    ScalarQuant.encode(nearestCell(rows, cents, scale), stats, "id", "vec",
+      levels, scale, keep = Seq("cell"))
 
   /** Add a batch to a [[buildSq8]] index WITHOUT retraining: cell
     * assignment against the frozen codebook AND encoding against the
     * frozen stats row (the standard SQ lifecycle — re-deriving stats
     * from corpus+batch would silently re-scale every existing code;
     * out-of-range batch dimensions clamp at the edges instead). Same
-    * cost shape and compaction option as [[append]]. The raw-vector
-    * [[append]] must never target an SQ8 index — the schemas differ
-    * by construction and the write would corrupt the lists, so both
-    * appends verify the postings schema first. */
+    * cost shape as [[append]]. The raw-vector [[append]] must never
+    * target an SQ8 index — the schemas differ by construction and the
+    * write would corrupt the lists, so both appends verify the
+    * postings schema first. */
   def appendSq8(newRows: DataFrame, idCol: String, vecCol: String,
-                dir: String, levels: Int = 255, scale: Int = 1000,
-                compactTargetBytes: Option[Long] = None): Unit = {
-    val spark = newRows.sparkSession
-    requirePostingsColumn(spark, dir, "codes", "appendSq8")
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val stats = spark.read.parquet(s"$dir/stats")
-    val assigned = nearestCell(
-      newRows.select(col(idCol).as("id"), col(vecCol).as("vec")),
-      cents, scale)
-    val coded = ScalarQuant.encode(
-      assigned.select(col("id"), col("vec")), stats, "id", "vec",
-      levels, scale)
-      .join(assigned.select(col("id"), col("cell")), Seq("id"))
-      .localCheckpoint(eager = false) // feeds the write AND the cell collect
-    coded.write.mode("append").partitionBy("cell").parquet(s"$dir/postings")
-    compactTargetBytes.foreach { target =>
-      val touched = coded.select(col("cell")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      compact(spark, dir, touched, target)
-    }
+                dir: String, levels: Int = 255, scale: Int = 1000): Unit = {
+    val (store, vs) = committed(newRows.sparkSession, dir, "appendSq8", Some("codes"))
+    stageBatch(store, dir, vs,
+      sq8Postings(rows(newRows, idCol, vecCol), store.readVersion(Centroids, vs(Centroids)),
+        store.readVersion(Stats, vs(Stats)), levels, scale), "appendSq8")
   }
 
-  private def requirePostingsColumn(spark: SparkSession, dir: String,
-      column: String, op: String): Unit = {
-    val fields = spark.read.parquet(s"$dir/postings").schema.fieldNames
-    require(fields.contains(column),
-      s"IvfIndex.$op: postings at $dir carry ${fields.mkString(",")} — " +
-        s"not an index layout with '$column' (raw and SQ8 indexes are " +
-        "not interchangeable)")
-  }
-
-  /** Probe a [[buildSq8]] index: same directory-pruned cell scan as
-    * [[query]], candidates ranked by the ADC score of their byte
-    * codes against the query's full quantized vector (exact integer
-    * arithmetic end to end — the whole persisted pipeline is
-    * SQL-oracle-checkable).
+  /** Probe a [[buildSq8]] index: same cell filter as [[query]],
+    * candidates ranked by the ADC score of their byte codes against
+    * the query's full quantized vector (exact integer arithmetic end
+    * to end — the whole persisted pipeline is SQL-oracle-checkable).
     * @return (query_id, rank, neighbor_id, score) */
   def querySq8(queries: DataFrame, idCol: String, vecCol: String, dir: String,
                topK: Int, nProbe: Int, levels: Int = 255,
                scale: Int = 1000): DataFrame = {
-    val spark = queries.sparkSession
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val stats = spark.read.parquet(s"$dir/stats")
-    val probes = probeCells(queries, idCol, vecCol, cents, nProbe, scale)
-    val postings = spark.read.parquet(s"$dir/postings")
-      .filter(col("cell").isin(probedCellIds(probes): _*))
+    val (store, vs) = committed(queries.sparkSession, dir, "querySq8", Some("codes"))
+    val stats = store.readVersion(Stats, vs(Stats))
+    val probes = probeCells(queries, idCol, vecCol,
+      store.readVersion(Centroids, vs(Centroids)), nProbe, scale)
+      .localCheckpoint(eager = false) // feeds the probed-cell collect AND the join
+    val postings = probedPostings(store, vs, probes)
       .crossJoin(broadcast(stats))
       .select(col("cell"), col("id").as("neighbor_id"),
         ScalarQuant.reconstruct(col("codes"), col("st"), levels).as("rv"))
@@ -324,4 +337,17 @@ object IvfIndex {
       .filter(col("rank") <= topK)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("score"))
   }
+
+  /** Crash injection for recovery tests: `(dir, point)` throws once, at
+    * `point` of the index at `dir` — `<op>_staged` after an op's
+    * versions are staged and before its commit, `<op>_committed` after
+    * the commit and before the vacuum, for op `build`, `append`,
+    * `appendSq8` and `compact`. Never set in production. */
+  @volatile private[graft] var failpoint: Option[(String, String)] = None
+
+  private def maybeFail(dir: String, point: String): Unit =
+    if (failpoint.contains((dir, point))) {
+      failpoint = None
+      throw new IllegalStateException(s"failpoint: injected crash ($point) in $dir")
+    }
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Lloyd's k-means codebook training over an embedding column — the
@@ -49,21 +48,28 @@ object KMeans {
   private[graft] def dotLFold(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
 
+  /** The cell metric of training, assignment and IVF probes: dist²
+    * from `qv` to the centroid S/n less the constant |qv|², as the
+    * exact integer f = |S|² − 2·n·(qv·S) ordered by the double f/n²
+    * (see the object doc). */
+  private[ops] def cellScore(qv: Column, s: Column, n: Column): Column =
+    (dotL(s, s) - lit(2L) * n * dotL(qv, s)).cast("double") /
+      (n * n).cast("double")
+
   /** Assign each (id, qv) row to its nearest centroid in (cell, s, n)
     * representation; exact argmin, ties on cell. Top-1 is a min_by
     * aggregation (map-side combinable: the shuffle carries one row
     * per id, not k sorted rows) — ordering by struct(g, cell) is
-    * exactly the (g asc, cell asc) tiebreak a window would apply. */
-  private[ops] def assign(q: DataFrame, centroids: DataFrame): DataFrame =
+    * exactly the (g asc, cell asc) tiebreak a window would apply.
+    * @return (id, `carry`, cell) */
+  private[ops] def assign(q: DataFrame, centroids: DataFrame,
+      carry: String = "qv"): DataFrame =
     q.crossJoin(broadcast(centroids))
-      .withColumn("f",
-        dotL(col("s"), col("s")) - lit(2L) * col("n") * dotL(col("qv"), col("s")))
-      .withColumn("g",
-        col("f").cast("double") / (col("n") * col("n")).cast("double"))
+      .withColumn("g", cellScore(col("qv"), col("s"), col("n")))
       .groupBy(col("id"))
-      .agg(min_by(struct(col("cell"), col("qv")), struct(col("g"), col("cell")))
+      .agg(min_by(struct(col("cell"), col(carry)), struct(col("g"), col("cell")))
         .as("w"))
-      .select(col("id"), col("w.qv").as("qv"), col("w.cell").as("cell"))
+      .select(col("id"), col(s"w.$carry").as(carry), col("w.cell").as("cell"))
 
   /** Train `k` clusters for `iters` Lloyd iterations and return the
     * final assignment (id, cluster). Initial codebook: per cell
@@ -149,46 +155,6 @@ object KMeans {
       .select(col("cluster"), col("n_vectors"),
         expr("n_vectors * 1000000 div total").as("share_ppm"),
         expr(s"mx * $k * 1000000 div total").as("imbalance_ppm"))
-  }
-
-  /** IVF ANN with the TRAINED codebook: corpus rows live in their
-    * final k-means cell; each query probes its `nProbe` nearest cells
-    * (same exact integer metric that trained the codebook), and
-    * candidates within probed cells rank by true cosine. Same plan
-    * family as [[Similarity.ivfTopK]] — codebook broadcasts, the
-    * candidate join is keyed by cell, each query touches ~nProbe/k of
-    * the corpus — but the cells are learned, so recall per probed cell
-    * is what an IVF index actually delivers in production.
-    */
-  def ivfTrainedTopK(queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, topK: Int, kCells: Int, iters: Int,
-      nProbe: Int, scale: Int = 1000): DataFrame = {
-    val (assigned, cents) =
-      trainWithCentroids(corpus, idCol, vecCol, kCells, iters, scale)
-    val qq = queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("qvec"), quantize(col(vecCol), scale).as("qv"))
-    val byQuery = Window.partitionBy("query_id").orderBy(col("g"), col("cell"))
-    val probes = qq.crossJoin(broadcast(cents))
-      .withColumn("f",
-        dotL(col("s"), col("s")) - lit(2L) * col("n") * dotL(col("qv"), col("s")))
-      .withColumn("g",
-        col("f").cast("double") / (col("n") * col("n")).cast("double"))
-      .withColumn("rn", row_number().over(byQuery))
-      .filter(col("rn") <= nProbe)
-      .select(col("query_id"), col("qvec"), col("cell"))
-    val corpusVecs = corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))
-      .join(assigned.select(col("id").as("neighbor_id"),
-        col("cluster").as("cell")), Seq("neighbor_id"))
-    // a corpus row lives in exactly one cell → no duplicate pairs
-    val byRank = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("neighbor_id"))
-    probes.join(corpusVecs, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("csim", Similarity.cosine(col("qvec"), col("cvec")))
-      .withColumn("rank", row_number().over(byRank))
-      .filter(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("neighbor_id"))
   }
 
   /** The trained codebook itself as float-mean centroids (cell,

@@ -100,18 +100,8 @@ object ProductQuant {
     val cb = standInCodebook(corpus, idCol, vecCol, dim, m, k, scale)
     val codes = encode(corpus, cb, idCol, vecCol, dim, m, scale)
       .join(assigned.select(col("id"), col("cluster").as("cell")), Seq("id"))
-    val qq = queries.select(col(idCol).as("query_id"),
-      KMeans.quantize(col(vecCol), scale).as("qv"))
     // probe cells with the same exact metric that trained the codebook
-    val byQuery = Window.partitionBy("query_id").orderBy(col("g"), col("cell"))
-    val probes = qq.crossJoin(broadcast(cents))
-      .withColumn("f",
-        dotL(col("s"), col("s")) - lit(2L) * col("n") * dotL(col("qv"), col("s")))
-      .withColumn("g",
-        col("f").cast("double") / (col("n") * col("n")).cast("double"))
-      .withColumn("rn", row_number().over(byQuery))
-      .filter(col("rn") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cell"))
+    val probes = IvfIndex.probeCells(queries, idCol, vecCol, cents, nProbe, scale)
     // ADC lookup tables per (query, sub, code)
     val qsubs = probes.select(col("query_id"), col("cell"),
       subvectors(col("qv"), dim, m).as(Seq("sub", "xvec")))

@@ -472,16 +472,21 @@ object TrainingDataAnn {
       FROM counts, tot ORDER BY cluster"""))
 
 
-  /** IVF ANN over the TRAINED k-means codebook ([[td_kmeans]]'s exact
-    * training loop feeding [[graft.ops.KMeans.ivfTrainedTopK]]) — the
-    * full production ANN path (train → assign → probe → rank) is
-    * value-checked end to end. */
+  /** IVF ANN over the TRAINED k-means codebook: [[td_kmeans]]'s exact
+    * training loop, then the persisted index's probe and ranking
+    * ([[graft.ops.IvfIndex.queryFrames]]) on the trained frames in
+    * memory, with no store — the full ANN path (train → assign → probe
+    * → rank) is value-checked end to end. */
   val td_ann_ivf_trained = GraftQuery(
     "td_ann_ivf_trained",
     (s, dir) => {
       val e = Tables.embeddings(s, dir)
-      graft.ops.KMeans.ivfTrainedTopK(e.filter(col("vec_id") < 20), e,
-        "vec_id", "embedding", topK = 5, kCells = 8, iters = 2, nProbe = 3)
+      val (assigned, cents) = graft.ops.KMeans.trainWithCentroids(
+        e, "vec_id", "embedding", k = 8, iters = 2)
+      val postings = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
+        .join(assigned.withColumnRenamed("cluster", "cell"), Seq("id"))
+      graft.ops.IvfIndex.queryFrames(e.filter(col("vec_id") < 20),
+        "vec_id", "embedding", cents, postings, topK = 5, nProbe = 3)
         .orderBy(col("query_id"), col("rank"))
     },
     Some("""WITH q AS (
@@ -583,14 +588,15 @@ object TrainingDataAnn {
 
 
   /** The PERSISTED-index form of [[td_ann_ivf_trained]]
-    * ([[graft.ops.IvfIndex]]): train → write centroids + cell-
-    * partitioned postings to parquet → probe the stored index. Same
+    * ([[graft.ops.IvfIndex]]): train → publish centroids + cell-sorted
+    * postings in one store commit → probe the stored index. Same
     * params, same math, so it shares td_ann_ivf_trained's oracle —
-    * which makes the round-trip itself (partition-column typing,
-    * inverted-list layout, frozen-codebook probe) hash-checked. The
-    * staging dir is keyed by applicationId + data dir so concurrent
-    * sessions and scale factors never collide (the same staging
-    * discipline as q20_partition_prune). */
+    * which makes the round-trip itself (schema sidecars, inverted-list
+    * layout, frozen-codebook probe) hash-checked. The index dir is
+    * keyed by applicationId + data dir so concurrent sessions and
+    * scale factors never collide (the same staging discipline as
+    * q20_partition_prune); a second run in one session rebuilds into
+    * it, replacing the index in one commit. */
   val td_ann_ivf_indexed = GraftQuery(
     "td_ann_ivf_indexed",
     (s, dir) => {
@@ -1020,8 +1026,8 @@ object TrainingDataAnn {
   /** Persisted IVF index with SQ8-compressed postings
     * ([[graft.ops.IvfIndex.buildSq8]]/[[graft.ops.IvfIndex.querySq8]]):
     * the FAISS `IVF…,SQ8` production trade — inverted lists hold one
-    * byte per dimension, probes prune to cell directories and rank by
-    * the exact-integer ADC score. Oracled END TO END: the SQL chains
+    * byte per dimension, probes read the postings with a pushed
+    * `cell IN (probed)` filter and rank by the exact-integer ADC score. Oracled END TO END: the SQL chains
     * td_ann_ivf_trained's unrolled 2-iteration k-means into
     * td_ann_sq8's stats/encode/score pipeline with the candidate set
     * restricted to each query's 3 probed cells, so training,

@@ -36,7 +36,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
   * position of the last row consumed, `<db>@spool_ts` and
   * `<db>@spool_lsn`), the schema registry's version (`@registry`,
   * [[registryPath]]) and each append table's origin
-  * (`<table>@origin`, [[origin]]). Three consumers share the protocol:
+  * (`<table>@origin`, [[origin]]). Four consumers share the protocol:
   *  - the snapshot publishes version 0 of every table, the handoff LSN
   *    of every database it seeds (its consistent point) and the
   *    registry in one write;
@@ -51,7 +51,11 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
   *    rows as append version `committed + 1` together with the batch
   *    id ([[origin]], the replication-origin analog), and each
   *    compaction as one more version; a replayed batch the origin
-  *    already covers is skipped.
+  *    already covers is skipped;
+  *  - the IVF index ([[graft.ops.IvfIndex]]) publishes a build's
+  *    centroids, SQ8 stats and postings in one write, and each append
+  *    (one more postings part) and compaction (the appended parts
+  *    folded into one) as one more postings version.
   *
   * == Filesystem requirement (read this before pointing `root` at S3) ==
   * Paths are local/POSIX (`java.nio.file`). The cross-table atomicity

@@ -37,7 +37,7 @@ class AnnQualitySpec extends SparkSpec {
     // trained codebook: same probe budget must clear the same floor as
     // the deterministic stand-in codebook (it should cluster at least
     // as coherently as id-modulo seeds)
-    val trained = pairs(graft.ops.KMeans.ivfTrainedTopK(
+    val trained = pairs(ReferenceIvf.ivfTrainedTopK(
       q, e, "vec_id", "embedding", topK = 5, kCells = 16, iters = 2,
       nProbe = 4))
     val trainedRecall = (exact & trained).size.toDouble / exact.size

@@ -1,11 +1,16 @@
 package graft
 
 import graft.ops.{IvfIndex, KMeans}
+import graft.stream.TableStore
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 /** Persisted-IVF lifecycle: build ≡ the direct trained path, appends
-  * are frozen-codebook and findable, and the probe prunes the
-  * postings read to the probed cells' directories.
+  * are frozen-codebook and findable, every build, append and
+  * compaction publishes in one store commit (a crash before it leaves
+  * the previous index), and the probe pushes the probed cells to the
+  * postings scan.
   */
 class IvfIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -31,18 +36,88 @@ class IvfIndexSpec extends SparkSpec {
     s"${System.getProperty("java.io.tmpdir")}/graft_ivfidx_${tag}_" +
       spark.sparkContext.applicationId
 
+  /** The committed postings, read through the index's store. */
+  private def postings(dir: String): DataFrame =
+    new TableStore(spark, dir).read(IvfIndex.Postings)
+
+  /** Parquet files per part of the committed postings version. */
+  private def partFiles(dir: String): Seq[Int] = {
+    val store = new TableStore(spark, dir)
+    val id = IvfIndex.Postings
+    store.parts(id, store.manifest()(id.qualified)).map { case (p, _) =>
+      new java.io.File(s"$dir/${id.qualified}/v=$p").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+    }
+  }
+
+  private def crashAt[T](dir: String, point: String)(op: => T): Unit = {
+    IvfIndex.failpoint = Some((dir, point))
+    val e = try intercept[IllegalStateException](op) finally IvfIndex.failpoint = None
+    assert(e.getMessage.contains(s"failpoint: injected crash ($point)"), e.getMessage)
+  }
+
+  private def res(dir: String): Seq[(Long, Int, Long)] =
+    IvfIndex.query(corpus.filter(col("vec_id") < 10), "vec_id", "embedding", dir,
+      topK = 3, nProbe = 2).as[(Long, Int, Long)].collect().toSeq.sorted
+
+  /** The probed cells the postings scan pushes to Parquet. */
+  private def pushedCells(res: DataFrame): Set[String] = {
+    val scan = res.queryExecution.executedPlan
+      .collect { case f: FileSourceScanExec => f }
+      .find(_.metadata("Location").contains("postings"))
+      .getOrElse(fail("no postings scan in plan"))
+    val pushed = scan.metadata("PushedFilters")
+    "In\\(cell, \\[([^\\]]*)\\]\\)".r.findFirstMatchIn(pushed)
+      .map(_.group(1).split(",").map(_.trim).toSet)
+      .getOrElse(fail(s"no pushed In(cell, …) on the postings scan: $pushed"))
+  }
+
   test("build + query ≡ ivfTrainedTopK on the same corpus and params") {
     val dir = tmpDir("eq")
     IvfIndex.build(corpus, "vec_id", "embedding", dir,
       kCells = 8, iters = 2)
     val queries = corpus.filter(col("vec_id") < 10)
-    val fromIndex = IvfIndex.query(queries, "vec_id", "embedding", dir,
-      topK = 3, nProbe = 2)
-      .as[(Long, Int, Long)].collect().toSeq.sorted
-    val direct = KMeans.ivfTrainedTopK(queries, corpus,
+    val fromIndex = res(dir)
+    val direct = ReferenceIvf.ivfTrainedTopK(queries, corpus,
       "vec_id", "embedding", topK = 3, kCells = 8, iters = 2, nProbe = 2)
       .as[(Long, Int, Long)].collect().toSeq.sorted
     assert(fromIndex.nonEmpty && fromIndex == direct)
+    // the same probe and ranking over the trained frames in memory
+    val (assigned, cents) =
+      KMeans.trainWithCentroids(corpus, "vec_id", "embedding", k = 8, iters = 2)
+    val inMemory = IvfIndex.queryFrames(queries, "vec_id", "embedding", cents,
+      corpus.select(col("vec_id").as("id"), col("embedding").as("vec"))
+        .join(assigned.withColumnRenamed("cluster", "cell"), Seq("id")),
+      topK = 3, nProbe = 2).as[(Long, Int, Long)].collect().toSeq.sorted
+    assert(inMemory == direct)
+  }
+
+  test("build: a staged rebuild leaves the previous index; a committed one replaces it") {
+    val dir = tmpDir("rebuild")
+    IvfIndex.build(corpus, "vec_id", "embedding", dir, kCells = 8, iters = 2)
+    val before = res(dir)
+    val ids = (0L until 60L).toSet
+    // a different corpus: other ids, other vectors
+    val other = (500L until 540L).map(i => (i, vec(i * 7 + 3)))
+      .toDF("vec_id", "embedding")
+    crashAt(dir, "build_staged") {
+      IvfIndex.build(other, "vec_id", "embedding", dir, kCells = 8, iters = 2)
+    }
+    assert(res(dir) == before)
+    assert(postings(dir).select("id").as[Long].collect().toSet == ids)
+    // committed, crashed before its vacuum: the new index is read
+    crashAt(dir, "build_committed") {
+      IvfIndex.build(other, "vec_id", "embedding", dir, kCells = 8, iters = 2)
+    }
+    // only the second corpus's rows are read
+    assert(postings(dir).select("id").as[Long].collect().toSet == (500L until 540L).toSet)
+    val after = res(dir)
+    assert(after.nonEmpty && after.forall(r => r._3 >= 500L), after.toString)
+    // a completed rebuild keeps one earlier version on disk, not every build
+    IvfIndex.build(other, "vec_id", "embedding", dir, kCells = 8, iters = 2)
+    assert(new java.io.File(s"$dir/${IvfIndex.Postings.qualified}").list()
+      .filter(_.startsWith("v=")).sorted.toSeq == Seq("v=1", "v=2"))
+    assert(res(dir) == after)
   }
 
   test("append: new vectors enter the frozen index and are findable") {
@@ -51,74 +126,89 @@ class IvfIndexSpec extends SparkSpec {
       kCells = 8, iters = 2)
     // a distinctive direction no corpus vector has
     val newVec = Seq(9.0, 0.0, 9.0, 0.0, 9.0, 0.0, 9.0, 0.0)
-    IvfIndex.append(Seq((1000L, newVec)).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", dir)
+    val batch = Seq((1000L, newVec)).toDF("vec_id", "embedding")
+    val q = Seq((2000L, newVec.map(_ * 0.5))).toDF("vec_id", "embedding")
+    def top = IvfIndex.query(q, "vec_id", "embedding", dir,
+      topK = 1, nProbe = 2).as[(Long, Int, Long)].collect().toSeq
+    // staged, not committed: the batch is not read
+    crashAt(dir, "append_staged") {
+      IvfIndex.append(batch, "vec_id", "embedding", dir)
+    }
+    assert(postings(dir).count() == 60L)
+    assert(top != Seq((2000L, 1, 1000L)), top.toString)
+    // committed, crashed before its vacuum: the batch is read
+    crashAt(dir, "append_committed") {
+      IvfIndex.append(batch, "vec_id", "embedding", dir)
+    }
     // postings grew by exactly the batch
-    assert(spark.read.parquet(s"$dir/postings").count() == 61L)
+    assert(postings(dir).count() == 61L)
     // querying the same direction finds the appended doc first
     // (cosine 1.0 beats every corpus vector)
-    val q = Seq((2000L, newVec.map(_ * 0.5))).toDF("vec_id", "embedding")
-    val top = IvfIndex.query(q, "vec_id", "embedding", dir,
-      topK = 1, nProbe = 2).as[(Long, Int, Long)].collect().toSeq
     assert(top == Seq((2000L, 1, 1000L)), top.toString)
   }
 
   test("compaction: 8 appends stay bounded per cell, results unchanged") {
-    // 8 appends prove the boundedness property as well as 20 did
-    // (every append grows a cell in dirA; every compaction folds dirB
-    // back to one file per cell) at 40% of the job count — trimmed to
-    // fit the driver's test budget (opt round 16)
     val dirA = tmpDir("cmpA") // appends only
-    val dirB = tmpDir("cmpB") // appends + per-append compaction
+    val dirB = tmpDir("cmpB") // appends + compaction after each
     IvfIndex.build(corpus, "vec_id", "embedding", dirA, kCells = 8, iters = 2)
     IvfIndex.build(corpus, "vec_id", "embedding", dirB, kCells = 8, iters = 2)
     (0 until 8).foreach { b =>
       val batch = Seq((10000L + b, vec(100L + b))).toDF("vec_id", "embedding")
       IvfIndex.append(batch, "vec_id", "embedding", dirA)
-      IvfIndex.append(batch, "vec_id", "embedding", dirB,
-        compactTargetBytes = Some(128L << 20))
+      IvfIndex.append(batch, "vec_id", "embedding", dirB)
+      IvfIndex.compact(spark, dirB)
     }
-    def cellFiles(dir: String): Map[String, Int] = {
-      val root = new java.io.File(s"$dir/postings")
-      root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("cell="))
-        .map(d => d.getName ->
-          d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
-    }
-    // uncompacted: every append grew some cell; compacted: each cell is
-    // one target-sized file (all data ≪ 128 MiB)
-    assert(cellFiles(dirA).values.sum > cellFiles(dirB).values.sum)
-    assert(cellFiles(dirB).values.forall(_ == 1),
-      s"compacted cells not bounded: ${cellFiles(dirB)}")
+    // uncompacted: one more part per append; compacted: the build's
+    // part and one fold, each one file (all data ≪ the advisory size)
+    assert(partFiles(dirA).size == 9)
+    assert(partFiles(dirA).sum > partFiles(dirB).sum)
+    assert(partFiles(dirB) == Seq(1, 1), s"compacted parts not bounded: ${partFiles(dirB)}")
     // identical content and identical query results either way
-    val q = corpus.filter(col("vec_id") < 10)
-    def res(dir: String) = IvfIndex.query(q, "vec_id", "embedding", dir,
-      topK = 3, nProbe = 2).as[(Long, Int, Long)].collect().toSeq.sorted
-    assert(spark.read.parquet(s"$dirA/postings").count() == 68L)
-    assert(spark.read.parquet(s"$dirB/postings").count() == 68L)
+    assert(postings(dirA).count() == 68L)
+    assert(postings(dirB).count() == 68L)
     assert(res(dirA) == res(dirB) && res(dirB).nonEmpty)
   }
 
-  test("compact: a cell crashed between delete and rename is rolled forward") {
-    val dir = tmpDir("cmpR")
+  test("compact: a staged fold is not read, a committed one is; a planned probe survives it") {
+    val dir = tmpDir("cmpCrash")
     IvfIndex.build(corpus, "vec_id", "embedding", dir, kCells = 8, iters = 2)
-    val rowsBefore = spark.read.parquet(s"$dir/postings").drop("cell")
-      .collect().toSet
-    // pick a real cell and simulate the crash window: its list staged,
-    // its live directory already deleted, the rename never happened
-    val postings = new java.io.File(s"$dir/postings")
-    val cellName = postings.listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell=")).head.getName
-    val staging = new java.io.File(s"$dir/.compact_staging")
-    assert(staging.mkdirs())
-    assert(new java.io.File(postings, cellName)
-      .renameTo(new java.io.File(staging, cellName)))
-    // next compaction call (any cell set) must restore it, not discard it
-    IvfIndex.compact(spark, dir,
-      cells = Seq(cellName.stripPrefix("cell=").toInt))
-    val rowsAfter = spark.read.parquet(s"$dir/postings").drop("cell")
-      .collect().toSet
-    assert(rowsAfter == rowsBefore, "recovery must restore the staged cell")
-    assert(!staging.exists(), "staging cleared after recovery + compaction")
+    (0 until 3).foreach { b =>
+      IvfIndex.append(Seq((10000L + b, vec(100L + b))).toDF("vec_id", "embedding"),
+        "vec_id", "embedding", dir)
+    }
+    val before = res(dir)
+    val rows = postings(dir).collect().toSet
+    crashAt(dir, "compact_staged")(IvfIndex.compact(spark, dir))
+    assert(partFiles(dir).size == 4 && res(dir) == before)
+    // planned (its parts resolved) before the fold, collected after it
+    val planned = IvfIndex.query(corpus.filter(col("vec_id") < 10), "vec_id", "embedding",
+      dir, topK = 3, nProbe = 2)
+    assert(IvfIndex.compact(spark, dir) == 3)
+    assert(planned.as[(Long, Int, Long)].collect().toSeq.sorted == before)
+    assert(partFiles(dir).size == 2 && res(dir) == before)
+    assert(postings(dir).collect().toSet == rows)
+    // committed, crashed before its vacuum: the fold is read
+    IvfIndex.append(Seq((20000L, vec(200L))).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", dir)
+    val grown = res(dir)
+    crashAt(dir, "compact_committed")(IvfIndex.compact(spark, dir))
+    assert(partFiles(dir).size == 2 && res(dir) == grown)
+    assert(postings(dir).count() == 64L)
+  }
+
+  test("an index dir in the per-cell-directory layout is refused, naming the dir") {
+    val dir = tmpDir("oldlayout")
+    assert(new java.io.File(s"$dir/postings/cell=3").mkdirs())
+    val batch = Seq((1L, vec(1L))).toDF("vec_id", "embedding")
+    Seq[() => Any](
+      () => IvfIndex.query(batch, "vec_id", "embedding", dir, topK = 1, nProbe = 1),
+      () => IvfIndex.append(batch, "vec_id", "embedding", dir),
+      () => IvfIndex.compact(spark, dir)
+    ).foreach { op =>
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains(dir) && e.getMessage.contains("rebuild the index"),
+        e.getMessage)
+    }
   }
 
   test("buildSq8 + querySq8 ≡ ADC over in-memory codes restricted to probed cells") {
@@ -155,9 +245,13 @@ class IvfIndexSpec extends SparkSpec {
     // a direction past the corpus max on even dims — clamps to the top
     // code, so its reconstruction dominates every even-dim score term
     val newVec = Seq(9.0, 0.0, 9.0, 0.0, 9.0, 0.0, 9.0, 0.0)
-    IvfIndex.appendSq8(Seq((1000L, newVec)).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", dir)
-    assert(spark.read.parquet(s"$dir/postings").count() == 61L)
+    val batch = Seq((1000L, newVec)).toDF("vec_id", "embedding")
+    crashAt(dir, "appendSq8_staged") {
+      IvfIndex.appendSq8(batch, "vec_id", "embedding", dir)
+    }
+    assert(postings(dir).count() == 60L)
+    IvfIndex.appendSq8(batch, "vec_id", "embedding", dir)
+    assert(postings(dir).count() == 61L)
     val q = Seq((2000L, newVec.map(_ * 0.5))).toDF("vec_id", "embedding")
     val top = IvfIndex.querySq8(q, "vec_id", "embedding", dir,
       topK = 1, nProbe = 8).as[(Long, Int, Long, Long)].collect().toSeq
@@ -182,32 +276,18 @@ class IvfIndexSpec extends SparkSpec {
       IvfIndex.buildSq8(corpus, "vec_id", "embedding", dir,
         kCells = 8, iters = 2)
       // the compressed postings carry int codes only — no float column
-      val postingsSchema = spark.read.parquet(s"$dir/postings").schema
+      val postingsSchema = postings(dir).schema
       assert(postingsSchema.fieldNames.toSet == Set("id", "codes", "cell"),
         postingsSchema.treeString)
       val q = corpus.filter(col("vec_id") === 0L)
       val res = IvfIndex.querySq8(q, "vec_id", "embedding", dir,
         topK = 3, nProbe = 2)
       res.collect()
-      val scan = res.queryExecution.executedPlan
-        .collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-        }
-        .find(_.metadata("Location").contains("postings"))
-        .getOrElse(fail("no postings scan in plan"))
-      assert(scan.partitionFilters.nonEmpty,
-        "probed-cell isin not pushed to partitioning")
-      val chosen = scan.relation.location
-        .listFiles(scan.partitionFilters, scan.dataFilters)
-        .flatMap(_.files.map(_.getPath.toString))
-      val cells = chosen.flatMap(
-        "cell=(\\d+)".r.findFirstMatchIn(_).map(_.group(1))).distinct
-      assert(chosen.nonEmpty && cells.size == 2,
-        s"scan touched cells $cells: ${chosen.mkString(", ")}")
+      assert(pushedCells(res).size == 2, pushedCells(res).toString)
     }
   }
 
-  test("query prunes the postings scan to the probed cells' directories") {
+  test("query prunes the postings scan to the probed cells") {
     withConf("spark.sql.adaptive.enabled" -> "false") {
       val dir = tmpDir("prune")
       IvfIndex.build(corpus, "vec_id", "embedding", dir,
@@ -216,22 +296,8 @@ class IvfIndexSpec extends SparkSpec {
       val res = IvfIndex.query(q, "vec_id", "embedding", dir,
         topK = 3, nProbe = 2)
       res.collect()
-      val scan = res.queryExecution.executedPlan
-        .collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-        }
-        .find(_.metadata("Location").contains("postings"))
-        .getOrElse(fail("no postings scan in plan"))
-      assert(scan.partitionFilters.nonEmpty,
-        "probed-cell isin not pushed to partitioning")
-      val chosen = scan.relation.location
-        .listFiles(scan.partitionFilters, scan.dataFilters)
-        .flatMap(_.files.map(_.getPath.toString))
-      // one query with nProbe=2 must touch exactly its 2 cells' dirs
-      val cells = chosen.flatMap(
-        "cell=(\\d+)".r.findFirstMatchIn(_).map(_.group(1))).distinct
-      assert(chosen.nonEmpty && cells.size == 2,
-        s"scan touched cells $cells: ${chosen.mkString(", ")}")
+      // one query with nProbe=2 pushes exactly its 2 cells to Parquet
+      assert(pushedCells(res).size == 2, pushedCells(res).toString)
     }
   }
 }

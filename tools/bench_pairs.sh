@@ -4,8 +4,10 @@
 #
 #   tools/bench_pairs.sh <rev> <workload> <seed>...
 #
-# <rev> is checked out into a temporary git worktree. Each side builds
-# into its own CARGO_TARGET_DIR, so neither reuses the other's classes.
+# <rev> is exported into a temporary dir with `git archive`, so the
+# script writes nothing under .git and a killed run leaves no worktree
+# entry behind. Each side builds into its own CARGO_TARGET_DIR, so
+# neither reuses the other's classes.
 # For each seed both sides run `cdcbench/run.py --trace 0`; which side
 # runs first alternates from seed to seed. Every result line is kept in
 # the temporary dir (printed at the end). The summary gives, per
@@ -23,8 +25,9 @@ rev=$1 workload=$2
 shift 2
 
 tmp=$(mktemp -d "${TMPDIR:-/tmp}/bench_pairs.XXXXXX")
-git worktree add --detach "$tmp/base" "$rev" >/dev/null
-cleanup() { git worktree remove --force "$tmp/base" || true; rm -rf "$tmp"/build-*; }
+mkdir "$tmp/base"
+git archive "$rev" | tar -x -C "$tmp/base"
+cleanup() { rm -rf "$tmp/base" "$tmp"/build-*; }
 trap cleanup EXIT
 
 seconds=$(python3 -c \
