@@ -424,9 +424,9 @@ object Cdc {
 
   /** K5 archive mode as an oracled query: the deterministic change
     * log replays through the REAL engine (one spool file per phase →
-    * one micro-batch per phase), with `archiveDir` set — applied
-    * records move to the batch-partitioned audit table instead of
-    * vanishing (the reference's `WITH deleted AS (DELETE … RETURNING *)
+    * one micro-batch per phase), with `archive` on — applied
+    * records move to the store's archive table, tagged with their
+    * batch id, instead of vanishing (the reference's `WITH deleted AS (DELETE … RETURNING *)
     * INSERT INTO replication.replayed`,
     * `replayer/connemara_replay.pl:521-526`). Output: the audit
     * trail's (batch, kind) histogram; the oracle recomputes each
@@ -438,8 +438,7 @@ object Cdc {
       val c = Tables.customer(s, dir)
       val meta = customerMeta(c)
       val tmp = Files.createTempDirectory("graft-q-arch-").toString
-      val (spool, ckpt, root, arch) =
-        (s"$tmp/spool", s"$tmp/ckpt", s"$tmp/store", s"$tmp/archive")
+      val (spool, ckpt, root) = (s"$tmp/spool", s"$tmp/ckpt", s"$tmp/store")
       // all 7 phase files from ONE write job (the phase is recoverable
       // from the fixture's per-phase insert_timestamp); the old form
       // was an eager checkpoint + 7 filter+coalesce write actions
@@ -452,10 +451,9 @@ object Cdc {
       val store = new graft.stream.TableStore(s, root)
       store.stage(meta.id, c, 0L)
       store.commit(Map(meta.id -> 0L))
-      val engine = new graft.stream.CdcStreamEngine(s, registry, store,
-        archiveDir = Some(arch))
+      val engine = new graft.stream.CdcStreamEngine(s, registry, store, archive = true)
       engine.start(spool, ckpt, maxFilesPerTrigger = 1).awaitTermination()
-      s.read.parquet(arch)
+      store.read(graft.stream.TableStore.ArchiveId)
         .select(col("batch_id").cast("int").as("batch_id"),
           get_json_object(col("payload"), "$.kind").as("kind"))
         .groupBy(col("batch_id"), col("kind"))
@@ -494,8 +492,7 @@ object Cdc {
       val c = Tables.customer(s, dir)
       val meta = customerMeta(c)
       val tmp = Files.createTempDirectory("graft-q-quar-").toString
-      val (spool, ckpt, root, qdir) =
-        (s"$tmp/spool", s"$tmp/ckpt", s"$tmp/store", s"$tmp/quarantine")
+      val (spool, ckpt, root) = (s"$tmp/spool", s"$tmp/ckpt", s"$tmp/store")
       val k = col("c_custkey")
       val ks = k.cast("string")
       // single-scan fixture: both event classes are per-row array
@@ -535,11 +532,10 @@ object Cdc {
       val store = new graft.stream.TableStore(s, root)
       store.stage(meta.id, c, 0L)
       store.commit(Map(meta.id -> 0L))
-      val engine = new graft.stream.CdcStreamEngine(s, registry, store,
-        quarantineDir = Some(qdir))
+      val engine = new graft.stream.CdcStreamEngine(s, registry, store)
       engine.start(spool, ckpt).awaitTermination()
       val (requeued, stillBad) = graft.stream.Quarantine.requeue(
-        s, qdir, spool,
+        s, store, spool,
         q => q.withColumn("payload",
           regexp_replace(col("payload"), "\"upd8\"", "\"update\"")))
       require(stillBad == 0, s"unexpected hopeless rows: $stillBad")

@@ -602,6 +602,7 @@ object TrainingDataAnn {
     (s, dir) => {
       val stage = s"${System.getProperty("java.io.tmpdir")}/graft_ivfidx_" +
         s"${s.sparkContext.applicationId}_${Integer.toHexString(dir.hashCode)}"
+      graft.ops.Bucketing.cleanupOnExit(stage)
       val e = Tables.embeddings(s, dir)
       graft.ops.IvfIndex.build(e, "vec_id", "embedding", stage,
         kCells = 8, iters = 2)
@@ -1038,6 +1039,7 @@ object TrainingDataAnn {
     (s, dir) => {
       val stage = s"${System.getProperty("java.io.tmpdir")}/graft_ivfsq8_" +
         s"${s.sparkContext.applicationId}_${Integer.toHexString(dir.hashCode)}"
+      graft.ops.Bucketing.cleanupOnExit(stage)
       val e = Tables.embeddings(s, dir)
       graft.ops.IvfIndex.buildSq8(e, "vec_id", "embedding", stage,
         kCells = 8, iters = 2)

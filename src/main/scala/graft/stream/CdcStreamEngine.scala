@@ -36,13 +36,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    BEFORE the batch's DML merge, then the registry-backed plans
   *    rebuild — the `DISCARD`/cache-invalidation analog.
   *  - backpressure (A10): `maxFilesPerTrigger`.
-  *  - archive (K5 `--keep_data`): `archiveDir` keeps every consumed
-  *    spool row, partitioned by batch id and written before the
-  *    commit. Batch ids restart at 0 with a new checkpoint, whose
-  *    batches then overwrite the old checkpoint's partitions of the
-  *    same id.
-  *  - fail-fast (A9): `strict=true` counts merge violations and
-  *    aborts the query (affected-rows==1 parity).
+  *  - archive (K5 `--keep_data`): with `archive = true` each trigger
+  *    appends every spool row it consumed, with its `batch_id`, as one
+  *    more part of the store's archive table ([[TableStore.ArchiveId]])
+  *    in its own commit, as the reference archives inside the apply's
+  *    transaction. Opt-in: it writes on every trigger.
+  *  - dead letters: rows with a malformed payload leave the replay and
+  *    append, the same way, to the store's quarantine table
+  *    ([[TableStore.QuarantineId]]) for offline repair ([[Quarantine]]).
+  *  - fail-fast (A9): `strict=true` aborts the trigger on a malformed
+  *    payload before anything is staged, and counts merge violations
+  *    and aborts the query (affected-rows==1 parity).
   */
 final class CdcStreamEngine(
     spark: SparkSession,
@@ -50,8 +54,7 @@ final class CdcStreamEngine(
     store: TableStore,
     ddlHandler: graft.ddl.DdlEvent => Unit = _ => (),
     strict: Boolean = false,
-    archiveDir: Option[String] = None,
-    quarantineDir: Option[String] = None,
+    archive: Boolean = false,
     aggViews: Seq[CdcStreamEngine.AggView] = Seq.empty,
     // P5: per-db slot restriction (replayer/connemara_replay.pl:779-799)
     // — a database with a configured slot only accepts rows from that
@@ -77,9 +80,9 @@ final class CdcStreamEngine(
 
   /** Crash-injection point for recovery measurement (StreamBench
     * SPARK_GRAFT_STREAM_KILL_AT / CdcStreamSpec): kill the stream at
-    * batch `id`, either `pre_commit` (versions staged and the archive
-    * written, manifest NOT advanced — the torn-stage crash; replay
-    * re-stages, overwrites the archive partition and commits) or
+    * batch `id`, either `pre_commit` (versions, archive and quarantine
+    * parts staged, manifest NOT advanced — the torn-stage crash; replay
+    * re-stages the same versions and commits) or
     * `post_commit` (manifest and progress advanced, checkpoint NOT —
     * the double-apply window; the progress empties the replay).
     * Parquet staging is itself rename-published, so "mid-write" is
@@ -304,23 +307,18 @@ final class CdcStreamEngine(
       }.toMap
 
       // Malformed payloads: fail fast in strict mode (A9 — the
-      // reference dies on the first bad row); otherwise drop them
-      // from replay but preserve the raw rows for offline repair.
-      // Preserve FIRST — in strict mode they're exactly what the
-      // operator needs to diagnose the fail-fast. A clean batch skips
-      // the write entirely (dynamic overwrite of zero rows touched no
-      // partition anyway, but it still cost a full write action).
-      if (nBad > 0) quarantineDir.foreach { dir =>
-        label("quarantine")
-        parsedAll.filter(bad).drop("p").withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(dir)
+      // reference dies on the first bad row), before anything is
+      // staged; the rows stay in the spool, as progress did not move.
+      // Otherwise they leave the replay for the quarantine (below).
+      if (strict && nBad > 0) {
+        val first = parsedAll.filter(bad)
+          .orderBy(CdcStreamEngine.spoolTs, col("lsn_start"))
+          .select(col("database"), col("insert_timestamp"), col("lsn_start")).head()
+        throw new IllegalStateException(
+          s"batch $batchId: $nBad unparseable change payloads; the first is from " +
+            s"database ${first.get(0)} at insert_timestamp ${first.get(1)}, " +
+            s"lsn_start ${first.get(2)}")
       }
-      if (strict && nBad > 0) throw new IllegalStateException(
-        s"batch $batchId: $nBad unparseable change payloads" +
-          quarantineDir.map(d => s" (preserved under $d)").getOrElse(""))
 
       val parsed = parsedAll.filter(!bad)
 
@@ -497,23 +495,28 @@ final class CdcStreamEngine(
         }).toMap
       }
 
-      // K5 --keep_data / E4 archive CTE analog: applied spool records
-      // move to the audit table instead of vanishing, mirroring `WITH
-      // deleted AS (DELETE … RETURNING *) INSERT INTO
-      // replication.replayed` (`replayer/connemara_replay.pl:521-526`).
-      // Written BEFORE the commit and partitioned by batch: a replay
-      // of an uncommitted batch overwrites its own partition, and a
+      // K5 --keep_data / E4 archive CTE analog, and the dead letters:
+      // the consumed spool rows (archive on) and the malformed ones (if
+      // any) each append one part to their store table, published by
+      // this trigger's commit — the reference archives inside the
+      // apply's transaction, `WITH deleted AS (DELETE … RETURNING *)
+      // INSERT INTO replication.replayed`
+      // (`replayer/connemara_replay.pl:521-526`). A replay of an
+      // uncommitted trigger re-stages the same part version; a
       // committed one replays empty and never gets here.
-      archiveDir.foreach { dir =>
-        label("archive")
-        // raw rows from the cached parse (drop("p") restores the exact
-        // spool shape) — the old form re-read the source files
-        parsedAll.drop("p").withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(dir)
+      def stageRows(id: TableId, rows: DataFrame): (TableId, Long) = {
+        label(s"stage ${id.qualified}")
+        val base = committed.get(id.qualified)
+        val version = base.fold(0L)(_ + 1)
+        // raw rows from the cached parse, in the spool schema
+        store.stageAppend(id, ApplyEngine.conform(rows.withColumn("batch_id", lit(batchId)),
+          Quarantine.schema), version, batchId, base)
+        id -> version
       }
+      val appended =
+        (if (archive) Seq(stageRows(TableStore.ArchiveId, parsedAll)) else Nil) ++
+          (if (nBad > 0) Seq(stageRows(TableStore.QuarantineId, parsedAll.filter(bad)))
+           else Nil)
 
       // A2/A3: one atomic cross-table commit per batch, carrying the
       // spool positions and, after DDL, the registry (A8: the checkpoint
@@ -523,7 +526,7 @@ final class CdcStreamEngine(
       val dropped = pendingRenames.map(_._1)
         .filterNot(o => updates.contains(o)).toSet
       maybeFail(batchId, "pre_commit")
-      store.commitWithDrops(updates, dropped, consumed = consumed,
+      store.commitWithDrops(updates ++ appended, dropped, consumed = consumed,
         registry = if (ddls.nonEmpty) Some(registry) else None)
       maybeFail(batchId, "post_commit")
     } finally {

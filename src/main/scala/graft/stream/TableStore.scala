@@ -42,10 +42,15 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
   *    registry in one write;
   *  - the CDC engine publishes each trigger's tables and views one
   *    version above the committed ones, together with each database's
-  *    spool position moved past the rows the trigger consumed and,
-  *    after DDL, the registry ([[commitWithDrops]]); a replay drops
-  *    every row at or before its database's position, so a committed
-  *    trigger replays empty;
+  *    spool position moved past the rows the trigger consumed, after
+  *    DDL the registry, and the trigger's spool rows as one more
+  *    append part of the archive ([[TableStore.ArchiveId]], when
+  *    archiving) and of the quarantine ([[TableStore.QuarantineId]],
+  *    when a payload is malformed) ([[commitWithDrops]]); a replay
+  *    drops every row at or before its database's position, so a
+  *    committed trigger replays empty and appends nothing. A
+  *    quarantine requeue ([[Quarantine.requeue]]) publishes its drain
+  *    as one compaction of the quarantine;
   *  - the stream families ([[AppendTable]]: band and winnow indexes,
   *    sketch and rate-monitor registers) publish each micro-batch's
   *    rows as append version `committed + 1` together with the batch
@@ -621,6 +626,14 @@ object TableStore {
     * order — both sides of an incremental merge must hash the same
     * typed values in the same column order). */
   final case class BucketSpec(n: Int, pkCols: Seq[String])
+
+  /** Reserved tables of the CDC engine, one each for every source
+    * database (spool rows carry their `database`): the archive of
+    * consumed spool rows and the quarantine of malformed ones, both
+    * append tables with the spool schema plus the trigger's
+    * `batch_id`. No replicated table may take these names. */
+  val ArchiveId: TableId = TableId("graft", "cdc", "archive")
+  val QuarantineId: TableId = TableId("graft", "cdc", "quarantine")
 
   /** Reserved columns of the bucketed layout's files: the row's PK
     * bucket and the version that wrote it. */

@@ -74,16 +74,14 @@ class CdcStreamSpec extends SparkSpec {
     (new CdcStreamEngine(spark, registry, store, ddl), store, registry, spool, ckpt)
   }
 
-  /** [[CdcStreamEngine.withDdl]]'s wiring, plus an archive dir. */
-  private def ddlEngine(registry: SchemaRegistry, store: TableStore,
-                        archive: String): CdcStreamEngine = {
+  /** [[CdcStreamEngine.withDdl]]'s wiring, with the archive on. */
+  private def ddlEngine(registry: SchemaRegistry, store: TableStore): CdcStreamEngine = {
     var engine: CdcStreamEngine = null
     val interp = new graft.ddl.DdlInterpreter(spark, registry, store,
       onRenameData = (id, from, to) => engine.renameTableData(id, from, to),
       onTruncateData = id => engine.truncateTableData(id),
       onRenameTable = (o, n) => engine.renameTableEntry(o, n))
-    engine = new CdcStreamEngine(spark, registry, store, interp.execute,
-      archiveDir = Some(archive))
+    engine = new CdcStreamEngine(spark, registry, store, interp.execute, archive = true)
     engine
   }
 
@@ -139,8 +137,8 @@ class CdcStreamSpec extends SparkSpec {
     // killed at both points and restarted by a NEW engine that loads
     // its registry from the store, as a restarted driver does. File 3
     // carries ADD COLUMN and RENAME TABLE. pre_commit leaves staged
-    // versions and an archive partition but no commit (the replay
-    // re-stages, re-archives and commits); post_commit leaves the
+    // versions and an archive part but no commit (the replay
+    // re-stages both and commits); post_commit leaves the
     // manifest, progress and registry ahead of the checkpoint (the
     // progress empties the replay). Both must reach the uninterrupted
     // run's rows and schema, with every spool row archived once.
@@ -171,9 +169,8 @@ class CdcStreamSpec extends SparkSpec {
 
     val want = {
       val (_, store, registry, spool, ckpt) = freshEngine()
-      val archive = Files.createTempDirectory("graft-arch-").toString
-      write(spool, 0); run(ddlEngine(registry, store, archive), spool, ckpt)
-      write(spool, 1); write(spool, 2); run(ddlEngine(registry, store, archive), spool, ckpt)
+      write(spool, 0); run(ddlEngine(registry, store), spool, ckpt)
+      write(spool, 1); write(spool, 2); run(ddlEngine(registry, store), spool, ckpt)
       outcome(store)
     }
     assert(want._1 == Set(clients) && want._2.fieldNames.last == "c_note")
@@ -182,13 +179,12 @@ class CdcStreamSpec extends SparkSpec {
 
     Seq("pre_commit", "post_commit").foreach { point =>
       val (_, store, registry, spool, ckpt) = freshEngine()
-      val archive = Files.createTempDirectory("graft-arch-").toString
       val progress = scala.collection.mutable.Buffer(store.progress())
       write(spool, 0)
-      run(ddlEngine(registry, store, archive), spool, ckpt)
+      run(ddlEngine(registry, store), spool, ckpt)
       progress += store.progress()
       write(spool, 1); write(spool, 2)
-      val killed = ddlEngine(SchemaRegistry.load(store.registryPath), store, archive)
+      val killed = ddlEngine(SchemaRegistry.load(store.registryPath), store)
       killed.failpoint = Some((1L, point))
       val q = killed.start(spool, ckpt)
       val died = try { q.awaitTermination(); false } catch {
@@ -199,7 +195,7 @@ class CdcStreamSpec extends SparkSpec {
       progress += store.progress()
       // driver restart: a FRESH engine and registry on the same
       // checkpoint + store
-      run(ddlEngine(SchemaRegistry.load(store.registryPath), store, archive), spool, ckpt)
+      run(ddlEngine(SchemaRegistry.load(store.registryPath), store), spool, ckpt)
       progress += store.progress()
       assert(outcome(store) == want, s"$point: recovered state diverged")
       assert(progress.zip(progress.tail).forall { case (a, b) =>
@@ -208,7 +204,7 @@ class CdcStreamSpec extends SparkSpec {
       }, s"$point: $progress")
       assert(progress.last == Map("srcdb" -> TableStore.Progress(None, posOf(7L))),
         s"$point: $progress")
-      val archived = spark.read.parquet(archive).select("lsn_start").as[Long].collect().sorted
+      val archived = store.read(TableStore.ArchiveId).select("lsn_start").as[Long].collect().sorted
       assert(archived.toSeq == (1L to 7L), s"$point: archive $archived")
       // the seed and the DDL trigger each published a registry version;
       // a vacuum keeping no history leaves only the committed one
@@ -253,6 +249,65 @@ class CdcStreamSpec extends SparkSpec {
       "a committed version dir was rewritten")
   }
 
+  test("a new checkpoint archives only the rows it consumes: every spool row once") {
+    // batch ids restart at 0 with a new checkpoint: its batch 0 appends
+    // one more archive part and leaves the old checkpoint's parts
+    val (_, store, registry, spool, ckpt) = freshEngine()
+    Seq(Seq((1L, upd(1, 11.0)), (2L, upd(2, 22.0))), Seq((3L, upd(3, 33.0)))).foreach { rows =>
+      spoolBatch(rows: _*).coalesce(1).write.mode("append").parquet(spool)
+      run(ddlEngine(registry, store), spool, ckpt)
+    }
+    spoolBatch((4L, upd(1, 44.0))).coalesce(1).write.mode("append").parquet(spool)
+    run(ddlEngine(registry, store), spool, Files.createTempDirectory("graft-ckpt2-").toString)
+    val archived = store.read(TableStore.ArchiveId).select("lsn_start", "batch_id")
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(archived == Seq(1L -> 0L, 2L -> 0L, 3L -> 1L, 4L -> 0L), s"archive $archived")
+    assert(state(store) == Seq(
+      Row(1L, "Alice", 44.0), Row(2L, "Bob", 22.0), Row(3L, "Carol", 33.0)))
+  }
+
+  test("a requeue stopped between its spool file and its commit is finished, not repeated") {
+    // key 2's update is repairable, the "not json" rows are not. The
+    // re-run comes either directly or after a trigger that applies the
+    // requeued file together with a newer change to key 2 and a new bad
+    // row: the requeued row applies once and never over the newer change
+    val fix: DataFrame => DataFrame = q =>
+      q.withColumn("payload", regexp_replace(col("payload"), "\"upd8\"", "\"update\""))
+    val t0 = 1700000000L
+    Seq(false, true).foreach { engineFirst =>
+      val (engine, store, _, spool, ckpt) = freshEngine()
+      def write(rows: (String, Long, Long, String)*): Unit =
+        spoolRows(rows: _*).coalesce(1).write.mode("append").parquet(spool)
+      write(("srcdb", 1L, t0 + 1, upd(2, 22.0, kind = "upd8")), ("srcdb", 2L, t0 + 2, "not json"))
+      run(engine, spool, ckpt)
+      graft.stream.Quarantine.failpoint = Some(spool)
+      val e = intercept[IllegalStateException](
+        graft.stream.Quarantine.requeue(spark, store, spool, fix))
+      assert(e.getMessage.contains("failpoint"), e.getMessage)
+      assert(graft.stream.Quarantine.read(spark, store).count() == 2)
+      if (engineFirst) {
+        write(("srcdb", 3L, t0 + 10, upd(2, 27.0)), ("srcdb", 4L, t0 + 11, "still not json"))
+        run(engine, spool, ckpt)
+      }
+      assert(graft.stream.Quarantine.requeue(spark, store, spool, fix) == (1L, 1L),
+        s"engineFirst=$engineFirst")
+      run(engine, spool, ckpt)
+      val requeueFiles = Files.list(java.nio.file.Paths.get(spool)).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("requeue_")).toSeq
+      assert(requeueFiles == Seq("requeue_q0.parquet"), s"engineFirst=$engineFirst")
+      assert(spark.read.parquet(spool)
+        .filter(col("payload").contains("\"update\"") && col("payload").contains("22.0"))
+        .count() == 1, s"engineFirst=$engineFirst")
+      val key2 = if (engineFirst) 27.0 else 22.0
+      assert(state(store) == Seq(
+        Row(1L, "Alice", 10.0), Row(2L, "Bob", key2), Row(3L, "Carol", 30.0)),
+        s"engineFirst=$engineFirst")
+      assert(graft.stream.Quarantine.read(spark, store).select("lsn_start").as[Long]
+        .collect().sorted.toSeq == (if (engineFirst) Seq(2L, 4L) else Seq(2L)),
+        s"engineFirst=$engineFirst")
+    }
+  }
+
   test("a transaction spooled after one that began later still applies") {
     // T1 begins at LSN 100 and T2 at 150; T2 commits first, so the
     // daemon spools it first, in a file of its own. Spool order, not
@@ -272,16 +327,15 @@ class CdcStreamSpec extends SparkSpec {
     // the name the second rename reuses still holds the first
     // incarnation's version dirs: the new one stages above them
     val (_, store, registry, spool, ckpt) = freshEngine()
-    val archive = Files.createTempDirectory("graft-arch-").toString
     spoolBatch(ddl(1L, "ALTER TABLE customer RENAME TO clients"))
       .coalesce(1).write.mode("append").parquet(spool)
-    run(ddlEngine(registry, store, archive), spool, ckpt)
-    assert(store.manifest().keySet == Set("srcdb_public.clients"))
+    run(ddlEngine(registry, store), spool, ckpt)
+    assert(store.manifest().keySet == Set("srcdb_public.clients", TableStore.ArchiveId.qualified))
     val before = versionFiles(store)
     spoolBatch(ddl(2L, "ALTER TABLE clients RENAME TO customer"), (3L, upd(1, 11.0)))
       .coalesce(1).write.mode("append").parquet(spool)
-    run(ddlEngine(registry, store, archive), spool, ckpt)
-    assert(store.manifest() == Map(tid.qualified -> 2L))
+    run(ddlEngine(registry, store), spool, ckpt)
+    assert(store.manifest() == Map(tid.qualified -> 2L, TableStore.ArchiveId.qualified -> 1L))
     assert(state(store) == Seq(
       Row(1L, "Alice", 11.0), Row(2L, "Bob", 20.0), Row(3L, "Carol", 30.0)))
     val after = versionFiles(store)
@@ -295,20 +349,19 @@ class CdcStreamSpec extends SparkSpec {
     // db2's). A db2 row is quarantined and requeued; the later rows of
     // both databases still apply
     val (_, store, registry, spool, ckpt) = freshEngine()
-    val qdir = Files.createTempDirectory("graft-quar-").toString
     val db2 = TableId("db2", "public", "customer")
     registry.register(TableMeta(db2, custSchema, Seq("c_custkey")))
     store.stage(db2, Seq((1L, "Ann", 1.0), (2L, "Ben", 2.0))
       .toDF("c_custkey", "c_name", "c_acctbal"), 0L)
     store.commit(Map(db2 -> 0L))
-    val engine = new CdcStreamEngine(spark, registry, store, quarantineDir = Some(qdir))
+    val engine = new CdcStreamEngine(spark, registry, store)
     val (t0, day) = (1700000000L, 86400L)
     def write(rows: (String, Long, Long, String)*): Unit =
       spoolRows(rows: _*).coalesce(1).write.mode("append").parquet(spool)
     write(("srcdb", 1000L, t0 + day, upd(1, 11.0)),
       ("db2", 1L, t0, upd(1, 5.0, kind = "upd8")), ("db2", 2L, t0 + 1, upd(2, 6.0)))
     run(engine, spool, ckpt)
-    val (requeued, _) = graft.stream.Quarantine.requeue(spark, qdir, spool,
+    val (requeued, _) = graft.stream.Quarantine.requeue(spark, store, spool,
       q => q.withColumn("payload", regexp_replace(col("payload"), "\"upd8\"", "\"update\"")))
     assert(requeued == 1)
     run(engine, spool, ckpt)
@@ -489,10 +542,7 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("quarantine repair/requeue: fixed records replay, remainder stays") {
-    val (engine0, store, registry, spool, ckpt) = freshEngine()
-    val qdir = Files.createTempDirectory("graft-quar-").toString
-    val engine = new CdcStreamEngine(spark, registry, store,
-      quarantineDir = Some(qdir))
+    val (engine, store, _, spool, ckpt) = freshEngine()
 
     // one good update, one repairable (misspelled kind), one hopeless
     spoolBatch(
@@ -507,7 +557,7 @@ class CdcStreamSpec extends SparkSpec {
     run(engine, spool, ckpt)
 
     // bad rows preserved, good one applied
-    val quarantined = graft.stream.Quarantine.read(spark, qdir)
+    val quarantined = graft.stream.Quarantine.read(spark, store)
     assert(quarantined.count() == 2)
     assert(state(store).collect { case Row(1L, _, b) => b } == Seq(11.0))
     assert(state(store).collect { case Row(2L, _, b) => b } == Seq(20.0))
@@ -519,7 +569,7 @@ class CdcStreamSpec extends SparkSpec {
 
     // repair the misspelled kind; "not json at all" stays broken
     val (requeued, stillBad) = graft.stream.Quarantine.requeue(
-      spark, qdir, spool,
+      spark, store, spool,
       q => q.withColumn("payload",
         regexp_replace(col("payload"), "\"upd8\"", "\"update\"")))
     assert(requeued == 1 && stillBad == 1)
@@ -529,17 +579,14 @@ class CdcStreamSpec extends SparkSpec {
     assert(state(store).collect { case Row(2L, _, b) => b } == Seq(22.0))
     // quarantine now holds only the hopeless row, and a second requeue
     // with no fix is a stable no-op
-    assert(graft.stream.Quarantine.read(spark, qdir)
+    assert(graft.stream.Quarantine.read(spark, store)
       .select("lsn_start").as[Long].collect().toSeq == Seq(3L))
-    val (r2, b2) = graft.stream.Quarantine.requeue(spark, qdir, spool, identity)
+    val (r2, b2) = graft.stream.Quarantine.requeue(spark, store, spool, identity)
     assert(r2 == 0 && b2 == 1)
   }
 
   test("requeue re-stamps repaired rows past the newest spool event") {
-    val (engine0, store, registry, spool, ckpt) = freshEngine()
-    val qdir = Files.createTempDirectory("graft-quar-").toString
-    val engine = new CdcStreamEngine(spark, registry, store,
-      quarantineDir = Some(qdir))
+    val (engine, store, _, spool, ckpt) = freshEngine()
 
     // the quarantined (repairable) event is OLDER than a later valid
     // update to the same key — without the re-stamp, its repair would
@@ -558,7 +605,7 @@ class CdcStreamSpec extends SparkSpec {
     val maxBefore = spark.read.parquet(spool)
       .agg(max(col("insert_timestamp"))).collect()(0).getTimestamp(0)
     val (requeued, _) = graft.stream.Quarantine.requeue(
-      spark, qdir, spool,
+      spark, store, spool,
       q => q.withColumn("payload",
         regexp_replace(col("payload"), "\"upd8\"", "\"update\"")))
     assert(requeued == 1)
@@ -782,12 +829,11 @@ class CdcStreamSpec extends SparkSpec {
       "oldkeys":{"keynames":["c_custkey"],"keyvalues":[1]}}"""
 
     val (_, store, registry, _, _) = freshEngine()
-    val qdir = Files.createTempDirectory("graft-quar-").toString
-    new CdcStreamEngine(spark, registry, store, quarantineDir = Some(qdir))
+    new CdcStreamEngine(spark, registry, store)
       .processBatch(spoolBatch((1L, good), (2L, torn)), 0L)
     assert(state(store) == Seq(
       Row(1L, "Alice", 11.5), Row(2L, "Bob", 20.0), Row(3L, "Carol", 30.0)))
-    val quarantined = graft.stream.Quarantine.read(spark, qdir)
+    val quarantined = graft.stream.Quarantine.read(spark, store)
       .select("payload").as[String].collect().toSeq
     assert(quarantined == Seq(torn))
 
@@ -797,7 +843,14 @@ class CdcStreamSpec extends SparkSpec {
         .processBatch(spoolBatch((1L, good), (2L, torn)), 0L)
     }
     assert(e.getMessage.contains("1 unparseable change payloads"), e.getMessage)
+    // it names the first bad row's database and spool position
+    assert(e.getMessage.contains("database srcdb") &&
+      e.getMessage.contains(s"insert_timestamp ${new java.sql.Timestamp(1700000002000L)}") &&
+      e.getMessage.contains("lsn_start 2"), e.getMessage)
     assert(state(store2) == Seq(
       Row(1L, "Alice", 10.0), Row(2L, "Bob", 20.0), Row(3L, "Carol", 30.0)))
+    // nothing is staged: the store holds no quarantine
+    assert(!store2.exists(TableStore.QuarantineId))
+    assert(graft.stream.Quarantine.read(spark, store2).count() == 0)
   }
 }

@@ -32,9 +32,12 @@ class IvfIndexSpec extends SparkSpec {
   private lazy val corpus = (0L until 60L).map(i => (i, vec(i)))
     .toDF("vec_id", "embedding")
 
-  private def tmpDir(tag: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivfidx_${tag}_" +
+  private def tmpDir(tag: String): String = {
+    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_ivfidx_${tag}_" +
       spark.sparkContext.applicationId
+    graft.ops.Bucketing.cleanupOnExit(dir)
+    dir
+  }
 
   /** The committed postings, read through the index's store. */
   private def postings(dir: String): DataFrame =
