@@ -20,10 +20,22 @@ final case class DdlEvent(database: String, currentQuery: String,
                           searchPath: String, commandTags: Seq[String])
 
 /** In-stream DDL application (SURVEY §2.8 A8): split → parse →
-  * classify (skip / post-data / kill) → schema-remap → apply to
-  * registry + store, then the caller's plans rebuild from the
-  * registry — the `DISCARD` analog. DROP of a missing table is
-  * tolerated (the reference tolerates SQLSTATE 42P01).
+  * classify (skip / post-data / kill) → schema-remap → apply to the
+  * registry, then the caller's plans rebuild from the registry — the
+  * `DISCARD` analog. DROP of a missing table is tolerated (the
+  * reference tolerates SQLSTATE 42P01).
+  *
+  * The interpreter changes only the registry. Every effect on table
+  * data goes to the caller through the three hooks, which the stream
+  * engine implements on its in-flight working chain
+  * ([[graft.stream.CdcStreamEngine]]): CREATE TABLE starts the new
+  * table empty under its schema and DROP TABLE empties the old one,
+  * both through `onTruncateData`, so a table recreated in the same
+  * trigger holds only the rows written after its CREATE. Nothing is
+  * written to the store here: a trigger publishes its creates, drops,
+  * truncates and renames, with its rows and the registry, in its one
+  * manifest write. `spark` and `store` are unused; they stay for
+  * callers that pass them.
   */
 final class DdlInterpreter(
     spark: SparkSession,
@@ -31,43 +43,15 @@ final class DdlInterpreter(
     store: TableStore,
     ignoredSchemas: Set[String] = Set.empty,
     md5Whitelist: Set[String] = Set.empty,
-    /** Applies a column rename to table DATA (the registry alone
-      * would make schema-conform drop the old column's values). The
-      * default rewrites the committed store table; the stream engine
-      * overrides it to rename inside its in-flight working chain. */
-    onRenameData: (TableId, String, String) => Unit = null,
-    /** Applies a TRUNCATE to table DATA. Default: commit an empty
-      * version (monotonic, never regressing to v=0); the stream
-      * engine overrides to truncate its in-flight working chain, so
-      * the truncate publishes in the batch's one commit with its rows
-      * and spool positions — a mid-batch store commit would be
-      * overwritten by the chained result, and a crash after it would
-      * leave the truncate published under positions that replay the
-      * whole batch over it. */
-    onTruncateData: TableId => Unit = null,
-    /** Notifies the caller that a table was renamed (ALTER TABLE …
-      * RENAME TO): the stream engine re-keys its in-flight working
-      * chain so pre-rename DML isn't dropped at staging time. */
-    onRenameTable: (TableId, TableId) => Unit = null) {
-
-  private def renameData(id: TableId, from: String, to: String): Unit =
-    if (onRenameData != null) onRenameData(id, from, to)
-    else if (store.exists(id)) {
-      val v = store.manifest()(id.qualified) + 1
-      store.stage(id, store.read(id).withColumnRenamed(from, to), v)
-      store.commit(Map(id -> v))
-    }
-
-  private def truncateData(id: TableId): Unit =
-    if (onTruncateData != null) onTruncateData(id)
-    else registry.get(id).foreach { meta =>
-      if (store.exists(id)) {
-        val v = store.manifest()(id.qualified) + 1
-        store.stage(id, spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema), v)
-        store.commit(Map(id -> v))
-      }
-    }
+    /** Renames a column in the table's DATA (the registry alone would
+      * make schema-conform drop the old column's values). */
+    onRenameData: (TableId, String, String) => Unit,
+    /** Replaces the table's data with an empty table under its
+      * registered schema: TRUNCATE, and CREATE and DROP TABLE. */
+    onTruncateData: TableId => Unit,
+    /** Moves the table's data to its new name (ALTER TABLE … RENAME
+      * TO), after the registry has moved it. */
+    onRenameTable: (TableId, TableId) => Unit) {
 
   /** Post-data statements seen so far (indexes/constraints) — the
     * async-maintenance queue (A12). */
@@ -127,18 +111,16 @@ final class DdlInterpreter(
           val meta = TableMeta(id,
             org.apache.spark.sql.types.StructType(fields), pk)
           registry.register(meta)
-          store.stage(id, spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema), 0L)
-          store.commit(Map(id -> 0L))
+          onTruncateData(id)
         } else if (!ifNotExists) ()
 
       case DropTable(_, t, _) =>
         val id = tableId(db, t, searchPath)
+        onTruncateData(id)
         registry.invalidate(id) // missing table tolerated (42P01 parity)
-        store.drop(id)
 
       case TruncateTable(_, t) =>
-        truncateData(tableId(db, t, searchPath))
+        onTruncateData(tableId(db, t, searchPath))
 
       case AddColumn(_, t, name, typ, _) =>
         registry.addColumn(tableId(db, t, searchPath),
@@ -150,7 +132,7 @@ final class DdlInterpreter(
       case RenameColumn(_, t, from, to) =>
         val id = tableId(db, t, searchPath)
         registry.renameColumn(id, from, to)
-        renameData(id, from, to)
+        onRenameData(id, from, to)
 
       case RenameTable(_, t, to) =>
         val oldId = tableId(db, t, searchPath)
@@ -158,13 +140,7 @@ final class DdlInterpreter(
           val newId = oldId.copy(table = to)
           registry.invalidate(oldId)
           registry.register(meta.copy(id = newId))
-          if (onRenameTable != null) {
-            // stream engine: the rename persists at the batch's commit
-            // barrier (working chain re-keyed, old manifest entry
-            // retired atomically with the publish) — a mid-batch
-            // store.rename would leave a crash window
-            onRenameTable(oldId, newId)
-          } else store.rename(oldId, newId)
+          onRenameTable(oldId, newId)
         }
 
       case AlterColumnType(_, t, c, typ) =>

@@ -32,9 +32,14 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    the spool in position order, a source transaction never
   *    spanning spool files — one daemon per database, one COPY per
   *    transaction, each stamped after the last (K1).
-  *  - DDL barrier (A8): DDL records are routed to `ddlHandler`
-  *    BEFORE the batch's DML merge, then the registry-backed plans
-  *    rebuild — the `DISCARD`/cache-invalidation analog.
+  *  - DDL barrier (A8): DDL records are routed to `ddlHandler` at
+  *    their stream position, between the batch's DML segments, then the
+  *    registry-backed plans rebuild — the `DISCARD`/cache-invalidation
+  *    analog. DDL changes only the registry and the working chain
+  *    (through the hooks below): the trigger's one commit publishes its
+  *    creates, drops, truncates and renames with its rows, the registry
+  *    and the spool positions, and retires every name the trigger
+  *    dropped or renamed away.
   *  - backpressure (A10): `maxFilesPerTrigger`.
   *  - archive (K5 `--keep_data`): with `archive = true` each trigger
   *    appends every spool row it consumed, with its `batch_id`, as one
@@ -111,38 +116,31 @@ final class CdcStreamEngine(
       case None => ()
     }
 
-  // renames announced by this batch's DDL; the OLD names retire in
-  // the same atomic manifest write that publishes the batch (a
-  // mid-batch store.rename would leave a crash window where the
-  // manifest is re-keyed but the batch never committed)
-  private val pendingRenames =
-    scala.collection.mutable.Buffer.empty[(TableId, TableId)]
-
   /** Rename-table hook target: re-key the in-flight working chain so
     * pre-rename DML staged under the old id isn't dropped when the
     * end-of-batch staging loop resolves ids through the (renamed)
     * registry. An untouched committed table is pulled into the chain
     * so its rows get re-staged (and re-committed) under the new name;
-    * the old manifest entry retires at the batch's commit barrier. */
-  def renameTableEntry(oldId: TableId, newId: TableId): Unit = {
+    * the old name, no longer registered, retires at the batch's
+    * commit. */
+  def renameTableEntry(oldId: TableId, newId: TableId): Unit =
     working.remove(oldId) match {
       case Some(df) => working(newId) = df
       case None if store.exists(oldId) => working(newId) = store.read(oldId)
       case None => ()
     }
-    pendingRenames += (oldId -> newId)
-    ()
-  }
 
-  /** Truncate-hook target: TRUNCATE takes effect inside the working
-    * chain at its stream position — pre-truncate DML vanishes with
-    * the old rows, post-truncate DML applies onto the empty table;
+  /** Truncate-hook target: the registered table becomes empty under its
+    * registry schema inside the working chain, at its stream position —
+    * pre-truncate DML vanishes with the old rows, post-truncate DML
+    * applies onto the empty table. TRUNCATE, CREATE TABLE (a new table
+    * starts empty) and DROP TABLE (run before the registry forgets the
+    * table, so a recreated table never sees its rows) all come here;
     * everything commits once with the batch, so a replay of a
     * committed batch (emptied by the progress) never runs it. */
   def truncateTableData(id: TableId): Unit =
     registry.get(id).foreach { meta =>
-      if (working.contains(id) || store.exists(id))
-        working(id) = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], meta.schema)
+      working(id) = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], meta.schema)
     }
 
   /** Fold one segment's collapsed change set into every registered
@@ -344,11 +342,13 @@ final class CdcStreamEngine(
       val pos = struct(col("xid_timestamp"), col("lsn_start"))
 
       val committed = store.manifest()
+      // a table registered now and not at the commit was dropped or
+      // renamed away by this trigger's DDL: its name retires there
+      val registeredAtStart = registry.ids
 
       working.clear() // chained working state per table across segments
       viewWorking.clear()
       workingBuckets.clear()
-      pendingRenames.clear()
 
       // Incremental bucket-level publish runs only in DML-only batches
       // (= single segment, registry schemas frozen). A batch with DDL
@@ -455,6 +455,8 @@ final class CdcStreamEngine(
         }
       }
 
+      val retired = registeredAtStart -- registry.ids
+
       // conform each chained result to the POST-batch registry schema
       // (a later-segment DDL may have evolved it after the merge ran)
       val updates: Map[TableId, Long] = {
@@ -467,14 +469,12 @@ final class CdcStreamEngine(
           // or behind the table it summarizes
           viewWorking.toSeq
         // every entry stages at one version, one above the highest the
-        // manifest holds for any of them or for the names they were
-        // renamed from (read now: a CREATE TABLE in this batch committed
-        // its v=0 mid-batch), so no committed dir is rewritten — a name
+        // trigger's starting manifest holds for any of them or for the
+        // names it retires, so no committed dir is rewritten — a name
         // reused by a rename back sits above its old incarnation's
         // versions — and one trigger's entries share a version
-        val now = store.manifest()
-        val targetVersion = (entries.map(_._1) ++ pendingRenames.map(_._1))
-          .flatMap(tid => now.get(tid.qualified)).foldLeft(-1L)(math.max) + 1
+        val targetVersion = (entries.map(_._1) ++ retired)
+          .flatMap(tid => committed.get(tid.qualified)).foldLeft(-1L)(math.max) + 1
         // delta entries write only their changed buckets; bucketed
         // tables touched any other way (DDL batch, hooks) keep the
         // bucketed layout via a full bucket rewrite. A one-partition
@@ -520,13 +520,11 @@ final class CdcStreamEngine(
 
       // A2/A3: one atomic cross-table commit per batch, carrying the
       // spool positions and, after DDL, the registry (A8: the checkpoint
-      // persists only source offsets); renamed-away old names retire
-      // in the SAME manifest write (the rename barrier — no crash
-      // window between re-key and publish)
-      val dropped = pendingRenames.map(_._1)
-        .filterNot(o => updates.contains(o)).toSet
+      // persists only source offsets); dropped and renamed-away names
+      // retire in the SAME manifest write (the DDL barrier — no crash
+      // window between the registry and the tables it names)
       maybeFail(batchId, "pre_commit")
-      store.commitWithDrops(updates ++ appended, dropped, consumed = consumed,
+      store.commitWithDrops(updates ++ appended, retired, consumed = consumed,
         registry = if (ddls.nonEmpty) Some(registry) else None)
       maybeFail(batchId, "post_commit")
     } finally {
@@ -666,8 +664,8 @@ object CdcStreamEngine {
               strict: Boolean = false,
               slotByDb: Map[String, String] = Map.empty): CdcStreamEngine = {
     // interpreter and engine reference each other: the engine routes
-    // DDL events to the interpreter, the interpreter routes column
-    // renames back into the engine's in-flight batch state
+    // DDL events to the interpreter, the interpreter routes every data
+    // effect of a DDL back into the engine's in-flight batch state
     var engine: CdcStreamEngine = null
     val interp = new graft.ddl.DdlInterpreter(
       spark, registry, store, ignoredSchemas, md5Whitelist,

@@ -43,7 +43,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
   *  - the CDC engine publishes each trigger's tables and views one
   *    version above the committed ones, together with each database's
   *    spool position moved past the rows the trigger consumed, after
-  *    DDL the registry, and the trigger's spool rows as one more
+  *    DDL the registry and the DDL's effect on tables (a created table,
+  *    a renamed table under its new name, a dropped or renamed-away
+  *    name retired), and the trigger's spool rows as one more
   *    append part of the archive ([[TableStore.ArchiveId]], when
   *    archiving) and of the quarantine ([[TableStore.QuarantineId]],
   *    when a payload is malformed) ([[commitWithDrops]]); a replay
@@ -61,6 +63,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
   *    centroids, SQ8 stats and postings in one write, and each append
   *    (one more postings part) and compaction (the appended parts
   *    folded into one) as one more postings version.
+  * The store has no rename or drop of its own: a name leaves the
+  * manifest only as a `drops` entry of [[commitWithDrops]], and its
+  * dirs stay for [[vacuum]].
   *
   * == Filesystem requirement (read this before pointing `root` at S3) ==
   * Paths are local/POSIX (`java.nio.file`). The cross-table atomicity
@@ -222,19 +227,23 @@ final class TableStore(spark: SparkSession, val root: String) {
     Files.writeString(schemaPath(id, version), df.schema.json)
   }
 
-  /** Read one specific staged version (committed or not). A version
-    * staged without a schema sidecar (by older code) infers its schema
-    * from the parquet footers. */
-  def readVersion(id: TableId, version: Long): DataFrame =
+  /** Read one specific staged version (committed or not), typed by
+    * its schema sidecar. A version dir without one (staged by older
+    * code, or never staged) is refused, naming the dir: every writer
+    * stages through [[stage]], [[stageBucketed]] or [[stageAppend]] /
+    * [[stageCompaction]], which write it. */
+  def readVersion(id: TableId, version: Long): DataFrame = {
+    if (!Files.exists(schemaPath(id, version))) throw new IllegalStateException(
+      s"${dir(id, version)} has no ${schemaPath(id, version).getFileName} sidecar, a " +
+        "version this store no longer reads; re-seed the table with a full snapshot")
     bucketSpec(id) match {
-      case Some(spec) if Files.exists(bucketMapPath(id, version)) =>
+      case Some(spec) if isBucketedAt(id, version) =>
         readBuckets(id, (0 until spec.n).toSet, version)
       case _ if Files.exists(partsPath(id, version)) =>
         readParts(id, version, parts(id, version).map(_._1))
-      case _ if Files.exists(schemaPath(id, version)) =>
-        spark.read.schema(versionSchema(id, version)).parquet(dir(id, version))
-      case _ => spark.read.parquet(dir(id, version))
+      case _ => spark.read.schema(versionSchema(id, version)).parquet(dir(id, version))
     }
+  }
 
   // ── PK-bucketed layout ────────────────────────────────────────────
   //
@@ -269,9 +278,7 @@ final class TableStore(spark: SparkSession, val root: String) {
   private def schemaPath(id: TableId, version: Long) =
     Paths.get(dir(id, version), "_schema.json")
 
-  /** Whether `version` was staged with a bucketmap (a bucketed table
-    * staged through the plain path — e.g. by older code — is readable
-    * but can't base a delta). */
+  /** Whether `version` was staged with a bucketmap. */
   def isBucketedAt(id: TableId, version: Long): Boolean =
     Files.exists(bucketMapPath(id, version))
 
@@ -476,46 +483,20 @@ final class TableStore(spark: SparkSession, val root: String) {
     * nothing else. */
   def commit(updates: Map[TableId, Long]): Unit = commitWithDrops(updates, Set.empty)
 
-  /** Remove a table from the committed manifest (DROP TABLE). Data
-    * dirs are left for vacuum — readers can no longer resolve them.
-    */
-  def drop(id: TableId): Unit =
-    updateManifest(_ - id.qualified)
-
-  /** Rename a table (ALTER TABLE … RENAME TO): move its directory and
-    * its manifest entry in one step; the version is preserved. No-op
-    * when the old table was never committed. A leftover directory of
-    * a previously DROPped table under the new name (drop defers dir
-    * deletion to vacuum) is reclaimed first; renaming ONTO a live
-    * table is refused. */
-  def rename(oldId: TableId, newId: TableId): Unit = {
-    val m = manifest()
-    require(!m.contains(newId.qualified),
-      s"cannot rename ${oldId.qualified} onto live table ${newId.qualified}")
-    m.get(oldId.qualified).foreach { v =>
-      val from = Paths.get(root, oldId.qualified)
-      val to = Paths.get(root, newId.qualified)
-      if (Files.exists(to)) deleteRecursively(to) // dropped-table leftover
-      if (Files.exists(from)) Files.move(from, to,
-        StandardCopyOption.ATOMIC_MOVE)
-      updateManifest(cur => cur - oldId.qualified + (newId.qualified -> v))
-    }
-  }
-
   /** Atomically publish a set of staged versions: the cross-table
     * commit barrier. In ONE manifest write it publishes `updates`,
-    * retires `drops` (re-keyed old names — the rename barrier: readers
-    * never see both or neither), sets each database's handoff LSN to
+    * retires `drops` (dropped tables and renamed-away old names — the
+    * rename barrier: readers never see both or neither; their dirs stay
+    * for [[vacuum]]), sets each database's handoff LSN to
     * `handoffs` and its spool position to `consumed` ([[progress]])
     * and, given a `registry`, publishes it ([[registryPath]]). Tables
     * not in `updates` keep their version.
     *
     * MONOTONIC: a commit never lowers a table's published version, a
     * handoff LSN or a spool position — a lower incoming value is always
-    * a crash-replay re-running an already-published effect (e.g. CREATE
-    * TABLE committing v=0 after a died-mid-batch attempt already
-    * published a later version), and regressing would point readers at
-    * stale or empty data, or replay applied changes again.
+    * a crash-replay re-running an already-published effect, and
+    * regressing would point readers at stale or empty data, or replay
+    * applied changes again.
     */
   def commitWithDrops(updates: Map[TableId, Long], drops: Set[TableId],
                       handoffs: Map[String, Long] = Map.empty,
@@ -594,12 +575,12 @@ final class TableStore(spark: SparkSession, val root: String) {
               removed += 1
             }
         case None =>
-          // no manifest entry: either a DROPped table (drop() defers
-          // its data dirs to vacuum) or a table whose FIRST version is
-          // being staged right now — indistinguishable from here, so
-          // only reclaim when the caller asserts no create/snapshot is
-          // in flight (deleting under an active stage writer corrupts
-          // the table's initial publish)
+          // no manifest entry: either a dropped table (a commit's
+          // `drops` leave its data dirs here) or a table whose FIRST
+          // version is being staged right now — indistinguishable
+          // from here, so only reclaim when the caller asserts no
+          // create/snapshot is in flight (deleting under an active
+          // stage writer corrupts the table's initial publish)
           if (reclaimDropped) {
             deleteRecursively(tableDir)
             removed += 1

@@ -351,6 +351,19 @@ class BucketedStoreSpec extends SparkSpec {
     assert(e2.getMessage.contains(vdir.toString), e2.getMessage)
   }
 
+  test("a version without a schema sidecar fails naming its dir, never infers a schema") {
+    val (store, root) = fresh()
+    // a version older code staged: parquet files and no _schema.json
+    val vdir = Paths.get(root, tid.qualified, "v=0")
+    Seq((1L, "a")).toDF("k", "v").write.parquet(vdir.toString)
+    store.commit(Map(tid -> 0L))
+    Seq[() => DataFrame](() => store.read(tid), () => store.readVersion(tid, 0L)).foreach { r =>
+      val e = intercept[IllegalStateException](r())
+      assert(e.getMessage.contains(vdir.toString) && e.getMessage.contains("_schema.json"),
+        e.getMessage)
+    }
+  }
+
   test("property: every version of a random delta chain reads as the fold, " +
       "also after vacuum") {
     // each key's bucket, from the store's own hash

@@ -343,6 +343,75 @@ class CdcStreamSpec extends SparkSpec {
       "a committed version dir was rewritten")
   }
 
+  test("a trigger's CREATE and DROP TABLE publish in its one manifest write, " +
+      "also when it is replayed after a crash before that write") {
+    // a crash before the commit leaves the store as it was, so the
+    // replay's DML on customer still finds the table its DROP retires
+    val uid = TableId("srcdb", "public", "u")
+    val trigger = Seq((1L, upd(1, 11.0)),
+      ddl(2L, "CREATE TABLE u (k bigint PRIMARY KEY, v text)"),
+      (3L, """{"kind":"insert","schema":"public","table":"u",
+        "columnnames":["k","v"],"columnvalues":[1,"one"]}"""),
+      ddl(4L, "DROP TABLE customer"))
+    def replay(crash: Boolean) = {
+      val (_, store, registry, spool, ckpt) = freshEngine()
+      spoolBatch(trigger: _*).coalesce(1).write.mode("append").parquet(spool)
+      val seq = store.manifestSeq()
+      if (crash) {
+        val killed = ddlEngine(registry, store)
+        killed.failpoint = Some((0L, "pre_commit"))
+        val q = killed.start(spool, ckpt)
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination())
+        assert(store.manifestSeq() == seq, "the killed trigger wrote the manifest")
+        run(ddlEngine(SchemaRegistry.load(store.registryPath), store), spool, ckpt)
+      } else run(ddlEngine(registry, store), spool, ckpt)
+      assert(store.manifestSeq() == seq + 1, s"crash $crash: ${store.manifestSeq() - seq} writes")
+      (SchemaRegistry.load(store.registryPath).ids, store.manifest().keySet, tableRows(store, uid))
+    }
+    val want = replay(crash = false)
+    assert(want == (Set(uid), Set(uid.qualified, TableStore.ArchiveId.qualified),
+      Seq(Row(1L, "one"))))
+    assert(replay(crash = true) == want)
+  }
+
+  test("DML, DROP, CREATE with other columns and DML under one name in one trigger: " +
+      "only the new rows, and the same state after a crash at either commit boundary") {
+    val trigger = Seq((1L, upd(1, 11.0)),
+      ddl(2L, "DROP TABLE customer"),
+      ddl(3L, "CREATE TABLE customer (id bigint PRIMARY KEY, label text)"),
+      (4L, """{"kind":"insert","schema":"public","table":"customer",
+        "columnnames":["id","label"],"columnvalues":[7,"seven"]}"""),
+      (5L, """{"kind":"insert","schema":"public","table":"customer",
+        "columnnames":["id","label"],"columnvalues":[8,"eight"]}"""))
+    def fresh() = {
+      val (_, store, registry, spool, ckpt) = freshEngine()
+      spoolBatch(trigger: _*).coalesce(1).write.mode("append").parquet(spool)
+      (store, registry, spool, ckpt)
+    }
+    def outcome(store: TableStore) = {
+      val reg = SchemaRegistry.load(store.registryPath)
+      (reg.ids, reg(tid).schema.fieldNames.toSeq, store.manifest().keySet, tableRows(store, tid))
+    }
+    val want = {
+      val (store, registry, spool, ckpt) = fresh()
+      run(ddlEngine(registry, store), spool, ckpt)
+      outcome(store)
+    }
+    assert(want == (Set(tid), Seq("id", "label"),
+      Set(tid.qualified, TableStore.ArchiveId.qualified),
+      Seq(Row(7L, "seven"), Row(8L, "eight"))))
+    Seq("pre_commit", "post_commit").foreach { point =>
+      val (store, registry, spool, ckpt) = fresh()
+      val killed = ddlEngine(registry, store)
+      killed.failpoint = Some((0L, point))
+      val q = killed.start(spool, ckpt)
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination())
+      assert(e.toString.contains("failpoint"), e.toString)
+      run(ddlEngine(SchemaRegistry.load(store.registryPath), store), spool, ckpt)
+      assert(outcome(store) == want, s"$point: recovered state diverged")
+    }
+  }
+
   test("a requeue moves only its own database's spool position") {
     // two databases, two WALs: their LSN ranges and spool clocks do not
     // overlap (srcdb's LSNs start at 1000 and its rows spool a day after

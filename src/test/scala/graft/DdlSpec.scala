@@ -307,26 +307,6 @@ class DdlSpec extends SparkSpec {
     assert(PgTypeMapper.toSpark("smallserial") == ShortType)
   }
 
-  test("interpreter: table rename moves registry, store dir, and data") {
-    import graft.model._
-    val spark2 = spark
-    import spark2.implicits._
-    val root = java.nio.file.Files.createTempDirectory("rt-spec-").toString
-    val registry = new SchemaRegistry
-    val store = new graft.stream.TableStore(spark, root)
-    val id = TableId("db", "public", "t")
-    val df = Seq((1L, "x")).toDF("id", "v")
-    registry.register(TableMeta(id, df.schema, Seq("id")))
-    store.stage(id, df, 0L); store.commit(Map(id -> 0L))
-    val interp = new graft.ddl.DdlInterpreter(spark, registry, store)
-    interp.execute(graft.ddl.DdlEvent("db",
-      "ALTER TABLE public.t RENAME TO t2", "public", Seq("ALTER TABLE")))
-    val newId = TableId("db", "public", "t2")
-    assert(registry.get(id).isEmpty && registry.get(newId).isDefined)
-    assert(!store.exists(id) && store.exists(newId))
-    assert(store.read(newId).as[(Long, String)].collect().toSeq == Seq((1L, "x")))
-  }
-
   test("CREATE TYPE AS ENUM parses and remaps its type name (remappers.py:258-266)") {
     val st = DdlAst.parse("CREATE TYPE public.mood AS ENUM ('sad', 'ok', 'it''s fine')")
     val e = st.asInstanceOf[CreateEnum]

@@ -99,7 +99,7 @@ class SnapshotSpec extends SparkSpec {
     // dropped tables' trees survive a default vacuum (a missing
     // manifest entry could also be a first-version stage in flight)
     // and are reclaimed only on explicit request
-    store.drop(tid)
+    store.commitWithDrops(Map.empty, Set(tid))
     assert(store.vacuum(keepHistory = 1) == 0)
     assert(store.vacuum(keepHistory = 1, reclaimDropped = true) == 1)
     assert(!java.nio.file.Files.exists(

@@ -183,32 +183,48 @@ class TriggerShapeSpec extends SparkSpec {
     }
   }
 
-  test("a DDL batch of three segments, and the delta batch after it, agree across shapes") {
+  test("a DDL batch of four segments, a delta batch and a DROP batch agree across shapes") {
     val rnd = new Random(7L)
     val acd = ac :+ ("d" -> true)
     val a2c = Seq("a2" -> true, "c" -> false)
+    // n is created in the DDL batch: its first merge has no committed
+    // target; the last batch changes n, drops it and changes b
     val batch0 = changes(rnd, 12, "b", ac) ++ changes(rnd, 12, "p", ac) ++
       Seq(ddl("ALTER TABLE b ADD COLUMN d text")) ++
       changes(rnd, 12, "b", acd) ++ changes(rnd, 8, "p", ac) ++
       Seq(ddl("ALTER TABLE p RENAME COLUMN a TO a2")) ++
-      changes(rnd, 12, "p", a2c) ++ changes(rnd, 6, "b", acd)
-    val batch1 = changes(rnd, 20, "b", acd) ++ changes(rnd, 20, "p", a2c)
+      changes(rnd, 12, "p", a2c) ++ changes(rnd, 6, "b", acd) ++
+      Seq(ddl("CREATE TABLE n (k bigint PRIMARY KEY, a text, c double precision)")) ++
+      changes(rnd, 12, "n", ac) ++ changes(rnd, 6, "p", a2c)
+    val batch1 = changes(rnd, 20, "b", acd) ++ changes(rnd, 20, "p", a2c) ++
+      changes(rnd, 12, "n", ac)
+    val batch2 = changes(rnd, 8, "n", ac) ++ Seq(ddl("DROP TABLE n")) ++ changes(rnd, 8, "b", acd)
     // the third shape (a collected change set with a broadcast merge)
     // is in the property above, for suite time
     val runs = shapes.map { case (name, conf) =>
       withConf(conf) {
         val (store, registry) = freshStore()
         val engine = CdcStreamEngine.withDdl(spark, registry, store)
-        engine.processBatch(spool(batch0, 0L), 0L)
-        engine.processBatch(spool(batch1, batch0.size.toLong), 1L)
-        name -> (Seq(bid, pid).map(registry(_).schema.fieldNames.toSeq),
-          Seq(bid, pid).map(rows(store, _)))
+        var lsn = 0L
+        name -> Seq(batch0, batch1, batch2).zipWithIndex.map { case (ps, i) =>
+          engine.processBatch(spool(ps, lsn), i.toLong)
+          lsn += ps.size
+          // after each batch: every registered table's columns and rows
+          (store.manifest().keySet, registry.ids.toSeq.sortBy(_.qualified).map(id =>
+            id.table -> (registry(id).schema.fieldNames.toSeq, rows(store, id))))
+        }
       }
     }
-    val (_, (cols, want)) = runs.last
-    assert(cols == Seq(Seq("k", "a", "c", "d"), Seq("k", "a2", "c")))
-    assert(want.head.exists(r => !r.isNullAt(3)), "no d value landed")
-    runs.foreach { case (name, got) => assert(got == (cols, want), name) }
+    val (_, want) = runs.last
+    assert(want.map(_._2.map(t => t._1 -> t._2._1)) == Seq(
+      Seq("b" -> Seq("k", "a", "c", "d"), "n" -> Seq("k", "a", "c"), "p" -> Seq("k", "a2", "c")),
+      Seq("b" -> Seq("k", "a", "c", "d"), "n" -> Seq("k", "a", "c"), "p" -> Seq("k", "a2", "c")),
+      Seq("b" -> Seq("k", "a", "c", "d"), "p" -> Seq("k", "a2", "c"))))
+    assert(want.last._1 == Set(bid.qualified, pid.qualified), "n is not retired")
+    val (b0, n0) = (want.head._2.head._2._2, want.head._2(1)._2._2)
+    assert(b0.exists(r => !r.isNullAt(3)), "no d value landed")
+    assert(n0.nonEmpty, "no row of the created table landed")
+    runs.foreach { case (name, got) => assert(got == want, name) }
   }
 
   test("strict mode counts the same violations in every shape") {
